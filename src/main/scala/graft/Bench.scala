@@ -31,6 +31,14 @@ object Bench {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(headline)
 
+  /** Core count from $SPARK_GRAFT_CPUS (default 4): a positive whole
+    * number, or the bench refuses to run — the value goes into the
+    * Spark master and, unquoted, into the emitted JSON. */
+  private def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(4) { v =>
+    v.trim.toIntOption.filter(_ > 0).getOrElse(sys.error(
+      s"SPARK_GRAFT_CPUS must be a positive whole number, got '$v'"))
+  }
+
   def main(args: Array[String]): Unit =
     if (sys.env.getOrElse("SPARK_GRAFT_BENCH_ISOLATED", "1") == "1") isolatedMain()
     else inProcessMain()
@@ -186,10 +194,9 @@ object Bench {
   }
 
   private def runInProcess(queries: Seq[String], sfDir: String): Seq[(String, Double)] = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -239,7 +246,6 @@ object Bench {
     * against a bench that honors $SPARK_GRAFT_CPUS but didn't say so). */
   private def emit(results: Seq[(String, Double)], sf1Extra: Seq[(String, Double)],
                    sfDir: String, extra: String): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val qs = (results ++ sf1Extra).map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum

@@ -16,15 +16,19 @@ import org.apache.spark.sql.SparkSession
  * delete, and MAX-COMMITTED-GENERATION resolution instead of renames.
  *
  * Generation protocol (replaces the compaction double-ATOMIC_MOVE):
- * the vectors layout lives in `vectors.gNNNNN` directories under the
- * index root. A generation is COMMITTED iff Spark's `_SUCCESS` marker
- * exists in it (written last by the output committer — the same
- * commit signal every Spark pipeline already trusts); readers resolve
- * the max committed generation at plan time. Compaction writes
- * generation N+1 and only then deletes N — a crash at any point
- * leaves either N (N+1 uncommitted, ignored) or both (readers pick
- * N+1; the orphaned N is swept by the next compaction) — so there is
- * no rename anywhere in the commit path, and concurrent readers of N
+ * a table's layout lives in `<table>.gNNNNN` directories under the
+ * index root. A generation is COMMITTED iff a `_SUCCESS` marker exists
+ * in it, written LAST: by Spark's output committer when the generation
+ * is one parquet table (the IVF vectors, the near-dup tables), or by
+ * [[createMarker]] after every file of a multi-file generation lands
+ * (the lex generation's [[writeSmallFile]] header, the BM25 stats
+ * pair). Readers resolve the max committed generation at plan time,
+ * so a generation whose marker is missing is invisible, whatever else
+ * it holds. Compaction writes generation N+1 and only then deletes
+ * N — a crash at any point leaves either N (N+1 uncommitted,
+ * ignored) or both (readers pick N+1; the orphaned N is swept by the
+ * next compaction) — so there is no rename anywhere in the commit
+ * path, and concurrent readers of N
  * are only hazarded by the final delete (documented at the call
  * site: compaction remains a maintenance op, but the unsafe window
  * shrank from "the whole swap" to "GC of a superseded generation").
@@ -61,6 +65,23 @@ private[graft] object IndexMeta {
       // only when the file is really there, else surface the failure
       case e: java.io.IOException => if (fs.exists(path)) false else throw e
     }
+  }
+
+  /** Write a small driver-side file (an index header) in one create;
+    * fails if the file exists, so two writers racing on one generation
+    * cannot both succeed. Parent dirs are created as needed. */
+  def writeSmallFile(spark: SparkSession, p: String, bytes: Array[Byte]): Unit = {
+    val (fs, path) = fsFor(spark, p)
+    val out = fs.create(path, false)
+    try out.write(bytes) finally out.close()
+  }
+
+  /** The whole content of a small driver-side file, or None if absent. */
+  def readSmallFile(spark: SparkSession, p: String): Option[Array[Byte]] = {
+    val (fs, path) = fsFor(spark, p)
+    val in = try fs.open(path) catch { case _: java.io.FileNotFoundException => null }
+    if (in == null) None
+    else try Some(in.readAllBytes()) finally in.close()
   }
 
   /** Non-recursive children of a dir; empty if absent. */

@@ -651,19 +651,15 @@ object Pipeline {
   // corpus tokenize → tf aggregate — per query batch; at 100 TB that
   // is a full corpus re-read per retrieval, the precise anti-pattern
   // the fit-once doctrine (c24b/c29b/c41b/c27) exists to kill). The
-  // fit pays the corpus passes ONCE and persists three tables under a
-  // single [[IndexMeta]] generation; every arrival batch then scores
+  // fit pays the corpus passes ONCE and persists segment tables plus a
+  // generation header under [[IndexMeta]]; every arrival batch then scores
   // from the stored tables — the score-time plan touches corpus text
   // NEVER (PlanSpec-pinned: no documents scan).
 
   /** C43c fit — build the lexical retrieval index: one `lex.gN`
     * generation (single root marker, the [[commitBm25Stats]] atomicity
-    * doctrine) holding the one-row `scalars/` table
-    * (s_total, n_docs, posting_cap — the cap is an INDEX property,
-    * baked into the stored postings, so it rides the generation:
-    * [[appendLexIndex]] re-truncates at the cap the index was BUILT
-    * at, never at whatever the session conf happens to say
-    * [round-13 advice]) and a `manifest` naming the generation's live
+    * doctrine) holding the JSON [[LexHeader]] — s_total, n_docs, the
+    * build's posting cap, the lineage, and the list of the live
     * IMMUTABLE segments. Each `seg_*` dir holds
     *   - `terms/`    (tok, dfq) — the segment's own per-term df DELTA
     *     (Lucene's per-segment dictionary); readers assemble global
@@ -745,11 +741,14 @@ object Pipeline {
     // the generation commit — no crash window where stale tombstones
     // hide (and compaction then physically deletes) re-indexed docs,
     // or stale batch markers turn legitimate appends into no-ops.
-    commitLexGen(spark, genDir, oldGens,
-      scalars = scalars.withColumn("posting_cap", lit(cap.toLong))
-        .withColumn("lineage",
-          lit(new org.apache.hadoop.fs.Path(genDir).getName)),
-      segments = Seq(seg))
+    // the scalars ride every row of the pinned terms (a non-empty
+    // corpus has at least one term), so the header reads them there
+    // instead of re-running the corpus aggregate
+    val sc = terms.select(col("s_total"), col("n_docs")).head(1).headOption
+    commitLexGen(spark, genDir, oldGens, LexHeader(
+      sTotal = sc.fold(0L)(_.getAs[Long](0)), nDocs = sc.fold(0L)(_.getAs[Long](1)),
+      postingCap = cap, lineage = new org.apache.hadoop.fs.Path(genDir).getName,
+      segments = Seq(seg), applied = Seq.empty))
   }
 
   /** Impact-ordered truncation shared by the fit and the append's
@@ -771,25 +770,33 @@ object Pipeline {
 
   // SEGMENTED layout (round-14, the Lucene model on the generation
   // protocol): terms/postings/doclens live in IMMUTABLE `seg_*` dirs
-  // at the index root; each `lex.gN` generation holds only the
-  // one-row `scalars` table plus a `manifest` naming the live
-  // segments. The per-segment `terms` table is a df DELTA (the
-  // segment's own per-term doc counts — Lucene's per-segment term
-  // dictionary): a reader assembles df(tok) by summing across the
-  // manifest's segments, and every query path does that AFTER a
-  // broadcast semi-join on the batch's tokens, so assembly is
-  // batch-bounded. An append therefore writes ONE batch-sized
-  // segment and a one-row scalars snapshot — never the accumulated
-  // postings and never the vocab (measured: a 1000-doc append into
-  // the 500k-doc index paid 13.3 s under generation-rewrite, 7.7 s
-  // under segmented postings with a per-generation vocab snapshot,
-  // and goes flat with the batch once the vocab write goes too).
-  // Readers resolve the max committed generation and union exactly
-  // its manifest's segments — full snapshot atomicity is kept (a
-  // crash mid-append leaves an orphan segment no manifest references;
+  // at the index root; each `lex.gN` generation holds only a small
+  // JSON header ([[LexHeader]]: the index scalars, the live segment
+  // list, the applied batch ids). The per-segment `terms` table is a
+  // df DELTA (the segment's own per-term doc counts — Lucene's
+  // per-segment term dictionary): a reader assembles df(tok) by
+  // summing across the header's segments, and every query path does
+  // that AFTER a broadcast semi-join on the batch's tokens, so
+  // assembly is batch-bounded. An append therefore writes ONE
+  // batch-sized segment and a new header — never the accumulated
+  // postings and never the vocab (measured: a 1000-doc append into the
+  // 500k-doc index paid 13.3 s under generation-rewrite, 7.7 s under
+  // segmented postings with a per-generation vocab snapshot, and goes
+  // flat with the batch once the vocab write goes too). Readers
+  // resolve the max committed generation and union exactly its
+  // header's segments — full snapshot atomicity is kept (a crash
+  // mid-append leaves an orphan segment no header references;
   // compaction sweeps it). Query cost grows with the segment count,
   // so the compaction cadence bounds it — the IVF file-census
   // doctrine, here at segment granularity.
+  //
+  // The header is metadata the driver already holds when it commits,
+  // so it is written and read through the Hadoop FileSystem API, not
+  // as Spark tables: no job to write it, none to read it, and no
+  // footer inference of a new generation's tables on the next batch.
+  // The segments are written through [[Relational.writeParquet]],
+  // which records their schemas, so the segment union of the next
+  // search or append constructs without a job either.
 
   /** Write one immutable segment (terms delta + postings + doclens)
     * named for the generation that will reference it; returns the
@@ -798,139 +805,110 @@ object Pipeline {
       genDir: String, terms: DataFrame, postings: DataFrame,
       doclens: DataFrame): String = {
     val seg = "seg_" + new org.apache.hadoop.fs.Path(genDir).getName
-    terms.write.mode("overwrite").parquet(s"$indexDir/$seg/terms")
-    postings.write.mode("overwrite").parquet(s"$indexDir/$seg/postings")
-    doclens.write.mode("overwrite").parquet(s"$indexDir/$seg/doclens")
+    Relational.writeParquet(terms, s"$indexDir/$seg/terms")
+    Relational.writeParquet(postings, s"$indexDir/$seg/postings")
+    Relational.writeParquet(doclens, s"$indexDir/$seg/doclens")
     seg
   }
 
-  /** Commit scalars + manifest (+ the applied-batch replay record) as
-    * the next `lex.gN` — single root marker AFTER everything lands
-    * (the [[commitBm25Stats]] atomicity doctrine: a reader can never
-    * pair tables from different fits, nor see a segment no stats
-    * describe); superseded GENERATIONS are GC'd after the commit —
-    * segments are shared across generations and only compaction
-    * deletes them. `applied` is the full set of batch ids appended in
-    * THIS index life (fit starts it empty, append extends it,
-    * compaction carries it verbatim): because it rides the generation
-    * it is atomic with the commit — no separate marker file, no crash
-    * window between "batch committed" and "batch recorded". One short
-    * string per append since the last fit: KB-scale even for years of
-    * streaming micro-batches. */
+  /** The generation header of a lex index:
+    *   - `sTotal`, `nDocs` — the corpus scalars (Σ doc lengths, #docs);
+    *   - `postingCap` — the cap the index was BUILT at. It is an INDEX
+    *     property, baked into the stored postings, so it rides the
+    *     generation: [[appendLexIndex]] re-truncates at this cap, never
+    *     at whatever the session conf happens to say;
+    *   - `lineage` — the name of the generation the fit that started
+    *     this index life committed; appends and compactions carry it
+    *     forward, and side-state paths (tombstones) embed it;
+    *   - `segments` — the live immutable segments, sorted;
+    *   - `applied` — the batch ids appended in this index life (fit
+    *     starts it empty, append extends it, compaction carries it
+    *     verbatim). Riding the generation, it is atomic with the
+    *     commit — no separate marker file, no crash window between
+    *     "batch committed" and "batch recorded". One short string per
+    *     append since the last fit: KB-scale even for years of
+    *     streaming micro-batches. */
+  private[graft] final case class LexHeader(sTotal: Long, nDocs: Long, postingCap: Int,
+      lineage: String, segments: Seq[String], applied: Seq[String]) {
+    def toJson: Array[Byte] = {
+      val o = lexJson.createObjectNode()
+      o.put("s_total", sTotal).put("n_docs", nDocs).put("posting_cap", postingCap)
+        .put("lineage", lineage)
+      val (segs, ids) = (o.putArray("segments"), o.putArray("applied"))
+      segments.foreach(x => segs.add(x))
+      applied.foreach(x => ids.add(x))
+      lexJson.writeValueAsBytes(o)
+    }
+  }
+
+  /** The header file inside a `lex.gN` generation dir. */
+  private val LexHeaderFile = "header.json"
+  private lazy val lexJson = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** Commit `header` as the generation `genDir`: the header file lands,
+    * then the root `_SUCCESS` marker (the [[commitBm25Stats]]
+    * atomicity doctrine: a reader resolves only generations with the
+    * marker, so it never sees a header whose segments are not all
+    * written, nor a segment no header describes). Superseded
+    * GENERATIONS are GC'd after the commit — segments are shared
+    * across generations and only compaction deletes them. */
   private def commitLexGen(spark: SparkSession, genDir: String,
-      oldGens: Seq[String], scalars: DataFrame,
-      segments: Seq[String], applied: Seq[String] = Seq.empty): Unit = {
-    scalars.coalesce(1).write.mode("overwrite").parquet(s"$genDir/scalars")
-    spark.createDataset(segments)(org.apache.spark.sql.Encoders.STRING)
-      .toDF("seg").coalesce(1).write.mode("overwrite").parquet(s"$genDir/manifest")
-    if (applied.nonEmpty)
-      spark.createDataset(applied)(org.apache.spark.sql.Encoders.STRING)
-        .toDF("batch").coalesce(1).write.mode("overwrite").parquet(s"$genDir/applied")
+      oldGens: Seq[String], header: LexHeader): Unit = {
+    IndexMeta.writeSmallFile(spark, s"$genDir/$LexHeaderFile", header.toJson)
     IndexMeta.createMarker(spark, s"$genDir/_SUCCESS")
     oldGens.foreach(IndexMeta.delete(spark, _))
   }
 
-  /** Batch ids already applied in this index life — the generation's
-    * replay record (absent table = none, e.g. right after a fit). */
-  private def lexApplied(spark: SparkSession, g: String): Seq[String] =
-    if (IndexMeta.exists(spark, s"$g/applied"))
-      Relational.cachedSchemaParquet(spark, s"$g/applied").collect().map(_.getString(0)).toSeq
-    else Seq.empty
-
-  /** The live generation's segment names, in manifest order. */
-  private[graft] def lexSegments(spark: SparkSession, g: String): Seq[String] =
-    Relational.cachedSchemaParquet(spark, s"$g/manifest").collect().map(_.getString(0)).toSeq.sorted
-
-  /** Scalars row + manifest (+ the applied-batch replay record) of a
-    * live lex generation in ONE Spark job (round-15, the OOV-fold
-    * treatment applied to the per-batch metadata reads): the score and
-    * append paths need all of these before they can build a plan, and
-    * reading them separately (`head()` + 1–2 `collect()`s) was 2–3
-    * driver round-trips per serving/ingest batch over tiny single-file
-    * tables. A cross join of the 1-row scalars with each table
-    * collapsed to one list row reads everything in one job — same
-    * values (`sort_array(collect_list)` ≡ [[lexSegments]]'s sorted
-    * collect; `applied` membership is order-insensitive), same layout
-    * guard as [[lexScalarsRow]]. */
-  private def lexHeader(spark: SparkSession, g: String,
-      what: String): (org.apache.spark.sql.Row, Seq[String], Seq[String]) = {
-    val scalars = Relational.cachedSchemaParquet(spark, s"$g/scalars")
-    require(IndexMeta.exists(spark, s"$g/manifest") &&
-        !IndexMeta.exists(spark, s"$g/terms") &&
-        scalars.columns.contains("lineage"),
-      s"lex generation $g predates the segment-resident terms layout — " +
-        s"$what cannot use it; refit with fitLexIndex first")
-    val appliedDf =
-      if (IndexMeta.exists(spark, s"$g/applied"))
-        Relational.cachedSchemaParquet(spark, s"$g/applied")
-      else spark.range(0).select(lit("").as("batch"))
-    val row = scalars
-      .crossJoin(Relational.cachedSchemaParquet(spark, s"$g/manifest")
-        .agg(sort_array(collect_list(col("seg"))).as("segs")))
-      .crossJoin(appliedDf.agg(collect_list(col("batch")).as("applied")))
-      .head()
-    (row, row.getAs[scala.collection.Seq[String]]("segs").toSeq,
-      row.getAs[scala.collection.Seq[String]]("applied").toSeq)
+  /** The header of the committed generation `g` — the one reader of
+    * every lex scalar, the segment list and the replay record: one
+    * small-file read on the driver, no Spark job. A generation without
+    * a header predates this layout (the parquet scalars/manifest/applied
+    * trio, or one of the three earlier round-14 layouts) and is refused
+    * loudly; the derived-index cache rebuilds such an index
+    * ([[lexLayoutCurrent]]). `what` names the caller in the refusal. */
+  private[graft] def lexHeader(spark: SparkSession, g: String, what: String): LexHeader = {
+    val bytes = IndexMeta.readSmallFile(spark, s"$g/$LexHeaderFile").getOrElse(sys.error(
+      s"lex generation $g predates the header layout — $what cannot use it; " +
+        "refit with fitLexIndex first"))
+    val o = lexJson.readTree(bytes)
+    def field(f: String) = Option(o.get(f)).getOrElse(sys.error(
+      s"lex generation header $g/$LexHeaderFile has no `$f` field"))
+    def strings(f: String): Seq[String] =
+      Option(o.get(f)).toSeq.flatMap(a => (0 until a.size).map(a.get(_).asText))
+    LexHeader(field("s_total").asLong, field("n_docs").asLong, field("posting_cap").asInt,
+      field("lineage").asText, strings("segments").sorted, strings("applied"))
   }
 
-  /** True iff generation `g` is the current layout: a segment
-    * manifest, segment-resident terms (no generation-level vocab
-    * table), and lineage-keyed side-state (scalars carry `lineage`)
-    * — the three earlier round-14 layouts each fail one. Maintenance
-    * and readers refuse older layouts loudly; the derived-index cache
-    * rebuilds them. */
+  /** True iff generation `g` has a header — the current layout.
+    * Maintenance and readers refuse older layouts loudly; the
+    * derived-index cache rebuilds them. */
   private def lexLayoutCurrent(spark: SparkSession, g: String): Boolean =
-    IndexMeta.exists(spark, s"$g/manifest") &&
-      !IndexMeta.exists(spark, s"$g/terms") &&
-      Relational.cachedSchemaParquet(spark, s"$g/scalars").columns.contains("lineage")
+    IndexMeta.exists(spark, s"$g/$LexHeaderFile")
 
-  /** The one-row scalars of a CURRENT-layout generation, read ONCE
-    * per op (the review-flagged repeated-I/O seam): guards the layout
-    * loudly, then hands back the row every field reader picks from —
-    * s_total, n_docs, posting_cap, lineage. One parquet open total:
-    * the layout check reuses the same frame's schema rather than
-    * re-reading it the way a [[lexLayoutCurrent]] call would. `what`
-    * names the caller in the refusal message. */
-  private def lexScalarsRow(spark: SparkSession, g: String,
-                            what: String): org.apache.spark.sql.Row = {
-    val scalars = Relational.cachedSchemaParquet(spark, s"$g/scalars")
-    require(IndexMeta.exists(spark, s"$g/manifest") &&
-        !IndexMeta.exists(spark, s"$g/terms") &&
-        scalars.columns.contains("lineage"),
-      s"lex generation $g predates the segment-resident terms layout — " +
-        s"$what cannot use it; refit with fitLexIndex first")
-    scalars.head()
-  }
-
-  /** The lineage id of a live generation — set by the fit that
-    * started this index's current life, carried forward verbatim by
-    * append and compaction. Side-state paths embed it. */
-  private def lexLineage(spark: SparkSession, g: String): String =
-    Relational.cachedSchemaParquet(spark, s"$g/scalars").select(col("lineage")).head().getString(0)
+  /** The header of an index's live generation. */
+  private def liveLexHeader(spark: SparkSession, lexDir: String, what: String): LexHeader =
+    lexHeader(spark, IndexMeta.requireLive(spark, lexDir, "lex"), what)
 
   /** Union read of one table across the given segments — callers
-    * resolve [[lexSegments]] ONCE per op and reuse the list (manifest
-    * is a driver-side small-file read; repeating it per table is the
-    * review-flagged seam). */
+    * read the header ONCE per op and reuse its segment list. */
   private def lexSegTable(spark: SparkSession, lexDir: String,
       segs: Seq[String], table: String): DataFrame = {
-    require(segs.nonEmpty, s"empty manifest under $lexDir")
+    require(segs.nonEmpty, s"no segments in the live header under $lexDir")
     Relational.cachedSchemaParquet(spark, segs.map(s => s"$lexDir/$s/$table"))
   }
 
-  /** The four live lex tables of an index — (terms, scalars, postings,
-    * doclens); postings/doclens unioned across segments, terms
-    * ASSEMBLED (per-segment df deltas summed per tok). Spec surface
-    * and the one reader seam. */
+  /** The live lex index — (terms, header, postings, doclens);
+    * postings/doclens unioned across segments, terms ASSEMBLED
+    * (per-segment df deltas summed per tok). Spec surface and the one
+    * reader seam. */
   private[graft] def lexLiveTables(spark: SparkSession, lexDir: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val g = IndexMeta.requireLive(spark, lexDir, "lex")
-    val segs = lexSegments(spark, g)
-    (lexSegTable(spark, lexDir, segs, "terms")
+      : (DataFrame, LexHeader, DataFrame, DataFrame) = {
+    val h = liveLexHeader(spark, lexDir, "this reader")
+    (lexSegTable(spark, lexDir, h.segments, "terms")
        .groupBy(col("tok")).agg(sum(col("dfq")).as("dfq")),
-      Relational.cachedSchemaParquet(spark, s"$g/scalars"),
-      lexSegTable(spark, lexDir, segs, "postings"),
-      lexSegTable(spark, lexDir, segs, "doclens"))
+      h,
+      lexSegTable(spark, lexDir, h.segments, "postings"),
+      lexSegTable(spark, lexDir, h.segments, "doclens"))
   }
 
   /** C43c score — batch hybrid retrieval where the sparse leg reads
@@ -956,7 +934,7 @@ object Pipeline {
     * batch is pinned first, so every downstream plan reads only the
     * pinned batch and the stored tables; PlanSpec) and stored
     * SEGMENTS are never rewritten (they ride into the next
-    * generation's manifest verbatim):
+    * generation's header verbatim):
     *   1. the (s_total, n_docs) scalars are additive over disjoint
     *      corpora, and the new segment's `terms` table is the batch's
     *      OWN per-term df delta (the Lucene per-segment dictionary) —
@@ -982,7 +960,7 @@ object Pipeline {
     *      own top-cap until compaction folds them — the documented
     *      staleness class, repaired at the next compaction or fit.
     * Idempotent under `batchId` replay: applied batch ids are
-    * recorded in the generation's `applied` table, written BEFORE the
+    * recorded in the generation's header, written BEFORE the
     * generation's commit marker — the record is atomic with the
     * commit itself, so there is no crash window between "the batch is
     * in" and "the batch is marked done" (a file-marker-after-commit
@@ -996,18 +974,15 @@ object Pipeline {
     * next compaction then corrupts. */
   def appendLexIndex(spark: SparkSession, lexDir: String, batch: DataFrame,
                      batchId: Option[String] = None): Unit = {
-    val g = IndexMeta.requireLive(spark, lexDir, "lex")
-    // scalars + manifest + applied in ONE job per append (round-15
-    // fold; was three reads). The applied table is the
-    // generation-resident replay record: it lives IN the committed
-    // generation, so a refit retires ingest history atomically with
-    // its commit — replaying an old batchId against the NEW index life
-    // appends (correct: the refit corpus decided what exists; the
-    // arrival is new data to it), never a silent no-op
-    val (sc, segs, applied) = lexHeader(spark, g, "appends")
-    val lineage = sc.getAs[String]("lineage")
-    if (batchId.exists(applied.contains)) return
-    val cap = sc.getAs[Long]("posting_cap").toInt
+    // the header's applied list is the generation-resident replay
+    // record: it lives IN the committed generation, so a refit retires
+    // ingest history atomically with its commit — replaying an old
+    // batchId against the NEW index life appends (correct: the refit
+    // corpus decided what exists; the arrival is new data to it),
+    // never a silent no-op
+    val h = liveLexHeader(spark, lexDir, "appends")
+    if (batchId.exists(h.applied.contains)) return
+    val (segs, cap) = (h.segments, h.postingCap)
     // pin the batch: it feeds four consumers (id guard, scalars delta,
     // df delta, the segment write) — and pinning is what makes the
     // no-old-corpus-read property STRUCTURAL rather than incidental
@@ -1015,7 +990,7 @@ object Pipeline {
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
       .withColumn("dl", size(col("toks"))))
     val doclens = lexSegTable(spark, lexDir, segs, "doclens")
-    val tombIds = lexTombstones(spark, lexDir, lineage)
+    val tombIds = lexTombstones(spark, lexDir, h.lineage)
       .map(_.select(col("doc_id")))
       .getOrElse(spark.range(0).select(col("id").as("doc_id")))
     // id guard + additive scalars delta in ONE job per append
@@ -1040,17 +1015,13 @@ object Pipeline {
         "double-insert double-counts df and serves duplicate postings; " +
         "dedup the batch (or compact first) and retry")
     if (hdr.isNullAt(0)) return
-    val (s2, n2) = (sc.getAs[Long]("s_total") + hdr.getLong(0),
-      sc.getAs[Long]("n_docs") + hdr.getLong(1))
+    val (s2, n2) = (h.sTotal + hdr.getLong(0), h.nDocs + hdr.getLong(1))
     val (segTerms, segPostings, segLens) =
       mergedLexFrames(spark, lexDir, segs, d, s2, n2, cap)
     val (genDir, oldGens) = IndexMeta.nextGen(spark, lexDir, "lex")
     val seg = writeLexSegment(spark, lexDir, genDir, segTerms, segPostings, segLens)
-    commitLexGen(spark, genDir, oldGens,
-      scalars = spark.range(1).select(lit(s2).as("s_total"), lit(n2).as("n_docs"),
-        lit(cap.toLong).as("posting_cap"), lit(lineage).as("lineage")),
-      segments = segs :+ seg,
-      applied = applied ++ batchId)
+    commitLexGen(spark, genDir, oldGens, h.copy(sTotal = s2, nDocs = n2,
+      segments = segs :+ seg, applied = h.applied ++ batchId))
     // segment-census cadence (the c27/IVF file-census doctrine at
     // segment granularity): query-time per-term candidates are bounded
     // by cap × live segments, so the store maintains ITSELF once the
@@ -1075,7 +1046,7 @@ object Pipeline {
 
   /** Live-generation segment census (test + telemetry surface). */
   private[graft] def lexSegmentCount(spark: SparkSession, lexDir: String): Int =
-    lexSegments(spark, IndexMeta.requireLive(spark, lexDir, "lex")).size
+    liveLexHeader(spark, lexDir, "the segment census").segments.size
 
   /** The append merge's three output frames — the new SEGMENT's
     * (terms delta, postings, doclens) — from the stored generation
@@ -1148,8 +1119,7 @@ object Pipeline {
     * is at most the tombstone window, and compaction cadence bounds
     * the window exactly as the IVF family's does. */
   def deleteLexDocs(spark: SparkSession, lexDir: String, ids: DataFrame): Unit = {
-    val g = IndexMeta.requireLive(spark, lexDir, "lex")
-    val lineage = lexScalarsRow(spark, g, "deletes").getAs[String]("lineage")
+    val lineage = liveLexHeader(spark, lexDir, "deletes").lineage
     // append only ids NOT already tombstoned (re-deletes are routine —
     // takedown automation retries — and must not grow the table), and
     // never create the table for a delete that matched nothing: an
@@ -1187,20 +1157,19 @@ object Pipeline {
     * longer contains them: a no-op (idempotent, the c27 crash
     * doctrine). */
   def compactLexIndex(spark: SparkSession, lexDir: String): Unit = {
-    val g = IndexMeta.requireLive(spark, lexDir, "lex")
-    val scRow = lexScalarsRow(spark, g, "compaction")
-    val lineage = scRow.getAs[String]("lineage")
+    val h = liveLexHeader(spark, lexDir, "compaction")
+    val lineage = h.lineage
     val tombOpt = lexTombstones(spark, lexDir, lineage)
     // a fold happens only when there is a pending delete or a segment
     // pileup — but crash ORPHANS (segments written by an append that
     // never committed, side-state of a retired lineage) are swept
     // unconditionally: nothing else ever lists them, so without this
     // the no-op path would let them accumulate forever
-    val segs = lexSegments(spark, g) // manifest read ONCE per compaction
+    val segs = h.segments
     if (tombOpt.isEmpty && segs.size <= 1) {
       gcLexIndex(spark, lexDir); return
     }
-    val cap = scRow.getAs[Long]("posting_cap").toInt
+    val cap = h.postingCap
     val tombIds = broadcast(tombOpt.map(_.select(col("doc_id")).distinct())
       .getOrElse(spark.range(0).select(col("id").as("doc_id"))))
     // the three multi-consumer intermediates here are INDEX-sized (the
@@ -1244,13 +1213,9 @@ object Pipeline {
         .withColumn("score_micro", expr(bm25RationalExpr)), cap)
     val (genDir, oldGens) = IndexMeta.nextGen(spark, lexDir, "lex")
     val seg = writeLexSegment(spark, lexDir, genDir, merged, postings, keptLens)
-    commitLexGen(spark, genDir, oldGens,
-      scalars = spark.range(1).select(lit(s2).as("s_total"), lit(n2).as("n_docs"),
-        lit(cap.toLong).as("posting_cap"), lit(lineage).as("lineage")),
-      segments = Seq(seg),
-      // the replay record survives the fold verbatim: a compaction
-      // changes what is stored, never what was ingested
-      applied = lexApplied(spark, g))
+    // the replay record survives the fold verbatim: a compaction
+    // changes what is stored, never what was ingested
+    commitLexGen(spark, genDir, oldGens, h.copy(sTotal = s2, nDocs = n2, segments = Seq(seg)))
     IndexMeta.delete(spark, s"$lexDir/tombstones_$lineage")
     gcLexIndex(spark, lexDir)
   }
@@ -1272,7 +1237,7 @@ object Pipeline {
       .distinct().localCheckpoint()
     // empty batch ⇒ 0.0 WITHOUT touching the index (round-14 advice:
     // the single-job fold dropped this short-circuit, so an empty
-    // batch against an empty-manifest index started throwing where it
+    // batch against an empty-segment-list index started throwing where it
     // previously read 0.0). isEmpty is a limit(1) over the pinned
     // frame — cheap, and this is the operator policy path, not the
     // per-batch score path (which has its own fold).
@@ -1282,7 +1247,7 @@ object Pipeline {
     // (a tok may appear in several segments' deltas — distinct before
     // membership) left-join back onto the pinned query terms and a
     // single aggregate reads |batch| and |known| together
-    val known = lexSegTable(spark, lexDir, lexSegments(spark, g), "terms")
+    val known = lexSegTable(spark, lexDir, lexHeader(spark, g, "the OOV probe").segments, "terms")
       .select(col("tok"))
       .join(broadcast(qDistinct), Seq("tok"), "left_semi")
       .distinct().withColumn("m", lit(1))
@@ -1332,18 +1297,17 @@ object Pipeline {
   }
 
   /** Reclaim everything the LIVE generation does not reference:
-    * `seg_*` dirs off the manifest (superseded inputs, crash orphans),
+    * `seg_*` dirs off the header (superseded inputs, crash orphans),
     * tombstone tables of retired lineages, and any `_appended_*`
     * marker files (the pre-applied-table replay protocol — the record
     * now rides the generation itself, so every marker file is legacy
     * debris). Purely a disk-space concern — readers resolve the
-    * manifest and the live lineage, so unreferenced files are
+    * header's segments and the live lineage, so unreferenced files are
     * structurally invisible. Single-writer maintenance, like the IVF
     * compaction's file GC. */
   private def gcLexIndex(spark: SparkSession, lexDir: String): Unit = {
-    val g = IndexMeta.requireLive(spark, lexDir, "lex")
-    val live = lexSegments(spark, g).toSet
-    val lineage = lexLineage(spark, g)
+    val h = liveLexHeader(spark, lexDir, "the segment GC")
+    val (live, lineage) = (h.segments.toSet, h.lineage)
     IndexMeta.list(spark, lexDir).foreach { st =>
       val n = st.getPath.getName
       val stale =
@@ -1380,12 +1344,11 @@ object Pipeline {
                                         queryDocs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     graft.functions.GraftFunctions.register(spark)
-    val g = IndexMeta.requireLive(spark, lexDir, "lex")
-    // scalars + manifest in ONE job per score batch (round-15 fold)
-    val (scRow, segs, _) = lexHeader(spark, g, "this raw-fact reader")
+    val h = liveLexHeader(spark, lexDir, "this raw-fact reader")
+    val segs = h.segments
     val stored = lexSegTable(spark, lexDir, segs, "postings")
-    val (sTotal, nDocs) = (scRow.getAs[Long]("s_total"), scRow.getAs[Long]("n_docs"))
-    val postings = lexTombstones(spark, lexDir, scRow.getAs[String]("lineage")) match {
+    val (sTotal, nDocs) = (h.sTotal, h.nDocs)
+    val postings = lexTombstones(spark, lexDir, h.lineage) match {
       case Some(t) => stored.join(broadcast(t.select(col("doc_id"))),
         Seq("doc_id"), "left_anti")
       case None => stored

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /**
  * Tier B — the relational query surface (SURVEY §2 Tier B): the Athena
@@ -29,23 +30,30 @@ object Relational {
              spark.catalog.tableExists(name)) spark.table(name)
     else cachedSchemaParquet(spark, s"$dir/$name.parquet")
 
-  /** Schema-memoized parquet read (round-14). A bare
-    * `spark.read.parquet(path)` re-infers the schema on EVERY
-    * DataFrame construction, and parquet inference is a footer-reading
-    * Spark JOB (`mergeSchemasInParallel`) — measured ~80 ms per table
-    * per construction on local[32] (SchemaCostProbe: 0.40 s vs 0.04 s
-    * for the 5 b5 tables), and at 100 TB a footer sample over a
-    * multi-million-file table, re-paid per query. Production fixes
-    * this with catalog tables (the statsDir branch above); this memo
-    * gives the bare-path read the same property: infer ONCE per
-    * (conf-posture, path, listing signature), then construct with the
-    * explicit schema — `spark.read.schema(s)` skips inference
-    * entirely. The signature (name/mtime/len of every file) revalidates
-    * against rewrites, so a regenerated fixture at the same path
-    * re-infers; inference marks every field nullable and the memo
-    * stores exactly the inferred schema, so the constructed relation is
-    * bit-identical to the uncached read (plan ReadSchema diffed —
-    * identical). Metadata caching only: no rows, no results. */
+  /** Schema-memoized parquet read. A bare `spark.read.parquet(path)`
+    * re-infers the schema on EVERY DataFrame construction, and parquet
+    * inference is a footer-reading Spark JOB (`mergeSchemasInParallel`)
+    * — measured ~80 ms per table per construction on local[32]
+    * (SchemaCostProbe: 0.40 s vs 0.04 s for the 5 b5 tables), and at
+    * 100 TB a footer sample over a multi-million-file table, re-paid
+    * per query. Production fixes this with catalog tables (the
+    * statsDir branch above); this memo gives the bare-path read the
+    * same property. It holds one entry PER PATH: (conf posture, path)
+    * → (listing signature, schema). A read constructs with the
+    * explicit schema — `spark.read.schema(s)` skips inference entirely
+    * — once every path it names has an entry whose signature matches
+    * the path's current listing and those schemas agree; a path
+    * without one is inferred alone and recorded. So a multi-path read
+    * (the lex segment union) runs no job once each member is known, a
+    * member added or rewritten costs one inference of that member
+    * only, and members that disagree fall back to one plain read of
+    * them all. The signature (name/mtime/len of every file)
+    * revalidates against rewrites, so a regenerated fixture at the
+    * same path re-infers. Entries come from inference or from
+    * [[writeParquet]], which records what a write put down; either
+    * way an entry is exactly what inference returns for the path, so
+    * the constructed relation is the uncached read's (plan ReadSchema
+    * diffed — identical). Metadata caching only: no rows, no results. */
   /** Bounded LRU (round-15, round-14 advice): the former clear-all at
     * 8192 entries made every live path re-pay one inference job
     * simultaneously (thundering re-inference in a long-lived service),
@@ -56,11 +64,11 @@ object Relational {
   /** Test seam: the eviction spec needs a deterministic starting state
     * (costs the next construction per live path one re-inference). */
   private[ops] def schemaMemoClear(): Unit = schemaMemo.clear()
-  private val schemaMemo: java.util.Map[String, (Long, org.apache.spark.sql.types.StructType)] =
+  private val schemaMemo: java.util.Map[String, (Long, StructType)] =
     java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[String, (Long, org.apache.spark.sql.types.StructType)](256, 0.75f, true) {
+      new java.util.LinkedHashMap[String, (Long, StructType)](256, 0.75f, true) {
         override def removeEldestEntry(
-            e: java.util.Map.Entry[String, (Long, org.apache.spark.sql.types.StructType)]): Boolean =
+            e: java.util.Map.Entry[String, (Long, StructType)]): Boolean =
           size() > schemaMemoMax
       })
 
@@ -120,32 +128,94 @@ object Relational {
     }
   }
 
+  /** Memo key of one path. The raw schema depends on every
+    * inference-affecting conf (see schemaConfs), so sessions with
+    * different postures must not share entries. The path is qualified
+    * first: a writer names a generation dir as `/idx/t.g00000`, while
+    * a reader resolving the live generation by listing gets
+    * `file:/idx/t.g00000` — one dir, one entry. */
+  private def memoKey(spark: SparkSession, path: String): String = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val qualified = p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p)
+    schemaConfs.map(c => spark.conf.getOption(c).getOrElse("")).mkString("|") + "|" + qualified
+  }
+
+  /** The path's listing signature, or None where the memo must not be
+    * used: a scheme without directory mtimes, or a missing dir (the
+    * plain read then throws as before). */
+  private def memoSignature(spark: SparkSession, path: String): Option[Long] =
+    if (!memoizableScheme(spark, path)) None
+    else try Some(listingSignature(spark, path)) catch { case _: java.io.IOException => None }
+
+  /** The schema memoized under `key`, if recorded at listing `sig`. */
+  private def memoized(key: String, sig: Long): Option[StructType] =
+    Option(schemaMemo.get(key)).collect { case (`sig`, s) => s }
+
+  /** The memoized schema of `path`, if its entry matches the current
+    * listing (spec surface). */
+  private[ops] def memoizedSchema(spark: SparkSession, path: String): Option[StructType] =
+    memoSignature(spark, path).flatMap(memoized(memoKey(spark, path), _))
+
   private[graft] def cachedSchemaParquet(spark: SparkSession, path: String): DataFrame =
     cachedSchemaParquet(spark, Seq(path))
 
-  /** Multi-path form — one memo entry over the combined listing
-    * signature (the lex segment union reads N immutable segment dirs
-    * in one relation; re-inferring their shared schema per query batch
-    * is the same footer job, ×N). */
   private[graft] def cachedSchemaParquet(spark: SparkSession, paths: Seq[String]): DataFrame = {
-    // the raw schema depends on every inference-affecting conf (see
-    // schemaConfs), so sessions with different postures must not share
-    // entries
-    val key = schemaConfs.map(c => spark.conf.getOption(c).getOrElse(""))
-      .mkString("|") + "|" + paths.mkString("\u0001")
-    val sig =
-      if (!paths.forall(memoizableScheme(spark, _))) Long.MinValue // bypass, never memoize
-      else try paths.foldLeft(17L)((acc, p) => acc * 1000003L + listingSignature(spark, p)) catch {
-        case _: java.io.IOException => Long.MinValue // missing dir: fall through, read throws as before
-      }
-    val cached = schemaMemo.get(key)
-    if (cached != null && cached._1 == sig && sig != Long.MinValue)
-      spark.read.schema(cached._2).parquet(paths: _*)
+    val sigs = paths.map(memoSignature(spark, _))
+    if (sigs.exists(_.isEmpty)) spark.read.parquet(paths: _*)
     else {
-      val df = spark.read.parquet(paths: _*)
-      if (sig != Long.MinValue) schemaMemo.put(key, (sig, df.schema))
-      df
+      val reads = paths.zip(sigs.flatten).map { case (p, sig) =>
+        val key = memoKey(spark, p)
+        memoized(key, sig).map(Right(_)).getOrElse {
+          val df = spark.read.parquet(p)
+          schemaMemo.put(key, (sig, df.schema))
+          Left(df)
+        }
+      }
+      reads match {
+        case Seq(Left(df)) => df // a lone miss: the inferring read itself
+        case _ =>
+          val schemas = reads.map(_.fold(_.schema, identity)).distinct
+          if (schemas.size == 1) spark.read.schema(schemas.head).parquet(paths: _*)
+          else spark.read.parquet(paths: _*)
+      }
     }
+  }
+
+  /** Write `df` to `path` as parquet (`mode` overwrite or append) and
+    * record the written schema under the path's NEW listing signature,
+    * so the next read of `path`, alone or inside a union, runs no
+    * inference job. Spark stores the writer's schema in every file
+    * footer, and a file read returns it with every field nullable, so
+    * that nullable form is what inference finds. An append keeps the
+    * entry only if it matched the listing just before the write and
+    * its schema equals the appended one; otherwise the entry is
+    * dropped and the next read infers. For the index writers (lex
+    * segments, the near-dup tables): each path has one writer at a
+    * time, which is what makes the listing taken after the write this
+    * write's own. */
+  private[graft] def writeParquet(df: DataFrame, path: String, mode: String = "overwrite"): Unit = {
+    val spark = df.sparkSession
+    val key = memoKey(spark, path)
+    val schema = asRead(df.schema)
+    val keep = mode != "append" ||
+      memoSignature(spark, path).flatMap(memoized(key, _)).contains(schema)
+    df.write.mode(mode).parquet(path)
+    memoSignature(spark, path).filter(_ => keep) match {
+      case Some(sig) => schemaMemo.put(key, (sig, schema))
+      case None => schemaMemo.remove(key)
+    }
+  }
+
+  /** A schema as a file read returns it: every field, array element
+    * and map value nullable (Spark's `asNullable`, which is not public). */
+  private def asRead(s: StructType): StructType =
+    StructType(s.fields.map(f => f.copy(dataType = asRead(f.dataType), nullable = true)))
+
+  private def asRead(t: DataType): DataType = t match {
+    case s: StructType => asRead(s)
+    case a: ArrayType => ArrayType(asRead(a.elementType), containsNull = true)
+    case m: MapType => MapType(asRead(m.keyType), asRead(m.valueType), valueContainsNull = true)
+    case other => other
   }
 
   /** The events table has stored `ts` as parquet TIMESTAMP(NANOS) (read

@@ -492,17 +492,17 @@ object Similarity {
     * commit. */
   def buildNearDupIndex(spark: SparkSession, docs: DataFrame, indexDir: String): Unit = {
     val (shDir, oldSh) = IndexMeta.nextGen(spark, indexDir, "shingles")
-    hashedShingles(spark, docs).write.mode("overwrite").parquet(shDir)
+    Relational.writeParquet(hashedShingles(spark, docs), shDir)
     val sh = Relational.cachedSchemaParquet(spark, shDir)
     val (bandDir, oldBands) = IndexMeta.nextGen(spark, indexDir, "bands")
-    bandKeysOf(sh).write.mode("overwrite").parquet(bandDir)
+    Relational.writeParquet(bandKeysOf(sh), bandDir)
     val bands = Relational.cachedSchemaParquet(spark, bandDir)
     val cands = bands.as("a").hint("shuffle_hash").join(bands.as("b"),
         col("a.bkh") === col("b.bkh") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"))
       .distinct()
     val (pairDir, oldPairs) = IndexMeta.nextGen(spark, indexDir, "pairs")
-    verifyPairs(cands, sh).write.mode("overwrite").parquet(pairDir)
+    Relational.writeParquet(verifyPairs(cands, sh), pairDir)
     (oldSh ++ oldBands ++ oldPairs).foreach(IndexMeta.delete(spark, _))
   }
 
@@ -569,9 +569,11 @@ object Similarity {
     val arrParts = arr.rdd.getNumPartitions.toLong
     val pairRows = newPairs.count()
     val pairParts = newPairs.rdd.getNumPartitions.toLong
-    arr.write.mode("append").parquet(nearDupTablePath(spark, indexDir, "shingles"))
-    bandKeysOf(arr).write.mode("append").parquet(nearDupTablePath(spark, indexDir, "bands"))
-    newPairs.write.mode("append").parquet(nearDupTablePath(spark, indexDir, "pairs"))
+    // through the memo-recording writer: the next probe's reads of the
+    // grown tables construct without a footer-inference job
+    Relational.writeParquet(arr, nearDupTablePath(spark, indexDir, "shingles"), "append")
+    Relational.writeParquet(bandKeysOf(arr), nearDupTablePath(spark, indexDir, "bands"), "append")
+    Relational.writeParquet(newPairs, nearDupTablePath(spark, indexDir, "pairs"), "append")
     marker.foreach(IndexMeta.createMarker(spark, _))
     math.max(math.min(arrRows, arrParts), // shingles; bands shares arr's partitioning
       math.min(pairRows, pairParts))
@@ -593,8 +595,7 @@ object Similarity {
       val bytes = IndexMeta.bytesUnder(spark, live, ".parquet")
       val nf = math.max(1L, math.ceil(bytes.toDouble / targetFileBytes).toLong).toInt
       val (next, oldGens) = IndexMeta.nextGen(spark, indexDir, table)
-      Relational.cachedSchemaParquet(spark, live).repartition(nf)
-        .write.mode("overwrite").parquet(next)
+      Relational.writeParquet(Relational.cachedSchemaParquet(spark, live).repartition(nf), next)
       oldGens.foreach(IndexMeta.delete(spark, _))
     }
 
@@ -700,7 +701,10 @@ object Similarity {
       .writeStream.queryName(name)
       .foreachBatch { (batch: Dataset[Row], bid: Long) =>
         val t0 = System.nanoTime()
-        val filesAdded = appendToNearDupIndex(spark, idx, batch, Some(s"stream_$bid"))
+        // batch ids carry the stream name: engine bids restart at 0
+        // with every fresh checkpoint, so a bare bid would turn a second
+        // stream's batches into no-op "replays" of the first one's
+        val filesAdded = appendToNearDupIndex(spark, idx, batch, Some(s"${name}_$bid"))
         // in-stream maintenance (round-7 cadence theme applied to the
         // streaming leg): when conf'd, every batch commit is followed
         // by the AMORTIZED file-count trigger (CensusCadence — a real
@@ -1375,7 +1379,7 @@ object Similarity {
         // exactly once across every crash window.
         val t0 = System.nanoTime()
         val drops = dedupSemanticWithAppend(spark, indexDir,
-          batch.select(col("vec_id"), col("embedding")), Some(s"stream_$bid"))
+          batch.select(col("vec_id"), col("embedding")), Some(s"${sinkName}_$bid"))
         writeDropsBatch(drops, bid, out.toString)
         // in-stream maintenance: same amortized cadence contract as
         // the c22d store stream (see CensusCadence — a 19k-cell layout
@@ -2824,7 +2828,7 @@ object Similarity {
       .writeStream.queryName(name)
       .foreachBatch { (batch: Dataset[Row], bid: Long) =>
         val t0 = System.nanoTime()
-        ragIngest(spark, idx, batch, Some(s"stream_$bid"))
+        ragIngest(spark, idx, batch, Some(s"${name}_$bid"))
         streamCompactMaxFiles(spark).foreach { mf =>
           // files-added bound: one file per touched cell ≤ chunk rows;
           // chunks per doc are bounded by text length / stride
@@ -2970,6 +2974,12 @@ object Similarity {
             "and layout writes, repair with rebuildIdsSidecar and re-run.")
         rows.map(r => (r.getInt(0), r.getSeq[Float](1))).sortBy(_._1)
       } else centsDf.collect().map(r => (r.getInt(0), r.getSeq[Float](1))).sortBy(_._1)
+    // an empty codebook empties the guard's cross join too, so the
+    // live-id check above saw no row and proved nothing: refuse before
+    // the first write, never after the sidecar has grown
+    require(cents.nonEmpty,
+      s"the centroids table under $indexDir has no rows — the index cannot " +
+        "place vectors and the live-id guard could not run; rebuild the index")
     // Sidecar lands BEFORE the layout (one small file, job-committed):
     // a crash between the two writes leaves the sidecar a SUPERSET of
     // the layout, so the bare re-run fails LOUDLY on the guard above

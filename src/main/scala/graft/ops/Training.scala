@@ -1040,11 +1040,16 @@ object Training {
       col("source"), col("n_chars")))
     // slice id range + stored watermark in ONE job per slice (round-15
     // action fold): a cross join of the 1-row aggregate with the 1-row
-    // meta table reads both together
-    val mm = d.agg(min(col("doc_id")), max(col("doc_id")))
-      .crossJoin(Relational.cachedSchemaParquet(spark,
-        IndexMeta.requireLive(spark, stateDir, "meta"))).head()
+    // meta table reads both together. Without a committed meta the
+    // range is read alone, so an empty slice is marked done before the
+    // missing state is refused (streaming replay can deliver one first)
+    val meta = IndexMeta.liveGen(spark, stateDir, "meta")
+    val range = d.agg(min(col("doc_id")), max(col("doc_id")))
+    val mm = meta.fold(range)(g =>
+      range.crossJoin(Relational.cachedSchemaParquet(spark, g.toString))).head()
     if (mm.isNullAt(0)) { IndexMeta.createMarker(spark, marker); return }
+    // a non-empty slice needs the state: refuse with the contract error
+    if (meta.isEmpty) IndexMeta.requireLive(spark, stateDir, "meta")
     val prevMax = mm.getAs[Long]("max_doc_id")
     require(mm.getLong(0) > prevMax,
       s"arrival slice carries doc_id ${mm.getLong(0)} ≤ the state's id " +

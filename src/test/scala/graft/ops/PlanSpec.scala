@@ -608,7 +608,7 @@ class PlanSpec extends AnyFunSuite with SparkTestSession {
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
       .withColumn("dl", size(col("toks"))))
     val (terms, postings, doclens) =
-      Pipeline.mergedLexFrames(spark, lexDir, Pipeline.lexSegments(spark, g),
+      Pipeline.mergedLexFrames(spark, lexDir, Pipeline.lexHeader(spark, g, "the spec").segments,
         d, 1L, 1L, 1000)
     Seq("terms" -> terms, "postings" -> postings, "doclens" -> doclens).foreach {
       case (name, f) =>

@@ -51,21 +51,12 @@ class SchemaMemoSpec extends AnyFunSuite with SparkTestSession {
     assert(Relational.cachedSchemaParquet(spark, path).schema.fieldNames.toSeq === Seq("z"))
   }
 
-  /** Round-15 (round-14 advice): the memo bound evicts only the
-    * LEAST-RECENTLY-USED entry instead of clearing everything. Pin the
-    * eviction path: an evicted entry re-infers (one footer job) and
-    * still reads correctly; a surviving hot entry stays job-free at
-    * construction. Jobs are counted through a listener with an RDD
-    * sentinel action (listener events are FIFO, so once the sentinel
-    * arrives every earlier job is counted). */
-  test("LRU eviction: evicted paths re-infer correctly, hot paths stay memoized") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_memo_spec_lru_").toString
-    val paths = (1 to 3).map { i =>
-      val p = s"$tmp/t$i.parquet"
-      spark.range(2).select(col("id").as(s"c$i")).write.parquet(p)
-      p
-    }
-    val savedMax = Relational.schemaMemoMax
+  /** Spark jobs `body` runs, counted by a listener with an RDD
+    * sentinel action: listener events are FIFO, so once the MARKED
+    * sentinel's start arrives every job the body ran is counted — a
+    * bare count-wait could return early while body events are still
+    * in flight. */
+  private def jobsDuring(body: => Unit): Int = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val sentinelSeen = new java.util.concurrent.atomic.AtomicBoolean(false)
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -77,12 +68,8 @@ class SchemaMemoSpec extends AnyFunSuite with SparkTestSession {
         else { jobs.incrementAndGet(); () }
       }
     }
-    // MARKED sentinel (FIFO bus): once its start event arrives, every
-    // job the body ran is counted — a bare count-wait could return
-    // early while body events are still in flight
-    def jobsDuring(body: => Unit): Int = {
-      jobs.set(0)
-      sentinelSeen.set(false)
+    spark.sparkContext.addSparkListener(listener)
+    try {
       body
       spark.sparkContext.setJobDescription("graft_memo_sentinel")
       spark.sparkContext.parallelize(Seq(1)).count()
@@ -90,14 +77,28 @@ class SchemaMemoSpec extends AnyFunSuite with SparkTestSession {
       val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
       while (!sentinelSeen.get() && System.nanoTime() < deadline) Thread.sleep(20)
       jobs.get()
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** Round-15 (round-14 advice): the memo bound evicts only the
+    * LEAST-RECENTLY-USED entry instead of clearing everything. Pin the
+    * eviction path: an evicted entry re-infers (one footer job) and
+    * still reads correctly; a surviving hot entry stays job-free at
+    * construction. */
+  test("LRU eviction: evicted paths re-infer correctly, hot paths stay memoized") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_memo_spec_lru_").toString
+    val paths = (1 to 3).map { i =>
+      val p = s"$tmp/t$i.parquet"
+      spark.range(2).select(col("id").as(s"c$i")).write.parquet(p)
+      p
     }
+    val savedMax = Relational.schemaMemoMax
     try {
       Relational.schemaMemoMax = 2
       // deterministic start: the shared session's memo already holds other
       // suites' entries, and eviction removes one ELDEST entry per put —
       // without a clear, t1 would survive behind them
       Relational.schemaMemoClear()
-      spark.sparkContext.addSparkListener(listener)
       // fill: t1, t2 memoized; t2 then t3 touch keeps t2+t3 live, evicts t1
       Relational.cachedSchemaParquet(spark, paths(0))
       Relational.cachedSchemaParquet(spark, paths(1))
@@ -108,17 +109,61 @@ class SchemaMemoSpec extends AnyFunSuite with SparkTestSession {
       // t1 was evicted (LRU at bound 2): construction re-infers (>=1 job)
       // and still returns the right schema — eviction costs a job, never
       // correctness
-      val evicted = {
-        val n = jobsDuring {
-          val df = Relational.cachedSchemaParquet(spark, paths(0))
-          assert(df.schema.fieldNames.toSeq === Seq("c1"))
-        }
-        n
+      val evicted = jobsDuring {
+        val df = Relational.cachedSchemaParquet(spark, paths(0))
+        assert(df.schema.fieldNames.toSeq === Seq("c1"))
       }
       assert(evicted >= 1, "evicted entry did not re-infer (memo unbounded?)")
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      Relational.schemaMemoMax = savedMax
+    } finally Relational.schemaMemoMax = savedMax
+  }
+
+  test("a union over memoized members runs no job; rewriting one member re-infers it") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_memo_spec_union_").toString
+    val paths = (0 until 4).map(i => s"$tmp/seg_$i")
+    paths.zipWithIndex.foreach { case (p, i) =>
+      Relational.writeParquet(spark.range(i * 10, i * 10 + 3).select(col("id").as("k"),
+        array(col("id")).as("ks")), p)
+    }
+    assert(jobsDuring(Relational.cachedSchemaParquet(spark, paths)) === 0,
+      "a union of writer-primed members ran a schema inference job")
+    // a member rewritten outside the writer (same schema) must re-infer
+    // that member, and then the union is memoized again
+    spark.range(5).select(col("id").as("k"), array(col("id")).as("ks"))
+      .write.mode("overwrite").parquet(paths(2))
+    assert(jobsDuring(Relational.cachedSchemaParquet(spark, paths)) >= 1,
+      "a rewritten member was served from a stale entry")
+    assert(jobsDuring(Relational.cachedSchemaParquet(spark, paths)) === 0)
+    assert(Relational.cachedSchemaParquet(spark, paths).count() === 14L)
+  }
+
+  test("writeParquet: an append of another schema drops the entry instead of keeping it") {
+    val p = java.nio.file.Files.createTempDirectory("graft_memo_spec_app_").toString + "/t"
+    Relational.writeParquet(spark.range(2).select(col("id").as("a")), p)
+    assert(Relational.memoizedSchema(spark, p) === Some(spark.read.parquet(p).schema))
+    Relational.writeParquet(spark.range(2).select(col("id").as("a")), p, "append")
+    assert(Relational.memoizedSchema(spark, p) === Some(spark.read.parquet(p).schema),
+      "a same-schema append must carry the entry to the new listing")
+    Relational.writeParquet(spark.range(2).select(col("id").as("a"), lit("x").as("b")), p, "append")
+    assert(Relational.memoizedSchema(spark, p) === None,
+      "an append of another schema kept the memoized entry")
+  }
+
+  test("every index table written through writeParquet records the schema a read infers") {
+    val docs = Relational.table(spark, dir, "documents").select("doc_id", "text")
+    val lex = Similarity.freshScratch(spark, "graft_memo_spec_lex_")
+    Pipeline.fitLexIndex(docs.filter(col("doc_id") % 10 =!= 7), lex)
+    Pipeline.appendLexIndex(spark, lex, docs.filter(col("doc_id") % 10 === 7), Some("b1"))
+    val nd = Similarity.freshScratch(spark, "graft_memo_spec_nd_")
+    Similarity.buildNearDupIndex(spark, docs.filter(col("doc_id") % 10 =!= 7), nd)
+    Similarity.appendToNearDupIndex(spark, nd, docs.filter(col("doc_id") % 10 === 7), Some("b1"))
+    val header = Pipeline.lexHeader(spark, IndexMeta.requireLive(spark, lex, "lex"), "the spec")
+    assert(header.segments.size === 2)
+    val tables = header.segments.flatMap(s =>
+        Seq("terms", "postings", "doclens").map(t => s"$lex/$s/$t")) ++
+      Seq("shingles", "bands", "pairs").map(Similarity.nearDupTablePath(spark, nd, _))
+    tables.foreach { p =>
+      assert(Relational.memoizedSchema(spark, p) === Some(spark.read.parquet(p).schema),
+        s"recorded schema of $p differs from the inferred one")
     }
   }
 }

@@ -1350,6 +1350,36 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     assert(sidecarIds().contains(400L))
   }
 
+  test("C3b append: an empty centroids table fails loudly before the ids sidecar is touched") {
+    // a 0-row centroids table empties the guard's cross join, so the
+    // live-id clash check sees no row; the append must refuse before
+    // its first write instead of growing the sidecar and then failing
+    val indexDir = java.nio.file.Files.createTempDirectory("graft_ivf_nocents_spec").toString
+    val e = Relational.table(spark, dir, "embeddings")
+    Similarity.buildIvfIndexFrom(spark,
+      e.filter(col("vec_id") < 300).select(col("vec_id"), col("embedding")), indexDir)
+    val cents = s"$indexDir/centroids"
+    val schema = spark.read.parquet(cents).schema
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      .write.mode("overwrite").parquet(cents)
+    val g = IndexMeta.liveGen(spark, indexDir, "ids").get.toString
+    def sidecar() = (IndexMeta.countUnder(spark, g, ".parquet"),
+      spark.read.parquet(g).collect().map(_.getLong(0)).toSet)
+    val before = sidecar()
+    val batch = e.filter(col("vec_id") >= 300 && col("vec_id") < 310)
+      .select(col("vec_id"), col("embedding"))
+    Seq("true", "false").foreach { check =>
+      spark.conf.set("graft.index.appendIdCheck", check)
+      try {
+        val ex = intercept[IllegalArgumentException] {
+          Similarity.appendToIvfIndex(spark, indexDir, batch)
+        }
+        assert(ex.getMessage.contains("centroids"), ex.getMessage)
+      } finally spark.conf.unset("graft.index.appendIdCheck")
+      assert(sidecar() == before, s"appendIdCheck=$check: the ids sidecar changed")
+    }
+  }
+
   test("C3 IVF kNN join: high recall@3 vs the brute-force join") {
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.select("va", "vb").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -2210,17 +2240,16 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
 
   // -------------------- C43d/C43e: lexical index maintenance legs
 
-  /** All four lex tables of a live generation as sorted sequences —
-    * the parity currency of the append/compact specs (term-for-term,
-    * posting-for-posting, bit-identical longs). */
+  /** The live lex index as sorted sequences (terms, the header's
+    * scalars, postings, doclens) — the parity currency of the
+    * append/compact specs (term-for-term, posting-for-posting,
+    * bit-identical longs). */
   private def lexTables(lexDir: String) = {
-    val (t, s, p, dls) = Pipeline.lexLiveTables(spark, lexDir)
+    val (t, h, p, dls) = Pipeline.lexLiveTables(spark, lexDir)
     val terms = t.collect()
       .map(r => (r.getAs[String]("tok"), r.getAs[Long]("dfq")))
       .sortBy(_._1).toSeq
-    val scalars = s.collect()
-      .map(r => (r.getAs[Long]("s_total"), r.getAs[Long]("n_docs"),
-        r.getAs[Long]("posting_cap"))).toSeq
+    val scalars = (h.sTotal, h.nDocs, h.postingCap)
     val postings = p.collect()
       .map(r => (r.getAs[String]("tok"), r.getAs[Long]("doc_id"),
         r.getAs[Long]("tf"), r.getAs[Int]("dl").toLong))
@@ -2262,10 +2291,9 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     Pipeline.appendLexIndex(spark, idx, batch, Some("b1"))
     val gen = IndexMeta.requireLive(spark, idx, "lex")
     // the replay record rides the generation ITSELF (atomic with the
-    // commit — no marker-file crash window): `applied` under the live
-    // gen dir carries the batch id
-    assert(spark.read.parquet(s"$gen/applied").collect()
-        .map(_.getString(0)).toSeq == Seq("b1"),
+    // commit — no marker-file crash window): the live generation's
+    // header carries the batch id
+    assert(Pipeline.lexHeader(spark, gen, "the spec").applied == Seq("b1"),
       "applied-batch record missing from the committed generation")
     assert(!IndexMeta.list(spark, idx)
         .exists(_.getPath.getName.startsWith("_appended_")),
@@ -2277,6 +2305,55 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
       Pipeline.appendLexIndex(spark, idx, batch, Some("b2"))
     }
     assert(e.getMessage.contains("re-inserts"), e.getMessage)
+  }
+
+  test("C43c header: a generation without the commit marker is invisible") {
+    // crash window of a commit: the next generation's header landed,
+    // its `_SUCCESS` did not — readers keep serving the previous one
+    val docs = Relational.table(spark, dir, "documents")
+    val idx = Similarity.freshScratch(spark, "graft_c43_hdr_crash_")
+    Pipeline.fitLexIndex(docs, idx)
+    val gen = IndexMeta.requireLive(spark, idx, "lex")
+    val h = Pipeline.lexHeader(spark, gen, "the spec")
+    val queryDocs = docs.filter(col("doc_id") % 17 === 0).select(col("doc_id"), col("text"))
+    def scores() = Pipeline.sparseScoreIndexed(spark, idx, queryDocs)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq.sorted
+    val before = scores()
+    val (next, _) = IndexMeta.nextGen(spark, idx, "lex")
+    IndexMeta.writeSmallFile(spark, s"$next/header.json",
+      h.copy(nDocs = h.nDocs * 2, segments = Seq("seg_missing")).toJson)
+    assert(IndexMeta.requireLive(spark, idx, "lex") == gen,
+      "an uncommitted header resolved as the live generation")
+    assert(Pipeline.lexHeader(spark, IndexMeta.requireLive(spark, idx, "lex"), "the spec") == h)
+    assert(scores() == before, "an uncommitted header changed the served scores")
+  }
+
+  test("C43c header: a parquet-trio generation is refused with the refit message") {
+    // the layout before the header: one-row scalars, a segment manifest
+    // and an applied table as parquet, committed by `_SUCCESS`
+    import spark.implicits._
+    val docs = Relational.table(spark, dir, "documents").select(col("doc_id"), col("text"))
+    val idx = Similarity.freshScratch(spark, "graft_c43_hdr_trio_")
+    Pipeline.fitLexIndex(docs.filter(col("doc_id") % 10 =!= 7), idx)
+    val h = Pipeline.lexHeader(spark, IndexMeta.requireLive(spark, idx, "lex"), "the spec")
+    val (old, _) = IndexMeta.nextGen(spark, idx, "lex")
+    Seq((h.sTotal, h.nDocs, h.postingCap.toLong, h.lineage))
+      .toDF("s_total", "n_docs", "posting_cap", "lineage").write.parquet(s"$old/scalars")
+    h.segments.toDF("seg").write.parquet(s"$old/manifest")
+    Seq("b0").toDF("batch").write.parquet(s"$old/applied")
+    IndexMeta.createMarker(spark, s"$old/_SUCCESS")
+    assert(IndexMeta.requireLive(spark, idx, "lex").endsWith(
+      new org.apache.hadoop.fs.Path(old).getName), "the trio generation is not the live one")
+    val refusals = Seq(
+      "search" -> (() => Pipeline.sparseScoreIndexed(spark, idx, docs.limit(4)).collect()),
+      "append" -> (() => Pipeline.appendLexIndex(spark, idx,
+        docs.filter(col("doc_id") % 10 === 7), Some("b1"))),
+      "delete" -> (() => Pipeline.deleteLexDocs(spark, idx, docs.limit(1).select(col("doc_id")))),
+      "compaction" -> (() => Pipeline.compactLexIndex(spark, idx)))
+    refusals.foreach { case (what, op) =>
+      val e = intercept[RuntimeException](op())
+      assert(e.getMessage.contains("refit with fitLexIndex"), s"$what: ${e.getMessage}")
+    }
   }
 
   test("C43e: a deleted doc is invisible to the next sparse batch; re-delete idempotent") {

@@ -537,6 +537,20 @@ class TrainingSpec extends AnyFunSuite with SparkTestSession {
     assert(e.getMessage.contains("watermark"), e.getMessage)
   }
 
+  test("C33b: an empty slice before the state exists is marked done, not refused") {
+    // streaming replay can deliver an empty slice before the build has
+    // committed the state's id watermark: the empty slice is a no-op
+    // recorded by its marker, while a non-empty one still fails loudly
+    val docs = Relational.table(spark, "/root/testdata/sf0.001", "documents")
+    val st = Similarity.freshScratch(spark, "graft_c33b_empty_")
+    Training.ingestPretrainSlice(spark, st, docs.filter(lit(false)), "s0")
+    assert(IndexMeta.exists(spark, s"$st/_slice_s0"), "the empty slice left no marker")
+    val e = intercept[RuntimeException] {
+      Training.ingestPretrainSlice(spark, st, docs.limit(3), "s1")
+    }
+    assert(e.getMessage.contains("no committed meta generation"), e.getMessage)
+  }
+
   test("C33c: streamed pretrain ingest ≡ slice-wise one-shot at the same boundaries") {
     // the c43f stream≡append pin on the capstone chain: foreachBatch
     // replay through the staged id-range slices must land the IDENTICAL

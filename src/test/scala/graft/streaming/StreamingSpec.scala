@@ -280,6 +280,36 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
       s"cadence did not bound the census: ${census(idx2)} vs ${census(idx)}")
   }
 
+  test("two streams into one near-dup store: the second stream's batches are not replays") {
+    // engine batch ids restart at 0 with every fresh checkpoint, so a
+    // batch id keyed by the bid alone makes the second stream's first
+    // batches look like replays of the first stream's and no-op them
+    import graft.ops.Similarity
+    import spark.implicits._
+    val idx = java.nio.file.Files.createTempDirectory("graft_c22d_two").toString
+    val corpus = Relational.table(spark, dir, "documents").select("doc_id", "text")
+    Similarity.buildNearDupIndex(spark, corpus, idx)
+    val copied = corpus.orderBy("doc_id").head().getString(1)
+    val first = Seq((2000001L, "first stream filler one"), (2000050L, "first stream filler two"),
+      (2000100L, "first stream filler three"), (2000199L, "first stream filler four"))
+      .toDF("doc_id", "text")
+    // same id spread, so both streams replay as the same batch ids; the
+    // second carries a copy of a corpus document that must pair
+    val second = Seq((3000001L, copied), (3000050L, "second stream filler two"),
+      (3000100L, "second stream filler three"), (3000199L, "second stream filler four"))
+      .toDF("doc_id", "text")
+    Similarity.dedupStreamNearStoreOn(spark, idx, first, "graft_c22d_two_a")
+    val pairs = Similarity.dedupStreamNearStoreOn(spark, idx, second, "graft_c22d_two_b")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val stored = spark.read.parquet(Similarity.nearDupTablePath(spark, idx, "shingles"))
+      .select("doc_id").collect().map(_.getLong(0)).toSet
+    val arrived = (first.union(second)).select("doc_id").collect().map(_.getLong(0)).toSet
+    assert(arrived.subsetOf(stored),
+      s"arrivals missing from the store: ${(arrived -- stored).toSeq.sorted}")
+    assert(pairs.exists(_._2 == 3000001L),
+      s"the second stream's copy of a corpus document did not pair: $pairs")
+  }
+
   test("streaming semantic dedup sink: replaying a batch's drop write is idempotent") {
     // the c22c crash window the ADVICE flagged: sink write lands, the
     // checkpoint commit doesn't, the engine replays the batch — the
