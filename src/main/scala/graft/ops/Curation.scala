@@ -552,7 +552,7 @@ object Curation {
     val docs = Relational.table(spark, dir, "documents")
     val stage = Relational.stageSlices(spark, docs, col("doc_id"),
       s"graft_c21_stage_${dir.replaceAll("[^a-zA-Z0-9]", "_")}")
-    Relational.replayToSink(spark,
+    StreamHarness.replayToSink(spark,
       repetitionStats(
         spark.readStream.schema(docs.schema)
           .option("maxFilesPerTrigger", "1")

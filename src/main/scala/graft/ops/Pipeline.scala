@@ -1480,48 +1480,20 @@ object Pipeline {
 
   /** C43f — STREAMING lexical ingest (the c42c/c22d foreachBatch
     * doctrine on the lexical store): replay `arrivals` one file per
-    * trigger; each micro-batch makes ONE idempotent [[appendLexIndex]]
-    * call keyed by the engine's batchId, so a crashed batch replays
-    * into a no-op (exactly-once through the append marker, which
-    * commits only after the new `lex.gN` generation does). Single
-    * writer by construction — foreachBatch batches are sequential,
-    * and the generation protocol means a reader mid-stream always
-    * sees a complete consistent snapshot. */
+    * trigger through [[StreamHarness]]; each micro-batch makes ONE
+    * idempotent [[appendLexIndex]] call under the harness's batch key
+    * (exactly-once through the append marker, which commits only
+    * after the new `lex.gN` generation does). The generation protocol
+    * means a reader mid-stream always sees a complete consistent
+    * snapshot. */
   private[graft] def lexIngestStreamOn(spark: SparkSession, lexDir: String,
       arrivals: DataFrame, name: String,
-      nSlices: Int = Relational.replaySlices): Unit = {
-    import org.apache.spark.sql.{Dataset, Row}
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    val src = arrivals.select(col("doc_id"), col("text"))
-    val stage = Relational.stageSlices(spark, src, col("doc_id"), s"${name}_stage", nSlices)
-    val base = Paths.get(System.getProperty("java.io.tmpdir"),
-      s"sink_${spark.sparkContext.applicationId}_$name")
-    if (Files.exists(base)) {
-      Files.walk(base).sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(Files.delete)
+      nSlices: Int = Relational.replaySlices): Unit =
+    StreamHarness.run(spark, name, arrivals.select(col("doc_id"), col("text")), col("doc_id"),
+        nSlices) { b =>
+      appendLexIndex(spark, lexDir, b.df, Some(b.key))
+      StreamHarness.NoBound
     }
-    val q = spark.readStream.schema(src.schema)
-      .option("maxFilesPerTrigger", "1").parquet(stage)
-      .writeStream.queryName(name)
-      .foreachBatch { (batch: Dataset[Row], bid: Long) =>
-        val t0 = System.nanoTime()
-        // batch ids carry the STREAM name, not just the engine bid:
-        // bids restart at 0 for every new stream (fresh checkpoint),
-        // so a bare `stream_<bid>` would make a SECOND stream into
-        // the same index silently no-op against the first one's
-        // applied records — idempotence is per (stream, bid)
-        appendLexIndex(spark, lexDir, batch, Some(s"${name}_$bid"))
-        System.err.println(f"[stream-batch] $name bid=$bid " +
-          f"sec=${(System.nanoTime() - t0) / 1e9}%.1f " +
-          s"segs=${lexSegmentCount(spark, lexDir)}")
-        ()
-      }
-      .option("checkpointLocation", base.resolve("ckpt").toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
 
   /** Steady-state soak leg for the lexical store (the
     * [[Similarity.nearDupSteadyState]] shape): fit on the 95% slice,
@@ -1711,7 +1683,7 @@ object Pipeline {
     val ev = Relational.events(spark, dir)
     val stage = Relational.stageEventFiles(spark, ev,
       s"graft_c9_stage_${dir.replaceAll("[^a-zA-Z0-9]", "_")}")
-    Relational.replayToSink(spark,
+    StreamHarness.replayToSink(spark,
       spark.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(stage)

@@ -34,7 +34,7 @@ object Relational {
     * re-infers the schema on EVERY DataFrame construction, and parquet
     * inference is a footer-reading Spark JOB (`mergeSchemasInParallel`)
     * — measured ~80 ms per table per construction on local[32]
-    * (SchemaCostProbe: 0.40 s vs 0.04 s for the 5 b5 tables), and at
+    * (OPTIMIZATION_r14.md: 0.40 s vs 0.04 s for the 5 b5 tables), and at
     * 100 TB a footer sample over a multi-million-file table, re-paid
     * per query. Production fixes this with catalog tables (the
     * statsDir branch above); this memo gives the bare-path read the
@@ -1240,7 +1240,7 @@ object Relational {
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
     val ev = events(spark, dir)
     val stage = stageEventFiles(spark, ev, s"graft_b16_stage_${dir.replaceAll("[^a-zA-Z0-9]", "_")}")
-    replayToSink(spark,
+    StreamHarness.replayToSink(spark,
       spark.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(stage)
@@ -1260,46 +1260,6 @@ object Relational {
   private[ops] def stageEventFiles(spark: SparkSession, ev: DataFrame, name: String, n: Int = 4): String =
     stageSlices(spark, ev, unix_micros(col("ts")), name, n)
 
-  /** Run a streaming frame through an AvailableNow micro-batch replay
-    * into a parquet FILE sink and read the committed output back as a
-    * batch frame — the shared harness tail of every replay op
-    * (b16/b19/b26/b27/b28/c9/c21/c22). The sink is executor-side, the
-    * production stream shape; the memory sink this replaced funnels
-    * every emitted row through the driver, a ceiling the sf100 events
-    * rehearsal actually hit (b19's ~95M session rows vs the 1 GiB
-    * spark.driver.maxResultSize — see BASELINE.md round-6). */
-  private[graft] def replayToSink(spark: SparkSession, streamed: DataFrame,
-      sinkName: String): DataFrame =
-    replayToSink(spark, streamed, sinkName, _ => ())
-
-  /** As above, plus a hook invoked with the terminated query — lets
-    * specs read StateOperatorProgress (state row counts, evictions)
-    * without re-plumbing the replay harness. */
-  private[graft] def replayToSink(spark: SparkSession, streamed: DataFrame,
-      sinkName: String,
-      onDone: org.apache.spark.sql.streaming.StreamingQuery => Unit): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    // applicationId in the path: two concurrent sessions (e.g. the
-    // round driver and a rehearsal) must never share sink directories
-    val base = Paths.get(System.getProperty("java.io.tmpdir"),
-      s"sink_${spark.sparkContext.applicationId}_$sinkName")
-    if (Files.exists(base)) {
-      Files.walk(base).sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(Files.delete)
-    }
-    val out = base.resolve("out")
-    val q = streamed.writeStream.queryName(sinkName).outputMode("append")
-      .format("parquet").option("path", out.toString)
-      .option("checkpointLocation", base.resolve("ckpt").toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    onDone(q)
-    Files.createDirectories(out) // zero-batch streams never create it
-    spark.read.schema(streamed.schema).parquet(out.toString)
-  }
-
   /** Replay slicing parameters — exposed so specs reason about the SAME
     * boundaries the stager writes (re-deriving them would silently
     * decouple on a formula change). */
@@ -1311,8 +1271,9 @@ object Relational {
     * parquet slices by the range of a long-valued ordering column.
     *
     * LOCAL-TEST-HARNESS-ONLY by contract: this stager (and the replay
-    * sink above) exists to feed `maxFilesPerTrigger` replays in specs
-    * and the registry's deterministic streaming entries, and it
+    * sinks of [[StreamHarness]]) exists to feed `maxFilesPerTrigger`
+    * replays in specs and the registry's deterministic streaming
+    * entries, and it
     * deliberately uses `java.nio` file mtimes to order slices —
     * local-disk semantics with no meaning on S3/HDFS. Production
     * streams enter the SAME downstream pipelines through a real
@@ -1324,7 +1285,7 @@ object Relational {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
     // applicationId for the same concurrent-process isolation as the
-    // replay sink below
+    // StreamHarness sink dirs
     val stage = Paths.get(System.getProperty("java.io.tmpdir"),
       s"${spark.sparkContext.applicationId}_$name")
     if (Files.exists(stage)) {
@@ -1444,7 +1405,7 @@ object Relational {
         .withWatermark(tsAs, "1 hour")
     val clicks = side("click", "click_id", "click_ts", "user_id")
     val views = side("view", "view_id", "view_ts", "v_user")
-    replayToSink(spark,
+    StreamHarness.replayToSink(spark,
       clicks.join(views,
           col("user_id") === col("v_user") &&
             col("view_ts") >= col("click_ts") - expr("INTERVAL 24 HOURS") &&
@@ -1478,7 +1439,7 @@ object Relational {
     val ev = events(spark, dir)
     val stage = stageEventFiles(spark, ev, s"graft_b27_stage_${dir.replaceAll("[^a-zA-Z0-9]", "_")}")
     val dim = table(spark, dir, "customer").select(col("c_custkey"), col("c_mktsegment"))
-    replayToSink(spark,
+    StreamHarness.replayToSink(spark,
       spark.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(stage)

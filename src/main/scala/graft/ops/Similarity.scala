@@ -236,7 +236,7 @@ object Similarity {
       .groupByKey { case (_, _, band, key) => s"$band:${key.mkString(",")}" }
       .flatMapGroupsWithState[Seq[BucketDoc], (Long, Long, Double)](
         OutputMode.Append(), GroupStateTimeout.NoTimeout())(bucketPairs _)
-    Relational.replayToSink(spark, pairs.toDF("da", "db", "j"), "graft_c22_sink")
+    StreamHarness.replayToSink(spark, pairs.toDF("da", "db", "j"), "graft_c22_sink")
       .distinct()
       .orderBy("da", "db")
   }
@@ -334,7 +334,7 @@ object Similarity {
       .groupByKey { case (_, _, band, key, _) => s"$band:${key.mkString(",")}" }
       .flatMapGroupsWithState[Seq[BucketDoc], (Long, Long, Double)](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(boundedBucketPairs(w) _)
-    Relational.replayToSink(spark, pairs.toDF("da", "db", "j"), "graft_c22b_sink", onDone)
+    StreamHarness.replayToSink(spark, pairs.toDF("da", "db", "j"), "graft_c22b_sink", onDone)
       .distinct()
       .orderBy("da", "db")
   }
@@ -509,8 +509,8 @@ object Similarity {
   /** Dedup an arrival batch against the store WITHOUT re-signing the
     * corpus, then append it. Returns an UPPER BOUND on the parquet
     * files this append added to any single store table (0 for a marker
-    * no-op) — the [[CensusCadence]] increment. The bound must be
-    * per-table, not "arrival rows": one arrival matching many corpus
+    * no-op) — the [[StreamHarness.CensusCadence]] increment. The bound
+    * must be per-table, not "arrival rows": one arrival matching many corpus
     * dups emits many PAIR rows spread across shuffle partitions, each
     * non-empty partition writing a file, so the pairs table can gain
     * more files than the batch has rows. Each table's files added is
@@ -684,73 +684,17 @@ object Similarity {
   private[graft] def dedupStreamNearStoreOn(spark: SparkSession, idx: String,
       arrivals: DataFrame, name: String,
       nSlices: Int = Relational.replaySlices): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    val stage = Relational.stageSlices(spark, arrivals, col("doc_id"), s"${name}_stage",
-      nSlices)
-    // checkpoint-only harness dir (the sink IS the store)
-    val base = Paths.get(System.getProperty("java.io.tmpdir"),
-      s"sink_${spark.sparkContext.applicationId}_$name")
-    if (Files.exists(base)) {
-      Files.walk(base).sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(Files.delete)
+    StreamHarness.run(spark, name, arrivals, col("doc_id"), nSlices,
+        Some(StreamHarness.Maintenance(() => nearDupCensus(spark, idx),
+          () => compactNearDupIndex(spark, idx)))) { b =>
+      // the files-added bound is the append's own per-table bound, NOT
+      // the batch's row count: a dup-heavy arrival can write more pair
+      // files than it has rows (see appendToNearDupIndex's contract)
+      val filesAdded = appendToNearDupIndex(spark, idx, b.df, Some(b.key))
+      () => filesAdded
     }
-    val ndCadence = new CensusCadence(() => nearDupCensus(spark, idx))
-    val q = spark.readStream.schema(arrivals.schema)
-      .option("maxFilesPerTrigger", "1").parquet(stage)
-      .writeStream.queryName(name)
-      .foreachBatch { (batch: Dataset[Row], bid: Long) =>
-        val t0 = System.nanoTime()
-        // batch ids carry the stream name: engine bids restart at 0
-        // with every fresh checkpoint, so a bare bid would turn a second
-        // stream's batches into no-op "replays" of the first one's
-        val filesAdded = appendToNearDupIndex(spark, idx, batch, Some(s"${name}_$bid"))
-        // in-stream maintenance (round-7 cadence theme applied to the
-        // streaming leg): when conf'd, every batch commit is followed
-        // by the AMORTIZED file-count trigger (CensusCadence — a real
-        // listing only when the row-count bound could have crossed),
-        // a store compaction when truly over, so a long-running
-        // ingest stream never needs an out-of-band maintenance job.
-        // Safe here because foreachBatch batches are sequential — the
-        // stream IS the store's single writer.
-        streamCompactMaxFiles(spark).foreach { mf =>
-          // the increment is the append's own per-table files bound,
-          // NOT batch.count(): a dup-heavy arrival can write more pair
-          // files than it has rows (see appendToNearDupIndex's contract)
-          val (n, exact) = ndCadence.check(filesAdded, mf)
-          val compacted = exact && n > mf
-          // census telemetry: the long-soak rehearsal reads these
-          // lines to prove the file count stays BOUNDED across the
-          // horizon, not just that compactions happen
-          // (SteadyStateStream asserts the bound with a true listing)
-          val (shown, mark) =
-            if (compacted) {
-              compactNearDupIndex(spark, idx)
-              val c = nearDupCensus(spark, idx)
-              ndCadence.reset(c)
-              (c, "=")
-            } else (n, if (exact) "=" else "<=")
-          System.err.println(s"[stream-census] $name bid=$bid files$mark$shown compacted=$compacted")
-        }
-        // scale-rehearsal telemetry: per-micro-batch wall cost is THE
-        // number a streaming-ingest capacity plan needs (BASELINE.md
-        // streaming decade tables read these lines)
-        System.err.println(f"[stream-batch] $name bid=$bid " +
-          f"sec=${(System.nanoTime() - t0) / 1e9}%.1f")
-        ()
-      }
-      .option("checkpointLocation", base.resolve("ckpt").toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
     nearDupIndexPairs(spark, idx)
   }
-
-  /** When set, the streaming legs compact their store/index whenever a
-    * post-batch file census exceeds this bound (unset = no in-stream
-    * maintenance — the caller owns the cadence). */
-  private def streamCompactMaxFiles(spark: SparkSession): Option[Long] =
-    spark.conf.getOption("graft.stream.compactMaxFiles").map(_.toLong)
 
   /** True file census of the near-dup store: max across its three
     * tables (each append adds files to all three). */
@@ -758,38 +702,6 @@ object Similarity {
     Seq("shingles", "bands", "pairs")
       .map(t => IndexMeta.countUnder(spark, nearDupTablePath(spark, idx, t), ".parquet"))
       .max
-
-  /** Amortized census for the in-stream compaction trigger. A true
-    * recursive listing of a cell-partitioned layout costs SECONDS per
-    * call at scale — the round-11 32-batch soak measured ~19 s/batch of
-    * pure listing on a 19k-cell sf100e index (two walks per batch),
-    * 2.5× the batch's own ~8 s of work — so the cadence must not list
-    * per batch. This tracks an UPPER BOUND instead: last true census +
-    * each batch's files-added bound since (the CALLER supplies a bound
-    * that holds for every table the census walks — for a single
-    * rows-appended table that is the row count, since every parquet
-    * file holds ≥ 1 row; for a multi-table store it must be the max of
-    * the per-table bounds — see appendToNearDupIndex, whose pairs
-    * table can gain more files than the batch has rows). It pays for a
-    * real listing only when the bound could have crossed `maxFiles`. A
-    * crossing is never missed (the bound is conservative); between
-    * listings the census telemetry reports the bound, marked `<=`.
-    * Single-writer only — exactly the foreachBatch
-    * sequential-batches contract. */
-  private[ops] final class CensusCadence(list: () => Long) {
-    private var bound: Long = -1L
-    private var boundExact = false
-    /** Fold in one batch's files-added bound; re-list only if the bound
-      * could have crossed `maxFiles`. Returns (census-or-bound, exact). */
-    def check(filesAddedBound: Long, maxFiles: Long): (Long, Boolean) = {
-      if (bound < 0) { bound = list(); boundExact = true }
-      else { bound += filesAddedBound; boundExact = false }
-      if (bound > maxFiles && !boundExact) { bound = list(); boundExact = true }
-      (bound, boundExact)
-    }
-    /** Record a fresh post-compaction census. */
-    def reset(census: Long): Unit = { bound = census; boundExact = true }
-  }
 
   def dedupIncrementalQuery(spark: SparkSession, dir: String): DataFrame = {
     val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
@@ -1329,9 +1241,6 @@ object Similarity {
   // (cell-boundary misses, as every SemDeDup variant) → rows-only; the
   // cross-batch catch (a later batch's twin of an earlier batch's
   // survivor drops) is pinned in the spec.
-  /** Replay staged arrival slices one file per trigger; per micro-batch
-    * run probe → anti-join → append, sinking the drop list with its
-    * batchId. Returns the committed drop list read back from the sink. */
   /** Replay-idempotent micro-batch sink write: each batch owns the
     * `batch=bid` partition, and dynamic-partition overwrite rewrites
     * ONLY the partitions present in the data — so a foreachBatch replay
@@ -1344,77 +1253,43 @@ object Similarity {
       .partitionBy("batch")
       .parquet(outDir)
 
+  /** Replay `arrivals` (sliced by vec_id) one file per trigger; per
+    * micro-batch run probe → anti-join → append, sinking the drop list
+    * with its batchId. Returns the committed drop list read back from
+    * the sink. */
   private[graft] def dedupSemanticStream(spark: SparkSession, indexDir: String,
-      stagedDir: String, schema: org.apache.spark.sql.types.StructType,
-      sinkName: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    // sink/checkpoint layout mirrors replayToSink (applicationId-scoped,
-    // local-test-harness contract documented there); foreachBatch needs
-    // its own writeStream, so the harness tail is inlined rather than
-    // shared
-    val base = Paths.get(System.getProperty("java.io.tmpdir"),
-      s"sink_${spark.sparkContext.applicationId}_$sinkName")
-    if (Files.exists(base)) {
-      Files.walk(base).sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(Files.delete)
+      arrivals: DataFrame, name: String,
+      nSlices: Int = Relational.replaySlices): DataFrame = {
+    val out = StreamHarness.run(spark, name, arrivals, col("vec_id"), nSlices,
+        Some(ivfMaintenance(spark, indexDir))) { b =>
+      // drops materialize inside the cycle BEFORE its append; the
+      // sink write commits after the index mutation, so a crash
+      // between them replays the batch — probe output is identical
+      // (the survivors' append is marker-idempotent). The sink write
+      // itself must ALSO be replay-idempotent: a plain append would
+      // duplicate the drop rows if the crash lands after the sink
+      // write but before the checkpoint commit. Partitioning by the
+      // batchId and dynamic-partition-overwriting makes the replay
+      // rewrite exactly its own batch=bid partition — drop rows land
+      // exactly once across every crash window.
+      val drops = dedupSemanticWithAppend(spark, indexDir,
+        b.df.select(col("vec_id"), col("embedding")), Some(b.key))
+      writeDropsBatch(drops, b.bid, b.out)
+      // the batch's row count is a sound files bound HERE because the
+      // census walks one table (live vectors) and the append adds
+      // ≤ survivors ≤ batch-rows rows to it, each file ≥ 1 row
+      () => b.df.count()
     }
-    val out = base.resolve("out")
-    Files.createDirectories(out)
-    val semCadence = new CensusCadence(() =>
-      IndexMeta.countUnder(spark, liveVectorsPath(spark, indexDir), ".parquet"))
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(stagedDir)
-      .writeStream.queryName(sinkName)
-      .foreachBatch { (batch: Dataset[Row], bid: Long) =>
-        // drops materialize inside the cycle BEFORE its append; the
-        // sink write commits after the index mutation, so a crash
-        // between them replays the batch — probe output is identical
-        // (the survivors' append is marker-idempotent). The sink write
-        // itself must ALSO be replay-idempotent: a plain append would
-        // duplicate the drop rows if the crash lands after the sink
-        // write but before the checkpoint commit. Partitioning by the
-        // batchId and dynamic-partition-overwriting makes the replay
-        // rewrite exactly its own batch=bid partition — drop rows land
-        // exactly once across every crash window.
-        val t0 = System.nanoTime()
-        val drops = dedupSemanticWithAppend(spark, indexDir,
-          batch.select(col("vec_id"), col("embedding")), Some(s"${sinkName}_$bid"))
-        writeDropsBatch(drops, bid, out.toString)
-        // in-stream maintenance: same amortized cadence contract as
-        // the c22d store stream (see CensusCadence — a 19k-cell layout
-        // listing costs seconds, so it must not run per batch)
-        streamCompactMaxFiles(spark).foreach { mf =>
-          // batch.count() is a sound files bound HERE because the
-          // census walks one table (live vectors) and the append adds
-          // ≤ survivors ≤ batch-rows rows to it, each file ≥ 1 row
-          val (n, exact) = semCadence.check(batch.count(), mf)
-          val compacted = exact && n > mf
-          val (shown, mark) =
-            if (compacted) {
-              compactIvfIndex(spark, indexDir)
-              val c = IndexMeta.countUnder(spark,
-                liveVectorsPath(spark, indexDir), ".parquet")
-              semCadence.reset(c)
-              (c, "=")
-            } else (n, if (exact) "=" else "<=")
-          System.err.println(s"[stream-census] $sinkName bid=$bid files$mark$shown compacted=$compacted")
-        }
-        System.err.println(f"[stream-batch] $sinkName bid=$bid " +
-          f"sec=${(System.nanoTime() - t0) / 1e9}%.1f")
-        ()
-      }
-      .option("checkpointLocation", base.resolve("ckpt").toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val dropSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("arrival_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("kept_by", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("cos", org.apache.spark.sql.types.DoubleType),
-      org.apache.spark.sql.types.StructField("batch", org.apache.spark.sql.types.LongType)))
-    spark.read.schema(dropSchema).parquet(out.toString)
+    spark.read.schema("arrival_id BIGINT, kept_by BIGINT, cos DOUBLE, batch BIGINT").parquet(out)
   }
+
+  /** In-stream maintenance of an IVF index: its live-layout file census
+    * and a compaction. */
+  private def ivfMaintenance(spark: SparkSession, idx: String): StreamHarness.Maintenance =
+    StreamHarness.Maintenance(() => ivfCensus(spark, idx), () => compactIvfIndex(spark, idx))
+
+  private def ivfCensus(spark: SparkSession, idx: String): Long =
+    IndexMeta.countUnder(spark, liveVectorsPath(spark, idx), ".parquet")
 
   /** Registry wrapper: index the 95% slice; the arrival STREAM carries
     * (in id order, which the stager slices into micro-batches) the
@@ -1441,10 +1316,7 @@ object Similarity {
     buildIvfIndexFrom(spark, corpus.select(col("vec_id"), col("embedding")), idx)
     val arrivals = e.filter(col("vec_id") % 20 === 7)
       .select(col("vec_id"), col("embedding"))
-    val stage = Relational.stageSlices(spark, arrivals, col("vec_id"),
-      s"graft_steady_sem_stage_$key", nBatches)
-    (dedupSemanticStream(spark, idx, stage, arrivals.schema,
-      s"graft_steady_sem_sink_$key"), idx)
+    (dedupSemanticStream(spark, idx, arrivals, s"graft_steady_sem_sink_$key", nBatches), idx)
   }
 
   /** Near-dup store twin of [[semanticSteadyState]]. */
@@ -1463,10 +1335,8 @@ object Similarity {
     * long-soak rehearsal asserts against `graft.stream.compactMaxFiles`. */
   def steadyStateCensus(spark: SparkSession, store: String, idx: String): Long =
     store match {
-      case "seminc" => IndexMeta.countUnder(spark, liveVectorsPath(spark, idx), ".parquet")
-      case _ => Seq("shingles", "bands", "pairs")
-        .map(t => IndexMeta.countUnder(spark, nearDupTablePath(spark, idx, t), ".parquet"))
-        .max
+      case "seminc" => ivfCensus(spark, idx)
+      case _ => nearDupCensus(spark, idx)
     }
 
   def dedupSemanticStreamQuery(spark: SparkSession, dir: String): DataFrame = {
@@ -1484,9 +1354,7 @@ object Similarity {
     val arrivals = heldout
       .unionByName(plantedNoisy(corpus, off).select(col("vec_id"), col("embedding")))
       .unionByName(plantedNoisy(heldout, 2 * off).select(col("vec_id"), col("embedding")))
-    val stage = Relational.stageSlices(spark, arrivals, col("vec_id"),
-      s"graft_c22c_stage_$key")
-    dedupSemanticStream(spark, idx, stage, arrivals.schema, s"graft_c22c_sink_$key")
+    dedupSemanticStream(spark, idx, arrivals, s"graft_c22c_sink_$key")
       .orderBy("arrival_id")
   }
 
@@ -2799,59 +2667,22 @@ object Similarity {
   }
 
   /** C42c — STREAMING RAG ingest (the c22c/c22d foreachBatch doctrine
-    * on the retrieval side): replay `arrivals` one file per trigger;
-    * each micro-batch makes ONE idempotent [[ragIngest]] call keyed by
-    * the engine's batchId, so a crashed batch replays into a no-op
-    * (exactly-once through the append marker). In-stream maintenance:
-    * when `graft.stream.compactMaxFiles` is set, each commit is
-    * followed by the amortized file-census trigger and an index
-    * compaction when truly over — a long-running ingest stream never
-    * needs an out-of-band maintenance job. Single writer by
-    * construction (foreachBatch batches are sequential). */
+    * on the retrieval side): replay `arrivals` one file per trigger
+    * through [[StreamHarness]]; each micro-batch makes ONE idempotent
+    * [[ragIngest]] call under the harness's batch key (exactly-once
+    * through the append marker), with the harness's in-stream index
+    * compaction when `graft.stream.compactMaxFiles` is set. */
   private[graft] def ragIngestStreamOn(spark: SparkSession, idx: String,
       arrivals: DataFrame, name: String,
-      nSlices: Int = Relational.replaySlices): Unit = {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    val src = arrivals.select(col("doc_id"), col("text"))
-    val stage = Relational.stageSlices(spark, src, col("doc_id"), s"${name}_stage", nSlices)
-    val base = Paths.get(System.getProperty("java.io.tmpdir"),
-      s"sink_${spark.sparkContext.applicationId}_$name")
-    if (Files.exists(base)) {
-      Files.walk(base).sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(Files.delete)
+      nSlices: Int = Relational.replaySlices): Unit =
+    StreamHarness.run(spark, name, arrivals.select(col("doc_id"), col("text")), col("doc_id"),
+        nSlices, Some(ivfMaintenance(spark, idx))) { b =>
+      ragIngest(spark, idx, b.df, Some(b.key))
+      // files-added bound: the append writes ≤ one file per touched
+      // cell, so ≤ its CHUNK rows — each document adds ~text/stride
+      // chunks, so the batch's document count would undercount
+      () => ragChunkVecs(b.df).count()
     }
-    val census = new CensusCadence(
-      () => IndexMeta.countUnder(spark, liveVectorsPath(spark, idx), ".parquet"))
-    val q = spark.readStream.schema(src.schema)
-      .option("maxFilesPerTrigger", "1").parquet(stage)
-      .writeStream.queryName(name)
-      .foreachBatch { (batch: Dataset[Row], bid: Long) =>
-        val t0 = System.nanoTime()
-        ragIngest(spark, idx, batch, Some(s"${name}_$bid"))
-        streamCompactMaxFiles(spark).foreach { mf =>
-          // files-added bound: one file per touched cell ≤ chunk rows;
-          // chunks per doc are bounded by text length / stride
-          val (n, exact) = census.check(batch.count(), mf)
-          val compacted = exact && n > mf
-          val (shown, mark) =
-            if (compacted) {
-              compactIvfIndex(spark, idx)
-              val c = IndexMeta.countUnder(spark, liveVectorsPath(spark, idx), ".parquet")
-              census.reset(c)
-              (c, "=")
-            } else (n, if (exact) "=" else "<=")
-          System.err.println(s"[stream-census] $name bid=$bid files$mark$shown compacted=$compacted")
-        }
-        System.err.println(f"[stream-batch] $name bid=$bid " +
-          f"sec=${(System.nanoTime() - t0) / 1e9}%.1f")
-        ()
-      }
-      .option("checkpointLocation", base.resolve("ckpt").toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
 
   /** Registry wrapper for the streaming leg: same split and planted-
     * twin contract as [[ragIncrementalQuery]], arrivals replayed
@@ -3396,12 +3227,13 @@ object Similarity {
         // coarse branches, not just the nearest — the standard FAISS
         // coarse-nprobe knob that closes the hierarchical probe's
         // coarse-boundary recall dip. b=2 is the default because the
-        // CoarseProbeSweep table shows it recovering 1000/1000 planted
-        // twins at sf10e AND sf100e — parity-or-better vs the FLAT
-        // reference (999/1000 at sf100e) — at 1.34–1.43× probe cost,
-        // still well under the flat probe's total cost (HierProbe:
-        // 32.8 s vs 43.0 s at 19k cells). b=1 stays available as the
-        // opt-in economy mode (993–995/1000 measured). Placement is
+        // round-10 coarse-width table (BASELINE.md) shows it recovering
+        // 1000/1000 planted twins at sf10e AND sf100e — parity-or-better
+        // vs the FLAT reference (999/1000 at sf100e) — at 1.34–1.43×
+        // probe cost, still well under the flat probe's total cost
+        // (BASELINE.md round-10 crossover: 32.8 s vs 43.0 s at 19k
+        // cells). b=1 stays available as the opt-in economy mode
+        // (993–995/1000 measured). Placement is
         // b-INVARIANT (TwoLevelCells element 1 is always the nearest
         // branch's best cell), so probe width can change over an
         // index's lifetime without re-placing.

@@ -1282,51 +1282,22 @@ object Training {
     * every store-backed deployment now has an exactly-once streaming
     * leg). Arrivals replay one id-range slice per trigger; each
     * micro-batch makes ONE sliceId-idempotent [[ingestPretrainSlice]]
-    * call keyed by the engine's batchId, so a crashed batch replays
-    * into the documented no-op. Slice order is the stager's id order —
-    * exactly the in-id-order arrival model the watermark guard
-    * enforces (a real deployment's crawl feed has the same property:
-    * ids are assigned at crawl time). Single writer by construction —
-    * foreachBatch batches are sequential, and every store the slice
-    * touches (seen-hash, near-dup, eval grams, shard slices) commits
-    * through its own append protocol, so a reader mid-stream sees
-    * consistent store snapshots. */
+    * call with the [[StreamHarness]] batch key as its slice id, so a
+    * crashed batch replays into the documented no-op. Slice order is
+    * the stager's id order — exactly the in-id-order arrival model the
+    * watermark guard enforces (a real deployment's crawl feed has the
+    * same property: ids are assigned at crawl time). Every store the
+    * slice touches (seen-hash, near-dup, eval grams, shard slices)
+    * commits through its own append protocol, so a reader mid-stream
+    * sees consistent store snapshots. */
   private[graft] def pretrainIngestStreamOn(spark: SparkSession, stateDir: String,
       arrivals: DataFrame, name: String,
-      nSlices: Int = Relational.replaySlices): Unit = {
-    import org.apache.spark.sql.{Dataset, Row}
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    val src = arrivals.select(col("doc_id"), col("text"), col("lang"),
-      col("source"), col("n_chars"))
-    val stage = Relational.stageSlices(spark, src, col("doc_id"),
-      s"${name}_stage", nSlices)
-    val base = Paths.get(System.getProperty("java.io.tmpdir"),
-      s"sink_${spark.sparkContext.applicationId}_$name")
-    if (Files.exists(base)) {
-      Files.walk(base).sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(Files.delete)
+      nSlices: Int = Relational.replaySlices): Unit =
+    StreamHarness.run(spark, name, arrivals.select(col("doc_id"), col("text"), col("lang"),
+        col("source"), col("n_chars")), col("doc_id"), nSlices) { b =>
+      ingestPretrainSlice(spark, stateDir, b.df, b.key)
+      StreamHarness.NoBound
     }
-    val q = spark.readStream.schema(src.schema)
-      .option("maxFilesPerTrigger", "1").parquet(stage)
-      .writeStream.queryName(name)
-      .foreachBatch { (batch: Dataset[Row], bid: Long) =>
-        val t0 = System.nanoTime()
-        // slice ids carry the STREAM name, not just the engine bid:
-        // bids restart at 0 for every new stream (the checkpoint is
-        // swept on entry), so a bare `stream_<bid>` would make a
-        // SECOND stream into the same state silently no-op against
-        // the first one's markers — idempotence is per (stream, bid)
-        ingestPretrainSlice(spark, stateDir, batch, s"${name}_$bid")
-        System.err.println(f"[stream-batch] $name bid=$bid " +
-          f"sec=${(System.nanoTime() - t0) / 1e9}%.1f")
-        ()
-      }
-      .option("checkpointLocation", base.resolve("ckpt").toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
 
   /** C33c registry wrapper — build the pipeline state on the first 90%
     * of the id range, STREAM the last 10% through the persisted

@@ -95,7 +95,7 @@ object Sessionize {
     // parquet file sink, not a memory sink: b19 emits ~one row per
     // session, and at the sf100 rehearsal (100M events) the memory
     // sink's driver collect fatally exceeded driver.maxResultSize
-    graft.ops.Relational.replayToSink(spark, sessions.toDF(), sinkName)
+    graft.ops.StreamHarness.replayToSink(spark, sessions.toDF(), sinkName)
       .select(col("user_id"),
         date_format(col("session_start"), "yyyy-MM-dd HH:mm:ss").as("session_start"),
         col("n_events"), round(col("sum_value"), 4).as("sum_value"))

@@ -5,9 +5,9 @@ import org.apache.spark.sql.functions._
 
 /**
  * Generic decade-timing main: run one registry query over a list of
- * scale dirs, min-of-2 warm runs each, one JSON line per dir — the
- * LshProbe pattern generalized so every new op gets its decade numbers
- * the same way (BASELINE.md scale-rehearsal tables).
+ * scale dirs, min-of-2 warm runs each, one JSON line per dir, so every
+ * op gets its decade numbers the same way (BASELINE.md scale-rehearsal
+ * tables).
  *
  * Usage: runMain graft.tools.QueryProbe <queryName> <dir> [dir...]
  */

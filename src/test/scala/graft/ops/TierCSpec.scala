@@ -435,7 +435,7 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     // graft.semdedup.coarseProbes = the FAISS-style coarse-nprobe knob:
     // search the top-b coarse branches instead of only the nearest —
     // the production answer to the hierarchical probe's coarse-boundary
-    // recall dip (DispatchProbe: 993-995/1000 planted twins at b=1 vs
+    // recall dip (BASELINE.md round 9: 993-995/1000 planted twins at b=1 vs
     // the flat index's 999-1000). Three pinned properties: b=2 drops
     // are a SUPERSET of b=1 (TwoLevelCells prefix monotonicity made
     // structural), b=2 drops match the FLAT index's at this scale
@@ -1696,7 +1696,7 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
   test("CensusCadence: lists only on crossings, never misses one, bound is conservative") {
     var listings = 0
     var trueCensus = 100L
-    val cad = new Similarity.CensusCadence(() => { listings += 1; trueCensus })
+    val cad = new StreamHarness.CensusCadence(() => { listings += 1; trueCensus })
     // first check always pays one listing (no prior state)
     assert(cad.check(10L, 1000L) === ((100L, true)) && listings === 1)
     // under-bound checks are free: bound drifts up by rows, no listing

@@ -280,34 +280,154 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
       s"cadence did not bound the census: ${census(idx2)} vs ${census(idx)}")
   }
 
-  test("two streams into one near-dup store: the second stream's batches are not replays") {
-    // engine batch ids restart at 0 with every fresh checkpoint, so a
-    // batch id keyed by the bid alone makes the second stream's first
-    // batches look like replays of the first stream's and no-op them
+  /** One ingest stream leg as the two-streams test drives it: `build`
+    * fills a fresh index dir from its corpus slice, `stream` replays an
+    * arrival set into it under a stream name, and `held` reads back the
+    * arrival ids the index holds. `also` adds a leg's own check. */
+  private final case class IngestLeg(index: String, tag: String,
+      build: String => Unit, first: () => org.apache.spark.sql.DataFrame,
+      second: () => org.apache.spark.sql.DataFrame,
+      stream: (String, org.apache.spark.sql.DataFrame, String) => Unit,
+      held: String => Set[Long], also: String => Unit = _ => ())
+
+  private def ingestLegs: Seq[IngestLeg] = {
+    import graft.ops.{Pipeline, Similarity, Training}
+    import org.apache.spark.sql.functions.{col, max}
+    import spark.implicits._
+    // two batches per stream: both streams replay as bids 0 and 1
+    val slices = 2
+    def docs = Relational.table(spark, dir, "documents")
+    def ids(path: String, c: String) = idsOf(spark.read.parquet(path), c)
+    def idsOf(df: org.apache.spark.sql.DataFrame, c: String) =
+      df.select(c).collect().map(_.getLong(0)).toSet
+    def shingleIds(idx: String) = ids(Similarity.nearDupTablePath(spark, idx, "shingles"), "doc_id")
+    def liveIds(idx: String) = ids(Similarity.liveVectorsPath(spark, idx), "vec_id")
+    def vecs = Relational.table(spark, dir, "embeddings").select("vec_id", "embedding")
+    lazy val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
+    lazy val copied = docs.orderBy("doc_id").head().getString(1)
+    // texts that occur once in the corpus: every such arrival is a keeper
+    // of the pretrain chain's exact-dup stage, so it must reach its store
+    def unique = docs.join(docs.groupBy("text").count().filter(col("count") === 1),
+      Seq("text")).select(docs.columns.map(col): _*)
+    Seq(
+      IngestLeg("near-dup store", "c22d",
+        idx => Similarity.buildNearDupIndex(spark, docs.select("doc_id", "text"), idx),
+        () => Seq((2000001L, "first stream filler one"), (2000050L, "first stream filler two"),
+          (2000100L, "first stream filler three"), (2000199L, "first stream filler four"))
+          .toDF("doc_id", "text"),
+        // the second stream carries a copy of a corpus document that
+        // must pair
+        () => Seq((3000001L, copied), (3000050L, "second stream filler two"),
+          (3000100L, "second stream filler three"), (3000199L, "second stream filler four"))
+          .toDF("doc_id", "text"),
+        (idx, a, n) => Similarity.dedupStreamNearStoreOn(spark, idx, a, n, slices),
+        shingleIds,
+        idx => assert(Similarity.nearDupIndexPairs(spark, idx).filter(col("db") === 3000001L)
+          .count() > 0, "the second stream's copy of a corpus document did not pair")),
+      IngestLeg("semantic-dedup index", "c22c",
+        idx => Similarity.buildIvfIndexFrom(spark,
+          vecs.filter(col("vec_id") % 20 =!= 7 && col("vec_id") % 20 =!= 13), idx),
+        () => vecs.filter(col("vec_id") % 20 === 7),
+        () => vecs.filter(col("vec_id") % 20 === 13),
+        (idx, a, n) => Similarity.dedupSemanticStream(spark, idx, a, n, slices).count(),
+        liveIds),
+      IngestLeg("RAG chunk index", "c42c",
+        idx => Similarity.buildIvfIndexFrom(spark, Similarity.ragChunkVecs(
+          docs.filter(col("doc_id") % 20 =!= 3 && col("doc_id") % 20 =!= 13)), idx),
+        () => docs.filter(col("doc_id") % 20 === 3),
+        () => docs.filter(col("doc_id") % 20 === 13),
+        (idx, a, n) => Similarity.ragIngestStreamOn(spark, idx, a, n, slices),
+        idx => liveIds(idx).map(v => (v - 1) / 4096)),
+      IngestLeg("lexical index", "c43f",
+        idx => Pipeline.fitLexIndex(
+          docs.filter(col("doc_id") % 20 =!= 3 && col("doc_id") % 20 =!= 13), idx),
+        () => docs.filter(col("doc_id") % 20 === 3),
+        () => docs.filter(col("doc_id") % 20 === 13),
+        (idx, a, n) => Pipeline.lexIngestStreamOn(spark, idx, a, n, slices),
+        idx => idsOf(Pipeline.lexLiveTables(spark, idx)._4, "doc_id")),
+      // the pretrain chain takes arrivals in id order only, so the two
+      // streams are consecutive id ranges
+      IngestLeg("pretrain state", "c33c",
+        st => Training.buildPretrainState(spark, docs.filter(col("doc_id") <= maxId * 80 / 100), st),
+        () => unique.filter(col("doc_id") > maxId * 80 / 100 && col("doc_id") <= maxId * 90 / 100),
+        () => unique.filter(col("doc_id") > maxId * 90 / 100),
+        (st, a, n) => Training.pretrainIngestStreamOn(spark, st, a, n, slices),
+        st => shingleIds(s"$st/neardup"))
+    )
+  }
+
+  // engine batch ids restart at 0 with every fresh checkpoint, so a
+  // batch key built from the bid alone makes the second stream's
+  // batches look like replays of the first one's and no-ops them
+  ingestLegs.foreach { leg =>
+    test(s"two streams into one ${leg.index}: the second stream's batches are not replays") {
+      val idx = graft.ops.Similarity.freshScratch(spark, s"graft_two_${leg.tag}_")
+      leg.build(idx)
+      leg.stream(idx, leg.first(), s"graft_two_${leg.tag}_a")
+      leg.stream(idx, leg.second(), s"graft_two_${leg.tag}_b")
+      val arrived = Seq(leg.first(), leg.second())
+        .flatMap(_.select("*").collect().map(_.getLong(0))).toSet
+      assert(arrived.size > 1, "no arrivals to stream")
+      val missing = arrived -- leg.held(idx)
+      assert(missing.isEmpty, s"arrivals missing from the ${leg.index}: ${missing.toSeq.sorted.take(5)}")
+      leg.also(idx)
+    }
+  }
+
+  test("semantic dedup stream: in-stream compaction leaves the drop list unchanged") {
+    // the near-dup cadence pin above, on the IVF index: the same replay
+    // with graft.stream.compactMaxFiles=1 compacts after every batch, so
+    // the second batch probes a compacted layout
+    import graft.ops.Similarity
+    import org.apache.spark.sql.functions.col
+    val e = Relational.table(spark, dir, "embeddings").select("vec_id", "embedding")
+    val corpus = e.filter(col("vec_id") % 20 =!= 7)
+    val off = Similarity.plantedOffset(e)
+    val heldout = e.filter(col("vec_id") % 20 === 7)
+    // c22c's arrival mix: held-outs, twins of indexed vectors, and twins
+    // of the held-outs, which land in the later of the two batches
+    val arrivals = heldout.unionByName(Similarity.plantedNoisy(corpus, off))
+      .unionByName(Similarity.plantedNoisy(heldout, 2 * off))
+    def run(tag: String) = {
+      val idx = Similarity.freshScratch(spark, s"graft_c22c_${tag}_")
+      Similarity.buildIvfIndexFrom(spark, corpus, idx)
+      val drops = Similarity.dedupSemanticStream(spark, idx, arrivals, s"graft_c22c_$tag", 2)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
+      (drops, Similarity.steadyStateCensus(spark, "seminc", idx))
+    }
+    val (drops, piled) = run("pile")
+    spark.conf.set("graft.stream.compactMaxFiles", "1")
+    val (drops2, compacted) = try run("compact")
+      finally spark.conf.unset("graft.stream.compactMaxFiles")
+    assert(drops.nonEmpty && drops2 === drops, "in-stream compaction changed the drop list")
+    assert(compacted < piled, s"cadence did not bound the census: $compacted vs $piled")
+  }
+
+  test("RAG stream: the census bound counts chunk files, so a crossing is not missed") {
+    // one arrival per micro-batch: a one-chunk document, then three
+    // long ones whose ~25 chunks each add a file to many cells. The
+    // limit sits at the built census + 4: no crossing under a bound
+    // that adds one per document (the first check lists the true
+    // census, ≤ built + 1), but the chunk files cross it
     import graft.ops.Similarity
     import spark.implicits._
-    val idx = java.nio.file.Files.createTempDirectory("graft_c22d_two").toString
-    val corpus = Relational.table(spark, dir, "documents").select("doc_id", "text")
-    Similarity.buildNearDupIndex(spark, corpus, idx)
-    val copied = corpus.orderBy("doc_id").head().getString(1)
-    val first = Seq((2000001L, "first stream filler one"), (2000050L, "first stream filler two"),
-      (2000100L, "first stream filler three"), (2000199L, "first stream filler four"))
-      .toDF("doc_id", "text")
-    // same id spread, so both streams replay as the same batch ids; the
-    // second carries a copy of a corpus document that must pair
-    val second = Seq((3000001L, copied), (3000050L, "second stream filler two"),
-      (3000100L, "second stream filler three"), (3000199L, "second stream filler four"))
-      .toDF("doc_id", "text")
-    Similarity.dedupStreamNearStoreOn(spark, idx, first, "graft_c22d_two_a")
-    val pairs = Similarity.dedupStreamNearStoreOn(spark, idx, second, "graft_c22d_two_b")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val stored = spark.read.parquet(Similarity.nearDupTablePath(spark, idx, "shingles"))
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    val arrived = (first.union(second)).select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(arrived.subsetOf(stored),
-      s"arrivals missing from the store: ${(arrived -- stored).toSeq.sorted}")
-    assert(pairs.exists(_._2 == 3000001L),
-      s"the second stream's copy of a corpus document did not pair: $pairs")
+    val idx = Similarity.freshScratch(spark, "graft_c42c_census_")
+    Similarity.buildIvfIndexFrom(spark,
+      Similarity.ragChunkVecs(Relational.table(spark, dir, "documents")), idx)
+    def census() = Similarity.steadyStateCensus(spark, "seminc", idx)
+    val maxFiles = census() + 4
+    def long(d: Int) = (0 until 200).map(i => s"arrival${d}_tok$i").mkString(" ")
+    val arrivals = Seq((5000001L, "a short arrival"), (5000060L, long(1)),
+      (5000120L, long(2)), (5000199L, long(3))).toDF("doc_id", "text")
+    val chunks = Similarity.ragChunkVecs(arrivals).count()
+    assert(chunks > 10 * arrivals.count(), s"arrivals carry only $chunks chunks")
+    spark.conf.set("graft.stream.compactMaxFiles", maxFiles.toString)
+    try Similarity.ragIngestStreamOn(spark, idx, arrivals, "graft_c42c_census")
+    finally spark.conf.unset("graft.stream.compactMaxFiles")
+    assert(census() <= maxFiles, s"the stream ended at ${census()} files, over the limit $maxFiles")
+    val live = spark.read.parquet(Similarity.liveVectorsPath(spark, idx))
+      .filter($"vec_id" >= 5000001L * 4096).count()
+    assert(live == chunks, s"$live of $chunks arrival chunks are live")
   }
 
   test("streaming semantic dedup sink: replaying a batch's drop write is idempotent") {
