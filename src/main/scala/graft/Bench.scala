@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main — runs the BASELINE.md headline queries (B3 Q1-like
   * agg, B5 5-way join, B8 top-k, A2 ORC roundtrip, C3 cosine top-k)
   * against SPARK_GRAFT_SF_DIR and prints one JSON line. Results are
@@ -30,14 +28,6 @@ object Bench {
     sys.env.get("SPARK_GRAFT_BENCH_QUERIES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(headline)
-
-  /** Core count from $SPARK_GRAFT_CPUS (default 4): a positive whole
-    * number, or the bench refuses to run — the value goes into the
-    * Spark master and, unquoted, into the emitted JSON. */
-  private def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(4) { v =>
-    v.trim.toIntOption.filter(_ > 0).getOrElse(sys.error(
-      s"SPARK_GRAFT_CPUS must be a positive whole number, got '$v'"))
-  }
 
   def main(args: Array[String]): Unit =
     if (sys.env.getOrElse("SPARK_GRAFT_BENCH_ISOLATED", "1") == "1") isolatedMain()
@@ -88,9 +78,7 @@ object Bench {
     def runChild(name: String, dataDir: String, recordAs: String): (String, Double) = {
       val childOut = java.nio.file.Files.createTempFile("graft_bench_", ".json")
       awaitIdle(maxLoad)
-      val cmd = (Seq(jvm) ++ jdk17AddOpens ++ Seq(xmx,
-        "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
-        "-cp", cp, "graft.Bench")).toArray
+      val cmd = (Seq(jvm) ++ jdk17AddOpens ++ Seq(xmx, "-cp", cp, "graft.Bench")).toArray
       val pb = new ProcessBuilder(cmd: _*)
       pb.environment().put("SPARK_GRAFT_BENCH_ISOLATED", "0")
       pb.environment().put("SPARK_GRAFT_BENCH_QUERIES", name)
@@ -161,9 +149,7 @@ object Bench {
   private def makeScaleLeg(jvm: String, cp: String, xmx: String): Option[String] = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val dst = java.nio.file.Files.createTempDirectory("graft_bench_sf1_").toString
-    val cmd = (Seq(jvm) ++ jdk17AddOpens ++ Seq(xmx,
-      "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
-      "-cp", cp, "graft.tools.MakeScale",
+    val cmd = (Seq(jvm) ++ jdk17AddOpens ++ Seq(xmx, "-cp", cp, "graft.tools.MakeScale",
       sfDir, dst, "10", "lineitem,orders,customer,nation,region,embeddings")).toArray
     val pb = new ProcessBuilder(cmd: _*)
     pb.redirectErrorStream(true)
@@ -194,15 +180,7 @@ object Bench {
   }
 
   private def runInProcess(queries: Seq[String], sfDir: String): Seq[(String, Double)] = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.local("graft-bench")
     // untimed warmup: JIT/codegen + parquet footer cache, so per-query
     // numbers measure execution rather than first-touch JVM costs.
     // Routed through Relational.table so the schema memo (round-14) is
@@ -249,6 +227,7 @@ object Bench {
     val qs = (results ++ sf1Extra).map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
+    val cpus = Graft.cpus
     val json =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","cpus":$cpus,"master":"local[$cpus]"$extra}"""
     // stdout gets buried in sbt log noise (BENCH_r01 parsed: null) — also

@@ -1,37 +1,30 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** JSON string literal: backslash, quote, and ALL control chars
+    * (<0x20) escaped — a tab or CR in builder-authored SQL would
+    * otherwise make the correctness gate's json.load fail and silently
+    * zero the round's correctness. */
+  private[graft] def q(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.ts is parquet TIMESTAMP(NANOS): read as long, convert in
-      // Relational.events (Spark has no native nanos timestamp read)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // local mode needs no tight liveness detection: GC pauses under the
-      // O(n²) baselines at large SF can exceed the 10s default heartbeat,
-      // and a "dead" local executor takes the whole context down with it
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "600s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_CONF="graft.pack.shardSpan=64,other.key=v" — runtime
-    // conf for sweep variants; ops (and their oracle SQL, e.g. c15's
-    // shard span) read these through the session, so a swept knob stays
-    // in sync with its oracle by construction
-    sys.env.getOrElse("SPARK_GRAFT_CONF", "").split(",")
-      .map(_.trim).filter(_.contains("=")).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        spark.conf.set(k, v)
-      }
+    // local mode needs no tight liveness detection: GC pauses under the
+    // O(n²) baselines at large SF can exceed the 10s default heartbeat,
+    // and a "dead" local executor takes the whole context down with it
+    val spark = Graft.local("graft-verify",
+      "spark.executor.heartbeatInterval" -> "60s",
+      "spark.network.timeout" -> "600s")
     new java.io.File(outDir).mkdirs()
     // per-query watchdog: one pathological query must not stall the whole
     // correctness dump — cancel its job group after the timeout and move on
@@ -79,18 +72,6 @@ object Verify {
       } finally spark.sparkContext.clearJobGroup()
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

@@ -16,18 +16,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
  */
 object Relational {
 
-  /** Read a testdata table. When `graft.catalog.statsDir` names this
-    * dir (set by [[graft.tools.TableStats.register]], which ANALYZEd
-    * the same parquet files as catalog tables), resolve through the
-    * catalog instead — the relation then carries row-count/column
-    * stats and CBO prices filters per-relation, which is what lets a
-    * filtered dim list broadcast at sf100 without a static threshold
-    * posture. Otherwise a parquet read of the same files, through the
-    * schema memo below (round-14 optimization). */
+  /** Read a testdata table: a parquet read through the schema memo
+    * below (round-14 optimization); events through [[events]]. */
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") events(spark, dir)
-    else if (spark.conf.getOption("graft.catalog.statsDir").contains(dir) &&
-             spark.catalog.tableExists(name)) spark.table(name)
     else cachedSchemaParquet(spark, s"$dir/$name.parquet")
 
   /** Schema-memoized parquet read. A bare `spark.read.parquet(path)`
@@ -37,7 +29,7 @@ object Relational {
     * (OPTIMIZATION_r14.md: 0.40 s vs 0.04 s for the 5 b5 tables), and at
     * 100 TB a footer sample over a multi-million-file table, re-paid
     * per query. Production fixes this with catalog tables (the
-    * statsDir branch above); this memo gives the bare-path read the
+    * metastore holds the schema); this memo gives the bare-path read the
     * same property. It holds one entry PER PATH: (conf posture, path)
     * → (listing signature, schema). A read constructs with the
     * explicit schema — `spark.read.schema(s)` skips inference entirely
@@ -219,11 +211,12 @@ object Relational {
   }
 
   /** The events table has stored `ts` as parquet TIMESTAMP(NANOS) (read
-    * via `spark.sql.legacy.parquet.nanosAsLong`, set in every session
-    * builder here) and, since the round-7 testdata, TIMESTAMP(MICROS)
-    * with isAdjustedToUTC=false — which Spark 4 would surface as
-    * TIMESTAMP_NTZ and break every `unix_micros`/watermark consumer.
-    * Every builder therefore also sets
+    * via `spark.sql.legacy.parquet.nanosAsLong`) and, since the round-7
+    * testdata, TIMESTAMP(MICROS) with isAdjustedToUTC=false — which
+    * Spark 4 would surface as TIMESTAMP_NTZ and break every
+    * `unix_micros`/watermark consumer. [[graft.Graft.builder]], the one
+    * holder of the required confs and the builder every session here
+    * starts from, therefore also sets
     * `spark.sql.parquet.inferTimestampNTZ.enabled=false`, restoring the
     * pre-3.4 read (LTZ carrying the same micros; the UTC session
     * timezone keeps wall-clock semantics identical to DuckDB's naive
@@ -689,10 +682,9 @@ object Relational {
     *     → crosses ≈ sf380, q19's part ~43 MB → ≈ sf2500, the LIKE
     *     sites ~7 MB → far out — mechanizing the prose boundaries,
     *     customer first exactly as the comments used to say);
-    *   - when CBO is enabled (`spark.sql.cbo.enabled`, the
-    *     SPARK_GRAFT_STATS path) and the predicate is ESTIMABLE by
-    *     column stats (equality/range — not contains), the hint
-    *     yields to the stats.
+    *   - when CBO is enabled (`spark.sql.cbo.enabled`) and the
+    *     predicate is ESTIMABLE by column stats (equality/range — not
+    *     contains), the hint yields to the stats.
     * Returns `/*+ BROADCAST(…) */ ` or the empty string; boundaries
     * now live in conf + code, not comments. */
   /** `graft.io.compressionFactor` — raw-bytes-per-compressed-byte of
@@ -884,7 +876,7 @@ object Relational {
   // 2–3-column list estimated 71.7 MB and the join fell to
   // SortMergeJoin, shuffling 4.69 GB of lineitem that sf10 never
   // shuffles (round-11's one weak perf cell). CBO stats also fix this
-  // one (brand/size are estimable — see tools/TableStats), but the
+  // one (brand/size are estimable — BASELINE.md round 12), but the
   // hint makes the REGISTRY plan right without a stats setup step.
   // Boundary: [[dimHint]] — ~9% of part × 3 columns; the hint
   // self-disables when the estimated build exceeds
@@ -1045,7 +1037,7 @@ object Relational {
   // BROADCAST(part): for a contains-filtered dim the hint is the ONLY
   // correct mechanism — CBO cannot estimate LIKE '%…%' (selectivity
   // stays 1.0) and prices the list at raw width (~1.4 GB at sf100,
-  // measured via tools/TableStats), so stats make this WORSE, while
+  // measured, BASELINE.md round 12), so stats make this WORSE, while
   // the un-stats'd estimate (32–72 MB) sat above the default
   // threshold and shuffled 19.5 GB at sf100. Author knowledge: the
   // '%gizmo%' list is ~5% of part. Boundary via [[dimHint]]

@@ -1485,32 +1485,14 @@ object Similarity {
     * comes from one metadata-side aggregate (no embedding scan). The cell
     * scan stays partition-pruned for any non-degenerate s; approximate
     * → rows-only, recall vs [[simTopKFiltered]] pinned in TierCSpec. */
-  /** Filter selectivity for probe widening: ZERO scans under the
-    * catalog posture, one metadata pass otherwise (round-15, verdict
-    * item 3 — guide §7.3: even one full metadata pass per probe is
-    * driver-adjacent work a standing service should answer from its
-    * catalog). When the metadata table was ANALYZEd
-    * ([[graft.tools.TableStats.register]] with the table in scope) the
-    * planner's own CBO row-count estimates answer |filtered| / |total|
-    * from stored stats — no job at all; otherwise fall back to the
-    * round-14 single-aggregate form (one pass, both counts together).
-    * The CBO equality estimate prices a value at 1/ndv of the column,
-    * which UNDER-reads a hot value's true fraction — that widens the
-    * probe set, the recall-safe direction for a post-filtered ANN
-    * probe (a widened probe can only add candidates). Both branches
-    * clamp to [1e-9, 1]. */
-  private[graft] def filterSelectivity(spark: SparkSession, docs: DataFrame,
+  /** Filter selectivity for probe widening: |filtered| / |total| from
+    * one aggregate pass over the metadata table (both counts together),
+    * clamped to [1e-9, 1]. */
+  private[graft] def filterSelectivity(docs: DataFrame,
       pred: org.apache.spark.sql.Column): Double = {
-    val est = for {
-      k <- docs.filter(pred).queryExecution.optimizedPlan.stats.rowCount
-      n <- docs.queryExecution.optimizedPlan.stats.rowCount
-      if n > 0
-    } yield k.toDouble / n.toDouble
-    est.map(s => math.min(1.0, math.max(s, 1e-9))).getOrElse {
-      val selRow = docs.agg(count(lit(1)).as("n"),
-        count(when(pred, 1)).as("k")).head()
-      math.max(selRow.getLong(1).toDouble / math.max(1L, selRow.getLong(0)), 1e-9)
-    }
+    val selRow = docs.agg(count(lit(1)).as("n"),
+      count(when(pred, 1)).as("k")).head()
+    math.max(selRow.getLong(1).toDouble / math.max(1L, selRow.getLong(0)), 1e-9)
   }
 
   /** Centroids and the vec_id=0 query embedding in ONE driver
@@ -1542,8 +1524,7 @@ object Similarity {
     GraftFunctions.register(spark)
     val docs = Relational.table(spark, dir, "documents")
     val allowed = docs.filter(col("lang") === "en").select(col("doc_id").as("vec_id"))
-    // catalog-stats selectivity, single-aggregate fallback (see helper)
-    val sel = filterSelectivity(spark, docs, col("lang") === "en")
+    val sel = filterSelectivity(docs, col("lang") === "en")
     val vectors = liveIndexVectors(spark, indexDir)
     // centroids + query vector in one job (see centroidsAndQuery)
     val (cents, qVec) = centroidsAndQuery(spark, indexDir, vectors)
@@ -2026,9 +2007,7 @@ object Similarity {
   def annIvfPqFiltered(spark: SparkSession, dir: String, indexDir: String): DataFrame = {
     val docs = Relational.table(spark, dir, "documents")
     val allowed = docs.filter(col("lang") === "en").select(col("doc_id").as("vec_id"))
-    // catalog-stats selectivity, single-aggregate fallback (see
-    // [[filterSelectivity]] at annIvfFiltered)
-    val sel = filterSelectivity(spark, docs, col("lang") === "en")
+    val sel = filterSelectivity(docs, col("lang") === "en")
     pqIndexedCore(spark, indexDir, Some((allowed, sel)))
   }
 

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.Similarity
@@ -23,13 +22,7 @@ object AnnSweep {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val nSample = if (args.length > 1) args(1).toInt else 500
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .appName("graft-ann-sweep").master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.driver.memory", "8g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Graft.local("graft-ann-sweep")
     import spark.implicits._
 
     graft.functions.GraftFunctions.register(spark)

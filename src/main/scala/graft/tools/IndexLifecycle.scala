@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ops.{IndexMeta, Similarity}
@@ -32,15 +31,10 @@ object IndexLifecycle {
     val sfDir = args(0)
     val batches = if (args.length > 1) args(1).toInt else 8
     val cadence = if (args.length > 2) args(2).toLong else 0L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // driver memory must come from JVM opts (-Xmx / spark.driver.memory
     // at launch): setting it via the builder after the JVM is up is a
     // no-op in local mode (round-6 advice)
-    val spark = SparkSession.builder()
-      .appName("graft-index-lifecycle").master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Graft.local("graft-index-lifecycle")
 
     def sec[A](body: => A): (A, Double) = {
       val t0 = System.nanoTime(); val a = body

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ops.{IndexMeta, Similarity}
@@ -24,14 +23,7 @@ import graft.ops.{IndexMeta, Similarity}
 object NearDupLifecycle {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .appName("graft-neardup-lifecycle").master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Graft.local("graft-neardup-lifecycle")
 
     def sec[A](body: => A): (A, Double) = {
       val t0 = System.nanoTime(); val a = body

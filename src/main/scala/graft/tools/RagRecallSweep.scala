@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ops.Similarity
@@ -18,11 +17,7 @@ import graft.ops.Similarity
  */
 object RagRecallSweep {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Graft.local("graft-rag-recall-sweep")
     val nprobes = sys.env.getOrElse("SPARK_GRAFT_NPROBES", "1,2,4,8,16")
       .split(",").map(_.trim.toInt).toSeq
     args.foreach { dir =>

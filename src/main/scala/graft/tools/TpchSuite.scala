@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /**
@@ -27,8 +26,6 @@ import org.apache.spark.sql.functions._
  * Usage: runMain graft.tools.TpchSuite <dir> [onlyCsv]
  *   onlyCsv: optional comma-separated query-name subset (decade runs
  *   at sf100 can restrict to the shapes under study).
- *   SPARK_GRAFT_STATS=1: ANALYZE the dir's tables first and plan with
- *   CBO (tools/TableStats) — the per-relation-truth A/B facility.
  */
 object TpchSuite {
   /** the classic 22, in query-number order */
@@ -47,7 +44,6 @@ object TpchSuite {
     val only: Set[String] =
       if (args.length > 1) args(1).split(",").map(_.trim).filter(_.nonEmpty).toSet
       else Set.empty
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // Shuffle sizing is AQE's wide-start/coalesce-down: partitions
     // START at initialPartitionNum and AQE merges them to the advisory
     // size at runtime — so one config serves every scale. A fixed
@@ -59,17 +55,16 @@ object TpchSuite {
     // at sf0.1 AQE coalesces back to a handful of partitions so small
     // scales pay only map-side bucket count. This is exactly what a
     // 1000-executor cluster does with initialPartitionNum.
-    val initParts = sys.env.getOrElse("SPARK_GRAFT_INIT_PARTITIONS", "1024")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", initParts)
+    val spark = graft.Graft.local("graft-tpch-suite",
+      "spark.sql.adaptive.coalescePartitions.initialPartitionNum" ->
+        sys.env.getOrElse("SPARK_GRAFT_INIT_PARTITIONS", "1024"),
       // a 96 GB heap means organic GC almost never runs, so the
       // ContextCleaner (which reclaims shuffle files via weak refs)
       // never fires — at sf100 the suite accumulated >60 GB of dead
       // shuffle spill across queries and filled the disk. Fast
       // periodic GC + an explicit gc between queries bound the spill
       // footprint to the live query's.
-      .config("spark.cleaner.periodicGC.interval", "60s")
+      "spark.cleaner.periodicGC.interval" -> "60s",
       // Broadcast threshold: DEFAULT (10 MB). The round-11 64 MB
       // static posture is RETIRED this round: its reason to exist was
       // the sf100 collapse of filtered dim lists (non-CBO estimates
@@ -77,23 +72,19 @@ object TpchSuite {
       // SortMergeJoin, 14–19 GB shuffles), and those queries now carry
       // explicit BROADCAST hints on exactly those lists (author
       // knowledge; see the tpchQ19/tpchQ9 comments for the measured
-      // why and the scale boundary). CBO statistics were implemented
-      // and measured as the posture replacement (tools/TableStats —
-      // opt in with SPARK_GRAFT_STATS=1): they fix the ESTIMABLE cases
-      // (q19's brand/size brackets) but make the contains-filtered
-      // dims WORSE — CBO cannot estimate LIKE '%…%' (selectivity 1.0)
-      // and prices the list at raw width (~1.4 GB for q9/q20's part
-      // list at sf100 vs the 32–72 MB pruned-file estimate), so at ANY
-      // static threshold those joins regress to SMJ under stats. The
-      // hints are the mechanism that is right in BOTH worlds. AQE's
-      // SMJ→BHJ conversion remains measured-useless for this class
-      // (it fires after the map stage wrote its 17 GB shuffle).
-      .config("spark.sql.autoBroadcastJoinThreshold",
+      // why and the scale boundary). CBO statistics were measured as
+      // the posture replacement (BASELINE.md round 12): they fix the
+      // ESTIMABLE cases (q19's brand/size brackets) but make the
+      // contains-filtered dims WORSE — CBO cannot estimate LIKE '%…%'
+      // (selectivity 1.0) and prices the list at raw width (~1.4 GB
+      // for q9/q20's part list at sf100 vs the 32–72 MB pruned-file
+      // estimate), so at ANY static threshold those joins regress to
+      // SMJ under stats. The hints are the mechanism that is right in
+      // BOTH worlds. AQE's SMJ→BHJ conversion remains measured-useless
+      // for this class (it fires after the map stage wrote its 17 GB
+      // shuffle).
+      "spark.sql.autoBroadcastJoinThreshold" ->
         sys.env.getOrElse("SPARK_GRAFT_BCAST", "10485760"))
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     // Per-query IO accounting: byte volumes are PLAN properties
     // (identical across warm runs), so one capture per query turns the
@@ -117,8 +108,7 @@ object TpchSuite {
       }
     })
 
-    if (sys.env.get("SPARK_GRAFT_STATS").exists(_ == "1"))
-      TableStats.register(spark, dir)
+    val jobs = new JobCounter(spark)
 
     def once(name: String): Double = {
       val t0 = System.nanoTime()
@@ -134,7 +124,7 @@ object TpchSuite {
         .agg(count(lit(1))).head().getLong(0)
       io.reset()
       val t1 = once(name)
-      Thread.sleep(500) // listener bus drains async; settle before reading
+      jobs.settle() // the listener bus is async: drain it before reading
       val (inGb, swGb, spGb) = (io.gb(io.input), io.gb(io.shufW), io.gb(io.spillDisk))
       val t2 = once(name)
       System.gc() // release dead shuffle refs so the cleaner reclaims their files

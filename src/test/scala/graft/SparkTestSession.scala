@@ -3,21 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (getOrCreate is idempotent;
-  * forked test JVM shuts it down at exit). */
+  * forked test JVM shuts it down at exit). Fixed at four cores and no
+  * extra confs: the environment a main reads does not reach the specs. */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Graft.local("graft-test", 4, Nil)
 }
 
 trait SparkTestSession {

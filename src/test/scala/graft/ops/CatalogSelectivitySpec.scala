@@ -5,13 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
 
-/** Round-15 optimization (verdict item 3): the filtered ANN probes'
-  * probe-widening selectivity comes from catalog column stats when the
-  * metadata table was ANALYZEd (zero scans per probe — the §7.3
-  * driver-metadata doctrine), falling back to the round-14 one-pass
-  * aggregate otherwise. These tests pin both branches: the fallback
-  * value is exactly the aggregate fraction, and the catalog branch
-  * answers without running a single Spark job. */
+/** The filtered ANN probes widen their probe set by the filter's
+  * selectivity, computed in one aggregate pass over the metadata table.
+  * This pins that value to the exact aggregate fraction. */
 class CatalogSelectivitySpec extends AnyFunSuite with SparkTestSession {
 
   private val dir = "/root/testdata/sf0.001"
@@ -25,60 +21,10 @@ class CatalogSelectivitySpec extends AnyFunSuite with SparkTestSession {
 
   test("fallback (no catalog stats) selectivity equals the one-pass aggregate fraction") {
     val docs = Relational.table(spark, dir, "documents")
-    // plain parquet relation: no CBO row count, so the helper must take
-    // the aggregate branch and reproduce the exact fraction
+    // plain parquet relation: no CBO row count
     assert(docs.queryExecution.optimizedPlan.stats.rowCount.isEmpty)
-    val sel = Similarity.filterSelectivity(spark, docs, col("lang") === "en")
+    val sel = Similarity.filterSelectivity(docs, col("lang") === "en")
     assert(math.abs(sel - aggregateFraction()) < 1e-12,
       s"fallback selectivity $sel != aggregate fraction ${aggregateFraction()}")
-  }
-
-  test("catalog posture answers selectivity with ZERO Spark jobs") {
-    val confsTouched = Seq("graft.catalog.statsDir", "spark.sql.cbo.enabled",
-      "spark.sql.statistics.histogram.enabled")
-    val saved = confsTouched.map(c => c -> spark.conf.getOption(c))
-    val tables = graft.tools.TableStats.relationalTables :+ "documents"
-    try {
-      graft.tools.TableStats.register(spark, dir, tables)
-      val docs = Relational.table(spark, dir, "documents")
-      // the catalog relation carries ANALYZE stats into planning
-      assert(docs.queryExecution.optimizedPlan.stats.rowCount.isDefined,
-        "registered documents table should carry a CBO row count")
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val sentinelSeen = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          if (Option(js.properties).exists(
-              _.getProperty("spark.job.description") == "graft_sel_sentinel"))
-            sentinelSeen.set(true)
-          else { jobs.incrementAndGet(); () }
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        val sel = Similarity.filterSelectivity(spark, docs, col("lang") === "en")
-        assert(sel > 0.0 && sel <= 1.0, s"catalog selectivity out of range: $sel")
-        // MARKED sentinel job: listener events are FIFO, so once the
-        // sentinel's start event has arrived, any job the helper might
-        // have run is already counted — no sleep-and-hope, no race with
-        // in-flight body events
-        spark.sparkContext.setJobDescription("graft_sel_sentinel")
-        spark.sparkContext.parallelize(Seq(1)).count()
-        spark.sparkContext.setJobDescription(null)
-        val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-        while (!sentinelSeen.get() && System.nanoTime() < deadline) Thread.sleep(20)
-        assert(sentinelSeen.get(), "sentinel job event never arrived")
-        assert(jobs.get() === 0,
-          s"expected zero jobs, saw ${jobs.get()} — the catalog " +
-            "branch ran a Spark job for selectivity")
-      } finally spark.sparkContext.removeSparkListener(listener)
-    } finally {
-      tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-      saved.foreach {
-        case (c, Some(v)) => spark.conf.set(c, v)
-        case (c, None)    => spark.conf.unset(c)
-      }
-    }
   }
 }

@@ -766,7 +766,6 @@ class PlanSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("Scale: sizing an exchange-bearing frame passes through and runs ZERO jobs") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.functions.{col, count, lit}
     // under AQE, df.rdd EXECUTES the plan's query stages to fix the
     // final plan — probing a joined/aggregated frame's partition count
@@ -776,19 +775,12 @@ class PlanSpec extends AnyFunSuite with SparkTestSession {
       .join(Relational.table(spark, dir, "customer"),
         col("o_custkey") === col("c_custkey"))
       .groupBy(col("c_custkey")).agg(count(lit(1)).as("n"))
-    @volatile var jobs = 0
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = jobs += 1
+    val ((sized, sizedW), jobs) = graft.tools.JobCounter.jobsDuring(spark) {
+      (Scale.sizeForCompute(joined), Scale.sizeForWrite(joined))
     }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val sized = Scale.sizeForCompute(joined)
-      val sizedW = Scale.sizeForWrite(joined)
-      Thread.sleep(1500) // listener bus is async
-      assert(sized eq joined, "exchange-bearing frame was re-planned")
-      assert(sizedW eq joined, "exchange-bearing frame was re-planned (write)")
-      assert(jobs == 0, s"sizing executed $jobs job(s) — the AQE .rdd trap")
-    } finally spark.sparkContext.removeSparkListener(l)
+    assert(sized eq joined, "exchange-bearing frame was re-planned")
+    assert(sizedW eq joined, "exchange-bearing frame was re-planned (write)")
+    assert(jobs == 0, s"sizing executed $jobs job(s) — the AQE .rdd trap")
   }
 
   test("C38 normalize: map-only — the only exchange is the output sort") {

@@ -51,34 +51,7 @@ class SchemaMemoSpec extends AnyFunSuite with SparkTestSession {
     assert(Relational.cachedSchemaParquet(spark, path).schema.fieldNames.toSeq === Seq("z"))
   }
 
-  /** Spark jobs `body` runs, counted by a listener with an RDD
-    * sentinel action: listener events are FIFO, so once the MARKED
-    * sentinel's start arrives every job the body ran is counted — a
-    * bare count-wait could return early while body events are still
-    * in flight. */
-  private def jobsDuring(body: => Unit): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val sentinelSeen = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        if (Option(js.properties).exists(
-            _.getProperty("spark.job.description") == "graft_memo_sentinel"))
-          sentinelSeen.set(true)
-        else { jobs.incrementAndGet(); () }
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      spark.sparkContext.setJobDescription("graft_memo_sentinel")
-      spark.sparkContext.parallelize(Seq(1)).count()
-      spark.sparkContext.setJobDescription(null)
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (!sentinelSeen.get() && System.nanoTime() < deadline) Thread.sleep(20)
-      jobs.get()
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
+  private def jobsDuring(body: => Any): Int = graft.tools.JobCounter.jobsDuring(spark)(body)._2
 
   /** Round-15 (round-14 advice): the memo bound evicts only the
     * LEAST-RECENTLY-USED entry instead of clearing everything. Pin the

@@ -14,13 +14,6 @@ SF_DIR="$1"
 OUT="$2"
 ONLY="${3:-}"
 
-ADDOPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic \
-         sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADDOPENS="$ADDOPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-
 QUERIES="b3_agg_group b36_tpch_q2 b47_tpch_q3 b30_sql_exists b32_tpch_q5 \
 b51_tpch_q6 b46_tpch_q7 b48_tpch_q8 b49_tpch_q9 b33_tpch_q10 b43_tpch_q11 \
 b50_tpch_q12 b41_tpch_q13 b44_tpch_q14 b37_tpch_q15 b42_tpch_q16 \
@@ -36,8 +29,7 @@ for q in $QUERIES; do
   # error marker uses the same "q" key as data rows (round-13 advice:
   # the old "query" key complicated downstream parsing)
   SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
-  java -Xmx96g $ADDOPENS -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
-    graft.tools.TpchSuite "$SF_DIR" "$q" > "$QLOG" 2>&1 \
+  tools/run_main.sh graft.tools.TpchSuite "$SF_DIR" "$q" > "$QLOG" 2>&1 \
     || echo "{\"q\":\"$q\",\"err\":true}" >> "$OUT"
   grep -E '^\{"q":' "$QLOG" >> "$OUT" || true
 done

@@ -3,7 +3,7 @@
 # sf0.01 gate; the sf0.1 sweep caught c19's IEEE -0.0 divergence, this
 # is the next notch). Generates sf1 from sf0.1 if absent, dumps every
 # registered query via graft.Verify, then DuckDB-compares via
-# tools/check_oracle.py. O(n^2) correctness baselines are skipped by
+# tools/oracle_check.py. O(n^2) correctness baselines are skipped by
 # name (SPARK_GRAFT_SKIP) -- their scaled/LSH counterparts, which share
 # their oracles, still run.
 #
@@ -25,17 +25,11 @@ if [ ! -d "$SF_DIR/lineitem.parquet" ]; then
   SPARK_GRAFT_CPUS=16 sbt -batch "runMain graft.tools.MakeScale /root/testdata/sf0.1 $SF_DIR 10"
 fi
 
-ADDOPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic \
-         sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADDOPENS="$ADDOPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-
 SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
 SPARK_GRAFT_QUERY_TIMEOUT="${SPARK_GRAFT_QUERY_TIMEOUT:-900}" \
 SPARK_GRAFT_SKIP="$SKIP" \
-java -Xmx48g $ADDOPENS -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
-  graft.Verify "$SF_DIR" "$OUT_DIR"
+SPARK_DRIVER_MEM="${SPARK_DRIVER_MEM:-48g}" \
+tools/run_main.sh graft.Verify "$SF_DIR" "$OUT_DIR"
 
-python3 tools/check_oracle.py "$SF_DIR" "$OUT_DIR"
+# exits 1 on any mismatch, crash or timeout: the gate's verdict
+python3 tools/oracle_check.py "$OUT_DIR" "$SF_DIR"

@@ -22,17 +22,11 @@ if [ ! -d "$SF_DIR/lineitem.parquet" ]; then
   SPARK_GRAFT_CPUS=16 sbt -batch "runMain graft.tools.MakeScale /root/testdata/sf0.1 $SF_DIR 100 region,nation,customer,supplier,part,orders,lineitem,events,documents,embeddings 10"
 fi
 
-ADDOPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic \
-         sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADDOPENS="$ADDOPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-
 SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
 SPARK_GRAFT_QUERY_TIMEOUT="${SPARK_GRAFT_QUERY_TIMEOUT:-1800}" \
 SPARK_GRAFT_SKIP="$SKIP" \
-java -Xmx96g $ADDOPENS -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
-  graft.Verify "$SF_DIR" "$OUT_DIR"
+SPARK_DRIVER_MEM="${SPARK_DRIVER_MEM:-96g}" \
+tools/run_main.sh graft.Verify "$SF_DIR" "$OUT_DIR"
 
-python3 tools/check_oracle.py "$SF_DIR" "$OUT_DIR"
+# exits 1 on any mismatch, crash or timeout: the gate's verdict
+python3 tools/oracle_check.py "$OUT_DIR" "$SF_DIR"
