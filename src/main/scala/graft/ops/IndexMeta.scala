@@ -1,37 +1,49 @@
 package graft.ops
 
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /**
- * Index-layout metadata through the Hadoop `FileSystem` API — the
- * portability layer under the persistent-index family (IVF index,
- * near-dup store, scratch dirs). Round 6 implemented these ops with
- * `java.nio.file` — correct on a local disk, but `Files.walk` and
- * `ATOMIC_MOVE` of directories have no HDFS/S3 equivalent (S3 renames
- * are copy+delete per object; HDFS renames fail onto existing
- * destinations), so the layer was local-filesystem-bound (round-6
- * verdict, "What's wrong" #2). Everything here uses only operations
- * every Hadoop store supports: create-file, listStatus, recursive
- * delete, and MAX-COMMITTED-GENERATION resolution instead of renames.
+ * Index-layout metadata through the Hadoop `FileSystem` API, and the
+ * ONE commit protocol of every persistent index family (lex, IVF, PQ
+ * sidecar, near-dup store, pretrain state, BM25 stats). Only
+ * operations every Hadoop store supports are used: create-file,
+ * listStatus, open, recursive delete — no rename anywhere, so the
+ * protocol holds unchanged on HDFS and object stores.
  *
- * Generation protocol (replaces the compaction double-ATOMIC_MOVE):
- * a table's layout lives in `<table>.gNNNNN` directories under the
- * index root. A generation is COMMITTED iff a `_SUCCESS` marker exists
- * in it, written LAST: by Spark's output committer when the generation
- * is one parquet table (the IVF vectors, the near-dup tables), or by
- * [[createMarker]] after every file of a multi-file generation lands
- * (the lex generation's [[writeSmallFile]] header, the BM25 stats
- * pair). Readers resolve the max committed generation at plan time,
- * so a generation whose marker is missing is invisible, whatever else
- * it holds. Compaction writes generation N+1 and only then deletes
- * N — a crash at any point leaves either N (N+1 uncommitted,
- * ignored) or both (readers pick N+1; the orphaned N is swept by the
- * next compaction) — so there is no rename anywhere in the commit
- * path, and concurrent readers of N
- * are only hazarded by the final delete (documented at the call
- * site: compaction remains a maintenance op, but the unsafe window
- * shrank from "the whole swap" to "GC of a superseded generation").
+ * Generation headers. A family's committed state is one `<name>.gN`
+ * generation dir under its root holding a small driver-written JSON
+ * `header.json`: the live data it names (segments, table generations,
+ * codebook files), the family's small state (scalars, watermarks, the
+ * quantizer baseline), and the `applied` batch ids that make a replayed
+ * append a no-op (the idempotent sink keyed by batch id of Structured
+ * Streaming). [[commitGen]] opens the next generation, lets the caller
+ * write its data and build the header, writes the header, then
+ * `_SUCCESS`, then deletes the superseded generations. A generation is
+ * COMMITTED iff its `_SUCCESS` exists, and [[commitGen]] is the only
+ * code that creates one (guard-specced), so:
+ *   - a crash before `_SUCCESS` leaves the previous generation live and
+ *     the new one invisible, whatever it holds (its header included);
+ *   - a crash after it leaves the new generation live and the old one
+ *     as debris the next commit sweeps;
+ *   - a batch id lands in `applied` atomically with its data: there is
+ *     no marker file and no window between "the batch is in" and "the
+ *     batch is recorded".
+ * [[header]] reads the live header on the driver with no Spark job.
+ * A layout with no header (written before this protocol) is refused
+ * with a rebuild message naming the caller; the derived-index cache
+ * ([[ensureDerived]]) treats it as not ready and rebuilds.
+ *
+ * Data that a header names lives beside the generation dirs and is
+ * immutable once named (lex segments, IVF codebooks), or is a table
+ * generation the family rewrites only into a fresh dir and swaps in
+ * with the next header (IVF vectors/ids, near-dup tables, PQ
+ * codes/books). Each family deletes what its live header no longer
+ * names after the commit. Appends that still write into a live table
+ * (IVF vectors/ids, near-dup tables) record their batch id in the
+ * header they commit after the write.
  */
 private[graft] object IndexMeta {
 
@@ -54,8 +66,8 @@ private[graft] object IndexMeta {
       fs.delete(path, true)
     } catch { case scala.util.control.NonFatal(_) => () }
 
-  /** Atomic create-if-absent marker file (append batch idempotence).
-    * Returns false if it already existed. */
+  /** Atomic create-if-absent empty file — the commit marker
+    * [[commitGen]] writes. Returns false if it already existed. */
   def createMarker(spark: SparkSession, p: String): Boolean = {
     val (fs, path) = fsFor(spark, p)
     try { fs.create(path, false).close(); true }
@@ -103,6 +115,17 @@ private[graft] object IndexMeta {
     total
   }
 
+  /** Delete every entry of `dir` whose name starts with one of
+    * `prefixes` and is not in `keep` — the GC of what a committed
+    * header no longer names (superseded data and crash orphans; a
+    * single-writer maintenance step, run after the commit). */
+  def deleteUnnamed(spark: SparkSession, dir: String, prefixes: Seq[String],
+                    keep: Set[String]): Unit =
+    list(spark, dir).foreach { st =>
+      val n = st.getPath.getName
+      if (prefixes.exists(n.startsWith) && !keep(n)) delete(spark, st.getPath.toString)
+    }
+
   /** Count of files with `suffix` under `p`, recursively. */
   def countUnder(spark: SparkSession, p: String, suffix: String): Long = {
     val (fs, path) = fsFor(spark, p)
@@ -114,8 +137,9 @@ private[graft] object IndexMeta {
 
   // ------------------------------------------ table generations
 
+  private val Committed = "_SUCCESS"
+
   def genName(table: String, i: Int): String = f"$table.g$i%05d"
-  def genName(i: Int): String = genName("vectors", i)
 
   /** All generation dirs of `table` (committed or not). */
   private def gens(spark: SparkSession, indexDir: String,
@@ -130,11 +154,10 @@ private[graft] object IndexMeta {
   }
 
   /** Max COMMITTED generation of `table` (has `_SUCCESS`), if any. */
-  def liveGen(spark: SparkSession, indexDir: String,
-      table: String = "vectors"): Option[Path] = {
+  def liveGen(spark: SparkSession, indexDir: String, table: String): Option[Path] = {
     val (fs, _) = fsFor(spark, indexDir)
     gens(spark, indexDir, table)
-      .filter { case (_, st) => fs.exists(new Path(st.getPath, "_SUCCESS")) }
+      .filter { case (_, st) => fs.exists(new Path(st.getPath, Committed)) }
       .sortBy(-_._1).headOption.map(_._2.getPath)
   }
 
@@ -145,20 +168,90 @@ private[graft] object IndexMeta {
         "not an index (build one first) or a build crashed " +
         "before commit (re-run the build)")).toString
 
-  def requireLiveVectors(spark: SparkSession, indexDir: String): String =
-    requireLive(spark, indexDir, "vectors")
+  /** Path for the NEXT generation of `table` (max existing + 1,
+    * committed or not — an uncommitted crash leftover must not be
+    * overwritten while a concurrent writer could still be filling it).
+    * Also returns every existing gen dir to delete after commit. */
+  def nextGen(spark: SparkSession, indexDir: String,
+      table: String): (String, Seq[String]) = {
+    val all = gens(spark, indexDir, table)
+    val next = new Path(new Path(indexDir),
+      genName(table, all.map(_._1).maxOption.getOrElse(-1) + 1))
+    (next.toString, all.map(_._2.getPath.toString))
+  }
+
+  // ------------------------------------------ generation headers
+
+  private val HeaderFile = "header.json"
+  private lazy val json = new ObjectMapper()
+
+  def newHeader(): ObjectNode = json.createObjectNode()
+
+  /** Commit the next `<name>.gN` generation under `dir`. `body` gets
+    * the new generation's path, writes whatever data the generation
+    * needs (inside it or beside it) and returns the header; the header
+    * lands, then `_SUCCESS`, then every superseded `<name>.g*` is
+    * deleted. */
+  def commitGen(spark: SparkSession, dir: String, name: String)
+               (body: String => ObjectNode): Unit = {
+    val (g, old) = nextGen(spark, dir, name)
+    val h = body(g)
+    writeSmallFile(spark, s"$g/$HeaderFile", json.writeValueAsBytes(h))
+    createMarker(spark, s"$g/$Committed")
+    old.foreach(delete(spark, _))
+  }
+
+  /** The header of the live `<name>` generation under `dir` — one
+    * small-file read on the driver, no Spark job. No committed
+    * generation, or one without a header (a layout from before this
+    * protocol), is refused naming `what` (the caller) and `rebuild`
+    * (how to get a current layout). */
+  def header(spark: SparkSession, dir: String, name: String, what: String,
+             rebuild: String = "rebuild the index"): ObjectNode =
+    headerAt(spark, liveGen(spark, dir, name).getOrElse(sys.error(
+      s"no committed $name generation under $dir — $what cannot use it: not " +
+        s"an index of this kind or a build that crashed before its commit; $rebuild"))
+      .toString, what, rebuild)
+
+  /** The header of generation `g` (see [[header]]). */
+  def headerAt(spark: SparkSession, g: String, what: String, rebuild: String): ObjectNode =
+    readSmallFile(spark, s"$g/$HeaderFile") match {
+      case Some(bytes) => json.readTree(bytes).asInstanceOf[ObjectNode]
+      case None => sys.error(
+        s"generation $g predates the header layout — $what cannot use it; $rebuild")
+    }
+
+  /** Field `f` of a header, refused by name when absent. */
+  def field(h: ObjectNode, f: String): JsonNode =
+    Option(h.get(f)).getOrElse(sys.error(s"index generation header has no `$f` field"))
+
+  /** String-array field `f` of a header (empty when absent). */
+  def strings(h: ObjectNode, f: String): Seq[String] =
+    Option(h.get(f)).toSeq.flatMap(a => (0 until a.size).map(a.get(_).asText))
+
+  /** Set string-array field `f` of a header; returns the header. */
+  def putStrings(h: ObjectNode, f: String, xs: Iterable[String]): ObjectNode = {
+    val a = h.putArray(f)
+    xs.foreach(x => a.add(x))
+    h
+  }
 
   /** Fingerprint-keyed derived-index cache under `graft.index.root`
     * (default java.io.tmpdir): the index is a pure function of the
     * source files, so same (name, length, mtime) set ⇒ same index and
     * repeated wrapper calls (bench run1/run2, sweeps) rebuild nothing.
-    * `ready` marks a complete build (concurrent builders each write
-    * their own appId-suffixed dir; readers take any ready one); stale
-    * fingerprints of the same prefix are GC'd after a successful
-    * build. Shared by the IVF, RAG-chunk, and lexical index wrappers —
-    * one cache protocol, three indexes. */
+    * A cached dir is READY when `readHeader` — the family's header
+    * reader — accepts it: it has a live header (the last thing a build
+    * commits) of the layout this code writes. A half-built or crashed
+    * dir, a layout from before the header protocol, or a header of any
+    * other layout is never served and gets rebuilt. Concurrent builders
+    * each write their own appId-suffixed dir; readers take any ready
+    * one; ready dirs of stale fingerprints of the same prefix are GC'd
+    * after a successful build. Shared by the IVF, RAG-chunk, and
+    * lexical index wrappers. */
   def ensureDerived(spark: SparkSession, sourceDir: String, prefix: String)
-                   (ready: String => Boolean)(build: String => Unit): String = {
+                   (readHeader: String => Any)(build: String => Unit): String = {
+    def ready(p: String) = scala.util.Try(readHeader(p)).isSuccess
     val files = list(spark, sourceDir).filter(_.isFile)
     val fp = files.map(f => s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}")
       .sorted.mkString("|").hashCode.toHexString
@@ -179,17 +272,5 @@ private[graft] object IndexMeta {
           .foreach(st => delete(spark, st.getPath.toString))
         mine
       }
-  }
-
-  /** Path for the NEXT generation of `table` (max existing + 1,
-    * committed or not — an uncommitted crash leftover must not be
-    * overwritten while a concurrent writer could still be filling it).
-    * Also returns every existing gen dir to delete after commit. */
-  def nextGen(spark: SparkSession, indexDir: String,
-      table: String = "vectors"): (String, Seq[String]) = {
-    val all = gens(spark, indexDir, table)
-    val next = new Path(new Path(indexDir),
-      genName(table, all.map(_._1).maxOption.getOrElse(-1) + 1))
-    (next.toString, all.map(_._2.getPath.toString))
   }
 }

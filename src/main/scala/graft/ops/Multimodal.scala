@@ -458,23 +458,6 @@ object Multimodal {
     media.mapPartitions(_.grouped(batchSize).flatMap(g => decodeBatch(g.toSeq)))
   }
 
-  /** Metadata-level resize: pure column transform on the typed metadata
-    * (the pixel-level resample would live in the decode stub). */
-  def resizeMeta(df: DataFrame, maxSide: Int): DataFrame = {
-    val scale = least(lit(1.0), lit(maxSide) / greatest(col("width"), col("height")))
-    df.withColumn("width", (col("width") * scale).cast("int"))
-      .withColumn("height", (col("height") * scale).cast("int"))
-      .withColumn("resized", scale < 1.0)
-  }
-
-  /** Frame sampling plan for video rows: every `stride`-th frame index
-    * up to `maxFrames` — metadata only, decode happens downstream. */
-  def frameSamplePlan(df: DataFrame, stride: Int, maxFrames: Int): DataFrame =
-    df.withColumn("frame_indices",
-      when(col("kind") === "video",
-        slice(sequence(lit(0), lit(stride * (maxFrames - 1)), lit(stride)), 1, maxFrames))
-        .otherwise(array().cast("array<int>")))
-
   final case class FrameSample(doc_id: Long, frame_idx: Int, mean_luma: Double)
 
   /** REAL frame sampling: walk the AVI chunk tree and pixel-decode ONLY

@@ -241,23 +241,25 @@ object Pipeline {
     }
 
   /** Write (terms, scalars) as ONE committed generation: both tables
-    * land in the next `stats.gN`, then a single root marker commits the
-    * snapshot atomically (the Spark per-table `_SUCCESS` files live one
-    * level down and are not the commit signal). Superseded generations
-    * — unified, round-12 split, and the flat legacy dirs — are GC'd
-    * only after the commit, so a crash at any point leaves a readable
-    * consistent snapshot live. */
+    * land in the next `stats.gN` and [[IndexMeta.commitGen]] commits
+    * the snapshot atomically (the Spark per-table `_SUCCESS` files live
+    * one level down and are not the commit signal; the header is
+    * empty — the two tables are the whole state). Superseded
+    * generations — unified, round-12 split, and the flat legacy dirs —
+    * are GC'd only after the commit, so a crash at any point leaves a
+    * readable consistent snapshot live. */
   private def commitBm25Stats(spark: SparkSession, statsDir: String,
                               terms: DataFrame, scalars: DataFrame): Unit = {
-    val (genDir, oldStats) = IndexMeta.nextGen(spark, statsDir, "stats")
-    terms.write.mode("overwrite").parquet(s"$genDir/terms")
-    scalars.coalesce(1).write.mode("overwrite").parquet(s"$genDir/scalars")
-    IndexMeta.createMarker(spark, s"$genDir/_SUCCESS")
+    IndexMeta.commitGen(spark, statsDir, "stats") { genDir =>
+      terms.write.mode("overwrite").parquet(s"$genDir/terms")
+      scalars.coalesce(1).write.mode("overwrite").parquet(s"$genDir/scalars")
+      IndexMeta.newHeader()
+    }
     val oldSplit = IndexMeta.nextGen(spark, statsDir, "terms")._2 ++
       IndexMeta.nextGen(spark, statsDir, "scalars")._2
     val oldFlat = Seq(s"$statsDir/terms", s"$statsDir/scalars")
       .filter(IndexMeta.exists(spark, _))
-    (oldStats ++ oldSplit ++ oldFlat).foreach(IndexMeta.delete(spark, _))
+    (oldSplit ++ oldFlat).foreach(IndexMeta.delete(spark, _))
   }
 
   /** C41b fit — persist the BM25 corpus statistics: the FULL per-term
@@ -730,25 +732,27 @@ object Pipeline {
     val postings = truncatePostings(
       tf.join(terms, "tok")
         .withColumn("score_micro", expr(bm25RationalExpr)), cap)
-    val (genDir, oldGens) = IndexMeta.nextGen(spark, indexDir, "lex")
-    val seg = writeLexSegment(spark, indexDir, genDir,
-      terms.select(col("tok"), col("dfq")), postings,
-      tf.select(col("doc_id"), col("dl")).distinct())
     // lineage = the name of the generation THIS FIT commits; appends
     // and compactions carry it forward unchanged. All maintenance
-    // side-state (tombstones, append batch markers) is keyed by it,
-    // so a refit RETIRES the old index's side-state atomically with
-    // the generation commit — no crash window where stale tombstones
-    // hide (and compaction then physically deletes) re-indexed docs,
-    // or stale batch markers turn legitimate appends into no-ops.
+    // side-state (tombstones, the applied batch ids) is keyed by it or
+    // rides its header, so a refit RETIRES the old index's side-state
+    // atomically with the generation commit — no crash window where
+    // stale tombstones hide (and compaction then physically deletes)
+    // re-indexed docs, or stale batch ids turn legitimate appends into
+    // no-ops.
     // the scalars ride every row of the pinned terms (a non-empty
     // corpus has at least one term), so the header reads them there
     // instead of re-running the corpus aggregate
-    val sc = terms.select(col("s_total"), col("n_docs")).head(1).headOption
-    commitLexGen(spark, genDir, oldGens, LexHeader(
-      sTotal = sc.fold(0L)(_.getAs[Long](0)), nDocs = sc.fold(0L)(_.getAs[Long](1)),
-      postingCap = cap, lineage = new org.apache.hadoop.fs.Path(genDir).getName,
-      segments = Seq(seg), applied = Seq.empty))
+    commitLexGen(spark, indexDir) { genDir =>
+      val seg = writeLexSegment(spark, indexDir, genDir,
+        terms.select(col("tok"), col("dfq")), postings,
+        tf.select(col("doc_id"), col("dl")).distinct())
+      val sc = terms.select(col("s_total"), col("n_docs")).head(1).headOption
+      LexHeader(
+        sTotal = sc.fold(0L)(_.getAs[Long](0)), nDocs = sc.fold(0L)(_.getAs[Long](1)),
+        postingCap = cap, lineage = new org.apache.hadoop.fs.Path(genDir).getName,
+        segments = Seq(seg), applied = Seq.empty)
+    }
   }
 
   /** Impact-ordered truncation shared by the fit and the append's
@@ -830,64 +834,47 @@ object Pipeline {
     *     streaming micro-batches. */
   private[graft] final case class LexHeader(sTotal: Long, nDocs: Long, postingCap: Int,
       lineage: String, segments: Seq[String], applied: Seq[String]) {
-    def toJson: Array[Byte] = {
-      val o = lexJson.createObjectNode()
+    def toJson: com.fasterxml.jackson.databind.node.ObjectNode = {
+      val o = IndexMeta.newHeader()
       o.put("s_total", sTotal).put("n_docs", nDocs).put("posting_cap", postingCap)
         .put("lineage", lineage)
-      val (segs, ids) = (o.putArray("segments"), o.putArray("applied"))
-      segments.foreach(x => segs.add(x))
-      applied.foreach(x => ids.add(x))
-      lexJson.writeValueAsBytes(o)
+      IndexMeta.putStrings(o, "segments", segments)
+      IndexMeta.putStrings(o, "applied", applied)
     }
   }
 
-  /** The header file inside a `lex.gN` generation dir. */
-  private val LexHeaderFile = "header.json"
-  private lazy val lexJson = new com.fasterxml.jackson.databind.ObjectMapper()
+  private val lexRefit = "refit with fitLexIndex first"
 
-  /** Commit `header` as the generation `genDir`: the header file lands,
-    * then the root `_SUCCESS` marker (the [[commitBm25Stats]]
-    * atomicity doctrine: a reader resolves only generations with the
-    * marker, so it never sees a header whose segments are not all
-    * written, nor a segment no header describes). Superseded
-    * GENERATIONS are GC'd after the commit — segments are shared
-    * across generations and only compaction deletes them. */
-  private def commitLexGen(spark: SparkSession, genDir: String,
-      oldGens: Seq[String], header: LexHeader): Unit = {
-    IndexMeta.writeSmallFile(spark, s"$genDir/$LexHeaderFile", header.toJson)
-    IndexMeta.createMarker(spark, s"$genDir/_SUCCESS")
-    oldGens.foreach(IndexMeta.delete(spark, _))
+  private def parseLexHeader(o: com.fasterxml.jackson.databind.node.ObjectNode): LexHeader = {
+    def field(f: String) = IndexMeta.field(o, f)
+    LexHeader(field("s_total").asLong, field("n_docs").asLong, field("posting_cap").asInt,
+      field("lineage").asText, IndexMeta.strings(o, "segments").sorted,
+      IndexMeta.strings(o, "applied"))
   }
+
+  /** Commit the next `lex.gN` through [[IndexMeta.commitGen]]: `body`
+    * writes the generation's new segment (if any) and returns its
+    * header. A reader resolves only committed generations, so it never
+    * sees a header whose segments are not all written, nor a segment
+    * no header describes. Superseded GENERATIONS are GC'd after the
+    * commit — segments are shared across generations and only
+    * compaction deletes them. */
+  private def commitLexGen(spark: SparkSession, lexDir: String)(body: String => LexHeader): Unit =
+    IndexMeta.commitGen(spark, lexDir, "lex")(g => body(g).toJson)
 
   /** The header of the committed generation `g` — the one reader of
     * every lex scalar, the segment list and the replay record: one
     * small-file read on the driver, no Spark job. A generation without
     * a header predates this layout (the parquet scalars/manifest/applied
     * trio, or one of the three earlier round-14 layouts) and is refused
-    * loudly; the derived-index cache rebuilds such an index
-    * ([[lexLayoutCurrent]]). `what` names the caller in the refusal. */
-  private[graft] def lexHeader(spark: SparkSession, g: String, what: String): LexHeader = {
-    val bytes = IndexMeta.readSmallFile(spark, s"$g/$LexHeaderFile").getOrElse(sys.error(
-      s"lex generation $g predates the header layout — $what cannot use it; " +
-        "refit with fitLexIndex first"))
-    val o = lexJson.readTree(bytes)
-    def field(f: String) = Option(o.get(f)).getOrElse(sys.error(
-      s"lex generation header $g/$LexHeaderFile has no `$f` field"))
-    def strings(f: String): Seq[String] =
-      Option(o.get(f)).toSeq.flatMap(a => (0 until a.size).map(a.get(_).asText))
-    LexHeader(field("s_total").asLong, field("n_docs").asLong, field("posting_cap").asInt,
-      field("lineage").asText, strings("segments").sorted, strings("applied"))
-  }
-
-  /** True iff generation `g` has a header — the current layout.
-    * Maintenance and readers refuse older layouts loudly; the
-    * derived-index cache rebuilds them. */
-  private def lexLayoutCurrent(spark: SparkSession, g: String): Boolean =
-    IndexMeta.exists(spark, s"$g/$LexHeaderFile")
+    * loudly; the derived-index cache rebuilds such an index. `what`
+    * names the caller in the refusal. */
+  private[graft] def lexHeader(spark: SparkSession, g: String, what: String): LexHeader =
+    parseLexHeader(IndexMeta.headerAt(spark, g, what, lexRefit))
 
   /** The header of an index's live generation. */
   private def liveLexHeader(spark: SparkSession, lexDir: String, what: String): LexHeader =
-    lexHeader(spark, IndexMeta.requireLive(spark, lexDir, "lex"), what)
+    parseLexHeader(IndexMeta.header(spark, lexDir, "lex", what, lexRefit))
 
   /** Union read of one table across the given segments — callers
     * read the header ONCE per op and reuse its segment list. */
@@ -899,8 +886,9 @@ object Pipeline {
 
   /** The live lex index — (terms, header, postings, doclens);
     * postings/doclens unioned across segments, terms ASSEMBLED
-    * (per-segment df deltas summed per tok). Spec surface and the one
-    * reader seam. */
+    * (per-segment df deltas summed per tok). A spec reader seam: its
+    * callers are TierCSpec's lex append/compaction parity tests and
+    * StreamingSpec's lexical ingest leg. */
   private[graft] def lexLiveTables(spark: SparkSession, lexDir: String)
       : (DataFrame, LexHeader, DataFrame, DataFrame) = {
     val h = liveLexHeader(spark, lexDir, "this reader")
@@ -1018,10 +1006,10 @@ object Pipeline {
     val (s2, n2) = (h.sTotal + hdr.getLong(0), h.nDocs + hdr.getLong(1))
     val (segTerms, segPostings, segLens) =
       mergedLexFrames(spark, lexDir, segs, d, s2, n2, cap)
-    val (genDir, oldGens) = IndexMeta.nextGen(spark, lexDir, "lex")
-    val seg = writeLexSegment(spark, lexDir, genDir, segTerms, segPostings, segLens)
-    commitLexGen(spark, genDir, oldGens, h.copy(sTotal = s2, nDocs = n2,
-      segments = segs :+ seg, applied = h.applied ++ batchId))
+    commitLexGen(spark, lexDir) { genDir =>
+      val seg = writeLexSegment(spark, lexDir, genDir, segTerms, segPostings, segLens)
+      h.copy(sTotal = s2, nDocs = n2, segments = segs :+ seg, applied = h.applied ++ batchId)
+    }
     // segment-census cadence (the c27/IVF file-census doctrine at
     // segment granularity): query-time per-term candidates are bounded
     // by cap × live segments, so the store maintains ITSELF once the
@@ -1211,11 +1199,12 @@ object Pipeline {
         .withColumn("s_total", lit(s2)).withColumn("n_docs", lit(n2))
         .withColumn("idf_micro", expr(bm25IdfExpr))
         .withColumn("score_micro", expr(bm25RationalExpr)), cap)
-    val (genDir, oldGens) = IndexMeta.nextGen(spark, lexDir, "lex")
-    val seg = writeLexSegment(spark, lexDir, genDir, merged, postings, keptLens)
     // the replay record survives the fold verbatim: a compaction
     // changes what is stored, never what was ingested
-    commitLexGen(spark, genDir, oldGens, h.copy(sTotal = s2, nDocs = n2, segments = Seq(seg)))
+    commitLexGen(spark, lexDir) { genDir =>
+      h.copy(sTotal = s2, nDocs = n2,
+        segments = Seq(writeLexSegment(spark, lexDir, genDir, merged, postings, keptLens)))
+    }
     IndexMeta.delete(spark, s"$lexDir/tombstones_$lineage")
     gcLexIndex(spark, lexDir)
   }
@@ -1231,7 +1220,7 @@ object Pipeline {
     * once. An all-known-terms batch reads exactly 0.0 (spec-pinned). */
   private[graft] def lexOovFraction(spark: SparkSession, lexDir: String,
                                     queryDocs: DataFrame): Double = {
-    val g = IndexMeta.requireLive(spark, lexDir, "lex")
+    val segs = liveLexHeader(spark, lexDir, "the OOV probe").segments
     val qDistinct = queryDocs
       .select(explode(array_distinct(split(col("text"), " "))).as("tok"))
       .distinct().localCheckpoint()
@@ -1247,7 +1236,7 @@ object Pipeline {
     // (a tok may appear in several segments' deltas — distinct before
     // membership) left-join back onto the pinned query terms and a
     // single aggregate reads |batch| and |known| together
-    val known = lexSegTable(spark, lexDir, lexHeader(spark, g, "the OOV probe").segments, "terms")
+    val known = lexSegTable(spark, lexDir, segs, "terms")
       .select(col("tok"))
       .join(broadcast(qDistinct), Seq("tok"), "left_semi")
       .distinct().withColumn("m", lit(1))
@@ -1257,37 +1246,16 @@ object Pipeline {
     if (nq == 0L) 0.0 else (nq - kn).toDouble / nq
   }
 
-  /** OOV-drift-triggered REFIT policy — the lexical twin of
-    * [[Similarity.rebuildIvfIfDrifted]], closing the same
-    * measure→policy loop: [[lexOovFraction]] measures the query batch
-    * against the stored vocabulary; above `threshold`, refit the
-    * index over `corpus` (the CURRENT system of record — unlike the
-    * IVF index, which refits from its own live vectors, a lexical
-    * index cannot self-repair OOV: the missing terms are by
-    * definition in documents it has never seen, so the caller names
-    * where today's corpus lives). Below, no-op. Returns whether it
-    * refit, so an operator wires it after query batches the way
-    * [[rebuildIvfIfDrifted]] wires after appends. Threshold 0.5 = the
-    * sparse leg is blind to half the query vocabulary: in-distribution
-    * batches measure ≈ 0 (spec-pinned), so one half is far outside
-    * tokenization noise while firing long before the leg degrades to
-    * dense-only retrieval. */
-  def refitLexIfDrifted(spark: SparkSession, lexDir: String, corpus: DataFrame,
-                        queryBatch: DataFrame, threshold: Double = 0.5): Boolean = {
-    val oov = lexOovFraction(spark, lexDir, queryBatch)
-    System.err.println(f"[lex-drift] $lexDir oov=$oov%.3f threshold=$threshold%.3f")
-    if (oov > threshold) { refitLexIndex(spark, corpus, lexDir); true } else false
-  }
-
   /** Full REFIT of a standing lex index in place: fit the next
     * generation over `corpus` (the system of record). The maintenance
     * side-state of the superseded life — pending tombstones (they
     * reference the OLD index's view; the refit corpus decides what
     * exists now, and a stale tombstone would silently hide a
-    * re-indexed doc) and append batch markers (refit resets ingest
+    * re-indexed doc) and the applied batch ids (refit resets ingest
     * history — replaying an old batchId against the new index must
     * append, not no-op) — is retired ATOMICALLY by the commit itself:
-    * both are keyed by the lineage id the fit rotates, so there is no
+    * tombstones are keyed by the lineage id the fit rotates and the
+    * batch ids ride the superseded header, so there is no
     * crash window where the new generation pairs with the old life's
     * side-state. The trailing GC only reclaims the now-unreferenced
     * files; a crash before it costs disk, never correctness. */
@@ -1297,25 +1265,15 @@ object Pipeline {
   }
 
   /** Reclaim everything the LIVE generation does not reference:
-    * `seg_*` dirs off the header (superseded inputs, crash orphans),
-    * tombstone tables of retired lineages, and any `_appended_*`
-    * marker files (the pre-applied-table replay protocol — the record
-    * now rides the generation itself, so every marker file is legacy
-    * debris). Purely a disk-space concern — readers resolve the
+    * `seg_*` dirs off the header (superseded inputs, crash orphans) and
+    * tombstone tables of retired lineages. Purely a disk-space concern — readers resolve the
     * header's segments and the live lineage, so unreferenced files are
     * structurally invisible. Single-writer maintenance, like the IVF
     * compaction's file GC. */
   private def gcLexIndex(spark: SparkSession, lexDir: String): Unit = {
     val h = liveLexHeader(spark, lexDir, "the segment GC")
-    val (live, lineage) = (h.segments.toSet, h.lineage)
-    IndexMeta.list(spark, lexDir).foreach { st =>
-      val n = st.getPath.getName
-      val stale =
-        (st.isDirectory && n.startsWith("seg_") && !live(n)) ||
-        (n.startsWith("tombstones_") && n != s"tombstones_$lineage") ||
-        n.startsWith("_appended_")
-      if (stale) IndexMeta.delete(spark, st.getPath.toString)
-    }
+    IndexMeta.deleteUnnamed(spark, lexDir, Seq("seg_", "tombstones_"),
+      h.segments.toSet + s"tombstones_${h.lineage}")
   }
 
   def hybridScoreIndexed(spark: SparkSession, lexDir: String, annDir: String,
@@ -1428,13 +1386,9 @@ object Pipeline {
     // belongs in the cache key: a capsweep through this wrapper must
     // rebuild per cap value, not silently reuse an index built at the
     // old cap (round-13 advice — freshScratch test dirs masked this)
-    // ready = a committed generation OF THE CURRENT LAYOUT — a cache
-    // dir built by an older layout is rebuilt, not served to a reader
-    // that cannot score it
     val lexDir = IndexMeta.ensureDerived(spark, s"$dir/documents.parquet",
       s"graft_lex_index_${key}_cap${postingCap(spark)}_")(
-      p => IndexMeta.liveGen(spark, p, "lex")
-        .exists(g => lexLayoutCurrent(spark, g.toString)))(
+      liveLexHeader(spark, _, "the index cache"))(
       fitLexIndex(Relational.table(spark, dir, "documents"), _))
     // legacy-cache GC: dirs named before the cap joined the prefix
     // (`graft_lex_index_<key>_<fp>_<app>`) can never be served again
@@ -1482,8 +1436,8 @@ object Pipeline {
     * doctrine on the lexical store): replay `arrivals` one file per
     * trigger through [[StreamHarness]]; each micro-batch makes ONE
     * idempotent [[appendLexIndex]] call under the harness's batch key
-    * (exactly-once through the append marker, which commits only
-    * after the new `lex.gN` generation does). The generation protocol
+    * (exactly-once through the header's `applied` list, which commits
+    * with the new `lex.gN` generation). The generation protocol
     * means a reader mid-stream always sees a complete consistent
     * snapshot. */
   private[graft] def lexIngestStreamOn(spark: SparkSession, lexDir: String,

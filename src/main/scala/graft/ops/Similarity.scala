@@ -414,8 +414,8 @@ object Similarity {
   // fetch only candidate docs' shingle sets from shingles/. Batches
   // are caller-chunked to broadcast size (~100k docs); above that the
   // same plan runs with the probe hinted shuffle_hash. Single-writer
-  // append contract like the IVF index; re-appending a batch is the
-  // caller's to prevent (or guard with a marker, as appendToIvfIndex).
+  // append contract like the IVF index; a batch appended with its id
+  // replays as a no-op (the store header's `applied` list).
 
   /** Minhash signature computed from the HASHED shingle set instead of
     * the raw strings. Bit-identical to [[minhashSigSql]]: that formula
@@ -474,12 +474,38 @@ object Similarity {
       .select(col("doc_id"),
         expr("array_distinct(transform(shingles, s -> xxhash64(s)))").as("hs"))
 
-  /** The store's live table dir — same max-committed-generation
-    * resolution as the IVF vectors layout ([[IndexMeta]]), so builds,
-    * appends, and compactions commit without a single rename. */
+  private val storeTables = Seq("shingles", "bands", "pairs")
+
+  /** The header of a near-dup store's `store.gN` generation: the live
+    * generation dir of each table, and the batch ids appended since the
+    * build (compaction carries them). */
+  private final case class StoreHeader(tables: Map[String, String], applied: Seq[String]) {
+    def toJson: com.fasterxml.jackson.databind.node.ObjectNode = {
+      val o = IndexMeta.newHeader()
+      tables.foreach { case (t, g) => o.put(t, g) }
+      IndexMeta.putStrings(o, "applied", applied)
+    }
+  }
+
+  private def storeHeader(spark: SparkSession, indexDir: String, what: String): StoreHeader = {
+    val o = IndexMeta.header(spark, indexDir, "store", what,
+      "rebuild the store with buildNearDupIndex")
+    StoreHeader(storeTables.map(t => t -> IndexMeta.field(o, t).asText).toMap,
+      IndexMeta.strings(o, "applied"))
+  }
+
+  /** Commit `h` as the store's next generation, then delete every
+    * table generation it does not name (superseded ones and crash
+    * orphans — single-writer contract). */
+  private def commitStore(spark: SparkSession, indexDir: String, h: StoreHeader): Unit = {
+    IndexMeta.commitGen(spark, indexDir, "store")(_ => h.toJson)
+    IndexMeta.deleteUnnamed(spark, indexDir, storeTables.map(t => s"$t.g"), h.tables.values.toSet)
+  }
+
+  /** The store's live table dir, as its header names it. */
   private[graft] def nearDupTablePath(spark: SparkSession, indexDir: String,
       table: String): String =
-    IndexMeta.requireLive(spark, indexDir, table)
+    s"$indexDir/${storeHeader(spark, indexDir, "this reader").tables(table)}"
 
   private def storeTable(spark: SparkSession, indexDir: String, table: String): DataFrame =
     Relational.cachedSchemaParquet(spark, nearDupTablePath(spark, indexDir, table))
@@ -488,28 +514,31 @@ object Similarity {
     * the corpus-internal pairs/ derive from the PERSISTED hashes (the
     * shingle pass is the expensive one — recomputing it per derived
     * table would triple the corpus read). Each table lands in a fresh
-    * generation dir; a rebuild supersedes the old generations only at
-    * commit. */
+    * generation dir; one store header commits the three, and a rebuild
+    * supersedes the old generations only at that commit. */
   def buildNearDupIndex(spark: SparkSession, docs: DataFrame, indexDir: String): Unit = {
-    val (shDir, oldSh) = IndexMeta.nextGen(spark, indexDir, "shingles")
+    val shDir = IndexMeta.nextGen(spark, indexDir, "shingles")._1
     Relational.writeParquet(hashedShingles(spark, docs), shDir)
     val sh = Relational.cachedSchemaParquet(spark, shDir)
-    val (bandDir, oldBands) = IndexMeta.nextGen(spark, indexDir, "bands")
+    val bandDir = IndexMeta.nextGen(spark, indexDir, "bands")._1
     Relational.writeParquet(bandKeysOf(sh), bandDir)
     val bands = Relational.cachedSchemaParquet(spark, bandDir)
     val cands = bands.as("a").hint("shuffle_hash").join(bands.as("b"),
         col("a.bkh") === col("b.bkh") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"))
       .distinct()
-    val (pairDir, oldPairs) = IndexMeta.nextGen(spark, indexDir, "pairs")
+    val pairDir = IndexMeta.nextGen(spark, indexDir, "pairs")._1
     Relational.writeParquet(verifyPairs(cands, sh), pairDir)
-    (oldSh ++ oldBands ++ oldPairs).foreach(IndexMeta.delete(spark, _))
+    commitStore(spark, indexDir, StoreHeader(
+      storeTables.zip(Seq(shDir, bandDir, pairDir))
+        .map { case (t, d) => t -> new org.apache.hadoop.fs.Path(d).getName }.toMap,
+      Seq.empty))
   }
 
   /** Dedup an arrival batch against the store WITHOUT re-signing the
     * corpus, then append it. Returns an UPPER BOUND on the parquet
-    * files this append added to any single store table (0 for a marker
-    * no-op) — the [[StreamHarness.CensusCadence]] increment. The bound
+    * files this append added to any single store table (0 for a
+    * replay no-op) — the [[StreamHarness.CensusCadence]] increment. The bound
     * must be per-table, not "arrival rows": one arrival matching many corpus
     * dups emits many PAIR rows spread across shuffle partitions, each
     * non-empty partition writing a file, so the pairs table can gain
@@ -528,21 +557,19 @@ object Similarity {
     * least the arrival ids in shingles/, which makes the bare re-run
     * fail LOUDLY on the id guard instead of silently duplicating pair
     * rows (the failure mode of a pairs-first order). With `batchId`
-    * the committed-append marker (written after all three tables, the
-    * appendToIvfIndex retry contract) makes re-runs of a COMPLETED
-    * batch no-ops; a batch that crashed mid-append is repaired by
-    * rebuilding the store — which is why production batches carry an
-    * id. */
+    * the store header committed after all three tables records the id
+    * in `applied`, so re-runs of a COMPLETED batch are no-ops; a batch
+    * that crashed mid-append is repaired by rebuilding the store. */
   def appendToNearDupIndex(spark: SparkSession, indexDir: String, newDocs: DataFrame,
                            batchId: Option[String] = None): Long = {
-    val marker = batchId.map(b =>
-      s"$indexDir/_appended_${b.replaceAll("[^A-Za-z0-9._-]", "_")}")
-    if (marker.exists(IndexMeta.exists(spark, _))) return 0L
+    val h = storeHeader(spark, indexDir, "appends")
+    if (batchId.exists(h.applied.contains)) return 0L
+    def live(t: String) = s"$indexDir/${h.tables(t)}"
     // localCheckpoint: the arrival projection feeds four consumers
     // (guard, candidates, verify, two appends) — without it each
     // re-shingles the batch (same harness-local choice as knnJoinIvf2)
     val arr = hashedShingles(spark, newDocs).localCheckpoint()
-    val corpusSh = storeTable(spark, indexDir, "shingles")
+    val corpusSh = Relational.cachedSchemaParquet(spark, live("shingles"))
     // id guard + arrival row count in ONE job (round-15 fold): both
     // read the pinned arrival, and the count feeds the probe dispatch
     // AND the files-added bound below
@@ -557,7 +584,7 @@ object Similarity {
         "appending would duplicate their band rows and emit self-pairs; " +
         "dedup the batch against the store's ids first" +
         (if (batchId.isDefined) " (a batch that crashed mid-append needs a " +
-          "store rebuild; a completed batch re-run is already a marker no-op)"
+          "store rebuild; a completed batch re-run is already a no-op)"
          else ""))
     val arrRows = hdr.getLong(0)
     // materialize the pair delta before any table mutates: the probe
@@ -571,10 +598,10 @@ object Similarity {
     val pairParts = newPairs.rdd.getNumPartitions.toLong
     // through the memo-recording writer: the next probe's reads of the
     // grown tables construct without a footer-inference job
-    Relational.writeParquet(arr, nearDupTablePath(spark, indexDir, "shingles"), "append")
-    Relational.writeParquet(bandKeysOf(arr), nearDupTablePath(spark, indexDir, "bands"), "append")
-    Relational.writeParquet(newPairs, nearDupTablePath(spark, indexDir, "pairs"), "append")
-    marker.foreach(IndexMeta.createMarker(spark, _))
+    Relational.writeParquet(arr, live("shingles"), "append")
+    Relational.writeParquet(bandKeysOf(arr), live("bands"), "append")
+    Relational.writeParquet(newPairs, live("pairs"), "append")
+    batchId.foreach(b => commitStore(spark, indexDir, h.copy(applied = h.applied :+ b)))
     math.max(math.min(arrRows, arrParts), // shingles; bands shares arr's partitioning
       math.min(pairRows, pairParts))
   }
@@ -584,20 +611,24 @@ object Similarity {
     * daily batches turns the map-side bands probe into tens of
     * thousands of file opens (measured on the IVF side: the 50-batch
     * sf100 soak degraded probes 6.8× purely in open cost). Each table
-    * rewrites at the target file size into its next generation and
-    * commits by `_SUCCESS` — contents untouched, no renames, crash at
-    * any point leaves the previous generation live. Maintenance op for
-    * a quiesced store (single writer), like the IVF compaction. */
+    * rewrites at the target file size into its next generation, and
+    * one store header commits the three — contents untouched, no
+    * renames, a crash at any point leaves the previous generation live.
+    * Maintenance op for a quiesced store (single writer), like the IVF
+    * compaction. */
   def compactNearDupIndex(spark: SparkSession, indexDir: String,
-                          targetFileBytes: Long = 128L << 20): Unit =
-    Seq("shingles", "bands", "pairs").foreach { table =>
-      val live = nearDupTablePath(spark, indexDir, table)
+                          targetFileBytes: Long = 128L << 20): Unit = {
+    val h = storeHeader(spark, indexDir, "compaction")
+    val next = storeTables.map { table =>
+      val live = s"$indexDir/${h.tables(table)}"
       val bytes = IndexMeta.bytesUnder(spark, live, ".parquet")
       val nf = math.max(1L, math.ceil(bytes.toDouble / targetFileBytes).toLong).toInt
-      val (next, oldGens) = IndexMeta.nextGen(spark, indexDir, table)
-      Relational.writeParquet(Relational.cachedSchemaParquet(spark, live).repartition(nf), next)
-      oldGens.foreach(IndexMeta.delete(spark, _))
+      val dir = IndexMeta.nextGen(spark, indexDir, table)._1
+      Relational.writeParquet(Relational.cachedSchemaParquet(spark, live).repartition(nf), dir)
+      table -> new org.apache.hadoop.fs.Path(dir).getName
     }
+    commitStore(spark, indexDir, h.copy(tables = next.toMap))
+  }
 
   /** Probe-side dispatch (round-7 advice item 4): the incremental
     * probes want the arrival side BROADCAST — the corpus scan stays
@@ -658,14 +689,14 @@ object Similarity {
   // foreachBatch leg, mirroring c22c for embeddings. Each micro-batch
   // of document arrivals makes ONE idempotent store call
   // ([[appendToNearDupIndex]]: probe the pre-append store for the pair
-  // delta, append all three tables, commit the batch marker), so
+  // delta, append all three tables, commit the batch id), so
   // cross-batch pairs are caught through the STORE — batch 3's docs
   // pair against the corpus AND batches 1–2 — and state lives on
   // shared storage (unbounded capacity, restart-from-checkpoint with
   // no state-store recovery), where c22/c22b hold bucket state in
   // executors. Exactly-once: the streaming engine replays a crashed
-  // batch with its batchId, and the append marker turns the replay
-  // into a no-op. The decisive property vs c22b: pairs/ stays
+  // batch with its batchId, and the store header's `applied` list
+  // turns the replay into a no-op. The decisive property vs c22b: pairs/ stays
   // COMPLETE, so the streaming op hash-matches the SAME exact n-gram
   // pair oracle as the batch store (c27) — no window restriction, no
   // recall test.
@@ -698,10 +729,10 @@ object Similarity {
 
   /** True file census of the near-dup store: max across its three
     * tables (each append adds files to all three). */
-  private def nearDupCensus(spark: SparkSession, idx: String): Long =
-    Seq("shingles", "bands", "pairs")
-      .map(t => IndexMeta.countUnder(spark, nearDupTablePath(spark, idx, t), ".parquet"))
-      .max
+  private def nearDupCensus(spark: SparkSession, idx: String): Long = {
+    val h = storeHeader(spark, idx, "the file census")
+    storeTables.map(t => IndexMeta.countUnder(spark, s"$idx/${h.tables(t)}", ".parquet")).max
+  }
 
   def dedupIncrementalQuery(spark: SparkSession, dir: String): DataFrame = {
     val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
@@ -1014,8 +1045,8 @@ object Similarity {
     // crawl day (hash-identical output, spec-pinned).
     // a.vec_id =!= c.vec_id: a vector is not a duplicate of itself.
     // Reachable exactly when a batch is REPLAYED after its append
-    // committed (the c22c crash window: marker makes the re-append a
-    // no-op, but the re-PROBE now sees the batch's own survivors in
+    // committed (the c22c crash window: the header's `applied` list
+    // makes the re-append a no-op, but the re-PROBE now sees the batch's own survivors in
     // the index at cos 1.0) — without the exclusion every survivor
     // would self-drop on replay, breaking the foreachBatch
     // exactly-once claim. Spec-pinned by the replay-identity test.
@@ -1132,36 +1163,17 @@ object Similarity {
     * ADJACENT cells (measured 1-in-475 planted misses at nprobe=1), and
     * the second-nearest cell catches exactly that at 2× probe cost —
     * map-side explode, the probed side untouched. A constant-population
-    * index (built under graft.semdedup.cellPop) carries its coarse
-    * codebook as `centroids2` and assigns hierarchically through the
-    * same kernel. */
+    * index (built under graft.semdedup.cellPop) carries a coarse
+    * codebook too and assigns hierarchically through the same kernel. */
   private def semProbeProjection(spark: SparkSession, indexDir: String,
       arrivals: DataFrame): DataFrame = {
     GraftFunctions.register(spark)
-    val (flat, dim) = indexCentroidsFlat(spark, indexDir)
     val np = spark.conf.getOption("graft.semdedup.probeCells")
       .map(_.toInt).getOrElse(2)
     arrivals
-      .withColumn("cell", explode(indexCellsCol(spark, indexDir, flat, dim, np)))
+      .withColumn("cell", explode(indexCellsCol(spark, ivfCodebook(spark, indexDir), np)))
       .withColumn("sigs", expr(s"graft_srp_sign(embedding, 42L, $sigWords)"))
       .select(col("vec_id"), col("sigs"), col("cell"))
-  }
-
-  /** The index's persisted centroid table, driver-flattened to the
-    * (k·dim floats, dim) matrix every NearestCells-kernel consumer
-    * plan-ships — a BOUNDED collect (k rows, the documented exception
-    * to the no-collect rule). */
-  private def indexCentroidsFlat(spark: SparkSession, indexDir: String): (Array[Float], Int) = {
-    val cents = Relational.cachedSchemaParquet(spark, s"$indexDir/centroids")
-      .select(col("cell"), col("centroid"))
-      .collect().map(r => (r.getInt(0), r.getSeq[Float](1))).sortBy(_._1)
-    val dim = cents.head._2.length
-    val flat = new Array[Float](cents.length * dim)
-    cents.foreach { case (c, arr) =>
-      var j = 0
-      while (j < dim) { flat(c * dim + j) = arr(j); j += 1 }
-    }
-    (flat, dim)
   }
 
   /** The unrolled-popcount SRP hamming distance between two join
@@ -1231,8 +1243,8 @@ object Similarity {
   // ([[dedupSemanticWithAppend]]) runs unchanged inside it. Exactly-once
   // composes from the two idempotence layers already shipped —
   // `foreachBatch` replays a crashed batch with the SAME batchId, and
-  // [[appendToIvfIndex]]'s batch markers turn the replayed append into
-  // a no-op, so survivors never enter the layout twice. State story:
+  // [[appendToIvfIndex]]'s `applied` batch ids turn the replayed append
+  // into a no-op, so survivors never enter the layout twice. State story:
   // unlike c22's in-executor GroupState (bounded by eviction), the
   // stream's "state" IS the index on shared storage — arbitrarily large,
   // visible to concurrent batch probes, compacted by the cadence policy;
@@ -1265,7 +1277,7 @@ object Similarity {
       // drops materialize inside the cycle BEFORE its append; the
       // sink write commits after the index mutation, so a crash
       // between them replays the batch — probe output is identical
-      // (the survivors' append is marker-idempotent). The sink write
+      // (the survivors' append is batch-id-idempotent). The sink write
       // itself must ALSO be replay-idempotent: a plain append would
       // duplicate the drop rows if the crash lands after the sink
       // write but before the checkpoint commit. Partitioning by the
@@ -1381,21 +1393,13 @@ object Similarity {
   def decontaminateSemantic(spark: SparkSession, evalIndexDir: String,
       corpus: DataFrame): DataFrame = {
     GraftFunctions.register(spark)
-    val cents = Relational.cachedSchemaParquet(spark, s"$evalIndexDir/centroids")
-      .select(col("cell"), col("centroid"))
-      .collect().map(r => (r.getInt(0), r.getSeq[Float](1))).sortBy(_._1)
-    val dim = cents.head._2.length
-    val flat = new Array[Float](cents.length * dim)
-    cents.foreach { case (c, arr) =>
-      var j = 0
-      while (j < dim) { flat(c * dim + j) = arr(j); j += 1 }
-    }
+    val cb = ivfCodebook(spark, evalIndexDir)
     val np = spark.conf.getOption("graft.semdedup.probeCells")
       .map(_.toInt).getOrElse(2)
     val bar = spark.conf.getOption("graft.decontam.cosBar")
       .map(_.toDouble).getOrElse(0.99)
     val cor = corpus
-      .withColumn("cell", explode(nearestCellsCol(flat, dim, np)))
+      .withColumn("cell", explode(nearestCellsCol(cb.flat, cb.dim, np)))
       .withColumn("sigs", expr(s"graft_srp_sign(embedding, 42L, $sigWords)"))
     val eval = liveIndexVectors(spark, evalIndexDir)
       .select(col("vec_id"), col("sigs"), col("cell"), col("embedding"))
@@ -1495,30 +1499,30 @@ object Similarity {
     math.max(selRow.getLong(1).toDouble / math.max(1L, selRow.getLong(0)), 1e-9)
   }
 
-  /** Centroids and the vec_id=0 query embedding in ONE driver
-    * round-trip (round-15, the verdict-item-4 action-fold doctrine):
-    * every persistent-index probe needs both before it can choose
-    * cells, and fetching them as a collect + a take(1) was two Spark
-    * jobs per probe. A null-padded union reads both in one job with no
-    * exchange: centroid rows carry cell ≥ 0, the query row rides with
-    * the cell = −1 sentinel (cells are 0..k−1 by construction). A
-    * missing query vector still fails with the same loud message. */
-  private def centroidsAndQuery(spark: SparkSession, indexDir: String,
-      vectors: DataFrame): (Array[(Int, Seq[Float])], Seq[Float]) = {
-    val rows = Relational.cachedSchemaParquet(spark, s"$indexDir/centroids")
-      .select(col("cell"), col("centroid"),
-        lit(null).cast("array<float>").as("qv"))
-      .unionByName(vectors.filter(col("vec_id") === 0)
-        .select(lit(-1).as("cell"),
-          lit(null).cast("array<float>").as("centroid"),
-          col("embedding").as("qv")).limit(1))
-      .collect()
-    val (qRow, centRows) = rows.partition(_.getInt(0) == -1)
-    require(qRow.nonEmpty,
+  /** The vec_id=0 query embedding of the single-query probes: one Spark
+    * job (a filtered scan collected whole — a `limit` would scan the
+    * layout's partitions one batch of jobs at a time). A missing query
+    * vector fails loudly. */
+  private def queryVector(indexDir: String, vectors: DataFrame): Array[Float] = {
+    val q = vectors.filter(col("vec_id") === 0).select(col("embedding")).collect()
+    require(q.nonEmpty,
       s"query vector vec_id=0 is not in the live index at $indexDir " +
         "(tombstoned or never indexed) — probe with a live vector")
-    (centRows.map(r => (r.getInt(0), r.getSeq[Float](1))), qRow(0).getSeq[Float](2))
+    q.head.getSeq[Float](0).toArray
   }
+
+  /** The `n` cells whose centroids are nearest `q` (squared L2, ties to
+    * the lower cell) — the driver-side cell choice of a single-query
+    * probe. */
+  private def probeCellsOf(cb: IvfCodebook, q: Array[Float], n: Int): Seq[Int] =
+    (0 until cb.k).map { i =>
+      var d = 0.0
+      var j = 0
+      while (j < cb.dim) {
+        val x = cb.flat(i * cb.dim + j) - q(j); d += x.toDouble * x; j += 1
+      }
+      (i, d)
+    }.sortBy(_._2).take(n).map(_._1)
 
   def annIvfFiltered(spark: SparkSession, dir: String, indexDir: String): DataFrame = {
     GraftFunctions.register(spark)
@@ -1526,14 +1530,9 @@ object Similarity {
     val allowed = docs.filter(col("lang") === "en").select(col("doc_id").as("vec_id"))
     val sel = filterSelectivity(docs, col("lang") === "en")
     val vectors = liveIndexVectors(spark, indexDir)
-    // centroids + query vector in one job (see centroidsAndQuery)
-    val (cents, qVec) = centroidsAndQuery(spark, indexDir, vectors)
-    val widened = math.min(cents.length.toLong,
-      math.ceil(nprobe(spark) / sel).toLong).toInt
-    val probeCells = cents.map { case (i, c) =>
-      val d = c.zip(qVec).map { case (a, b) => (a - b).toDouble * (a - b) }.sum
-      (i, d)
-    }.sortBy(_._2).take(widened).map(_._1)
+    val cb = ivfCodebook(spark, indexDir)
+    val widened = math.min(cb.k.toLong, math.ceil(nprobe(spark) / sel).toLong).toInt
+    val probeCells = probeCellsOf(cb, queryVector(indexDir, vectors), widened)
     val q = vectors.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
     vectors.filter(col("vec_id") =!= 0 && col("cell").isin(probeCells.toSeq: _*))
       .join(allowed, Seq("vec_id"), "left_semi")
@@ -1782,11 +1781,11 @@ object Similarity {
     * cell-partitioned EXACTLY like the vectors layout, so ADC probes
     * get the same parquet partition pruning — the live codes are the
     * UNION of a base generation plus one delta generation per repaired
-    * append), and `pqmeta` — the one COMMITTED binding of all three:
-    * which vector files are encoded (the census), which codes
-    * generations hold their codes, and which books generation encoded
-    * them. Readers resolve pqmeta's max committed generation and trust
-    * nothing not named there, so books and codes can never pair across
+    * append), and the `pq.gN` header — the one COMMITTED binding of
+    * all three: which vector files are encoded (the census), which
+    * codes generations hold their codes, and which books generation
+    * encoded them. Readers resolve the live header and trust nothing
+    * not named there, so books and codes can never pair across
     * states (round-7 advice: the old books-carry-the-fingerprint order
     * had a crash window where fresh-looking books served codes encoded
     * with never-persisted codebooks).
@@ -1804,11 +1803,6 @@ object Similarity {
     * arrivals against frozen codebooks; retrain is a maintenance op.
     * Deletes need NO repair — tombstones anti-join the codes scan
     * exactly as they do the vectors scan. */
-  private def pqKindVecgen = "vecgen"
-  private def pqKindVecfile = "vecfile"
-  private def pqKindCodes = "codesgen"
-  private def pqKindBooks = "booksgen"
-
   /** The live layout's parquet-file census: "relpath:size" per data
     * file, relative to the vectors generation dir. Appends only ADD
     * entries (parquet files are immutable once committed), so census
@@ -1829,41 +1823,30 @@ object Similarity {
   private[graft] final case class PqMeta(vecGen: String, vecFiles: Set[String],
       codesGens: Seq[String], booksGen: String)
 
-  /** The committed sidecar state, if any: parse the live pqmeta rows. */
+  /** The committed sidecar state, if any: the live `pq.gN` header
+    * (one small-file read, no Spark job). */
   private[graft] def livePqMeta(spark: SparkSession, indexDir: String): Option[PqMeta] =
-    IndexMeta.liveGen(spark, indexDir, "pqmeta").map { g =>
-      val rows = Relational.cachedSchemaParquet(spark, g.toString)
-        .collect().map(r => (r.getString(0), r.getString(1)))
-      PqMeta(
-        rows.collectFirst { case (k, n) if k == pqKindVecgen => n }.get,
-        rows.collect { case (k, n) if k == pqKindVecfile => n }.toSet,
-        rows.collect { case (k, n) if k == pqKindCodes => n }.toSeq.sorted,
-        rows.collectFirst { case (k, n) if k == pqKindBooks => n }.get)
+    IndexMeta.liveGen(spark, indexDir, "pq").map { g =>
+      val o = IndexMeta.headerAt(spark, g.toString, "the PQ sidecar", "run addPqToIndex")
+      PqMeta(IndexMeta.field(o, "vec_gen").asText, IndexMeta.strings(o, "vec_files").toSet,
+        IndexMeta.strings(o, "codes_gens").sorted, IndexMeta.field(o, "books_gen").asText)
     }
 
-  /** Commit a new pqmeta generation, then GC every sidecar dir it does
-    * NOT reference (superseded pqmeta/books/codes generations AND
-    * orphans of crashed repairs — single-writer maintenance contract,
-    * like compaction). */
+  /** Commit a new `pq.gN` header, then GC every sidecar dir it does
+    * NOT reference (superseded books/codes generations AND orphans of
+    * crashed repairs — single-writer maintenance contract, like
+    * compaction). */
   private def commitPqMeta(spark: SparkSession, indexDir: String, vecGen: String,
       census: Seq[String], codesGens: Seq[String], booksGen: String): Unit = {
-    import spark.implicits._
-    val (metaGen, _) = IndexMeta.nextGen(spark, indexDir, "pqmeta")
-    val rows = Seq((pqKindVecgen, vecGen), (pqKindBooks, booksGen)) ++
-      codesGens.map((pqKindCodes, _)) ++ census.map((pqKindVecfile, _))
-    rows.toDF("kind", "name").coalesce(1).write.mode("overwrite").parquet(metaGen)
-    val keep = codesGens.toSet + booksGen + new org.apache.hadoop.fs.Path(metaGen).getName
-    IndexMeta.list(spark, indexDir)
-      .filter { st =>
-        val n = st.getPath.getName
-        st.isDirectory &&
-          (n.startsWith("codes.g") || n.startsWith("books.g") || n.startsWith("pqmeta.g")) &&
-          !keep.contains(n)
-      }
-      .foreach(st => IndexMeta.delete(spark, st.getPath.toString))
+    IndexMeta.commitGen(spark, indexDir, "pq") { _ =>
+      val o = IndexMeta.newHeader().put("vec_gen", vecGen).put("books_gen", booksGen)
+      IndexMeta.putStrings(o, "codes_gens", codesGens)
+      IndexMeta.putStrings(o, "vec_files", census)
+    }
+    IndexMeta.deleteUnnamed(spark, indexDir, Seq("codes.g", "books.g"), codesGens.toSet + booksGen)
   }
 
-  /** Sidecar freshness: the live pqmeta exists and its census names
+  /** Sidecar freshness: the live header exists and its census names
     * exactly the live layout's files. Appends make it stale by ADDING
     * files (delta repair); compactions/rebuilds by replacing the
     * generation (full re-derive). */
@@ -1892,8 +1875,10 @@ object Similarity {
     }.toArray
   }
 
-  /** The live codes set: union of the committed pqmeta's codes
-    * generations (each scan keeps its own cell partition pruning). */
+  /** The live codes set: union of the committed header's codes
+    * generations (each scan keeps its own cell partition pruning). A
+    * spec reader seam: TierCSpec's PQ delta-parity test compares it
+    * with [[pqEncodeAllWithLiveBooks]]. */
   private[graft] def pqCodesTable(spark: SparkSession, indexDir: String): DataFrame = {
     val m = livePqMeta(spark, indexDir).getOrElse(sys.error(
       s"no committed PQ sidecar under $indexDir — run addPqToIndex first"))
@@ -1903,9 +1888,10 @@ object Similarity {
   }
 
   /** Every live vector encoded against the PERSISTED (frozen) books —
-    * the spec's parity oracle for the delta path: delta-appended codes
-    * must equal this re-encode row-for-row, because the books did not
-    * move between the base encode and the delta. */
+    * the parity oracle of TierCSpec's PQ delta test (its one caller):
+    * delta-appended codes must equal this re-encode row-for-row,
+    * because the books did not move between the base encode and the
+    * delta. */
   private[graft] def pqEncodeAllWithLiveBooks(spark: SparkSession, indexDir: String): DataFrame = {
     GraftFunctions.register(spark)
     val m = livePqMeta(spark, indexDir).getOrElse(sys.error(
@@ -1924,7 +1910,7 @@ object Similarity {
     * Layout rewritten (compaction/rebuild) or no sidecar yet → full
     * derive (refit books on the live corpus, re-encode everything —
     * the books' training distribution changed, so a refit is due
-    * anyway). Everything becomes visible in ONE pqmeta commit. */
+    * anyway). Everything becomes visible in ONE header commit. */
   def addPqToIndex(spark: SparkSession, indexDir: String): Unit = {
     GraftFunctions.register(spark)
     val vecPath = liveVectorsPath(spark, indexDir)
@@ -2036,19 +2022,13 @@ object Similarity {
         "layout rewrite), then probe again.")
     val books = readPqBooks(spark, indexDir, m.booksGen)
     val vectors = liveIndexVectors(spark, indexDir)
-    // centroids + query vector in one job (see centroidsAndQuery)
-    val (cents0, qVec0) = centroidsAndQuery(spark, indexDir, vectors)
-    val qVec = qVec0.toArray
-    val cents = cents0.sortBy(_._1)
+    val cb = ivfCodebook(spark, indexDir)
+    val qVec = queryVector(indexDir, vectors)
     val nCells = filtered match {
-      case Some((_, sel)) => math.min(cents.length.toLong,
-        math.ceil(nprobe(spark) / sel).toLong).toInt
+      case Some((_, sel)) => math.min(cb.k.toLong, math.ceil(nprobe(spark) / sel).toLong).toInt
       case None => nprobe(spark)
     }
-    val probeCells = cents.map { case (i, c) =>
-      val d = c.zip(qVec).map { case (a, b) => (a - b).toDouble * (a - b) }.sum
-      (i, d)
-    }.sortBy(_._2).take(nCells).map(_._1).toSeq
+    val probeCells = probeCellsOf(cb, qVec, nCells)
     // base + delta codes generations, unioned — each scan keeps its own
     // cell partition pruning, and [[compactIvfIndex]]-triggered full
     // re-derives fold them back to one
@@ -2085,10 +2065,11 @@ object Similarity {
     * that pass once and lays the corpus out `partitionBy("cell")`, so a
     * probe's `cell IN (…)` filter becomes parquet PARTITION PRUNING:
     * the query plan's scan reads nprobe directories and never lists the
-    * rest (PartitionFilters in explain; pinned in the spec). Centroids
-    * persist alongside (k rows — the only driver-materialized piece,
-    * same O(k) exception as annIvf). The signature column is persisted
-    * too, so a two-level consumer can screen without re-signing. */
+    * rest (PartitionFilters in explain; pinned in the spec). The
+    * codebook persists alongside (k × dim floats — the only
+    * driver-materialized piece, same O(k) exception as annIvf). The
+    * signature column is persisted too, so a two-level consumer can
+    * screen without re-signing. */
   def buildIvfIndex(spark: SparkSession, dir: String, indexDir: String): Unit =
     buildIvfIndexFrom(spark, Relational.table(spark, dir, "embeddings"), indexDir)
 
@@ -2101,14 +2082,13 @@ object Similarity {
       .withColumn("features", array_to_vector(expr("cast(embedding as array<double>)")))
     // `graft.semdedup.cellPop` set → constant-population index: k = n/pop
     // cells fit hierarchically (fitTwoLevel) and assigned with the fused
-    // TwoLevelCells kernel. The PERSISTED `centroids` table is the FLAT
-    // list of all k1·k2 global sub-centroids, so every existing reader
-    // (append assignment, compaction, ANN probes, c12b, c30) works
-    // unchanged — flat probes over it choose the same cells. The coarse
-    // codebook additionally persists as `centroids2`, which upgrades
-    // [[dedupSemanticIncremental]]'s arrival probe to the hierarchical
-    // (k1+k2)·d form — the piece that keeps probe cost flat as k grows
-    // linearly with the corpus.
+    // TwoLevelCells kernel. The codebook is the FLAT list of all k1·k2
+    // global sub-centroids, so every reader (append assignment,
+    // compaction, ANN probes, c12b, c30) works unchanged — flat probes
+    // over it choose the same cells. The coarse codebook rides in the
+    // same header, which upgrades [[dedupSemanticIncremental]]'s
+    // arrival probe to the hierarchical (k1+k2)·d form — the piece that
+    // keeps probe cost flat as k grows linearly with the corpus.
     val twoLevel = spark.conf.getOption("graft.semdedup.cellPop").map(_.toLong).map { p =>
       val n = e.count()
       val k = math.max(16, math.min(1 << 20,
@@ -2122,14 +2102,18 @@ object Similarity {
           twoLevelCellsColOf(col("embedding"), coFlat, subFlat, dim, k2, 1).getItem(0))
       case None => flatModel.get.transform(e)
     }
-    // The layout lands in a fresh GENERATION dir (vectors.gNNNNN) and
-    // becomes live when Spark's _SUCCESS commits it — the IndexMeta
-    // protocol that replaced the round-6 java.nio directory renames
-    // (no atomic dir rename exists on S3/HDFS; max-committed-generation
-    // resolution needs none). A REBUILD over an existing index writes
-    // the next generation and GCs the old ones after commit, so a
-    // crash mid-rebuild leaves the previous generation live.
-    val (genDir, oldGens) = IndexMeta.nextGen(spark, indexDir)
+    val cb = twoLevel match {
+      case Some((coFlat, subFlat, dim, _)) => IvfCodebook(subFlat, dim, Some(coFlat))
+      case None =>
+        val (flat, dim) = centroidMatrix(flatModel.get)
+        IvfCodebook(flat, dim, None)
+    }
+    // The layout lands in a fresh GENERATION dir (vectors.gNNNNN) that
+    // only the `ivf.gN` header committed below makes live. A REBUILD
+    // over an existing index writes the next generations and GCs the
+    // old ones after that commit, so a crash mid-rebuild leaves the
+    // previous index — layout, ids and codebook together — live.
+    val genDir = IndexMeta.nextGen(spark, indexDir, "vectors")._1
     assigned
       .withColumn("sigs", expr(s"graft_srp_sign(embedding, 42L, $sigWords)"))
       .select(col("vec_id"), col("embedding"), col("sigs"), col("cell"))
@@ -2146,66 +2130,132 @@ object Similarity {
     // 8-byte-column files instead of opening every file of a fragmented
     // layout (the 50-batch sf100 soak spent most of its 20 s/batch
     // append cost in that guard's file opens — BASELINE.md round 7).
-    // Same generation protocol as the layout; appends add one file.
-    val (idsGen, oldIds) = IndexMeta.nextGen(spark, indexDir, "ids")
+    // Appends add one file.
+    val idsGen = IndexMeta.nextGen(spark, indexDir, "ids")._1
     // parallel write, bounded file count (NOT coalesce(1): billions of
     // 8-byte ids would then funnel through one task at cluster scale);
     // sizeForWrite coalesces shuffle-free when the batch arrives
     // over-partitioned instead of paying a repartition exchange
     Scale.sizeForWrite(embeddings.select(col("vec_id")))
       .write.mode("overwrite").parquet(idsGen)
-    import spark.implicits._
-    twoLevel match {
-      case Some((coFlat, subFlat, dim, k2)) =>
-        // Codebook crash-ordering — scope: the COARSE/SUB pairing only.
-        // Retire the OLD coarse codebook, write the flat sub-centroid
-        // table, write the new coarse codebook LAST: between those two
-        // overwrites the index reads as a FLAT index over the new
-        // sub-centroids (correct cells, slower probe), and a
-        // new-coarse/old-flat k2 mis-derivation can never exist on disk
-        // (indexCellsCol validates divisibility as defense in depth).
-        // What this ordering does NOT cover: the LAYOUT generation
-        // committed above — a crash landing here leaves the new layout
-        // live with the PREVIOUS build's centroids, and probes would
-        // pick cells from a codebook that did not place the vectors
-        // (silent recall loss until the build is re-run; the window is
-        // the two coalesce(1) codebook writes, sub-second at any k).
-        // Closing it outright needs the pqmeta doctrine — layout +
-        // centroids + centroids2 bound in ONE committed meta generation
-        // — which also has to thread through append (same gen, frozen
-        // codebooks) and compaction (new gen, SAME codebooks); deferred
-        // until an operational story needs crash-safe REBUILDS rather
-        // than crash-safe reads (every reader path today survives a
-        // crashed build by re-running it, which is idempotent).
-        IndexMeta.delete(spark, s"$indexDir/centroids2")
-        val subCents = (0 until subFlat.length / dim).map(i =>
-          (i, (0 until dim).map(j => subFlat(i * dim + j))))
-        subCents.toDF("cell", "centroid")
-          .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/centroids")
-        val coCents = (0 until coFlat.length / dim).map(i =>
-          (i, (0 until dim).map(j => coFlat(i * dim + j))))
-        // k2 is derivable (centroids rows / centroids2 rows) — no
-        // separate metadata file to keep in sync
-        coCents.toDF("cell1", "centroid")
-          .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/centroids2")
-      case None =>
-        // a √n REBUILD over a former two-level index must not leave a
-        // stale coarse codebook steering the hierarchical probe
-        IndexMeta.delete(spark, s"$indexDir/centroids2")
-        val cents = flatModel.get.clusterCenters.zipWithIndex.map { case (c, i) =>
-          (i, c.toArray.map(_.toFloat).toSeq)
-        }
-        cents.toSeq.toDF("cell", "centroid")
-          .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/centroids")
+    // quantizer BASELINE for the drift policy: mean squared assignment
+    // distance over the layout just written (cells are stored — no
+    // re-assignment). One layout scan at build time, so every later
+    // drift probe is Θ(batch) instead of Θ(index)
+    val base = Relational.cachedSchemaParquet(spark, genDir)
+      .select(col("cell").cast("int").as("cell"), col("embedding"))
+      .join(broadcast(cb.frame(spark)), "cell")
+      .agg(avg(assignSqDistCol).as("m"), count(lit(1)).as("n")).head()
+    // an empty layout has no baseline: refuse HERE, before the commit,
+    // rather than commit an index the drift probe cannot use
+    if (base.isNullAt(0)) sys.error(
+      s"cannot build the IVF index at $indexDir: the vector layout is " +
+        "empty — build the index on a non-empty corpus")
+    def name(p: String) = new org.apache.hadoop.fs.Path(p).getName
+    commitIvf(spark, indexDir) { g =>
+      // the codebooks are named for the build's generation (its
+      // lineage) and written once: appends and compactions keep them
+      val lineage = name(g)
+      IndexMeta.writeSmallFile(spark, s"$indexDir/codebook_$lineage.f32", floatBytes(cb.flat))
+      cb.coarse.foreach(co =>
+        IndexMeta.writeSmallFile(spark, s"$indexDir/coarse_$lineage.f32", floatBytes(co)))
+      IvfHeader(vectors = name(genDir), ids = name(idsGen),
+        codebook = s"codebook_$lineage.f32", coarse = cb.coarse.map(_ => s"coarse_$lineage.f32"),
+        dim = cb.dim, meanSqDist = base.getDouble(0), nBuild = base.getLong(1),
+        lineage = lineage, applied = Seq.empty)
     }
-    (oldGens ++ oldIds).foreach(IndexMeta.delete(spark, _))
     // stale tombstones name ids of the REPLACED corpus — they must not
     // suppress rows of the rebuilt one
     IndexMeta.delete(spark, s"$indexDir/tombstones")
-    // quantizer BASELINE for the drift policy (one layout scan at build
-    // time — the cost belongs to the build, so every later drift probe
-    // is Θ(batch) instead of Θ(index))
-    writeQuantStats(spark, indexDir)
+  }
+
+  // ------------------------------------------------- index header
+
+  /** The generation header of an IVF index (`ivf.gN`):
+    *   - `vectors`, `ids` — the live layout and ids-sidecar generation
+    *     dirs (appends write into them; compaction and
+    *     [[rebuildIdsSidecar]] swap in new ones);
+    *   - `codebook` (and `coarse` on a two-level index) — little-endian
+    *     float32 files of k × `dim` (k1 × `dim`) centroids, written once
+    *     per build and immutable, shared by every header generation of
+    *     that build;
+    *   - `meanSqDist`, `nBuild` — the quantizer baseline of
+    *     [[quantizerDrift]];
+    *   - `lineage` — the build's generation name;
+    *   - `applied` — batch ids appended since the build. */
+  private[graft] final case class IvfHeader(vectors: String, ids: String, codebook: String,
+      coarse: Option[String], dim: Int, meanSqDist: Double, nBuild: Long,
+      lineage: String, applied: Seq[String]) {
+    def toJson: com.fasterxml.jackson.databind.node.ObjectNode = {
+      val o = IndexMeta.newHeader().put("vectors", vectors).put("ids", ids)
+        .put("codebook", codebook).put("dim", dim).put("mean_sq_dist", meanSqDist)
+        .put("n_build", nBuild).put("lineage", lineage)
+      coarse.foreach(c => o.put("coarse", c))
+      IndexMeta.putStrings(o, "applied", applied)
+    }
+  }
+
+  private[graft] def ivfHeader(spark: SparkSession, indexDir: String, what: String): IvfHeader = {
+    val o = IndexMeta.header(spark, indexDir, "ivf", what,
+      "rebuild the index with buildIvfIndexFrom")
+    def field(f: String) = IndexMeta.field(o, f)
+    IvfHeader(field("vectors").asText, field("ids").asText, field("codebook").asText,
+      Option(o.get("coarse")).map(_.asText), field("dim").asInt,
+      field("mean_sq_dist").asDouble, field("n_build").asLong, field("lineage").asText,
+      IndexMeta.strings(o, "applied"))
+  }
+
+  /** Commit the header `body` returns (given the new generation's
+    * path) as the index's next generation, then delete every layout,
+    * ids and codebook entry it does not name — superseded ones and
+    * crash orphans (single-writer contract). */
+  private def commitIvf(spark: SparkSession, indexDir: String)(body: String => IvfHeader): Unit = {
+    IndexMeta.commitGen(spark, indexDir, "ivf")(g => body(g).toJson)
+    val h = ivfHeader(spark, indexDir, "the layout GC")
+    IndexMeta.deleteUnnamed(spark, indexDir, Seq("vectors.g", "ids.g", "codebook_", "coarse_"),
+      Set(h.vectors, h.ids, h.codebook) ++ h.coarse)
+  }
+
+  /** A k × dim centroid matrix, flattened row-major, plus the k1 × dim
+    * coarse matrix of a two-level index. */
+  private[graft] final case class IvfCodebook(flat: Array[Float], dim: Int,
+      coarse: Option[Array[Float]]) {
+    def k: Int = flat.length / dim
+    /** (cell, centroid) rows as a local frame — the broadcast side of
+      * the assignment-distance joins. */
+    def frame(spark: SparkSession): DataFrame = {
+      import spark.implicits._
+      (0 until k).map(i => (i, flat.slice(i * dim, (i + 1) * dim).toSeq))
+        .toDF("cell", "centroid")
+    }
+  }
+
+  /** The index's codebook — its header plus one or two small-file
+    * reads on the driver, no Spark job. The one reader of the
+    * quantizer for every probe, append and drift measure. */
+  private[graft] def ivfCodebook(spark: SparkSession, indexDir: String): IvfCodebook = {
+    val h = ivfHeader(spark, indexDir, "this reader")
+    def read(f: String): Array[Float] = {
+      val bytes = IndexMeta.readSmallFile(spark, s"$indexDir/$f")
+        .getOrElse(sys.error(s"codebook file $f named by the header under $indexDir is missing"))
+      val fb = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN).asFloatBuffer()
+      val out = new Array[Float](fb.remaining())
+      fb.get(out)
+      require(out.nonEmpty && out.length % h.dim == 0,
+        s"codebook $f under $indexDir holds ${out.length} floats, not a whole number " +
+          s"(≥ 1) of dim-${h.dim} centroids — rebuild the index")
+      out
+    }
+    val cb = IvfCodebook(read(h.codebook), h.dim, h.coarse.map(read))
+    cb.coarse.foreach(co => require(cb.k % (co.length / h.dim) == 0,
+      s"coarse codebook under $indexDir does not divide the ${cb.k} cells — rebuild the index"))
+    cb
+  }
+
+  private def floatBytes(a: Array[Float]): Array[Byte] = {
+    val bb = java.nio.ByteBuffer.allocate(4 * a.length).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    bb.asFloatBuffer().put(a)
+    bb.array()
   }
 
   // ------------------------------------------------- quantizer drift
@@ -2217,42 +2267,16 @@ object Similarity {
     """aggregate(zip_with(embedding, centroid, (a, b) -> (a - b) * (a - b)),
       |cast(0 as double), (acc, x) -> acc + cast(x as double))""".stripMargin)
 
-  /** Persist the build-time quantizer baseline: mean squared
-    * assignment distance over the live layout (cells are already
-    * stored — no re-assignment), one `quantstats.gN` row. */
-  private def writeQuantStats(spark: SparkSession, indexDir: String): Unit = {
-    val cents = Relational.cachedSchemaParquet(spark, s"$indexDir/centroids")
-      .select(col("cell"), col("centroid"))
-    val row = Relational.cachedSchemaParquet(spark, liveVectorsPath(spark, indexDir))
-      .select(col("cell").cast("int").as("cell"), col("embedding"))
-      .join(broadcast(cents), "cell")
-      .agg(avg(assignSqDistCol).as("m"), count(lit(1)).as("n")).head()
-    // an empty layout has no baseline to write — error HERE rather than
-    // skipping: a silent skip surfaces later as requireLive's
-    // misleading "build crashed" when the drift probe goes looking for
-    // the quantstats generation (round-13 advice)
-    if (row.isNullAt(0)) sys.error(
-      s"cannot write quantizer stats for $indexDir: the live vector " +
-        "layout is empty — build the index on a non-empty corpus first")
-    val (g, old) = IndexMeta.nextGen(spark, indexDir, "quantstats")
-    spark.range(1)
-      .select(lit(row.getDouble(0)).as("mean_sq_dist"), lit(row.getLong(1)).as("n_build"))
-      .coalesce(1).write.mode("overwrite").parquet(g)
-    old.foreach(IndexMeta.delete(spark, _))
-  }
-
   /** Mean squared assignment distance of a (vec_id, embedding) batch to
     * its NEAREST live centroid — the same kernel the append path files
     * under (nprobe=1), Θ(batch·k·d) map work + one scalar aggregate. */
   private def meanAssignSqDist(spark: SparkSession, indexDir: String,
                                vecs: DataFrame): Double = {
     GraftFunctions.register(spark)
-    val (flat, dim) = indexCentroidsFlat(spark, indexDir)
-    val cents = Relational.cachedSchemaParquet(spark, s"$indexDir/centroids")
-      .select(col("cell"), col("centroid"))
+    val cb = ivfCodebook(spark, indexDir)
     val row = vecs.select(col("embedding"))
-      .withColumn("cell", element_at(indexCellsCol(spark, indexDir, flat, dim, 1), 1))
-      .join(broadcast(cents), "cell")
+      .withColumn("cell", element_at(indexCellsCol(spark, cb, 1), 1))
+      .join(broadcast(cb.frame(spark)), "cell")
       .agg(avg(assignSqDistCol)).head()
     // an empty batch has no assignment distance: averaging nothing is
     // a null aggregate, which would surface as an opaque NPE two
@@ -2267,22 +2291,14 @@ object Similarity {
   /** C3b5 — QUANTIZER-DRIFT metric (round-12 verdict item 5: drift was
     * "the documented rebuild trigger" with nothing computing it): the
     * ratio of an arrival batch's mean squared assignment distance (to
-    * the FROZEN centroids) over the build-time baseline persisted in
-    * `quantstats`. ≈ 1 for in-distribution arrivals; grows as arrival
+    * the FROZEN centroids) over the build-time baseline the index
+    * header holds. ≈ 1 for in-distribution arrivals; grows as arrival
     * mass moves off the codebook — frozen cells then mis-shape the
     * arrival region (boundary twins split, populations skew), which is
-    * exactly when a refit pays. Θ(batch) at probe time; pre-quantstats
-    * indexes compute the baseline from the live layout on the fly
-    * (one scan, the cost the build would have paid). */
+    * exactly when a refit pays. Θ(batch) at probe time. */
   def quantizerDrift(spark: SparkSession, indexDir: String,
                      arrivals: DataFrame): Double = {
-    val base = IndexMeta.liveGen(spark, indexDir, "quantstats") match {
-      case Some(g) => Relational.cachedSchemaParquet(spark, g.toString).head().getDouble(0)
-      case None =>
-        writeQuantStats(spark, indexDir)
-        Relational.cachedSchemaParquet(spark, 
-          IndexMeta.requireLive(spark, indexDir, "quantstats")).head().getDouble(0)
-    }
+    val base = ivfHeader(spark, indexDir, "the drift probe").meanSqDist
     val arr = meanAssignSqDist(spark, indexDir,
       arrivals.select(col("vec_id"), col("embedding")))
     arr / math.max(base, java.lang.Double.MIN_NORMAL)
@@ -2330,11 +2346,11 @@ object Similarity {
     else v
   }
 
-  /** The committed vectors layout a reader of this index resolves to
-    * right now (max committed generation — see [[IndexMeta]]).
-    * Exposed for specs and the lifecycle rehearsal tool. */
+  /** The vectors layout the live header names — what a reader of this
+    * index resolves to right now. Exposed for specs and the lifecycle
+    * rehearsal tool. */
   private[graft] def liveVectorsPath(spark: SparkSession, indexDir: String): String =
-    IndexMeta.requireLiveVectors(spark, indexDir)
+    s"$indexDir/${ivfHeader(spark, indexDir, "this reader").vectors}"
 
   /** Delete vectors from the index by id: append the ids to the
     * tombstone table — O(deletes) work, no touch of the vectors layout.
@@ -2349,19 +2365,15 @@ object Similarity {
 
   /** Single-query ANN over a PERSISTENT index — [[annIvf]]'s semantics
     * (same quantizer seed → byte-identical results, asserted in the
-    * spec) without the per-query fit: read k centroid rows, pick nprobe
+    * spec) without the per-query fit: read the codebook, pick nprobe
     * cells driver-side (O(k·d)), and scan ONLY those cells' partitions.
     * The returned plan carries the `cell IN` predicate as a partition
     * filter — nprobe directory reads, zero data-file touches elsewhere. */
   def annIvfIndexed(spark: SparkSession, dir: String, indexDir: String): DataFrame = {
     GraftFunctions.register(spark)
     val vectors = liveIndexVectors(spark, indexDir)
-    // centroids + query vector in one job (see centroidsAndQuery)
-    val (cents, qVec) = centroidsAndQuery(spark, indexDir, vectors)
-    val probeCells = cents.map { case (i, c) =>
-      val d = c.zip(qVec).map { case (a, b) => (a - b).toDouble * (a - b) }.sum
-      (i, d)
-    }.sortBy(_._2).take(nprobe(spark)).map(_._1)
+    val probeCells = probeCellsOf(ivfCodebook(spark, indexDir),
+      queryVector(indexDir, vectors), nprobe(spark))
     val q = vectors.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
     vectors.filter(col("vec_id") =!= 0 && col("cell").isin(probeCells.toSeq: _*))
       .crossJoin(broadcast(q))
@@ -2415,13 +2427,13 @@ object Similarity {
   def annIvfBatch(spark: SparkSession, indexDir: String, queries: DataFrame,
                   k: Int = 10): DataFrame = {
     GraftFunctions.register(spark)
-    val (flat, dim) = indexCentroidsFlat(spark, indexDir)
+    val cb = ivfCodebook(spark, indexDir)
     // localCheckpoint: the assignment feeds BOTH the bounded cells
     // collect and the join probe — without it the NearestCells explode
     // re-evaluates per consumer
     val q = queries
       .select(col("vec_id").as("query_id"), col("embedding"))
-      .withColumn("cell", explode(indexCellsCol(spark, indexDir, flat, dim, nprobe(spark))))
+      .withColumn("cell", explode(indexCellsCol(spark, cb, nprobe(spark))))
       .select(col("query_id"), col("embedding").as("qv"), col("cell"))
       .localCheckpoint()
     // ONE job for probed cells AND the dispatch row count (round-15:
@@ -2621,7 +2633,7 @@ object Similarity {
     * of the batch, at most one new file per touched cell — the index
     * never refits, and queries see old + new chunks through the
     * identical partition-pruned probe plan. Idempotent under `batchId`
-    * replay (the append marker); quantizer drift from accumulated
+    * replay (the header's `applied` list); quantizer drift from accumulated
     * arrivals is the rebuild trigger (the drift-policy ops below). */
   def ragIngest(spark: SparkSession, indexDir: String, arrivals: DataFrame,
                 batchId: Option[String] = None): Unit =
@@ -2649,7 +2661,7 @@ object Similarity {
     * on the retrieval side): replay `arrivals` one file per trigger
     * through [[StreamHarness]]; each micro-batch makes ONE idempotent
     * [[ragIngest]] call under the harness's batch key (exactly-once
-    * through the append marker), with the harness's in-stream index
+    * through the header's `applied` list), with the harness's in-stream index
     * compaction when `graft.stream.compactMaxFiles` is set. */
   private[graft] def ragIngestStreamOn(spark: SparkSession, idx: String,
       arrivals: DataFrame, name: String,
@@ -2685,8 +2697,7 @@ object Similarity {
                              chunkVecs: => DataFrame): String = {
     val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
     IndexMeta.ensureDerived(spark, s"$dir/documents.parquet",
-      s"graft_rag_index_${key}_")(
-      p => IndexMeta.exists(spark, s"$p/centroids/_SUCCESS"))(
+      s"graft_rag_index_${key}_")(ivfCodebook(spark, _))(
       buildIvfIndexFrom(spark, chunkVecs, _))
   }
 
@@ -2724,16 +2735,19 @@ object Similarity {
     * (deletes become physical, table resets), then re-insert.
     *
     * Retry contract: pass `batchId` (caller-unique per logical batch)
-    * and a committed append becomes a no-op on re-run — the marker file
-    * is written AFTER the data commits, so a crashed attempt re-runs in
-    * full and only a crash inside the marker-write window (ms) can
-    * double-apply. Without `batchId`, retries are the caller's problem. */
+    * and a committed append becomes a no-op on re-run — the header
+    * committed AFTER the data writes records the id in `applied`, so a
+    * crashed attempt re-runs in full (or fails loudly on the live-id
+    * guard, see below) and a completed one is skipped. Without
+    * `batchId`, retries are the caller's problem. */
   def appendToIvfIndex(spark: SparkSession, indexDir: String, newVectors: DataFrame,
                        batchId: Option[String] = None): Unit = {
-    val marker = batchId.map(b =>
-      s"$indexDir/_appended_${b.replaceAll("[^A-Za-z0-9._-]", "_")}")
-    if (marker.exists(IndexMeta.exists(spark, _))) return
-    val vecDir = liveVectorsPath(spark, indexDir)
+    val h = ivfHeader(spark, indexDir, "appends")
+    if (batchId.exists(h.applied.contains)) return
+    // the codebook first: an unreadable one refuses before any write
+    val cb = ivfCodebook(spark, indexDir)
+    val vecDir = s"$indexDir/${h.vectors}"
+    val idsDir = s"$indexDir/${h.ids}"
     val tomb = s"$indexDir/tombstones"
     if (IndexMeta.exists(spark, tomb)) {
       val clash = newVectors.select(col("vec_id"))
@@ -2754,42 +2768,17 @@ object Similarity {
     // column — the round-7 soak showed the layout scan's file opens
     // dominating append cost on a fragmented index (20 s/batch at
     // 45k files; the sidecar holds the guard at O(#appends) opens).
-    // Pre-sidecar indexes (no ids.g* dir) fall back to the layout
-    // scan. Correctness-first and ON by default;
-    // `graft.index.appendIdCheck=false` is for callers whose id
-    // assignment is externally unique (e.g. monotone crawl ids), who
-    // then own the two-rows-per-id failure mode.
-    val idsGen = IndexMeta.liveGen(spark, indexDir, "ids").map(_.toString)
-    // live-id guard + centroids fetch in ONE job per append (round-15
-    // action fold): the k-row centroids cross-join the (≤5-row → 1-row)
-    // clash aggregate, so the guard and the assignment codebook arrive
-    // in one driver round-trip; with the id check conf'd off the
-    // centroids collect runs alone, as before
-    val centsDf = Relational.cachedSchemaParquet(spark, s"$indexDir/centroids")
-      .select(col("cell"), col("centroid"))
-    val cents =
-      if (spark.conf.getOption("graft.index.appendIdCheck").forall(_.toBoolean)) {
-        val physicalIds = idsGen.map(Relational.cachedSchemaParquet(spark, _))
-          .getOrElse(Relational.cachedSchemaParquet(spark, vecDir).select(col("vec_id")))
-        val rows = centsDf.crossJoin(physicalIds
-          .join(broadcast(newVectors.select(col("vec_id"))), Seq("vec_id"), "left_semi")
-          .limit(5).agg(collect_list(col("vec_id")).as("live_clash"))).collect()
-        val liveClash = rows.headOption
-          .map(_.getAs[scala.collection.Seq[Long]]("live_clash")).getOrElse(Nil)
-        require(liveClash.isEmpty,
-          s"batch re-inserts ids already live in the index ${liveClash.mkString(", ")} — " +
-            "every probe would serve two rows per id. Dedup the batch against " +
-            "the indexed ids first (or delete + compact to replace them). " +
-            "If a previous append of THIS batch crashed between its sidecar " +
-            "and layout writes, repair with rebuildIdsSidecar and re-run.")
-        rows.map(r => (r.getInt(0), r.getSeq[Float](1))).sortBy(_._1)
-      } else centsDf.collect().map(r => (r.getInt(0), r.getSeq[Float](1))).sortBy(_._1)
-    // an empty codebook empties the guard's cross join too, so the
-    // live-id check above saw no row and proved nothing: refuse before
-    // the first write, never after the sidecar has grown
-    require(cents.nonEmpty,
-      s"the centroids table under $indexDir has no rows — the index cannot " +
-        "place vectors and the live-id guard could not run; rebuild the index")
+    // One job: the (≤5-row) clash list aggregates to one row.
+    val liveClash = Relational.cachedSchemaParquet(spark, idsDir)
+      .join(broadcast(newVectors.select(col("vec_id"))), Seq("vec_id"), "left_semi")
+      .limit(5).agg(collect_list(col("vec_id"))).head()
+      .getAs[scala.collection.Seq[Long]](0)
+    require(liveClash.isEmpty,
+      s"batch re-inserts ids already live in the index ${liveClash.mkString(", ")} — " +
+        "every probe would serve two rows per id. Dedup the batch against " +
+        "the indexed ids first (or delete + compact to replace them). " +
+        "If a previous append of THIS batch crashed between its sidecar " +
+        "and layout writes, repair with rebuildIdsSidecar and re-run.")
     // Sidecar lands BEFORE the layout (one small file, job-committed):
     // a crash between the two writes leaves the sidecar a SUPERSET of
     // the layout, so the bare re-run fails LOUDLY on the guard above
@@ -2797,20 +2786,13 @@ object Similarity {
     // fail-loud-never-duplicate ordering doctrine of the near-dup
     // store's shingles-first append. Repair = rebuildIdsSidecar (one
     // layout scan, the old per-append guard cost paid once).
-    idsGen.foreach(g => newVectors.select(col("vec_id")).coalesce(1)
-      .write.mode("append").parquet(g))
+    newVectors.select(col("vec_id")).coalesce(1).write.mode("append").parquet(idsDir)
     GraftFunctions.register(spark)
-    val dim = cents.head._2.length
-    val flat = new Array[Float](cents.length * dim)
-    cents.foreach { case (c, arr) =>
-      var j = 0
-      while (j < dim) { flat(c * dim + j) = arr(j); j += 1 }
-    }
     newVectors
       // indexCellsCol, NOT a bare flat argmin: on a constant-population
       // index the PROBE searches hierarchically, so placement must use
       // the same kernel or boundary-cell vectors become unfindable
-      .withColumn("cell", element_at(indexCellsCol(spark, indexDir, flat, dim, 1), 1))
+      .withColumn("cell", element_at(indexCellsCol(spark, cb, 1), 1))
       .withColumn("sigs", expr(s"graft_srp_sign(embedding, 42L, $sigWords)"))
       .select(col("vec_id"), col("embedding"), col("sigs"), col("cell"))
       // One exchange of the (small) batch so each cell lands in exactly
@@ -2822,7 +2804,7 @@ object Similarity {
       .repartition(col("cell"))
       .write.mode("append").partitionBy("cell")
       .parquet(vecDir)
-    marker.foreach(IndexMeta.createMarker(spark, _))
+    batchId.foreach(b => commitIvf(spark, indexDir)(_ => h.copy(applied = h.applied :+ b)))
   }
 
   /** C3b4 — index COMPACTION: rewrite the vectors layout so each cell
@@ -2846,14 +2828,13 @@ object Similarity {
     * salt) at ~targetFileBytes each, hot cells split, cold cells
     * coalesce to one.
     *
-    * Commit discipline: the rewrite lands in the next GENERATION dir
-    * and becomes live the instant Spark's `_SUCCESS` commits it —
-    * readers resolve the max committed generation, so there is no
-    * rename anywhere and the protocol works unchanged on S3/HDFS
-    * ([[IndexMeta]]). Crash-safe at every step: the old generation is
-    * deleted only after the new one is committed, and a crash before
-    * commit leaves the old one live (the orphan is swept by the next
-    * build/compact). The one remaining concurrency hazard is the final
+    * Commit discipline: the rewrite and its ids sidecar land in the
+    * next GENERATION dirs and become live when the next `ivf.gN` header
+    * naming them commits ([[IndexMeta]]) — no rename anywhere, so the
+    * protocol works unchanged on S3/HDFS. Crash-safe at every step: the
+    * old generations are deleted only after the commit, and a crash
+    * before it leaves the old ones live (the orphans are swept by the
+    * next commit). The one remaining concurrency hazard is the final
     * GC racing a reader that resolved the OLD generation before the
     * commit — compaction stays a maintenance op for a quiesced index,
     * but the unsafe window shrank from the whole double-rename swap to
@@ -2861,7 +2842,8 @@ object Similarity {
   def compactIvfIndex(spark: SparkSession, indexDir: String,
                       targetFileBytes: Long = 128L << 20): Unit = {
     import spark.implicits._
-    val vecDir = liveVectorsPath(spark, indexDir)
+    val h = ivfHeader(spark, indexDir, "compaction")
+    val vecDir = s"$indexDir/${h.vectors}"
     // live set only: the rewrite is where tombstoned rows become
     // physically absent; the table clears AFTER the commit (idempotent —
     // a crash in between leaves tombstones whose ids no longer match)
@@ -2877,7 +2859,7 @@ object Similarity {
     val filesPerCell = counts.map { case (c, n) =>
       (c, math.max(1L, math.ceil(n * bytesPerRow / targetFileBytes).toLong))
     }
-    val (nextDir, oldGens) = IndexMeta.nextGen(spark, indexDir)
+    val nextDir = IndexMeta.nextGen(spark, indexDir, "vectors")._1
     if (counts.isEmpty) {
       // a fully-tombstoned index compacts to ONE empty schema-bearing
       // file, written non-partitioned (there are no cells left to
@@ -2898,15 +2880,13 @@ object Similarity {
     }
     // ids sidecar follows: the live id set, one generation, compacted
     // back to few files (each append added one). Written while the old
-    // layout still exists — `v` reads from it. A crash before this
-    // write leaves the sidecar a superset of the new layout (contains
-    // the tombstoned-away ids): re-inserting those ids then fails
-    // loudly until rebuildIdsSidecar — never silently duplicates.
-    val (idsNext, oldIds) = IndexMeta.nextGen(spark, indexDir, "ids")
+    // layout still exists — `v` reads from it — and committed with the
+    // new layout in one header
+    val idsNext = IndexMeta.nextGen(spark, indexDir, "ids")._1
     Scale.sizeForWrite(v.select(col("vec_id")))
       .write.mode("overwrite").parquet(idsNext)
-    oldGens.foreach(IndexMeta.delete(spark, _))
-    oldIds.foreach(IndexMeta.delete(spark, _))
+    def name(p: String) = new org.apache.hadoop.fs.Path(p).getName
+    commitIvf(spark, indexDir)(_ => h.copy(vectors = name(nextDir), ids = name(idsNext)))
     IndexMeta.delete(spark, s"$indexDir/tombstones") // now physical; table resets
   }
 
@@ -2928,29 +2908,18 @@ object Similarity {
     if (n > maxFiles) { compactIvfIndex(spark, indexDir); true } else false
   }
 
-  /** [[compactIvfIndexIfFragmented]] for the near-dup store: the
-    * trigger reads the max file count across the three tables (each
-    * append adds files to all three). */
-  def compactNearDupIndexIfFragmented(spark: SparkSession, indexDir: String,
-      maxFiles: Long = 4096): Boolean = {
-    val n = Seq("shingles", "bands", "pairs")
-      .map(t => IndexMeta.countUnder(spark, nearDupTablePath(spark, indexDir, t), ".parquet"))
-      .max
-    if (n > maxFiles) { compactNearDupIndex(spark, indexDir); true } else false
-  }
-
   /** Repair the ids sidecar from the layout itself — the recovery op
     * for an append that crashed between its sidecar and layout writes
-    * (sidecar superset → guard false-rejects that batch's retry) or a
-    * compaction that crashed before its sidecar rewrite. One full scan
-    * of the layout's 8-byte id column: the cost the sidecar saves on
-    * every append, paid once per repair. */
+    * (sidecar superset → guard false-rejects that batch's retry). One
+    * full scan of the layout's 8-byte id column: the cost the sidecar
+    * saves on every append, paid once per repair. */
   def rebuildIdsSidecar(spark: SparkSession, indexDir: String): Unit = {
-    val (idsNext, oldIds) = IndexMeta.nextGen(spark, indexDir, "ids")
+    val h = ivfHeader(spark, indexDir, "the ids repair")
+    val idsNext = IndexMeta.nextGen(spark, indexDir, "ids")._1
     Scale.sizeForWrite(
-      Relational.cachedSchemaParquet(spark, liveVectorsPath(spark, indexDir)).select(col("vec_id")))
+      Relational.cachedSchemaParquet(spark, s"$indexDir/${h.vectors}").select(col("vec_id")))
       .write.mode("overwrite").parquet(idsNext)
-    oldIds.foreach(IndexMeta.delete(spark, _))
+    commitIvf(spark, indexDir)(_ => h.copy(ids = new org.apache.hadoop.fs.Path(idsNext).getName))
   }
 
   /** Registry wrapper for the append path: build a fresh index from a
@@ -3174,53 +3143,39 @@ object Similarity {
       ExpressionUtils.expression(child), coarse, sub, dim, k2, nprobe, nprobe1))
   }
 
-  /** THE cell-choice kernel for an index at `indexDir`, given its flat
-    * sub-centroid matrix: hierarchical ([[TwoLevelCells]] through the
-    * persisted `centroids2` coarse codebook) when the index was built
-    * constant-population, flat [[NearestCells]] otherwise. EVERY reader
-    * and writer of the index must route through this — the append path
-    * placing a vector with a different kernel than the probe searches
-    * with silently loses the vector in boundary cells (caught by the
-    * cycle-under-cellPop spec: 10 of 25 appended-survivor twins missed
-    * when append used the flat-global argmin against a hierarchical
-    * probe — the sigWords width-drift lesson, applied to cell choice). */
-  private def indexCellsCol(spark: SparkSession, indexDir: String,
-      flat: Array[Float], dim: Int, nprobe: Int): org.apache.spark.sql.Column =
-    if (IndexMeta.exists(spark, s"$indexDir/centroids2/_SUCCESS")) {
-      val co = Relational.cachedSchemaParquet(spark, s"$indexDir/centroids2")
-        .select(col("cell1"), col("centroid"))
-        .collect().map(r => (r.getInt(0), r.getSeq[Float](1))).sortBy(_._1)
-      val coFlat = new Array[Float](co.length * dim)
-      co.foreach { case (c, a2) =>
-        var j = 0
-        while (j < dim) { coFlat(c * dim + j) = a2(j); j += 1 }
-      }
-      // defense in depth against a mismatched coarse/sub codebook pair
-      // (a crash that survives the write-ordering in buildIvfIndexFrom,
-      // or a hand-edited index): a non-dividing pair cannot be a valid
-      // two-level codebook — fall back to the flat probe, which is
-      // correct for ANY sub-centroid table, rather than mis-derive k2
-      if (co.nonEmpty && (flat.length / dim) % co.length == 0) {
-        val k2 = (flat.length / dim) / co.length
-        // `graft.semdedup.coarseProbes` (default 2): search the top-b
-        // coarse branches, not just the nearest — the standard FAISS
-        // coarse-nprobe knob that closes the hierarchical probe's
-        // coarse-boundary recall dip. b=2 is the default because the
-        // round-10 coarse-width table (BASELINE.md) shows it recovering
-        // 1000/1000 planted twins at sf10e AND sf100e — parity-or-better
-        // vs the FLAT reference (999/1000 at sf100e) — at 1.34–1.43×
-        // probe cost, still well under the flat probe's total cost
-        // (BASELINE.md round-10 crossover: 32.8 s vs 43.0 s at 19k
-        // cells). b=1 stays available as the opt-in economy mode
-        // (993–995/1000 measured). Placement is
-        // b-INVARIANT (TwoLevelCells element 1 is always the nearest
-        // branch's best cell), so probe width can change over an
-        // index's lifetime without re-placing.
-        val b = spark.conf.getOption("graft.semdedup.coarseProbes")
-          .map(_.toInt).getOrElse(2)
-        twoLevelCellsColOf(col("embedding"), coFlat, flat, dim, k2, nprobe, b)
-      } else nearestCellsCol(flat, dim, nprobe)
-    } else nearestCellsCol(flat, dim, nprobe)
+  /** THE cell-choice kernel for an index with codebook `cb`:
+    * hierarchical ([[TwoLevelCells]] through the coarse codebook) when
+    * the index was built constant-population, flat [[NearestCells]]
+    * otherwise. EVERY reader and writer of the index must route through
+    * this — the append path placing a vector with a different kernel
+    * than the probe searches with silently loses the vector in boundary
+    * cells (caught by the cycle-under-cellPop spec: 10 of 25
+    * appended-survivor twins missed when append used the flat-global
+    * argmin against a hierarchical probe — the sigWords width-drift
+    * lesson, applied to cell choice). */
+  private def indexCellsCol(spark: SparkSession, cb: IvfCodebook,
+      nprobe: Int): org.apache.spark.sql.Column = cb.coarse match {
+    case Some(co) =>
+      // `graft.semdedup.coarseProbes` (default 2): search the top-b
+      // coarse branches, not just the nearest — the standard FAISS
+      // coarse-nprobe knob that closes the hierarchical probe's
+      // coarse-boundary recall dip. b=2 is the default because the
+      // round-10 coarse-width table (BASELINE.md) shows it recovering
+      // 1000/1000 planted twins at sf10e AND sf100e — parity-or-better
+      // vs the FLAT reference (999/1000 at sf100e) — at 1.34–1.43×
+      // probe cost, still well under the flat probe's total cost
+      // (BASELINE.md round-10 crossover: 32.8 s vs 43.0 s at 19k
+      // cells). b=1 stays available as the opt-in economy mode
+      // (993–995/1000 measured). Placement is
+      // b-INVARIANT (TwoLevelCells element 1 is always the nearest
+      // branch's best cell), so probe width can change over an
+      // index's lifetime without re-placing.
+      val b = spark.conf.getOption("graft.semdedup.coarseProbes")
+        .map(_.toInt).getOrElse(2)
+      twoLevelCellsColOf(col("embedding"), co, cb.flat, cb.dim,
+        cb.k / (co.length / cb.dim), nprobe, b)
+    case None => nearestCellsCol(cb.flat, cb.dim, nprobe)
+  }
 
   /** nprobe-nearest-cell choice as a Column over the codegen'd
     * [[graft.functions.NearestCells]]: the k×dim centroid matrix rides
@@ -3449,16 +3404,8 @@ object Similarity {
       // (measured at sf10: 30.2 s vs 28.1 s for the fit path, which
       // already checkpoints); same harness-local choice as the fit path
       .localCheckpoint()
-    val cents = Relational.cachedSchemaParquet(spark, s"$indexDir/centroids")
-      .select(col("cell"), col("centroid"))
-      .collect().map(r => (r.getInt(0), r.getSeq[Float](1))).sortBy(_._1)
-    val dim = cents.head._2.length
-    val flat = new Array[Float](cents.length * dim)
-    cents.foreach { case (c, arr) =>
-      var j = 0
-      while (j < dim) { flat(c * dim + j) = arr(j); j += 1 }
-    }
-    twoLevelJoinOn(spark, vectors, flat, dim)
+    val cb = ivfCodebook(spark, indexDir)
+    twoLevelJoinOn(spark, vectors, cb.flat, cb.dim)
   }
 
   /** Shared index-location contract of the registry wrappers: under a
@@ -3468,10 +3415,10 @@ object Similarity {
     * fingerprint is the staleness guard: a regenerated corpus at the
     * same path must get a fresh index — a path-only key would silently
     * serve vectors from the previous corpus. Builds go DIRECTLY to a
-    * builder-unique dir (key + fingerprint + appId) and publish by
-    * writing centroids LAST: readiness = `centroids/_SUCCESS`, the
-    * same commit-marker resolution as the vectors generations — no
-    * renames anywhere, so the contract holds on object stores too.
+    * builder-unique dir (key + fingerprint + appId) and publish with
+    * their header commit: readiness = a live `ivf` header whose codebook
+    * reads — no renames anywhere, so the contract holds on object
+    * stores too.
     * Concurrent builders of the same fingerprint build side by side
     * (content is deterministic — the dirs are interchangeable) and
     * readers take the first ready one. A successful build then GCs
@@ -3480,8 +3427,7 @@ object Similarity {
   private[ops] def ensureIndex(spark: SparkSession, dir: String): String = {
     val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
     IndexMeta.ensureDerived(spark, s"$dir/embeddings.parquet",
-      s"graft_ivf_index_${key}_")(
-      p => IndexMeta.exists(spark, s"$p/centroids/_SUCCESS"))(
+      s"graft_ivf_index_${key}_")(ivfCodebook(spark, _))(
       buildIvfIndex(spark, dir, _))
   }
 

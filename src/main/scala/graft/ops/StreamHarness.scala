@@ -14,8 +14,8 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger
   * Exactly-once is the Structured Streaming contract (SIGMOD 2018): a
   * replayable source plus a sink that is idempotent per epoch. The
   * staged slices are the replayable source. Each ingest leg's store
-  * commits an append marker under the batch key this harness builds,
-  * so the engine's replay of a crashed batch (same batch id) is a
+  * records the batch key this harness builds in the `applied` list of
+  * its generation header ([[IndexMeta]]), so the engine's replay of a crashed batch (same batch id) is a
   * no-op. The key carries the STREAM name, `<name>_<bid>`, not the bare
   * engine bid: bids restart at 0 for every fresh checkpoint (the sink
   * dir is swept on entry), so a bare bid would turn a second stream's
@@ -29,7 +29,7 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger
 object StreamHarness {
 
   /** One micro-batch as a leg's body sees it: the batch rows, the engine
-    * batch id, the batch key for the store's append marker, and the
+    * batch id, the batch key the store records as applied, and the
     * stream's own output dir (for a leg that sinks a result besides its
     * store). */
   final case class Batch(df: DataFrame, bid: Long, key: String, out: String)

@@ -850,14 +850,14 @@ object Training {
   // by churning selections.
   //
   // Crash contract: a slice's appends (seen_th, eval grams, near-dup
-  // store, shards) are not atomic; the slice marker lands after all
-  // of THEM (so a completed slice replays into a no-op while a
-  // crashed slice is repaired by rebuilding the state — the
-  // appendToNearDupIndex contract, stated there for the same reason),
-  // and the id WATERMARK lands after the marker: a crash between the
-  // two leaves a fully-applied, marker-protected slice whose replay
-  // no-ops, and the next in-order slice still passes the (one-slice-
-  // stale) monotone watermark guard.
+  // store, shards) are not atomic; ONE `state.gN` header commit after
+  // all of them names the slice's shard dir, advances the id
+  // watermark and records the slice id (the [[IndexMeta]] protocol).
+  // A completed slice therefore replays into a no-op, and a slice that
+  // crashed before its commit is invisible — its shard dir is an
+  // orphan no header names — and is repaired by rebuilding the state
+  // (the appendToNearDupIndex contract, stated there for the same
+  // reason).
 
   /** Quality floor + exact-dup keepers + near-dup losers + decontam +
     * frozen-rate gate over a TRAIN frame, with the cross-corpus state
@@ -889,75 +889,61 @@ object Training {
     * writer, slice-scoped: shard assignment is per-doc deterministic
     * (md5), so a doc lands in the same shard whichever slice carries
     * it; pos/part are slice-local (a training loader streams the
-    * slice tree — the crawl-dated layout). The slice joins the live
-    * tree only when the `shardman` manifest generation naming it
-    * COMMITS (the lex segment protocol on the shard tree): a crash
-    * between the dir write and the commit leaves an orphan dir no
-    * reader resolves, overwritten by the slice replay and swept by
-    * the next compaction. */
+    * slice tree — the crawl-dated layout). Returns the slice name, or
+    * None for an empty frame. The slice joins the live tree only when
+    * the state header naming it COMMITS: a crash before that leaves an
+    * orphan dir no reader resolves, overwritten by the slice replay
+    * and swept by the next compaction. */
   private def writeSliceShards(spark: SparkSession, stateDir: String,
       kept: DataFrame, tag: String,
-      toks: Option[org.apache.spark.sql.Column] = None): Unit = {
-    if (kept.isEmpty) return
+      toks: Option[org.apache.spark.sql.Column] = None): Option[String] = {
+    if (kept.isEmpty) return None
     val enc = kept.withColumn("bpe_tokens",
       size(toks.getOrElse(bpeTokensCol(spark, s"$stateDir/bpe"))).cast("long"))
     val name = s"slice_$tag"
     writeShardsOn(spark,
       enc.select(col("doc_id"), col("text"), col("n_chars"), col("bpe_tokens")),
       s"$stateDir/shards/$name")
-    val live = IndexMeta.liveGen(spark, s"$stateDir/shards", "shardman")
-      .map(_ => liveSlices(spark, stateDir)).getOrElse(Seq.empty)
-    // idempotent under slice replay: a crashed run that committed the
-    // manifest but not the slice marker re-enters here with the name
-    // already live — re-committing would double-list it. The match
-    // includes compaction-renamed forms (`name.gN…`): if a takedown
-    // compaction ran inside the crash window, the slice's SURVIVORS
-    // are already live under the renamed dir, and re-listing the
-    // fresh dir would both double-count them and resurrect the
-    // taken-down rows — the re-written dir stays an orphan for the
-    // next compaction's sweep instead
-    val renamedForm = (java.util.regex.Pattern.quote(name) + "\\.g\\d+.*").r
-    if (!live.exists(l => l == name || renamedForm.matches(l)))
-      commitShardMan(spark, stateDir, live :+ name)
+    Some(name)
   }
 
-  /** Commit the slice-name manifest as the next `shardman.gN` under
-    * the shards root — single `_SUCCESS` marker after the manifest
-    * lands (the IndexMeta generation doctrine), superseded
-    * generations deleted after. Readers resolve slices through the
-    * manifest, never by listing the disk, so an uncommitted slice dir
-    * is structurally invisible. */
-  private def commitShardMan(spark: SparkSession, stateDir: String,
-      slices: Seq[String]): Unit = {
-    val (g, old) = IndexMeta.nextGen(spark, s"$stateDir/shards", "shardman")
-    spark.createDataset(slices)(org.apache.spark.sql.Encoders.STRING)
-      .toDF("slice").coalesce(1).write.mode("overwrite").parquet(s"$g/manifest")
-    IndexMeta.createMarker(spark, s"$g/_SUCCESS")
-    old.foreach(IndexMeta.delete(spark, _))
+  /** The header of a pretrain state's `state.gN` generation: the id
+    * watermark (max doc_id ingested so far), the live shard-slice dir
+    * names under `shards/`, and the tags of the slices ingested since
+    * the build. */
+  private final case class StateHeader(maxDocId: Long, slices: Seq[String],
+      applied: Seq[String]) {
+    def toJson: com.fasterxml.jackson.databind.node.ObjectNode = {
+      val o = IndexMeta.newHeader().put("max_doc_id", maxDocId)
+      IndexMeta.putStrings(o, "slices", slices)
+      IndexMeta.putStrings(o, "applied", applied)
+    }
   }
 
-  /** The live slice-dir names, in manifest order (`private[ops]` so
-    * the spec pins the SAME resolution rule readers use, instead of
-    * re-implementing it). */
-  private[ops] def liveSlices(spark: SparkSession, stateDir: String): Seq[String] = {
-    val g = IndexMeta.requireLive(spark, s"$stateDir/shards", "shardman")
-    Relational.cachedSchemaParquet(spark, s"$g/manifest").collect().map(_.getString(0)).toSeq.sorted
-  }
+  private def parseState(o: com.fasterxml.jackson.databind.node.ObjectNode): StateHeader =
+    StateHeader(IndexMeta.field(o, "max_doc_id").asLong,
+      IndexMeta.strings(o, "slices"), IndexMeta.strings(o, "applied"))
+
+  private val stateRebuild = "build the state with buildPretrainState first"
+
+  private def stateHeader(spark: SparkSession, stateDir: String, what: String): StateHeader =
+    parseState(IndexMeta.header(spark, stateDir, "state", what, stateRebuild))
+
+  private def commitState(spark: SparkSession, stateDir: String, h: StateHeader): Unit =
+    IndexMeta.commitGen(spark, stateDir, "state")(_ => h.toJson)
+
+  /** The live slice-dir names, sorted (`private[ops]` so the spec pins
+    * the SAME resolution rule readers use, instead of re-implementing
+    * it). Readers resolve slices through the header, never by listing
+    * the disk, so an uncommitted slice dir is structurally invisible. */
+  private[ops] def liveSlices(spark: SparkSession, stateDir: String): Seq[String] =
+    stateHeader(spark, stateDir, "this reader").slices.sorted
 
   /** The state's takedown tombstones, if any exist. */
   private def pretrainTombstones(spark: SparkSession,
       stateDir: String): Option[DataFrame] = {
     val t = s"$stateDir/shards/tombstones"
     if (IndexMeta.exists(spark, t)) Some(Relational.cachedSchemaParquet(spark, t)) else None
-  }
-
-  private def writePretrainMeta(spark: SparkSession, stateDir: String,
-      maxId: Long): Unit = {
-    val (g, old) = IndexMeta.nextGen(spark, stateDir, "meta")
-    spark.range(1).select(lit(maxId).as("max_doc_id"))
-      .coalesce(1).write.mode("overwrite").parquet(g)
-    IndexMeta.createMarker(spark, s"$g/_SUCCESS")
-    old.foreach(IndexMeta.delete(spark, _))
   }
 
   /** Build the persisted pipeline state on the initial corpus:
@@ -972,8 +958,8 @@ object Training {
     val d = Scale.pin(docs.select(col("doc_id"), col("text"), col("lang"),
       col("source"), col("n_chars")))
     // loud empty-corpus guard (the quantizerDrift doctrine): without
-    // it the build dies at the meta write's max(doc_id) with an
-    // opaque ROW_VALUE_IS_NULL after writing half a state dir
+    // it the build dies at the header's max(doc_id) with an opaque
+    // ROW_VALUE_IS_NULL after writing half a state dir
     require(!d.isEmpty,
       s"buildPretrainState called on an empty corpus for $stateDir — " +
         "a pipeline state needs at least one document (check the " +
@@ -1017,10 +1003,9 @@ object Training {
       .select(col("doc_id"), col("text"), col("lang"), col("n_chars"))
       .localCheckpoint()
     fitBpe(spark, kept, s"$stateDir/bpe", bpeMerges(spark), bpeMaxWords(spark))
-    writeSliceShards(spark, stateDir, kept, "00000_build")
-    writePretrainMeta(spark, stateDir,
-      d.agg(max(col("doc_id"))).head().getLong(0))
-    IndexMeta.createMarker(spark, s"$stateDir/_built")
+    val slice = writeSliceShards(spark, stateDir, kept, "00000_build")
+    commitState(spark, stateDir, StateHeader(
+      d.agg(max(col("doc_id"))).head().getLong(0), slice.toSeq, Seq.empty))
   }
 
   /** Flow one arrival slice through the persisted state: probe the
@@ -1028,29 +1013,23 @@ object Training {
     * curate + gate against the FROZEN rates, encode with the FROZEN
     * BPE model, append a shard slice, advance the id watermark —
     * Θ(slice + store-probe) work, the old corpus' text never read.
-    * Idempotent under `sliceId` replay (marker written after every
-    * store append; only the advisory watermark lands after it — see
-    * the crash contract above). */
+    * Idempotent under `sliceId` replay: one state header commit after
+    * every store append records the slice (see the crash contract
+    * above). An empty slice is a no-op — streaming replay can deliver
+    * one, even before the state exists — and needs no record. */
   def ingestPretrainSlice(spark: SparkSession, stateDir: String,
                           slice: DataFrame, sliceId: String): Unit = {
     val tag = sliceId.replaceAll("[^A-Za-z0-9._-]", "_")
-    val marker = s"$stateDir/_slice_$tag"
-    if (IndexMeta.exists(spark, marker)) return
+    val live = IndexMeta.liveGen(spark, stateDir, "state").map(g =>
+      parseState(IndexMeta.headerAt(spark, g.toString, "slice ingest", stateRebuild)))
+    if (live.exists(_.applied.contains(tag))) return
     val d = Scale.pin(slice.select(col("doc_id"), col("text"), col("lang"),
       col("source"), col("n_chars")))
-    // slice id range + stored watermark in ONE job per slice (round-15
-    // action fold): a cross join of the 1-row aggregate with the 1-row
-    // meta table reads both together. Without a committed meta the
-    // range is read alone, so an empty slice is marked done before the
-    // missing state is refused (streaming replay can deliver one first)
-    val meta = IndexMeta.liveGen(spark, stateDir, "meta")
-    val range = d.agg(min(col("doc_id")), max(col("doc_id")))
-    val mm = meta.fold(range)(g =>
-      range.crossJoin(Relational.cachedSchemaParquet(spark, g.toString))).head()
-    if (mm.isNullAt(0)) { IndexMeta.createMarker(spark, marker); return }
+    val mm = d.agg(min(col("doc_id")), max(col("doc_id"))).head()
+    if (mm.isNullAt(0)) return
     // a non-empty slice needs the state: refuse with the contract error
-    if (meta.isEmpty) IndexMeta.requireLive(spark, stateDir, "meta")
-    val prevMax = mm.getAs[Long]("max_doc_id")
+    val st = live.getOrElse(stateHeader(spark, stateDir, "slice ingest"))
+    val prevMax = st.maxDocId
     require(mm.getLong(0) > prevMax,
       s"arrival slice carries doc_id ${mm.getLong(0)} ≤ the state's id " +
         s"watermark $prevMax — slices must arrive in id order (the " +
@@ -1092,24 +1071,18 @@ object Training {
     val toksCol = bpeTokensCol(spark, s"$stateDir/bpe")
     System.err.println(f"[bpe-oov] $stateDir slice=$tag " +
       f"oov_frac=${bpeOovFraction(spark, s"$stateDir/bpe", d, Some(toksCol))}%.4f")
-    writeSliceShards(spark, stateDir, kept, tag, Some(toksCol))
+    val name = writeSliceShards(spark, stateDir, kept, tag, Some(toksCol))
     newTh.select(col("th")).distinct()
       .write.mode("append").parquet(s"$stateDir/seen_th")
-    // marker BEFORE the watermark: a crash between the two leaves a
-    // fully-applied slice whose replay is the documented no-op, and
-    // the next in-order slice still passes the (now one-slice-stale)
-    // watermark guard. The old order — watermark first — made a
-    // replay of the crashed slice throw the out-of-order guard
-    // against its OWN max id, a misleading error for applied data.
-    IndexMeta.createMarker(spark, marker)
-    writePretrainMeta(spark, stateDir, mm.getLong(1))
+    commitState(spark, stateDir, StateHeader(mm.getLong(1), st.slices ++ name,
+      st.applied :+ tag))
   }
 
   /** Per-shard census of every LIVE shard slice — doc counts, kept
     * chars, and an order-insensitive md5 over the sorted doc_id list
     * (slices are unordered by design; within-slice file order is
-    * c25b's pinned pos order). Slices resolve through the `shardman`
-    * manifest (never a disk listing — uncommitted dirs are invisible)
+    * c25b's pinned pos order). Slices resolve through the state
+    * header (never a disk listing — uncommitted dirs are invisible)
     * and tombstoned docs are anti-joined out, so a takedown is
     * visible to the next reader immediately, before any compaction
     * has run (the c43e visibility contract on the shard tree). The
@@ -1178,24 +1151,21 @@ object Training {
     * slices (found with ONE distributed semi-join over the narrow
     * doc_id projection of the live tree — never a per-slice probe
     * loop) are rewritten WITHOUT the tombstoned rows to NEW dir names
-    * and the manifest generation swaps them in atomically; untouched
+    * and the next state header swaps them in atomically; untouched
     * slices ride through verbatim (Θ(affected slices), not
     * state-bounded). The tombstone table clears and orphan/superseded
-    * slice dirs GC only AFTER the new manifest commits — a crash
-    * anywhere leaves either the old manifest (rewrites orphaned,
-    * swept later) or the new one (delete already durable). The no-op
+    * slice dirs GC only AFTER the new header commits — a crash
+    * anywhere leaves either the old header (rewrites orphaned, swept
+    * later) or the new one (delete already durable). The no-op
     * path (no tombstones) still sweeps orphan dirs, the lex
     * compaction doctrine. Slice-local pos values keep their original
     * gaps — pos orders a slice, it does not number it. */
   def compactPretrainShards(spark: SparkSession, stateDir: String): Unit = {
     val root = s"$stateDir/shards"
-    val names = liveSlices(spark, stateDir)
+    val st = stateHeader(spark, stateDir, "compaction")
+    val names = st.slices.sorted
     def gcOrphans(live: Set[String]): Unit =
-      IndexMeta.list(spark, root).foreach { st =>
-        val n = st.getPath.getName
-        if (st.isDirectory && n.startsWith("slice_") && !live(n))
-          IndexMeta.delete(spark, st.getPath.toString)
-      }
+      IndexMeta.deleteUnnamed(spark, root, Seq("slice_"), live)
     val tombOpt = pretrainTombstones(spark, stateDir)
     if (tombOpt.isEmpty) { gcOrphans(names.toSet); return }
     val tombIds = broadcast(tombOpt.get.select(col("doc_id")).distinct())
@@ -1205,11 +1175,11 @@ object Training {
       .reduce(_.unionByName(_))
       .join(tombIds, Seq("doc_id"), "left_semi")
       .select(col("s")).distinct().collect().map(_.getString(0)).toSet
-    // rewritten dirs are SUFFIXED with the next manifest generation
+    // rewritten dirs are SUFFIXED with the next state generation
     // number — deterministic, unique per compaction, and never equal
     // to a live name (readers keep resolving the old tree until the
     // commit below)
-    val genTag = IndexMeta.nextGen(spark, root, "shardman")._1
+    val genTag = IndexMeta.nextGen(spark, stateDir, "state")._1
       .split('.').last // "gNNNNN"
     val renamed = names.flatMap { n =>
       if (!affected(n)) Some(n)
@@ -1219,7 +1189,7 @@ object Training {
           .join(tombIds, Seq("doc_id"), "left_anti")
           .localCheckpoint() // slice-bounded; the empty probe AND the write
         // a slice whose EVERY doc was taken down (whole-crawl-batch
-        // recall) leaves the manifest entirely — committing a fileless
+        // recall) leaves the header entirely — committing a fileless
         // dir would make every later read throw on schema inference
         if (kept.isEmpty) None
         else {
@@ -1234,7 +1204,7 @@ object Training {
     require(renamed.nonEmpty,
       s"takedown removed every live slice under $stateDir — an empty " +
         "state has no census; rebuild instead of compacting to nothing")
-    commitShardMan(spark, stateDir, renamed)
+    commitState(spark, stateDir, st.copy(slices = renamed))
     IndexMeta.delete(spark, s"$root/tombstones")
     gcOrphans(renamed.toSet)
   }

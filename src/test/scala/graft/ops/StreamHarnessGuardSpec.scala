@@ -14,7 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * `writeStream` would fork the harness again (and, with it, the
   * per-stream batch keying). The session builder lives in
   * `graft.Graft`, the one holder of the required confs, for mains and
-  * specs alike. */
+  * specs alike. A generation's `_SUCCESS` — the commit of every index
+  * family — is created only by [[IndexMeta.commitGen]]: the one string
+  * literal naming it lives in `IndexMeta.scala`. */
 class StreamHarnessGuardSpec extends AnyFunSuite {
 
   private val main = Seq("src/main/scala")
@@ -30,7 +32,8 @@ class StreamHarnessGuardSpec extends AnyFunSuite {
     ("the sink-dir sweep", """Files\.walk\(base\)""".r, "StreamHarness.scala", main),
     ("the [stream-batch] emit", "\"\\[stream-batch\\]".r, "StreamHarness.scala", main),
     ("the [stream-census] emit", "\"\\[stream-census\\]".r, "StreamHarness.scala", main),
-    ("the session builder", """SparkSession\.builder\(\)""".r, "Graft.scala", mainAndTest))
+    ("the session builder", """SparkSession\.builder\(\)""".r, "Graft.scala", mainAndTest),
+    ("a generation's _SUCCESS", "_SUCCESS\"".r, "IndexMeta.scala", main))
 
   private def sources(roots: Seq[String]): Seq[Path] = roots.flatMap { r =>
     val root = Paths.get(r)

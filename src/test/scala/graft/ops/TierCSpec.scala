@@ -13,6 +13,79 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
 
   private val dir = "/root/testdata/sf0.001"
 
+  /** One small index per family that commits through
+    * [[IndexMeta.commitGen]], each taken through its whole life on
+    * sf0.001 — build, one append under batch id `b1`, compaction — and
+    * built once per suite, on first use. Each row: the family, its root
+    * dir and generation name, its own metadata reader, a fingerprint of
+    * its served contents, and (for families with batch-id appends) the
+    * replay of `b1`. Tests that use it only read it or restore what
+    * they change. */
+  private final case class Family(name: String, root: String, gen: String,
+      read: () => Any, contents: () => Any, replay: Option[() => Unit])
+
+  private lazy val families: Seq[Family] = {
+    val docs = Relational.table(spark, dir, "documents")
+    val vecs = Relational.table(spark, dir, "embeddings").select(col("vec_id"), col("embedding"))
+    def scratch(p: String) = Similarity.freshScratch(spark, s"graft_families_${p}_")
+    def count(path: String) = spark.read.parquet(path).count()
+
+    val lex = scratch("lex")
+    val lexBatch = docs.filter(col("doc_id") % 10 === 7)
+    Pipeline.fitLexIndex(docs.filter(col("doc_id") % 10 =!= 7), lex)
+    Pipeline.appendLexIndex(spark, lex, lexBatch, Some("b1"))
+    Pipeline.deleteLexDocs(spark, lex, docs.limit(1).select(col("doc_id")))
+    Pipeline.compactLexIndex(spark, lex)
+
+    val ivf = scratch("ivf")
+    val ivfBatch = vecs.filter(col("vec_id") % 20 === 7)
+    Similarity.buildIvfIndexFrom(spark, vecs.filter(col("vec_id") % 20 =!= 7), ivf)
+    Similarity.addPqToIndex(spark, ivf)
+    Similarity.appendToIvfIndex(spark, ivf, ivfBatch, Some("b1"))
+    Similarity.addPqToIndex(spark, ivf) // the delta repair
+    Similarity.compactIvfIndex(spark, ivf)
+    Similarity.addPqToIndex(spark, ivf) // the full re-derive
+
+    val store = scratch("store")
+    val storeBatch = docs.filter(col("doc_id") % 20 === 7)
+    Similarity.buildNearDupIndex(spark, docs.filter(col("doc_id") % 20 =!= 7), store)
+    Similarity.appendToNearDupIndex(spark, store, storeBatch, Some("b1"))
+    Similarity.compactNearDupIndex(spark, store)
+
+    val state = scratch("state")
+    val t1 = docs.agg(max(col("doc_id"))).head().getLong(0) * 90 / 100
+    val slice = docs.filter(col("doc_id") > t1)
+    Training.buildPretrainState(spark, docs.filter(col("doc_id") <= t1), state)
+    Training.ingestPretrainSlice(spark, state, slice, "b1")
+    Training.tombstonePretrainDocs(spark, state, spark.read
+      .parquet(s"$state/shards/${Training.liveSlices(spark, state).head}").select(col("doc_id")).limit(1))
+    Training.compactPretrainShards(spark, state)
+
+    Seq(
+      Family("lex", lex, "lex", () => Pipeline.lexSegmentCount(spark, lex),
+        () => Pipeline.sparseScoreIndexed(spark, lex, lexBatch.select(col("doc_id"), col("text")))
+          .collect().toSet,
+        Some(() => Pipeline.appendLexIndex(spark, lex, lexBatch, Some("b1")))),
+      Family("ivf", ivf, "ivf", () => Similarity.ivfCodebook(spark, ivf),
+        () => count(Similarity.liveVectorsPath(spark, ivf)),
+        Some(() => Similarity.appendToIvfIndex(spark, ivf, ivfBatch, Some("b1")))),
+      Family("pq", ivf, "pq", () => Similarity.livePqMeta(spark, ivf).get,
+        () => Similarity.livePqMeta(spark, ivf).get, None),
+      Family("store", store, "store", () => Similarity.nearDupTablePath(spark, store, "pairs"),
+        () => Seq("shingles", "bands", "pairs")
+          .map(t => count(Similarity.nearDupTablePath(spark, store, t))),
+        Some(() => Similarity.appendToNearDupIndex(spark, store, storeBatch, Some("b1")))),
+      Family("state", state, "state", () => Training.liveSlices(spark, state),
+        () => Training.readPretrainShards(spark, state).collect().toSet,
+        Some(() => Training.ingestPretrainSlice(spark, state, slice, "b1"))))
+  }
+
+  /** (cell, centroid) rows of an IVF index's codebook, by cell. */
+  private def centroidsOf(idx: String): Seq[(Int, Array[Float])] = {
+    val cb = Similarity.ivfCodebook(spark, idx)
+    (0 until cb.k).map(i => (i, cb.flat.slice(i * cb.dim, (i + 1) * cb.dim)))
+  }
+
   test("B16 streaming replay = B15 batch agg minus watermark-open windows (self-oracle, SURVEY B16)") {
     // append mode emits only windows the final watermark (max ts - 10 min)
     // has closed; the open tail windows are withheld, everything else must
@@ -397,8 +470,8 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
 
   test("C2 incremental semantic dedup over a constant-population index: drops match the flat index") {
     // index built under graft.semdedup.cellPop persists the flat global
-    // sub-centroid table (legacy readers unchanged) PLUS the coarse
-    // codebook (centroids2), and the incremental probe goes
+    // sub-centroid codebook (flat readers unchanged) PLUS the coarse
+    // codebook, and the incremental probe goes
     // hierarchical. The planted-twin drop set must match the flat
     // index's exactly at this scale.
     val e = Relational.table(spark, dir, "embeddings")
@@ -416,7 +489,7 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     spark.conf.set("graft.semdedup.cellPop", "100")
     try {
       Similarity.buildIvfIndexFrom(spark, corpus, popIdx)
-      assert(graft.ops.IndexMeta.exists(spark, s"$popIdx/centroids2/_SUCCESS"),
+      assert(Similarity.ivfCodebook(spark, popIdx).coarse.isDefined,
         "two-level build did not persist the coarse codebook")
       val popped = Similarity.dedupSemanticIncremental(spark, popIdx, arrivals)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -427,7 +500,7 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     // and a √n rebuild over the two-level index retires the coarse
     // codebook so the flat probe resumes
     Similarity.buildIvfIndexFrom(spark, corpus, popIdx)
-    assert(!graft.ops.IndexMeta.exists(spark, s"$popIdx/centroids2/_SUCCESS"),
+    assert(Similarity.ivfCodebook(spark, popIdx).coarse.isEmpty,
       "sqrt-n rebuild left a stale coarse codebook")
   }
 
@@ -489,10 +562,9 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     //     to different frozen cells (the geometry a distribution shift
     //     creates when frozen cells cut through new-region modes);
     // (b) a far bulk (each centroid displaced by a uniform per-dim
-    //     shift sized from the build's own quantstats baseline, so the
+    //     shift sized from the build's own quantizer baseline, so the
     //     batch mean lands ~50× it) that carries the drift mass.
-    val cents = spark.read.parquet(s"$idx/centroids").collect()
-      .map(r => (r.getInt(0), r.getSeq[Float](1).map(_.toDouble).toArray)).sortBy(_._1)
+    val cents = centroidsOf(idx).map { case (c, v) => (c, v.map(_.toDouble)) }
     def d2(a: Array[Double], b: Array[Double]): Double = {
       var s = 0.0; var i = 0
       while (i < a.length) { val d = a(i) - b(i); s += d * d; i += 1 }
@@ -521,8 +593,7 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
       (900000L + i, q.map(_.toFloat)) }
     val twins = modes.zipWithIndex.map { case ((_, t), i) =>
       (910000L + i, t.map(_.toFloat)) }
-    val baseMean = spark.read.parquet(
-      IndexMeta.requireLive(spark, idx, "quantstats")).head().getDouble(0)
+    val baseMean = Similarity.ivfHeader(spark, idx, "the spec").meanSqDist
     val shift = math.sqrt(60.0 * baseMean / cents.head._2.length)
     val bulk = (0 until 100).map { j =>
       (920000L + j, cents(j % cents.length)._2.map(x => (x + shift).toFloat))
@@ -581,13 +652,6 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     // idempotent at the new file count (unless still over the bound)
     assert(!Similarity.compactIvfIndexIfFragmented(spark, idx, maxFiles = after))
     assert(Similarity.annIvfIndexed(spark, dir, idx).collect().length === 10)
-    // near-dup store trigger: same shape
-    val nIdx = java.nio.file.Files.createTempDirectory("graft_cadence_nd_spec").toString
-    val docs = Relational.table(spark, dir, "documents")
-    Similarity.buildNearDupIndex(spark, docs.filter(col("doc_id") % 20 =!= 7), nIdx)
-    Similarity.appendToNearDupIndex(spark, nIdx, docs.filter(col("doc_id") % 20 === 7))
-    assert(Similarity.compactNearDupIndexIfFragmented(spark, nIdx, maxFiles = 1))
-    assert(!Similarity.compactNearDupIndexIfFragmented(spark, nIdx, maxFiles = 4096))
   }
 
   test("probe dispatch: broadcast and shuffle_hash probe plans agree") {
@@ -992,21 +1056,24 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     assert("PartitionFilters: \\[[^\\]]*cell[^\\]]*\\]".r.findFirstIn(plan).isDefined,
       s"cell IN (...) did not become a partition filter:\n$plan")
     // build-once contract: the registry wrapper must NOT rebuild an
-    // existing index (centroids mtime unchanged across a second query).
+    // existing index (no cache dir appears and no live header generation
+    // moves across a second query).
     // The wrapper keys its dir by data-dir AND corpus fingerprint —
-    // discover it by prefix rather than re-deriving the fingerprint
+    // discover the cache dirs by prefix rather than re-deriving the
+    // fingerprint (the index root may also hold dirs of other layouts)
     import scala.jdk.CollectionConverters._
     val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    Similarity.queries("c3_ann_indexed")(spark, dir).collect()
-    val wrapperDir = java.nio.file.Files
+    def liveIvfGens() = java.nio.file.Files
       .list(java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")))
       .iterator().asScala
       .filter(_.getFileName.toString.startsWith(s"graft_ivf_index_${key}_"))
-      .toSeq.sortBy(p => -java.nio.file.Files.getLastModifiedTime(p).toMillis).head
-    val mtime1 = java.nio.file.Files.getLastModifiedTime(wrapperDir.resolve("centroids"))
+      .map(p => p.toString -> IndexMeta.liveGen(spark, p.toString, "ivf").map(_.getName))
+      .toMap
     Similarity.queries("c3_ann_indexed")(spark, dir).collect()
-    val mtime2 = java.nio.file.Files.getLastModifiedTime(wrapperDir.resolve("centroids"))
-    assert(mtime1 == mtime2, "second query must reuse the index, not rebuild it")
+    val gens1 = liveIvfGens()
+    assert(gens1.values.exists(_.isDefined), s"no cache dir holds a live ivf generation: $gens1")
+    Similarity.queries("c3_ann_indexed")(spark, dir).collect()
+    assert(liveIvfGens() == gens1, "second query must reuse the index, not rebuild it")
     // staleness guard: a corpus change at the same path must re-key the
     // index. Exercised on a WRITABLE copy of the corpus (testdata is
     // read-only): same path, touched embeddings mtime → new fingerprint
@@ -1067,8 +1134,7 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     Similarity.appendToIvfIndex(spark, indexDir, appendix)
     // 1. every appended vector was filed in its TRUE nearest cell —
     //    argmin squared-L2 recomputed independently, driver-side
-    val cents = spark.read.parquet(s"$indexDir/centroids")
-      .collect().map(r => (r.getInt(0), r.getSeq[Float](1).toArray)).sortBy(_._1)
+    val cents = centroidsOf(indexDir)
     val appended = spark.read.parquet(Similarity.liveVectorsPath(spark, indexDir))
       .filter(col("vec_id") % 20 === 7 || col("vec_id") === 999999L)
       .select(col("vec_id"), col("embedding"), col("cell"))
@@ -1351,33 +1417,27 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("C3b append: an empty centroids table fails loudly before the ids sidecar is touched") {
-    // a 0-row centroids table empties the guard's cross join, so the
-    // live-id clash check sees no row; the append must refuse before
-    // its first write instead of growing the sidecar and then failing
+    // a codebook with no centroids cannot place a vector: the append
+    // must refuse before its first write instead of growing the
+    // sidecar and then failing
     val indexDir = java.nio.file.Files.createTempDirectory("graft_ivf_nocents_spec").toString
     val e = Relational.table(spark, dir, "embeddings")
     Similarity.buildIvfIndexFrom(spark,
       e.filter(col("vec_id") < 300).select(col("vec_id"), col("embedding")), indexDir)
-    val cents = s"$indexDir/centroids"
-    val schema = spark.read.parquet(cents).schema
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      .write.mode("overwrite").parquet(cents)
+    val codebook = s"$indexDir/${Similarity.ivfHeader(spark, indexDir, "the spec").codebook}"
+    IndexMeta.delete(spark, codebook)
+    IndexMeta.writeSmallFile(spark, codebook, Array.emptyByteArray)
     val g = IndexMeta.liveGen(spark, indexDir, "ids").get.toString
     def sidecar() = (IndexMeta.countUnder(spark, g, ".parquet"),
       spark.read.parquet(g).collect().map(_.getLong(0)).toSet)
     val before = sidecar()
     val batch = e.filter(col("vec_id") >= 300 && col("vec_id") < 310)
       .select(col("vec_id"), col("embedding"))
-    Seq("true", "false").foreach { check =>
-      spark.conf.set("graft.index.appendIdCheck", check)
-      try {
-        val ex = intercept[IllegalArgumentException] {
-          Similarity.appendToIvfIndex(spark, indexDir, batch)
-        }
-        assert(ex.getMessage.contains("centroids"), ex.getMessage)
-      } finally spark.conf.unset("graft.index.appendIdCheck")
-      assert(sidecar() == before, s"appendIdCheck=$check: the ids sidecar changed")
+    val ex = intercept[IllegalArgumentException] {
+      Similarity.appendToIvfIndex(spark, indexDir, batch)
     }
+    assert(ex.getMessage.contains("centroids"), ex.getMessage)
+    assert(sidecar() == before, "the ids sidecar changed")
   }
 
   test("C3 IVF kNN join: high recall@3 vs the brute-force join") {
@@ -1679,18 +1739,6 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     // luminance mass must sit where the white pixels are
     assert(f.features.sum > w * h / 2 * 0.8 && f.features.sum < w * h * 0.7,
       s"00dc luminance mass implausible for a half-white frame: ${f.features.toSeq}")
-  }
-
-  test("C6 metadata transforms: resize + frame sampling plans") {
-    val media = Multimodal.attachMedia(Relational.table(spark, dir, "documents"))
-    val resized = Multimodal.resizeMeta(media, 64)
-    assert(resized.agg(max(greatest(col("width"), col("height")))).head().getInt(0) <= 64)
-    val planned = Multimodal.frameSamplePlan(media, stride = 5, maxFrames = 4)
-    val vids = planned.filter(col("kind") === "video")
-      .select(col("frame_indices")).head().getSeq[Int](0)
-    assert(vids == Seq(0, 5, 10, 15))
-    val nonVids = planned.filter(col("kind") =!= "video" && size(col("frame_indices")) =!= 0).count()
-    assert(nonVids == 0)
   }
 
   test("CensusCadence: lists only on crossings, never misses one, bound is conservative") {
@@ -2321,11 +2369,99 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     val before = scores()
     val (next, _) = IndexMeta.nextGen(spark, idx, "lex")
     IndexMeta.writeSmallFile(spark, s"$next/header.json",
-      h.copy(nDocs = h.nDocs * 2, segments = Seq("seg_missing")).toJson)
+      h.copy(nDocs = h.nDocs * 2, segments = Seq("seg_missing")).toJson.toString.getBytes("UTF-8"))
     assert(IndexMeta.requireLive(spark, idx, "lex") == gen,
       "an uncommitted header resolved as the live generation")
     assert(Pipeline.lexHeader(spark, IndexMeta.requireLive(spark, idx, "lex"), "the spec") == h)
     assert(scores() == before, "an uncommitted header changed the served scores")
+    // every other family resolves its header by the same rule: an
+    // uncommitted next generation whose header names nothing valid
+    // changes neither the live header nor what the family serves
+    families.filter(_.name != "lex").foreach { f =>
+      val live = IndexMeta.requireLive(spark, f.root, f.gen)
+      val header = IndexMeta.header(spark, f.root, f.gen, "the spec").toString
+      val served = f.contents()
+      val (orphan, _) = IndexMeta.nextGen(spark, f.root, f.gen)
+      IndexMeta.writeSmallFile(spark, s"$orphan/header.json", "{}".getBytes("UTF-8"))
+      try {
+        assert(IndexMeta.requireLive(spark, f.root, f.gen) == live,
+          s"${f.name}: an uncommitted header resolved as the live generation")
+        assert(IndexMeta.header(spark, f.root, f.gen, "the spec").toString == header)
+        assert(f.contents() == served, s"${f.name}: an uncommitted header changed what it serves")
+      } finally IndexMeta.delete(spark, orphan)
+    }
+  }
+
+  // -------------------- the one commit protocol, over every family
+
+  test("Index header: every family's metadata read runs zero Spark jobs") {
+    families.foreach { f =>
+      f.read() // warm: first-touch class loading is not a job either way
+      val (_, jobs) = graft.tools.JobCounter.jobsDuring(spark)(f.read())
+      assert(jobs === 0, s"${f.name}: the metadata read ran $jobs Spark jobs")
+    }
+  }
+
+  test("Index header: no marker file or metadata table exists after build, append and compaction") {
+    import scala.jdk.CollectionConverters._
+    val retired = ("_appended_.*|_slice_.*|_built|centroids.*|quantstats\\.g.*|" +
+      "pqmeta\\.g.*|meta\\.g.*|shardman\\.g.*").r
+    families.map(_.root).distinct.foreach { root =>
+      val stale = java.nio.file.Files.walk(java.nio.file.Paths.get(root)).iterator().asScala
+        .map(_.getFileName.toString).filter(retired.matches).toSeq
+      assert(stale.isEmpty, s"$root holds entries of a retired layout: ${stale.distinct}")
+    }
+  }
+
+  test("Index header: replaying an applied batch id is a no-op for every family with appends") {
+    families.flatMap(f => f.replay.map(f -> _)).foreach { case (f, replay) =>
+      val gen = IndexMeta.requireLive(spark, f.root, f.gen)
+      val before = f.contents()
+      replay()
+      assert(IndexMeta.requireLive(spark, f.root, f.gen) === gen,
+        s"${f.name}: the replay committed a new generation")
+      assert(f.contents() === before, s"${f.name}: the replay changed the served contents")
+    }
+  }
+
+  test("Index header: a root of a layout before the header is refused with a rebuild message") {
+    // each family's old layout, reduced to what its readers resolved:
+    // committed table generations and no header
+    val oldLayouts = Seq(
+      ("ivf", "vectors", (d: String) => Similarity.ivfCodebook(spark, d), "buildIvfIndexFrom"),
+      ("store", "shingles", (d: String) => Similarity.nearDupTablePath(spark, d, "pairs"),
+        "buildNearDupIndex"),
+      ("state", "meta", (d: String) => Training.liveSlices(spark, d), "buildPretrainState"))
+    oldLayouts.foreach { case (name, table, read, rebuild) =>
+      val d = java.nio.file.Files.createTempDirectory(s"graft_old_$name").toString
+      IndexMeta.createMarker(spark, s"$d/${IndexMeta.genName(table, 0)}/_SUCCESS")
+      val e = intercept[RuntimeException](read(d))
+      assert(e.getMessage.contains(s"no committed $name generation") &&
+        e.getMessage.contains(rebuild), s"$name: ${e.getMessage}")
+    }
+  }
+
+  test("Index header: a cached index whose header its reader refuses is rebuilt, not served") {
+    // a cache dir of the same corpus fingerprint can hold a header of
+    // another layout (an older or newer build of the library): the
+    // cache must rebuild it rather than hand it to a reader that fails
+    val root = java.nio.file.Files.createTempDirectory("graft_cache_root").toString
+    val src = java.nio.file.Files.createTempDirectory("graft_cache_src")
+    java.nio.file.Files.write(src.resolve("part-0.parquet"), Array[Byte](1, 2, 3))
+    var builds = 0
+    def ensure() = IndexMeta.ensureDerived(spark, src.toString, "graft_spec_cache_")(
+      p => require(IndexMeta.field(IndexMeta.header(spark, p, "t", "the spec"), "current").asBoolean))(
+      p => {
+        builds += 1
+        IndexMeta.commitGen(spark, p, "t")(_ => IndexMeta.newHeader().put("current", builds > 1))
+      })
+    def name(p: String) = new org.apache.hadoop.fs.Path(p).getName
+    spark.conf.set("graft.index.root", root)
+    try {
+      val first = name(ensure()) // commits a header its reader refuses
+      assert(name(ensure()) === first && builds === 2, "an unreadable cached header was served")
+      assert(name(ensure()) === first && builds === 2, "a readable cached index was rebuilt")
+    } finally spark.conf.unset("graft.index.root")
   }
 
   test("C43c header: a parquet-trio generation is refused with the refit message") {
@@ -2524,51 +2660,6 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     assert(!IndexMeta.exists(spark, s"$idx/seg_crashed"),
       "compaction's no-op path left the crash orphan on disk")
     assert(lexTables(idx) == before, "the sweep changed the live tables")
-  }
-
-  test("C43 OOV drift policy: in-distribution no-op; drifted batch refits and the sparse leg sees the new vocab") {
-    // the rebuildIvfIfDrifted rehearsal on the lexical side: blind →
-    // drift fires → refit over the current corpus → retrieval works,
-    // and the refit resets the maintenance side-state (tombstones,
-    // batch markers, orphan segments) a bare fit would leave dangling
-    import spark.implicits._
-    val docs = Relational.table(spark, dir, "documents")
-      .select(col("doc_id"), col("text"))
-    val alien = (0 until 50)
-      .map(i => (900000L + i, s"zzdrift$i zzcommon zzdrift${i % 7}"))
-      .toDF("doc_id", "text")
-    val idx = Similarity.freshScratch(spark, "graft_c43_drift_")
-    Pipeline.fitLexIndex(docs, idx)
-    Pipeline.deleteLexDocs(spark, idx,
-      docs.limit(1).select(col("doc_id"))) // pending tombstone at refit time
-    val gen0 = IndexMeta.requireLive(spark, idx, "lex")
-    // in-distribution batch: measure ≈ 0, policy is a no-op
-    assert(!Pipeline.refitLexIfDrifted(spark, idx, docs, docs.limit(4)),
-      "in-distribution batch triggered a refit")
-    assert(IndexMeta.requireLive(spark, idx, "lex") == gen0,
-      "no-op path committed a new generation")
-    // drifted batch (alien vocabulary): the sparse leg is blind to it
-    val queries = alien.limit(3)
-    assert(Pipeline.sparseScoreIndexed(spark, idx, queries).count() == 0,
-      "alien-vocab queries retrieved documents from the stale index")
-    // policy fires; the refit corpus is the current system of record
-    assert(Pipeline.refitLexIfDrifted(spark, idx, docs.unionByName(alien), queries),
-      "fully-OOV batch did not trigger the refit")
-    val after = Pipeline.sparseScoreIndexed(spark, idx, queries)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(after.nonEmpty, "refit index is still blind to the new vocabulary")
-    assert(after.forall { case (q, d) => q != d && d >= 900000L },
-      s"alien queries must retrieve alien twins only: ${after.take(5).mkString(", ")}")
-    // side-state reset: the retired lineage's tombstones are both
-    // structurally invisible (lineage-keyed paths) AND reclaimed;
-    // exactly the live segment remains, old segments GC'd
-    assert(!IndexMeta.list(spark, idx)
-        .exists(_.getPath.getName.startsWith("tombstones_")),
-      "refit left the superseded lineage's tombstones on disk")
-    assert(Pipeline.lexSegmentCount(spark, idx) == 1)
-    val segDirs = IndexMeta.list(spark, idx)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("seg_"))
-    assert(segDirs.size == 1, s"orphan segments not GC'd: ${segDirs.map(_.getPath.getName)}")
   }
 
   test("C43 lineage: a refit retires old tombstones and batch markers ATOMICALLY with its commit") {

@@ -524,10 +524,10 @@ class TrainingSpec extends AnyFunSuite with SparkTestSession {
     val slice = docs.filter(col("doc_id") > t1)
     Training.ingestPretrainSlice(spark, st, slice, "s1")
     val before = keptIds(st)
-    val metaBefore = IndexMeta.requireLive(spark, st, "meta")
+    val stateBefore = IndexMeta.requireLive(spark, st, "state")
     Training.ingestPretrainSlice(spark, st, slice, "s1") // replay
     assert(keptIds(st) == before, "slice replay changed the shard contents")
-    assert(IndexMeta.requireLive(spark, st, "meta") == metaBefore,
+    assert(IndexMeta.requireLive(spark, st, "state") == stateBefore,
       "slice replay advanced the id watermark")
     // a slice at-or-below the watermark is rejected loudly, not
     // silently double-curated
@@ -537,18 +537,18 @@ class TrainingSpec extends AnyFunSuite with SparkTestSession {
     assert(e.getMessage.contains("watermark"), e.getMessage)
   }
 
-  test("C33b: an empty slice before the state exists is marked done, not refused") {
+  test("C33b: an empty slice before the state exists is a no-op, not refused") {
     // streaming replay can deliver an empty slice before the build has
     // committed the state's id watermark: the empty slice is a no-op
-    // recorded by its marker, while a non-empty one still fails loudly
+    // that writes nothing, while a non-empty one still fails loudly
     val docs = Relational.table(spark, "/root/testdata/sf0.001", "documents")
     val st = Similarity.freshScratch(spark, "graft_c33b_empty_")
     Training.ingestPretrainSlice(spark, st, docs.filter(lit(false)), "s0")
-    assert(IndexMeta.exists(spark, s"$st/_slice_s0"), "the empty slice left no marker")
+    assert(IndexMeta.list(spark, st).isEmpty, "the empty slice wrote to the state dir")
     val e = intercept[RuntimeException] {
       Training.ingestPretrainSlice(spark, st, docs.limit(3), "s1")
     }
-    assert(e.getMessage.contains("no committed meta generation"), e.getMessage)
+    assert(e.getMessage.contains("no committed state generation"), e.getMessage)
   }
 
   test("C33c: streamed pretrain ingest ≡ slice-wise one-shot at the same boundaries") {
@@ -650,20 +650,20 @@ class TrainingSpec extends AnyFunSuite with SparkTestSession {
     Training.tombstonePretrainDocs(spark, st, sliceDocs.toSeq.toDF("doc_id"))
     Training.compactPretrainShards(spark, st)
     assert(!Training.liveSlices(spark, st).exists(_.startsWith("slice_s1")),
-      "a fully-taken-down slice stayed in the manifest")
+      "a fully-taken-down slice stayed in the state header")
     assert(keptIds(st).intersect(sliceDocs).isEmpty,
       "whole-slice takedown left rows behind")
     assert(shardCensus(st).nonEmpty, "census must stay readable after the drop")
     // ids now physically gone (or never shipped at all): a re-delete
     // creates no table, and the next compaction is gc-only — the
-    // manifest generation does not move
+    // state generation does not move
     Training.tombstonePretrainDocs(spark, st, sliceDocs.toSeq.toDF("doc_id"))
     assert(!IndexMeta.exists(spark, s"$st/shards/tombstones"),
       "takedown of non-live ids created a tombstone table")
-    val g = IndexMeta.requireLive(spark, s"$st/shards", "shardman")
+    val g = IndexMeta.requireLive(spark, st, "state")
     Training.compactPretrainShards(spark, st)
-    assert(IndexMeta.requireLive(spark, s"$st/shards", "shardman") == g,
-      "a no-op compaction committed a new manifest generation")
+    assert(IndexMeta.requireLive(spark, st, "state") == g,
+      "a no-op compaction committed a new state generation")
   }
 
   test("C33d: taken-down content stays banned — an identical re-crawl is dropped by ingest") {
@@ -691,9 +691,9 @@ class TrainingSpec extends AnyFunSuite with SparkTestSession {
 
   test("C33d: an uncommitted slice dir is invisible to readers and swept by compaction") {
     // the lex crash-orphan pin on the shard tree: a crash between the
-    // slice write and the manifest commit leaves a slice_* dir no
-    // manifest references — readers resolve the manifest, and the
-    // no-op compaction path sweeps the orphan
+    // slice write and the state commit leaves a slice_* dir no header
+    // references — readers resolve the header, and the no-op
+    // compaction path sweeps the orphan
     val dir = "/root/testdata/sf0.001"
     val docs = Relational.table(spark, dir, "documents")
     val st = Similarity.freshScratch(spark, "graft_c33d_orph_")
