@@ -208,10 +208,20 @@ private[graft] object IndexMeta {
     * (how to get a current layout). */
   def header(spark: SparkSession, dir: String, name: String, what: String,
              rebuild: String = "rebuild the index"): ObjectNode =
-    headerAt(spark, liveGen(spark, dir, name).getOrElse(sys.error(
-      s"no committed $name generation under $dir — $what cannot use it: not " +
-        s"an index of this kind or a build that crashed before its commit; $rebuild"))
-      .toString, what, rebuild)
+    headerOpt(spark, dir, name, what, rebuild)
+      .getOrElse(noCommittedGen(dir, name, what, rebuild))
+
+  /** [[header]] for a family that may not exist yet: None when `dir`
+    * has no committed `<name>` generation (a header-less one is still
+    * refused). */
+  def headerOpt(spark: SparkSession, dir: String, name: String, what: String,
+                rebuild: String): Option[ObjectNode] =
+    liveGen(spark, dir, name).map(g => headerAt(spark, g.toString, what, rebuild))
+
+  /** The refusal of [[header]] when `dir` has no committed `<name>`. */
+  def noCommittedGen(dir: String, name: String, what: String, rebuild: String): Nothing =
+    sys.error(s"no committed $name generation under $dir — $what cannot use it: not " +
+      s"an index of this kind or a build that crashed before its commit; $rebuild")
 
   /** The header of generation `g` (see [[header]]). */
   def headerAt(spark: SparkSession, g: String, what: String, rebuild: String): ObjectNode =
@@ -246,9 +256,9 @@ private[graft] object IndexMeta {
     * dir, a layout from before the header protocol, or a header of any
     * other layout is never served and gets rebuilt. Concurrent builders
     * each write their own appId-suffixed dir; readers take any ready
-    * one; ready dirs of stale fingerprints of the same prefix are GC'd
-    * after a successful build. Shared by the IVF, RAG-chunk, and
-    * lexical index wrappers. */
+    * one; every dir of a stale fingerprint of the same prefix, ready or
+    * not, is GC'd after a successful build. Shared by the IVF, RAG-chunk,
+    * and lexical index wrappers. */
   def ensureDerived(spark: SparkSession, sourceDir: String, prefix: String)
                    (readHeader: String => Any)(build: String => Unit): String = {
     def ready(p: String) = scala.util.Try(readHeader(p)).isSuccess
@@ -257,20 +267,25 @@ private[graft] object IndexMeta {
       .sorted.mkString("|").hashCode.toHexString
     val tmpRoot = spark.conf.getOption("graft.index.root")
       .getOrElse(System.getProperty("java.io.tmpdir"))
-    list(spark, tmpRoot)
-      .filter(_.getPath.getName.startsWith(s"$prefix${fp}_"))
-      .map(_.getPath.toString).sorted.find(ready)
-      .getOrElse {
-        val mine = s"$tmpRoot/$prefix${fp}_${spark.sparkContext.applicationId}"
-        build(mine)
-        list(spark, tmpRoot)
-          .filter { st =>
-            val n = st.getPath.getName
-            n.startsWith(prefix) && !n.startsWith(s"$prefix${fp}_") &&
-              ready(st.getPath.toString)
-          }
-          .foreach(st => delete(spark, st.getPath.toString))
-        mine
+    // a cache dir is named `<prefix><hex fp>_<app id>`, the app id with
+    // `_` made `-`: a dir of another corpus whose key merely starts with
+    // this one (`<key>_2_…`) then never parses as one of this prefix
+    val cacheDir = (java.util.regex.Pattern.quote(prefix) + "([0-9a-f]+)_[^_]+").r
+    val dirs = list(spark, tmpRoot).flatMap { st =>
+      st.getPath.getName match {
+        case cacheDir(f) => Some(f -> st.getPath.toString)
+        case _ => None
       }
+    }
+    dirs.collect { case (`fp`, p) => p }.sorted.find(ready).getOrElse {
+      val mine = s"$tmpRoot/$prefix${fp}_${spark.sparkContext.applicationId.replace('_', '-')}"
+      build(mine)
+      // a dir of another fingerprint is garbage whether or not it is
+      // ready — its corpus changed, so nothing serves it again (stale
+      // builds, crashed ones, layouts the reader refuses). Unready dirs
+      // of THIS fingerprint may be concurrent builds and stay.
+      dirs.collect { case (f, p) if f != fp => p }.foreach(delete(spark, _))
+      mine
+    }
   }
 }

@@ -1246,24 +1246,6 @@ object Pipeline {
     if (nq == 0L) 0.0 else (nq - kn).toDouble / nq
   }
 
-  /** Full REFIT of a standing lex index in place: fit the next
-    * generation over `corpus` (the system of record). The maintenance
-    * side-state of the superseded life — pending tombstones (they
-    * reference the OLD index's view; the refit corpus decides what
-    * exists now, and a stale tombstone would silently hide a
-    * re-indexed doc) and the applied batch ids (refit resets ingest
-    * history — replaying an old batchId against the new index must
-    * append, not no-op) — is retired ATOMICALLY by the commit itself:
-    * tombstones are keyed by the lineage id the fit rotates and the
-    * batch ids ride the superseded header, so there is no
-    * crash window where the new generation pairs with the old life's
-    * side-state. The trailing GC only reclaims the now-unreferenced
-    * files; a crash before it costs disk, never correctness. */
-  def refitLexIndex(spark: SparkSession, corpus: DataFrame, lexDir: String): Unit = {
-    fitLexIndex(corpus, lexDir)
-    gcLexIndex(spark, lexDir)
-  }
-
   /** Reclaim everything the LIVE generation does not reference:
     * `seg_*` dirs off the header (superseded inputs, crash orphans) and
     * tombstone tables of retired lineages. Purely a disk-space concern — readers resolve the

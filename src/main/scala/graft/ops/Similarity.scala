@@ -1826,8 +1826,7 @@ object Similarity {
   /** The committed sidecar state, if any: the live `pq.gN` header
     * (one small-file read, no Spark job). */
   private[graft] def livePqMeta(spark: SparkSession, indexDir: String): Option[PqMeta] =
-    IndexMeta.liveGen(spark, indexDir, "pq").map { g =>
-      val o = IndexMeta.headerAt(spark, g.toString, "the PQ sidecar", "run addPqToIndex")
+    IndexMeta.headerOpt(spark, indexDir, "pq", "the PQ sidecar", "run addPqToIndex").map { o =>
       PqMeta(IndexMeta.field(o, "vec_gen").asText, IndexMeta.strings(o, "vec_files").toSet,
         IndexMeta.strings(o, "codes_gens").sorted, IndexMeta.field(o, "books_gen").asText)
     }
@@ -2154,8 +2153,12 @@ object Similarity {
     def name(p: String) = new org.apache.hadoop.fs.Path(p).getName
     commitIvf(spark, indexDir) { g =>
       // the codebooks are named for the build's generation (its
-      // lineage) and written once: appends and compactions keep them
+      // lineage) and written once: appends and compactions keep them.
+      // `g` is uncommitted, so no header names these paths; a build that
+      // crashed before its header landed left them behind under the same
+      // name, and they are cleared first so the re-run can write them
       val lineage = name(g)
+      Seq("codebook", "coarse").foreach(b => IndexMeta.delete(spark, s"$indexDir/${b}_$lineage.f32"))
       IndexMeta.writeSmallFile(spark, s"$indexDir/codebook_$lineage.f32", floatBytes(cb.flat))
       cb.coarse.foreach(co =>
         IndexMeta.writeSmallFile(spark, s"$indexDir/coarse_$lineage.f32", floatBytes(co)))
@@ -3422,8 +3425,8 @@ object Similarity {
     * Concurrent builders of the same fingerprint build side by side
     * (content is deterministic — the dirs are interchangeable) and
     * readers take the first ready one. A successful build then GCs
-    * READY indexes of superseded fingerprints of the same data dir
-    * (in-flight builds are not ready and are never touched). */
+    * every index dir of a superseded fingerprint of the same data dir,
+    * ready or not (in-flight builds of the current fingerprint stay). */
   private[ops] def ensureIndex(spark: SparkSession, dir: String): String = {
     val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
     IndexMeta.ensureDerived(spark, s"$dir/embeddings.parquet",

@@ -1020,15 +1020,16 @@ object Training {
   def ingestPretrainSlice(spark: SparkSession, stateDir: String,
                           slice: DataFrame, sliceId: String): Unit = {
     val tag = sliceId.replaceAll("[^A-Za-z0-9._-]", "_")
-    val live = IndexMeta.liveGen(spark, stateDir, "state").map(g =>
-      parseState(IndexMeta.headerAt(spark, g.toString, "slice ingest", stateRebuild)))
+    val live = IndexMeta.headerOpt(spark, stateDir, "state", "slice ingest", stateRebuild)
+      .map(parseState)
     if (live.exists(_.applied.contains(tag))) return
     val d = Scale.pin(slice.select(col("doc_id"), col("text"), col("lang"),
       col("source"), col("n_chars")))
     val mm = d.agg(min(col("doc_id")), max(col("doc_id"))).head()
     if (mm.isNullAt(0)) return
     // a non-empty slice needs the state: refuse with the contract error
-    val st = live.getOrElse(stateHeader(spark, stateDir, "slice ingest"))
+    val st = live.getOrElse(
+      IndexMeta.noCommittedGen(stateDir, "state", "slice ingest", stateRebuild))
     val prevMax = st.maxDocId
     require(mm.getLong(0) > prevMax,
       s"arrival slice carries doc_id ${mm.getLong(0)} ≤ the state's id " +

@@ -2459,9 +2459,40 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     spark.conf.set("graft.index.root", root)
     try {
       val first = name(ensure()) // commits a header its reader refuses
+      // before the rebuild, plant the dirs its GC must sort: of a stale
+      // fingerprint (one ready, one not — a crash or a refused layout),
+      // an unready one of this fingerprint (maybe a concurrent build),
+      // and one of another corpus whose key starts with this prefix
+      val fp = first.stripPrefix("graft_spec_cache_").takeWhile(_ != '_')
+      val staleReady = s"$root/graft_spec_cache_0_local-1"
+      IndexMeta.commitGen(spark, staleReady, "t")(_ => IndexMeta.newHeader().put("current", true))
+      val planted = Seq("0_local-2", s"${fp}_local-3", s"2_${fp}_local-4")
+        .map(n => s"$root/graft_spec_cache_$n")
+      planted.foreach(d => IndexMeta.writeSmallFile(spark, s"$d/part-0", Array[Byte](1)))
       assert(name(ensure()) === first && builds === 2, "an unreadable cached header was served")
       assert(name(ensure()) === first && builds === 2, "a readable cached index was rebuilt")
+      val left = IndexMeta.list(spark, root).map(_.getPath.getName).toSet
+      assert(left === Set(first, s"graft_spec_cache_${fp}_local-3", s"graft_spec_cache_2_${fp}_local-4"),
+        "the rebuild's GC must delete every stale-fingerprint dir, ready or not, and nothing else")
     } finally spark.conf.unset("graft.index.root")
+  }
+
+  test("Index header: an IVF rebuild succeeds over codebook files a crashed build left") {
+    // a build that failed after writing its codebooks and before its
+    // header leaves `codebook_<lineage>.f32` with no generation dir; the
+    // re-run opens the same lineage and must not trip over them
+    val vecs = Relational.table(spark, dir, "embeddings").select(col("vec_id"), col("embedding"))
+    val idx = Similarity.freshScratch(spark, "graft_ivf_orphan_cb_")
+    val lineage = IndexMeta.genName("ivf", 0)
+    Seq("codebook", "coarse").foreach(b =>
+      IndexMeta.writeSmallFile(spark, s"$idx/${b}_$lineage.f32", Array.fill[Byte](8)(7)))
+    Similarity.buildIvfIndexFrom(spark, vecs.filter(col("vec_id") % 20 =!= 7), idx)
+    val h = Similarity.ivfHeader(spark, idx, "the spec")
+    assert(h.lineage === lineage && h.codebook === s"codebook_$lineage.f32" && h.coarse.isEmpty)
+    val ivf = families.find(_.name == "ivf").get.root // built from the same vectors
+    assert(Similarity.ivfCodebook(spark, idx).flat.sameElements(Similarity.ivfCodebook(spark, ivf).flat),
+      "the rebuilt codebook differs from a clean build's")
+    assert(!IndexMeta.exists(spark, s"$idx/coarse_$lineage.f32"), "the orphan coarse codebook survived")
   }
 
   test("C43c header: a parquet-trio generation is refused with the refit message") {
