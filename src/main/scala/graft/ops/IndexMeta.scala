@@ -37,13 +37,16 @@ import org.apache.spark.sql.SparkSession
  * ([[ensureDerived]]) treats it as not ready and rebuilds.
  *
  * Data that a header names lives beside the generation dirs and is
- * immutable once named (lex segments, IVF codebooks), or is a table
- * generation the family rewrites only into a fresh dir and swaps in
- * with the next header (IVF vectors/ids, near-dup tables, PQ
- * codes/books). Each family deletes what its live header no longer
- * names after the commit. Appends that still write into a live table
- * (IVF vectors/ids, near-dup tables) record their batch id in the
- * header they commit after the write.
+ * immutable once named: lex, IVF and near-dup segments, IVF codebooks,
+ * PQ codes/books, pretrain shard and seen-hash slices, and the BPE,
+ * BM25 and classifier tables inside their own generation dirs. An
+ * append writes a fresh segment that only the header it commits
+ * names, so the header commit is its only commit point: a crash
+ * before it leaves an orphan segment, invisible and overwritten or
+ * swept by the family's next commit. Each family deletes what its
+ * live header no longer names after the commit. Nothing is written
+ * into a live dir; the tombstone tables (lex, IVF, pretrain shards)
+ * are the one exception — a delete appends ids to them in place.
  */
 private[graft] object IndexMeta {
 
@@ -161,12 +164,13 @@ private[graft] object IndexMeta {
       .sortBy(-_._1).headOption.map(_._2.getPath)
   }
 
-  /** The live dir of `table`, or a contract error naming the index. */
-  def requireLive(spark: SparkSession, indexDir: String, table: String): String =
-    liveGen(spark, indexDir, table).getOrElse(sys.error(
-      s"no committed $table generation under $indexDir — " +
-        "not an index (build one first) or a build crashed " +
-        "before commit (re-run the build)")).toString
+  /** The live `<name>` generation dir under `dir`, refused like
+    * [[header]] when there is none — for families whose generation
+    * holds its tables and whose header is empty (BPE, BM25 stats, the
+    * quality classifier). */
+  def liveDir(spark: SparkSession, dir: String, name: String, what: String,
+              rebuild: String): String =
+    liveGen(spark, dir, name).getOrElse(noCommittedGen(dir, name, what, rebuild)).toString
 
   /** Path for the NEXT generation of `table` (max existing + 1,
     * committed or not — an uncommitted crash leftover must not be
@@ -191,32 +195,35 @@ private[graft] object IndexMeta {
     * the new generation's path, writes whatever data the generation
     * needs (inside it or beside it) and returns the header; the header
     * lands, then `_SUCCESS`, then every superseded `<name>.g*` is
-    * deleted. */
+    * deleted. Returns the committed header. */
   def commitGen(spark: SparkSession, dir: String, name: String)
-               (body: String => ObjectNode): Unit = {
+               (body: String => ObjectNode): ObjectNode = {
     val (g, old) = nextGen(spark, dir, name)
     val h = body(g)
     writeSmallFile(spark, s"$g/$HeaderFile", json.writeValueAsBytes(h))
     createMarker(spark, s"$g/$Committed")
     old.foreach(delete(spark, _))
+    h
   }
 
   /** The header of the live `<name>` generation under `dir` — one
     * small-file read on the driver, no Spark job. No committed
     * generation, or one without a header (a layout from before this
     * protocol), is refused naming `what` (the caller) and `rebuild`
-    * (how to get a current layout). */
+    * (how to get a current layout). A header without one of the
+    * `needs` fields is of an older layout of the family and is refused
+    * the same way. */
   def header(spark: SparkSession, dir: String, name: String, what: String,
-             rebuild: String = "rebuild the index"): ObjectNode =
-    headerOpt(spark, dir, name, what, rebuild)
+             rebuild: String = "rebuild the index", needs: Seq[String] = Nil): ObjectNode =
+    headerOpt(spark, dir, name, what, rebuild, needs)
       .getOrElse(noCommittedGen(dir, name, what, rebuild))
 
   /** [[header]] for a family that may not exist yet: None when `dir`
     * has no committed `<name>` generation (a header-less one is still
     * refused). */
   def headerOpt(spark: SparkSession, dir: String, name: String, what: String,
-                rebuild: String): Option[ObjectNode] =
-    liveGen(spark, dir, name).map(g => headerAt(spark, g.toString, what, rebuild))
+                rebuild: String, needs: Seq[String] = Nil): Option[ObjectNode] =
+    liveGen(spark, dir, name).map(g => headerAt(spark, g.toString, what, rebuild, needs))
 
   /** The refusal of [[header]] when `dir` has no committed `<name>`. */
   def noCommittedGen(dir: String, name: String, what: String, rebuild: String): Nothing =
@@ -224,12 +231,17 @@ private[graft] object IndexMeta {
       s"an index of this kind or a build that crashed before its commit; $rebuild")
 
   /** The header of generation `g` (see [[header]]). */
-  def headerAt(spark: SparkSession, g: String, what: String, rebuild: String): ObjectNode =
-    readSmallFile(spark, s"$g/$HeaderFile") match {
+  def headerAt(spark: SparkSession, g: String, what: String, rebuild: String,
+               needs: Seq[String] = Nil): ObjectNode = {
+    val h = readSmallFile(spark, s"$g/$HeaderFile") match {
       case Some(bytes) => json.readTree(bytes).asInstanceOf[ObjectNode]
       case None => sys.error(
         s"generation $g predates the header layout — $what cannot use it; $rebuild")
     }
+    needs.find(f => !h.has(f)).foreach(f => sys.error(
+      s"generation $g has a header of an older layout (no `$f` field) — $what cannot use it; $rebuild"))
+    h
+  }
 
   /** Field `f` of a header, refused by name when absent. */
   def field(h: ObjectNode, f: String): JsonNode =

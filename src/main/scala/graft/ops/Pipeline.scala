@@ -215,52 +215,30 @@ object Pipeline {
       |as bigint)""".stripMargin
 
   /** Resolve the live (terms, scalars) paths of a persisted BM25 stats
-    * dir. Current layout (round 13): ONE `stats.gN` generation holding
-    * `terms/` and `scalars/`, committed by a single root `_SUCCESS`
-    * marker created AFTER both tables land — so a reader can never
-    * pair a new terms table with old scalars (or vice versa), which
-    * the round-12 two-independent-generations layout allowed when a
-    * crash or a concurrent reader fell between the two commits
-    * (round-12 advice). Earlier layouts are read-compatible: the
-    * round-12 split `terms.gN`/`scalars.gN` (resolved per table —
-    * callers migrate to the unified layout at their next fit/append,
-    * which GCs the split dirs) and the pre-generation flat
-    * `terms`/`scalars`. */
-  private[graft] def bm25StatsPaths(spark: SparkSession, statsDir: String): (String, String) =
-    IndexMeta.liveGen(spark, statsDir, "stats") match {
-      case Some(g) => (s"$g/terms", s"$g/scalars")
-      case None if IndexMeta.liveGen(spark, statsDir, "terms").isDefined =>
-        (IndexMeta.requireLive(spark, statsDir, "terms"),
-          IndexMeta.requireLive(spark, statsDir, "scalars"))
-      case None if IndexMeta.exists(spark, s"$statsDir/terms") =>
-        (s"$statsDir/terms", s"$statsDir/scalars")
-      case None => sys.error(
-        s"no committed stats generation under $statsDir — not a BM25 " +
-          "stats dir (fit one first) or a fit crashed before commit " +
-          "(re-run the fit)")
-    }
+    * dir: ONE `stats.gN` generation holding `terms/` and `scalars/`,
+    * committed by [[IndexMeta.commitGen]] AFTER both tables land — so
+    * a reader can never pair a new terms table with old scalars (or
+    * vice versa). Any other layout is refused with the refit message. */
+  private[graft] def bm25StatsPaths(spark: SparkSession, statsDir: String): (String, String) = {
+    val g = IndexMeta.liveDir(spark, statsDir, "stats", "the BM25 scorer",
+      "fit the stats with fitBm25Stats")
+    (s"$g/terms", s"$g/scalars")
+  }
 
   /** Write (terms, scalars) as ONE committed generation: both tables
     * land in the next `stats.gN` and [[IndexMeta.commitGen]] commits
     * the snapshot atomically (the Spark per-table `_SUCCESS` files live
     * one level down and are not the commit signal; the header is
     * empty — the two tables are the whole state). Superseded
-    * generations — unified, round-12 split, and the flat legacy dirs —
-    * are GC'd only after the commit, so a crash at any point leaves a
-    * readable consistent snapshot live. */
+    * generations are GC'd only after the commit, so a crash at any
+    * point leaves a readable consistent snapshot live. */
   private def commitBm25Stats(spark: SparkSession, statsDir: String,
-                              terms: DataFrame, scalars: DataFrame): Unit = {
+                              terms: DataFrame, scalars: DataFrame): Unit =
     IndexMeta.commitGen(spark, statsDir, "stats") { genDir =>
       terms.write.mode("overwrite").parquet(s"$genDir/terms")
       scalars.coalesce(1).write.mode("overwrite").parquet(s"$genDir/scalars")
       IndexMeta.newHeader()
     }
-    val oldSplit = IndexMeta.nextGen(spark, statsDir, "terms")._2 ++
-      IndexMeta.nextGen(spark, statsDir, "scalars")._2
-    val oldFlat = Seq(s"$statsDir/terms", s"$statsDir/scalars")
-      .filter(IndexMeta.exists(spark, _))
-    (oldSplit ++ oldFlat).foreach(IndexMeta.delete(spark, _))
-  }
 
   /** C41b fit — persist the BM25 corpus statistics: the FULL per-term
     * document-frequency/idf table (vocab-sized — the term table a real
@@ -1209,43 +1187,6 @@ object Pipeline {
     gcLexIndex(spark, lexDir)
   }
 
-  /** Fraction of a query batch's DISTINCT terms absent from the stored
-    * vocabulary — the lexical analogue of [[Similarity.quantizerDrift]]
-    * (round-13 verdict): [[hybridScoreIndexed]]'s inner join correctly
-    * drops never-seen terms (no stats, no postings), but a RISING OOV
-    * fraction means the query distribution has drifted off the fitted
-    * corpus and the sparse leg is going quietly blind — the signal an
-    * operator refits on. Cost: one distinct over the batch-bounded
-    * query tokens + one map-only semi-join streaming the vocab table
-    * once. An all-known-terms batch reads exactly 0.0 (spec-pinned). */
-  private[graft] def lexOovFraction(spark: SparkSession, lexDir: String,
-                                    queryDocs: DataFrame): Double = {
-    val segs = liveLexHeader(spark, lexDir, "the OOV probe").segments
-    val qDistinct = queryDocs
-      .select(explode(array_distinct(split(col("text"), " "))).as("tok"))
-      .distinct().localCheckpoint()
-    // empty batch ⇒ 0.0 WITHOUT touching the index (round-14 advice:
-    // the single-job fold dropped this short-circuit, so an empty
-    // batch against an empty-segment-list index started throwing where it
-    // previously read 0.0). isEmpty is a limit(1) over the pinned
-    // frame — cheap, and this is the operator policy path, not the
-    // per-batch score path (which has its own fold).
-    if (qDistinct.isEmpty) return 0.0
-    // one job for BOTH counts (round-14: was a count + a semi-join
-    // count, two jobs per probe): the batch-bounded semi-join survivors
-    // (a tok may appear in several segments' deltas — distinct before
-    // membership) left-join back onto the pinned query terms and a
-    // single aggregate reads |batch| and |known| together
-    val known = lexSegTable(spark, lexDir, segs, "terms")
-      .select(col("tok"))
-      .join(broadcast(qDistinct), Seq("tok"), "left_semi")
-      .distinct().withColumn("m", lit(1))
-    val row = qDistinct.join(known, Seq("tok"), "left")
-      .agg(count(lit(1)).as("nq"), count(col("m")).as("known")).head()
-    val (nq, kn) = (row.getLong(0), row.getLong(1))
-    if (nq == 0L) 0.0 else (nq - kn).toDouble / nq
-  }
-
   /** Reclaim everything the LIVE generation does not reference:
     * `seg_*` dirs off the header (superseded inputs, crash orphans) and
     * tombstone tables of retired lineages. Purely a disk-space concern — readers resolve the
@@ -1265,6 +1206,41 @@ object Pipeline {
       .select(col("query_id"), col("vec_id").as("doc_id"),
         col("rnk").as("rank_dense"))
     fuseRrfBatch(sparse, dense)
+  }
+
+  /** A query batch's terms against the stored vocabulary: the
+    * (query_id, tok) rows, the pinned batch-bounded (tok, global dfq)
+    * of the terms the index knows, and the OOV fraction — the share of
+    * the batch's DISTINCT terms the index has never seen, the lexical
+    * analogue of [[Similarity.quantizerDrift]]. The score join
+    * correctly drops never-seen terms (no stats, no postings), but a
+    * RISING fraction means the query distribution has drifted off the
+    * fitted corpus and the sparse leg is going quietly blind — the
+    * signal an operator refits on. An empty batch reads 0.0.
+    *
+    * Rare-term selection reads the STORED df: the exploded query
+    * tokens broadcast (queries × doc-length rows — batch-bounded), the
+    * per-segment term deltas are the streamed probe side (map-only
+    * vocab scan); the global df assembles as a sum over the
+    * BATCH-BOUNDED semi-join survivors, never over the vocab. The OOV
+    * fraction costs one job on the two pinned frames (a left join and
+    * one aggregate read |batch| and |matched| together), not a second
+    * tokenize + vocab scan. */
+  private[graft] def lexQueryTerms(spark: SparkSession, lexDir: String, segs: Seq[String],
+      queryDocs: DataFrame): (DataFrame, DataFrame, Double) = {
+    val qToks = queryDocs
+      .select(col("doc_id").as("query_id"),
+        explode(array_distinct(split(col("text"), " "))).as("tok"))
+    val qDistinct = qToks.select(col("tok")).distinct().localCheckpoint()
+    val dfToks = lexSegTable(spark, lexDir, segs, "terms")
+      .join(broadcast(qDistinct), Seq("tok"), "left_semi")
+      .groupBy(col("tok")).agg(sum(col("dfq")).as("dfq"))
+      .localCheckpoint() // batch-bounded (tok, global dfq)
+    val ovRow = qDistinct
+      .join(dfToks.select(col("tok"), lit(1).as("m")), Seq("tok"), "left")
+      .agg(count(lit(1)).as("nq"), count(col("m")).as("matched")).head()
+    val (nq, matched) = (ovRow.getLong(0), ovRow.getLong(1))
+    (qToks, dfToks, if (nq == 0L) 0.0 else (nq - matched).toDouble / nq)
   }
 
   /** The sparse (lexical) leg of [[hybridScoreIndexed]], shared with
@@ -1295,37 +1271,7 @@ object Pipeline {
     }
     val wq = Window.partitionBy(col("query_id"))
       .orderBy(col("dfq").asc, col("tok").asc)
-    // rare-term selection against the STORED df: the exploded query
-    // tokens broadcast (queries × doc-length rows — batch-bounded),
-    // the per-segment term deltas are the streamed probe side
-    // (map-only vocab scan); the global df assembles as a sum over
-    // the BATCH-BOUNDED semi-join survivors, never over the vocab. A
-    // term the corpus has never seen has no stats and no postings, so
-    // the inner join dropping it is the correct semantics. idf rides
-    // the selected terms (batch-bounded rows) so the posting join
-    // needs no second vocab lookup.
-    val qToks = queryDocs
-      .select(col("doc_id").as("query_id"),
-        explode(array_distinct(split(col("text"), " "))).as("tok"))
-    val qDistinct = qToks.select(col("tok")).distinct().localCheckpoint()
-    val dfToks = lexSegTable(spark, lexDir, segs, "terms")
-      .join(broadcast(qDistinct), Seq("tok"), "left_semi")
-      .groupBy(col("tok")).agg(sum(col("dfq")).as("dfq"))
-      .localCheckpoint() // batch-bounded (tok, global dfq)
-    // query-drift telemetry (see [[lexOovFraction]]) — logged, never
-    // acted on here (the refit decision is the operator's, as with
-    // quantizer drift), and derived from the two frames the score
-    // plan needs anyway: two counts on pinned batch-bounded tables,
-    // not a second tokenize + vocab scan
-    // one job for both telemetry counts (the lexOovFraction fold):
-    // dfToks is pinned for the score plan anyway, so the left join
-    // reads two cached frames and a single aggregate yields |batch|
-    // and |matched| together
-    val ovRow = qDistinct
-      .join(dfToks.select(col("tok"), lit(1).as("m")), Seq("tok"), "left")
-      .agg(count(lit(1)).as("nq"), count(col("m")).as("matched")).head()
-    val (nq, matched) = (ovRow.getLong(0), ovRow.getLong(1))
-    val oov = if (nq == 0L) 0.0 else (nq - matched).toDouble / nq
+    val (qToks, dfToks, oov) = lexQueryTerms(spark, lexDir, segs, queryDocs)
     System.err.println(f"[lex-oov] $lexDir oov_frac=$oov%.4f")
     // NOT pinned (round-15, verdict item 4): the posting join below is
     // this frame's ONLY consumer, so an eager localCheckpoint bought no
@@ -1704,9 +1650,9 @@ object Pipeline {
   // wrong weights. Features are assembled sparse per doc (explode →
   // count per (doc, bucket) → sparse vector), so fit cost scales with
   // tokens, not docs × 4096.
-  /** Fit on `docs` and persist under `modelDir` (IndexMeta generation
-    * protocol — table `model`, committed by `_SUCCESS`, rebuild
-    * supersedes at commit). Weak label: median split of the c4 quality
+  /** Fit on `docs` and persist under `modelDir` (one [[IndexMeta]]
+    * `model.gN` generation holding table `model`; a refit supersedes
+    * it at commit). Weak label: median split of the c4 quality
     * heuristic over the fit docs, standing in for a curated seed set. */
   def fitQualityClassifier(spark: SparkSession, docs: DataFrame, modelDir: String): Unit = {
     import org.apache.spark.ml.classification.LogisticRegression
@@ -1737,10 +1683,11 @@ object Pipeline {
     val model = new LogisticRegression().setMaxIter(30).setRegParam(1e-3)
       .setLabelCol("label").setFeaturesCol("features").fit(feats)
     val w = model.coefficients.toArray.toSeq
-    val (gen, oldGens) = IndexMeta.nextGen(spark, modelDir, "model")
-    Seq((w, model.intercept, med)).toDF("weights", "intercept", "label_median_q")
-      .coalesce(1).write.mode("overwrite").parquet(gen)
-    oldGens.foreach(IndexMeta.delete(spark, _))
+    IndexMeta.commitGen(spark, modelDir, "model") { g =>
+      Seq((w, model.intercept, med)).toDF("weights", "intercept", "label_median_q")
+        .coalesce(1).write.mode("overwrite").parquet(s"$g/model")
+      IndexMeta.newHeader()
+    }
   }
 
   private val qcBuckets = 4096
@@ -1752,7 +1699,8 @@ object Pipeline {
     * product LBFGS optimized, no refit, no shuffle, no ML pipeline.
     * Map-only (PlanSpec-pinned); an arrival batch scores at scan cost. */
   def scoreWithClassifier(spark: SparkSession, docs: DataFrame, modelDir: String): DataFrame = {
-    val m = Relational.cachedSchemaParquet(spark, IndexMeta.requireLive(spark, modelDir, "model")).head()
+    val m = Relational.cachedSchemaParquet(spark, IndexMeta.liveDir(spark, modelDir, "model",
+      "the quality scorer", "fit it with fitQualityClassifier") + "/model").head()
     val w = m.getSeq[Double](0)
     val b = m.getDouble(1)
     docs

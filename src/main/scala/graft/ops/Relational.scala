@@ -103,13 +103,12 @@ object Relational {
 
   /** Signature of a dir's DIRECT children (name/mtime/len). One level
     * is sufficient for every layout this repo reads through the memo:
-    * flat appends add a direct child; a `partitionBy("cell")` append
-    * bumps the touched cell dir's mtime (visible in the parent's
-    * listStatus); and the only TWO-level layout (the c25b
-    * shard/part tree) is always written whole into a fresh dir —
-    * audited round-14. A future append into an existing grandchild of
-    * a memoized path would need a recursive signature; do not add one
-    * without that write pattern existing. */
+    * the only appends (the tombstone tables) are flat and add a direct
+    * child, and every partitioned layout (IVF segments, PQ codes, the
+    * c25b shard/part tree) is written whole into a fresh dir. A future
+    * append into an existing grandchild of a memoized path would need
+    * a recursive signature; do not add one without that write pattern
+    * existing. */
   private def listingSignature(spark: SparkSession, path: String): Long = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -173,28 +172,20 @@ object Relational {
     }
   }
 
-  /** Write `df` to `path` as parquet (`mode` overwrite or append) and
-    * record the written schema under the path's NEW listing signature,
-    * so the next read of `path`, alone or inside a union, runs no
-    * inference job. Spark stores the writer's schema in every file
-    * footer, and a file read returns it with every field nullable, so
-    * that nullable form is what inference finds. An append keeps the
-    * entry only if it matched the listing just before the write and
-    * its schema equals the appended one; otherwise the entry is
-    * dropped and the next read infers. For the index writers (lex
-    * segments, the near-dup tables): each path has one writer at a
-    * time, which is what makes the listing taken after the write this
-    * write's own. */
-  private[graft] def writeParquet(df: DataFrame, path: String, mode: String = "overwrite"): Unit = {
+  /** Write `df` to `path` as parquet (overwriting) and record the
+    * written schema under the path's NEW listing signature, so the next
+    * read of `path`, alone or inside a union, runs no inference job.
+    * Spark stores the writer's schema in every file footer, and a file
+    * read returns it with every field nullable, so that nullable form
+    * is what inference finds. For the index writers (lex and near-dup
+    * segments): each path has one writer at a time, which is what makes
+    * the listing taken after the write this write's own. */
+  private[graft] def writeParquet(df: DataFrame, path: String): Unit = {
     val spark = df.sparkSession
-    val key = memoKey(spark, path)
-    val schema = asRead(df.schema)
-    val keep = mode != "append" ||
-      memoSignature(spark, path).flatMap(memoized(key, _)).contains(schema)
-    df.write.mode(mode).parquet(path)
-    memoSignature(spark, path).filter(_ => keep) match {
-      case Some(sig) => schemaMemo.put(key, (sig, schema))
-      case None => schemaMemo.remove(key)
+    df.write.mode("overwrite").parquet(path)
+    memoSignature(spark, path) match {
+      case Some(sig) => schemaMemo.put(memoKey(spark, path), (sig, asRead(df.schema)))
+      case None => schemaMemo.remove(memoKey(spark, path))
     }
   }
 

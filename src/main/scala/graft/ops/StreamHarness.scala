@@ -98,7 +98,7 @@ object StreamHarness {
   private[graft] def replayToSink(spark: SparkSession, streamed: DataFrame, sinkName: String,
       onDone: StreamingQuery => Unit = _ => ()): DataFrame = {
     val (q, out) = replay(spark, streamed, sinkName) { (w, out) =>
-      w.outputMode("append").format("parquet").option("path", out.toString)
+      w.format("parquet").option("path", out.toString) // the default output mode, append
     }
     onDone(q)
     spark.read.schema(streamed.schema).parquet(out.toString)

@@ -333,8 +333,8 @@ object Training {
     spark.conf.getOption("graft.bpe.maxWords").map(_.toInt).getOrElse(65536)
 
   /** C32 fit — train a byte-pair-encoding merge table (Sennrich et al.
-    * 2016) on a corpus and persist it under the IndexMeta generation
-    * protocol (table `merges`). The scale split is the one every
+    * 2016) on a corpus and persist it, with its vocab, as one
+    * [[IndexMeta]] `bpe.gN` generation. The scale split is the one every
     * public BPE trainer uses: the CORPUS pass is one vocab-sized
     * shuffle (explode → partial-aggregated word counts, the c20 plan)
     * plus a TakeOrdered top-`maxWords` — tokens never shuffle raw and
@@ -406,29 +406,33 @@ object Training {
         contribute(idx, 1L)
       }
     }
-    val (gen, oldGens) = IndexMeta.nextGen(spark, modelDir, "merges")
-    import spark.implicits._
-    merges.toSeq.zipWithIndex.map { case ((a, b), r) => (r, a, b) }
-      .toDF("rank", "left", "right")
-      .coalesce(1).write.mode("overwrite").parquet(gen)
-    oldGens.foreach(IndexMeta.delete(spark, _))
     // VOCAB export (round-11 verdict item 5): the id↔token table a
     // training loader consumes, derived deterministically from the SAME
     // fit — slot 0 is the reserved word separator (" ", the BpeVocab
     // convention), then the fit dictionary's alphabet sorted, then each
     // merge's composed token in rank order (first occurrence wins when
-    // two merge paths compose the same string). Persisted under the
-    // same IndexMeta generation protocol as merges/, so loaders,
-    // encode-to-ids, and decode all resolve one committed generation.
+    // two merge paths compose the same string). Merges and vocab land
+    // in ONE `bpe.gN` generation that one commit makes live, so a
+    // refit into the same dir never pairs new merges with old vocab.
     val alphabet = dict.iterator.flatMap(_._1.iterator).map(String.valueOf(_))
       .toArray.distinct.sorted
     val vocabTokens = (Seq(" ") ++ alphabet ++ merges.map { case (a, b) => a + b }).distinct
-    val (vGen, vOld) = IndexMeta.nextGen(spark, modelDir, "vocab")
-    vocabTokens.zipWithIndex.map { case (t, i) => (i, t) }
-      .toDF("id", "token")
-      .coalesce(1).write.mode("overwrite").parquet(vGen)
-    vOld.foreach(IndexMeta.delete(spark, _))
+    import spark.implicits._
+    IndexMeta.commitGen(spark, modelDir, "bpe") { g =>
+      merges.toSeq.zipWithIndex.map { case ((a, b), r) => (r, a, b) }
+        .toDF("rank", "left", "right")
+        .coalesce(1).write.mode("overwrite").parquet(s"$g/merges")
+      vocabTokens.zipWithIndex.map { case (t, i) => (i, t) }
+        .toDF("id", "token")
+        .coalesce(1).write.mode("overwrite").parquet(s"$g/vocab")
+      IndexMeta.newHeader()
+    }
   }
+
+  /** One table (`merges` or `vocab`) of the live BPE model. */
+  private def bpeTable(spark: SparkSession, modelDir: String, table: String): DataFrame =
+    Relational.cachedSchemaParquet(spark, IndexMeta.liveDir(spark, modelDir, "bpe",
+      "the tokenizer", "refit it with fitBpe") + s"/$table")
 
   /** Tokenize a batch with a persisted merge table: ONE driver read of
     * the ≤`numMerges`-row model, then a map-only projection — the
@@ -442,7 +446,7 @@ object Training {
     * the composition surface (c32 scoring, c15b packing): one driver
     * read of the merge table, the codec plan-shipped. */
   def bpeTokensCol(spark: SparkSession, modelDir: String): org.apache.spark.sql.Column = {
-    val m = Relational.cachedSchemaParquet(spark, IndexMeta.requireLive(spark, modelDir, "merges"))
+    val m = bpeTable(spark, modelDir, "merges")
       .orderBy("rank").collect()
     val flat = m.flatMap(r => Seq(r.getString(1), r.getString(2)))
     import org.apache.spark.sql.graft.{GraftColumns => EU}
@@ -455,7 +459,7 @@ object Training {
         md5(concat_ws(" ", col("toks"))).as("fp"))
   }
 
-  /** Tokenizer-drift telemetry (the `lexOovFraction`/`quantizerDrift`
+  /** Tokenizer-drift telemetry (the `lexQueryTerms` OOV/`quantizerDrift`
     * measure on the frozen BPE model — the last store the
     * measure→policy doctrine did not cover): fraction of the batch's
     * ENCODED tokens absent from the model's committed vocab table.
@@ -475,7 +479,7 @@ object Training {
   def bpeOovFraction(spark: SparkSession, modelDir: String,
       docs: DataFrame,
       toks: Option[org.apache.spark.sql.Column] = None): Double = {
-    val vocab = Relational.cachedSchemaParquet(spark, IndexMeta.requireLive(spark, modelDir, "vocab"))
+    val vocab = bpeTable(spark, modelDir, "vocab")
       .select(col("token"))
     // `toks` lets a caller that already built the encode Column (one
     // driver read of the frozen merges per op — the read-ONCE seam)
@@ -494,10 +498,10 @@ object Training {
     * rows — the PQ-books doctrine). */
   private def bpeModelTables(spark: SparkSession,
       modelDir: String): (Array[String], Array[String]) = {
-    val m = Relational.cachedSchemaParquet(spark, IndexMeta.requireLive(spark, modelDir, "merges"))
+    val m = bpeTable(spark, modelDir, "merges")
       .orderBy("rank").collect()
     val flat = m.flatMap(r => Seq(r.getString(1), r.getString(2)))
-    val v = Relational.cachedSchemaParquet(spark, IndexMeta.requireLive(spark, modelDir, "vocab"))
+    val v = bpeTable(spark, modelDir, "vocab")
       .orderBy("id").collect().map(_.getString(1))
     (flat, v)
   }
@@ -849,15 +853,15 @@ object Training {
   // shipped data is handled by the c35 span tooling / takedown, not
   // by churning selections.
   //
-  // Crash contract: a slice's appends (seen_th, eval grams, near-dup
-  // store, shards) are not atomic; ONE `state.gN` header commit after
-  // all of them names the slice's shard dir, advances the id
-  // watermark and records the slice id (the [[IndexMeta]] protocol).
-  // A completed slice therefore replays into a no-op, and a slice that
-  // crashed before its commit is invisible — its shard dir is an
-  // orphan no header names — and is repaired by rebuilding the state
-  // (the appendToNearDupIndex contract, stated there for the same
-  // reason).
+  // Crash contract: a slice writes its seen-hash delta, eval-gram
+  // delta and shard slice into fresh `slice_<tag>` dirs, and ONE
+  // `state.gN` header commit after all of them names the three dirs,
+  // advances the id watermark and records the slice id (the
+  // [[IndexMeta]] protocol); its near-dup store append commits on its
+  // own under the slice's batch id. A completed slice therefore
+  // replays into a no-op, and a slice that crashed before its commit
+  // left only dirs no header names: the replay reads the same state
+  // the crashed attempt read, overwrites them, and commits.
 
   /** Quality floor + exact-dup keepers + near-dup losers + decontam +
     * frozen-rate gate over a TRAIN frame, with the cross-corpus state
@@ -909,28 +913,39 @@ object Training {
 
   /** The header of a pretrain state's `state.gN` generation: the id
     * watermark (max doc_id ingested so far), the live shard-slice dir
-    * names under `shards/`, and the tags of the slices ingested since
+    * names under `shards/`, the live seen-text-hash and eval-gram dirs
+    * under `seen_th/` and `evalgrams/` (the build's, then one delta
+    * per ingested slice), and the tags of the slices ingested since
     * the build. */
   private final case class StateHeader(maxDocId: Long, slices: Seq[String],
-      applied: Seq[String]) {
+      seenTh: Seq[String], evalGrams: Seq[String], applied: Seq[String]) {
     def toJson: com.fasterxml.jackson.databind.node.ObjectNode = {
       val o = IndexMeta.newHeader().put("max_doc_id", maxDocId)
       IndexMeta.putStrings(o, "slices", slices)
+      IndexMeta.putStrings(o, "seen_th", seenTh)
+      IndexMeta.putStrings(o, "evalgrams", evalGrams)
       IndexMeta.putStrings(o, "applied", applied)
     }
   }
 
   private def parseState(o: com.fasterxml.jackson.databind.node.ObjectNode): StateHeader =
-    StateHeader(IndexMeta.field(o, "max_doc_id").asLong,
-      IndexMeta.strings(o, "slices"), IndexMeta.strings(o, "applied"))
+    StateHeader(IndexMeta.field(o, "max_doc_id").asLong, IndexMeta.strings(o, "slices"),
+      IndexMeta.strings(o, "seen_th"), IndexMeta.strings(o, "evalgrams"),
+      IndexMeta.strings(o, "applied"))
 
   private val stateRebuild = "build the state with buildPretrainState first"
+  private val stateLayout = Seq("seen_th", "evalgrams")
 
   private def stateHeader(spark: SparkSession, stateDir: String, what: String): StateHeader =
-    parseState(IndexMeta.header(spark, stateDir, "state", what, stateRebuild))
+    parseState(IndexMeta.header(spark, stateDir, "state", what, stateRebuild, stateLayout))
 
   private def commitState(spark: SparkSession, stateDir: String, h: StateHeader): Unit =
     IndexMeta.commitGen(spark, stateDir, "state")(_ => h.toJson)
+
+  /** The union of a state store's live dirs (`seen_th` or `evalgrams`). */
+  private def stateStore(spark: SparkSession, stateDir: String, store: String,
+      dirs: Seq[String]): DataFrame =
+    Relational.cachedSchemaParquet(spark, dirs.map(d => s"$stateDir/$store/$d"))
 
   /** The live slice-dir names, sorted (`private[ops]` so the spec pins
     * the SAME resolution rule readers use, instead of re-implementing
@@ -965,8 +980,8 @@ object Training {
         "a pipeline state needs at least one document (check the " +
         "build/slice split)")
     val th = d.select(col("doc_id"), xxhash64(col("text")).as("th"))
-    th.select(col("th")).distinct()
-      .write.mode("overwrite").parquet(s"$stateDir/seen_th")
+    val build = "slice_00000_build"
+    Relational.writeParquet(th.select(col("th")).distinct(), s"$stateDir/seen_th/$build")
     // exact-dup canonicals double as the unique-text representatives
     // the near-dup store indexes (both are min-id-per-text)
     val keepers = th.groupBy(col("th")).agg(min(col("doc_id")).as("doc_id"))
@@ -976,10 +991,9 @@ object Training {
       s"$stateDir/neardup")
     val losers = Similarity.nearDupIndexPairs(spark, s"$stateDir/neardup")
       .select(col("db").as("doc_id"))
-    Curation.gramHashes(spark, d.filter(col("doc_id") % 20 === 0))
-      .select(col("gram_h")).distinct()
-      .write.mode("overwrite").parquet(s"$stateDir/evalgrams")
-    val evalGrams = Relational.cachedSchemaParquet(spark, s"$stateDir/evalgrams")
+    Relational.writeParquet(Curation.gramHashes(spark, d.filter(col("doc_id") % 20 === 0))
+      .select(col("gram_h")).distinct(), s"$stateDir/evalgrams/$build")
+    val evalGrams = stateStore(spark, stateDir, "evalgrams", Seq(build))
     val train = d.filter(col("doc_id") % 20 =!= 0)
     // the pre-gate curated pool — the mixture plan freezes over it
     // (rates are pool statistics: c18 feeding c34); this is
@@ -1005,7 +1019,7 @@ object Training {
     fitBpe(spark, kept, s"$stateDir/bpe", bpeMerges(spark), bpeMaxWords(spark))
     val slice = writeSliceShards(spark, stateDir, kept, "00000_build")
     commitState(spark, stateDir, StateHeader(
-      d.agg(max(col("doc_id"))).head().getLong(0), slice.toSeq, Seq.empty))
+      d.agg(max(col("doc_id"))).head().getLong(0), slice.toSeq, Seq(build), Seq(build), Seq.empty))
   }
 
   /** Flow one arrival slice through the persisted state: probe the
@@ -1020,7 +1034,8 @@ object Training {
   def ingestPretrainSlice(spark: SparkSession, stateDir: String,
                           slice: DataFrame, sliceId: String): Unit = {
     val tag = sliceId.replaceAll("[^A-Za-z0-9._-]", "_")
-    val live = IndexMeta.headerOpt(spark, stateDir, "state", "slice ingest", stateRebuild)
+    val live = IndexMeta.headerOpt(spark, stateDir, "state", "slice ingest", stateRebuild,
+      stateLayout)
       .map(parseState)
     if (live.exists(_.applied.contains(tag))) return
     val d = Scale.pin(slice.select(col("doc_id"), col("text"), col("lang"),
@@ -1040,7 +1055,7 @@ object Training {
     // scan is map-only (the c12/c27 probe doctrine) — seenHit is the
     // slice-bounded intersection, then keepers are min-id per NEW text
     val th = d.select(col("doc_id"), xxhash64(col("text")).as("th"))
-    val seenHit = Relational.cachedSchemaParquet(spark, s"$stateDir/seen_th")
+    val seenHit = stateStore(spark, stateDir, "seen_th", st.seenTh)
       .join(broadcast(th.select(col("th")).distinct()), Seq("th"), "left_semi")
       .distinct().localCheckpoint()
     val newTh = th.join(broadcast(seenHit), Seq("th"), "left_anti")
@@ -1057,11 +1072,12 @@ object Training {
     // eval docs in the slice extend the benchmark suite for THIS and
     // future slices (build-phase selections are already shipped — the
     // documented late-contamination class)
-    Curation.gramHashes(spark, d.filter(col("doc_id") % 20 === 0))
-      .select(col("gram_h")).distinct()
-      .write.mode("append").parquet(s"$stateDir/evalgrams")
+    val delta = s"slice_$tag"
+    Relational.writeParquet(Curation.gramHashes(spark, d.filter(col("doc_id") % 20 === 0))
+      .select(col("gram_h")).distinct(), s"$stateDir/evalgrams/$delta")
+    val evalGrams = st.evalGrams :+ delta
     val kept = monotonePool(d.filter(col("doc_id") % 20 =!= 0), keepers, losers,
-      Relational.cachedSchemaParquet(spark, s"$stateDir/evalgrams"),
+      stateStore(spark, stateDir, "evalgrams", evalGrams),
       Relational.cachedSchemaParquet(spark, s"$stateDir/rates"))
       .localCheckpoint()
     // tokenizer-drift telemetry per arrival (the lex-oov line's twin):
@@ -1073,10 +1089,9 @@ object Training {
     System.err.println(f"[bpe-oov] $stateDir slice=$tag " +
       f"oov_frac=${bpeOovFraction(spark, s"$stateDir/bpe", d, Some(toksCol))}%.4f")
     val name = writeSliceShards(spark, stateDir, kept, tag, Some(toksCol))
-    newTh.select(col("th")).distinct()
-      .write.mode("append").parquet(s"$stateDir/seen_th")
+    Relational.writeParquet(newTh.select(col("th")).distinct(), s"$stateDir/seen_th/$delta")
     commitState(spark, stateDir, StateHeader(mm.getLong(1), st.slices ++ name,
-      st.applied :+ tag))
+      st.seenTh :+ delta, evalGrams, st.applied :+ tag))
   }
 
   /** Per-shard census of every LIVE shard slice — doc counts, kept
@@ -1158,15 +1173,18 @@ object Training {
     * slice dirs GC only AFTER the new header commits — a crash
     * anywhere leaves either the old header (rewrites orphaned, swept
     * later) or the new one (delete already durable). The no-op
-    * path (no tombstones) still sweeps orphan dirs, the lex
-    * compaction doctrine. Slice-local pos values keep their original
+    * path (no tombstones) still sweeps orphan dirs (shard, seen-hash
+    * and eval-gram slices), the lex compaction doctrine. Slice-local pos values keep their original
     * gaps — pos orders a slice, it does not number it. */
   def compactPretrainShards(spark: SparkSession, stateDir: String): Unit = {
     val root = s"$stateDir/shards"
     val st = stateHeader(spark, stateDir, "compaction")
     val names = st.slices.sorted
-    def gcOrphans(live: Set[String]): Unit =
+    def gcOrphans(live: Set[String]): Unit = {
       IndexMeta.deleteUnnamed(spark, root, Seq("slice_"), live)
+      IndexMeta.deleteUnnamed(spark, s"$stateDir/seen_th", Seq("slice_"), st.seenTh.toSet)
+      IndexMeta.deleteUnnamed(spark, s"$stateDir/evalgrams", Seq("slice_"), st.evalGrams.toSet)
+    }
     val tombOpt = pretrainTombstones(spark, stateDir)
     if (tombOpt.isEmpty) { gcOrphans(names.toSet); return }
     val tombIds = broadcast(tombOpt.get.select(col("doc_id")).distinct())

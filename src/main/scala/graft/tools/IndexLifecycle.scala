@@ -49,8 +49,8 @@ object IndexLifecycle {
     // were never closed (fd leak in a long-lived driver, round-6
     // advice) and java.nio wouldn't see a non-local index anyway.
     val idx = Similarity.freshScratch(spark, "graft_ivf_lifecycle_")
-    def vecFiles = IndexMeta.countUnder(spark,
-      Similarity.liveVectorsPath(spark, idx), ".parquet")
+    def vecFiles = Similarity.liveVectorsPaths(spark, idx)
+      .map(IndexMeta.countUnder(spark, _, ".parquet")).sum
 
     val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val n = e.count()

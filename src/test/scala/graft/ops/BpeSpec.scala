@@ -29,7 +29,7 @@ class BpeSpec extends AnyFunSuite with SparkTestSession {
   test("fit reproduces the hand-computed merge sequence") {
     val modelDir = java.nio.file.Files.createTempDirectory("graft_bpe_spec").toString
     Training.fitBpe(spark, craftedDocs(spark), modelDir, numMerges = 4, maxWords = 100)
-    val merges = spark.read.parquet(IndexMeta.requireLive(spark, modelDir, "merges"))
+    val merges = spark.read.parquet(s"${IndexMeta.liveGen(spark, modelDir, "bpe").get}/merges")
       .orderBy("rank").collect().map(r => (r.getString(1), r.getString(2))).toSeq
     assert(merges == Seq(("e", "s"), ("es", "t"), ("l", "o"), ("lo", "w")),
       s"unexpected merges: $merges")
@@ -59,7 +59,7 @@ class BpeSpec extends AnyFunSuite with SparkTestSession {
     Training.fitBpe(spark,
       Relational.table(spark, dir, "documents").filter(col("doc_id") % 20 =!= 7),
       modelDir2, 200, 65536)
-    val merges2 = spark.read.parquet(IndexMeta.requireLive(spark, modelDir2, "merges"))
+    val merges2 = spark.read.parquet(s"${IndexMeta.liveGen(spark, modelDir2, "bpe").get}/merges")
       .orderBy("rank").collect().flatMap(r => Seq(r.getString(1), r.getString(2)))
     val codec = new BpeCodec(merges2)
     docs.select("doc_id", "text").collect().foreach { r =>
@@ -114,8 +114,8 @@ class BpeSpec extends AnyFunSuite with SparkTestSession {
   test("c32b vocab export: generation protocol, slot-0 space, alphabet+merges, dedup") {
     val modelDir = java.nio.file.Files.createTempDirectory("graft_bpe_vocab").toString
     Training.fitBpe(spark, craftedDocs(spark), modelDir, numMerges = 4, maxWords = 100)
-    val live = IndexMeta.requireLive(spark, modelDir, "vocab")
-    assert(live.contains("vocab.g"), s"vocab not under the generation protocol: $live")
+    val live = s"${IndexMeta.liveGen(spark, modelDir, "bpe").get}/vocab"
+    assert(live.contains("bpe.g"), s"vocab not under the generation protocol: $live")
     val vocab = spark.read.parquet(live).orderBy("id")
       .collect().map(r => (r.getInt(0), r.getString(1)))
     assert(vocab.head == ((0, " ")), "vocab slot 0 must be the reserved space")
@@ -160,7 +160,7 @@ class BpeSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("bpe drift telemetry: 0.0 in-vocab, 1.0 fully-alien, exact mixed fraction, 0.0 empty") {
-    // the lexOovFraction twin on the frozen tokenizer — the crafted
+    // the lexQueryTerms OOV twin on the frozen tokenizer — the crafted
     // model's vocab is {" "} ∪ {d,e,i,l,n,o,r,s,t,w} ∪ {es,est,lo,low},
     // so the expected fractions are exact token arithmetic (the
     // encode Column emits word tokens only — spaces are the id

@@ -518,7 +518,7 @@ class CurationSpec extends AnyFunSuite with SparkTestSession {
       Relational.table(spark, sf, "documents")
         .filter(org.apache.spark.sql.functions.col("doc_id") % 20 =!= 7),
       modelDir, 200, 65536)
-    val merges = spark.read.parquet(IndexMeta.requireLive(spark, modelDir, "merges"))
+    val merges = spark.read.parquet(s"${IndexMeta.liveGen(spark, modelDir, "bpe").get}/merges")
       .orderBy("rank").collect().flatMap(r => Seq(r.getString(1), r.getString(2)))
     val codec = new graft.functions.BpeCodec(merges)
     val texts = Relational.table(spark, sf, "documents")

@@ -599,7 +599,7 @@ class PlanSpec extends AnyFunSuite with SparkTestSession {
     val lexDir = java.nio.file.Files.createTempDirectory("graft_c43d_plan_").toString
     val docs = Relational.table(spark, dir, "documents")
     Pipeline.fitLexIndex(docs.filter(col("doc_id") % 10 =!= 7), lexDir)
-    val g = IndexMeta.requireLive(spark, lexDir, "lex")
+    val g = IndexMeta.liveGen(spark, lexDir, "lex").get.toString
     // the production call pins the batch FIRST (Scale.pin cuts its
     // lineage), so even a batch that arrived as a corpus filter leaves
     // no corpus scan in any downstream merge plan — the structural

@@ -109,18 +109,6 @@ class SchemaMemoSpec extends AnyFunSuite with SparkTestSession {
     assert(Relational.cachedSchemaParquet(spark, paths).count() === 14L)
   }
 
-  test("writeParquet: an append of another schema drops the entry instead of keeping it") {
-    val p = java.nio.file.Files.createTempDirectory("graft_memo_spec_app_").toString + "/t"
-    Relational.writeParquet(spark.range(2).select(col("id").as("a")), p)
-    assert(Relational.memoizedSchema(spark, p) === Some(spark.read.parquet(p).schema))
-    Relational.writeParquet(spark.range(2).select(col("id").as("a")), p, "append")
-    assert(Relational.memoizedSchema(spark, p) === Some(spark.read.parquet(p).schema),
-      "a same-schema append must carry the entry to the new listing")
-    Relational.writeParquet(spark.range(2).select(col("id").as("a"), lit("x").as("b")), p, "append")
-    assert(Relational.memoizedSchema(spark, p) === None,
-      "an append of another schema kept the memoized entry")
-  }
-
   test("every index table written through writeParquet records the schema a read infers") {
     val docs = Relational.table(spark, dir, "documents").select("doc_id", "text")
     val lex = Similarity.freshScratch(spark, "graft_memo_spec_lex_")
@@ -129,11 +117,11 @@ class SchemaMemoSpec extends AnyFunSuite with SparkTestSession {
     val nd = Similarity.freshScratch(spark, "graft_memo_spec_nd_")
     Similarity.buildNearDupIndex(spark, docs.filter(col("doc_id") % 10 =!= 7), nd)
     Similarity.appendToNearDupIndex(spark, nd, docs.filter(col("doc_id") % 10 === 7), Some("b1"))
-    val header = Pipeline.lexHeader(spark, IndexMeta.requireLive(spark, lex, "lex"), "the spec")
+    val header = Pipeline.lexHeader(spark, IndexMeta.liveGen(spark, lex, "lex").get.toString, "the spec")
     assert(header.segments.size === 2)
     val tables = header.segments.flatMap(s =>
         Seq("terms", "postings", "doclens").map(t => s"$lex/$s/$t")) ++
-      Seq("shingles", "bands", "pairs").map(Similarity.nearDupTablePath(spark, nd, _))
+      Seq("shingles", "bands", "pairs").flatMap(Similarity.nearDupTablePaths(spark, nd, _))
     tables.foreach { p =>
       assert(Relational.memoizedSchema(spark, p) === Some(spark.read.parquet(p).schema),
         s"recorded schema of $p differs from the inferred one")

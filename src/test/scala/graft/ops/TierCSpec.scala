@@ -28,7 +28,7 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     val docs = Relational.table(spark, dir, "documents")
     val vecs = Relational.table(spark, dir, "embeddings").select(col("vec_id"), col("embedding"))
     def scratch(p: String) = Similarity.freshScratch(spark, s"graft_families_${p}_")
-    def count(path: String) = spark.read.parquet(path).count()
+    def count(paths: Seq[String]) = spark.read.parquet(paths: _*).count()
 
     val lex = scratch("lex")
     val lexBatch = docs.filter(col("doc_id") % 10 === 7)
@@ -67,17 +67,30 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
           .collect().toSet,
         Some(() => Pipeline.appendLexIndex(spark, lex, lexBatch, Some("b1")))),
       Family("ivf", ivf, "ivf", () => Similarity.ivfCodebook(spark, ivf),
-        () => count(Similarity.liveVectorsPath(spark, ivf)),
+        () => Similarity.storedVectors(spark, ivf).count(),
         Some(() => Similarity.appendToIvfIndex(spark, ivf, ivfBatch, Some("b1")))),
       Family("pq", ivf, "pq", () => Similarity.livePqMeta(spark, ivf).get,
         () => Similarity.livePqMeta(spark, ivf).get, None),
-      Family("store", store, "store", () => Similarity.nearDupTablePath(spark, store, "pairs"),
+      Family("store", store, "store", () => Similarity.nearDupTablePaths(spark, store, "pairs"),
         () => Seq("shingles", "bands", "pairs")
-          .map(t => count(Similarity.nearDupTablePath(spark, store, t))),
+          .map(t => count(Similarity.nearDupTablePaths(spark, store, t))),
         Some(() => Similarity.appendToNearDupIndex(spark, store, storeBatch, Some("b1")))),
       Family("state", state, "state", () => Training.liveSlices(spark, state),
         () => Training.readPretrainShards(spark, state).collect().toSet,
         Some(() => Training.ingestPretrainSlice(spark, state, slice, "b1"))))
+  }
+
+  /** Parquet files under `paths` (a table's live segments). */
+  private def filesUnder(paths: Seq[String]): Long =
+    paths.map(IndexMeta.countUnder(spark, _, ".parquet")).sum
+
+  /** Parquet files of an IVF index's live layout, by cell dir. */
+  private def vectorFilesByCell(indexDir: String): Map[String, Seq[java.nio.file.Path]] = {
+    import scala.jdk.CollectionConverters._
+    Similarity.liveVectorsPaths(spark, indexDir).flatMap { p =>
+      java.nio.file.Files.walk(java.nio.file.Paths.get(p.stripPrefix("file:"))).iterator().asScala
+        .filter(f => java.nio.file.Files.isRegularFile(f) && f.getFileName.toString.endsWith(".parquet"))
+    }.groupBy(_.getParent.getFileName.toString)
   }
 
   /** (cell, centroid) rows of an IVF index's codebook, by cell. */
@@ -244,8 +257,7 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     val idx = java.nio.file.Files.createTempDirectory("graft_c27_batch_").toString
     val docs = Relational.table(spark, dir, "documents")
     Similarity.buildNearDupIndex(spark, docs.filter(col("doc_id") < 200), idx)
-    def filesOf(t: String) = IndexMeta.countUnder(spark,
-      Similarity.nearDupTablePath(spark, idx, t), ".parquet")
+    def filesOf(t: String) = filesUnder(Similarity.nearDupTablePaths(spark, idx, t))
     val tables = Seq("shingles", "bands", "pairs")
     val before = tables.map(filesOf)
     val batch = docs.filter(col("doc_id") >= 200 && col("doc_id") < 250)
@@ -257,14 +269,14 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
       assert(filesOf(t) - b <= bound, s"$t gained ${filesOf(t) - b} files > bound $bound")
     }
     val pairsAfter = Similarity.nearDupIndexPairs(spark, idx).count()
-    val shAfter = spark.read.parquet(Similarity.nearDupTablePath(spark, idx, "shingles")).count()
+    val shAfter = spark.read.parquet(Similarity.nearDupTablePaths(spark, idx, "shingles"): _*).count()
     // replaying the committed batch must touch nothing — and without
     // the marker the id guard would have thrown, so this also proves
     // the marker short-circuits BEFORE the guard; the no-op reports
     // zero files added, so the census bound does not drift on replays
     assert(Similarity.appendToNearDupIndex(spark, idx, batch, batchId = Some("day-1")) === 0L)
     assert(Similarity.nearDupIndexPairs(spark, idx).count() === pairsAfter)
-    assert(spark.read.parquet(Similarity.nearDupTablePath(spark, idx, "shingles")).count() === shAfter)
+    assert(spark.read.parquet(Similarity.nearDupTablePaths(spark, idx, "shingles"): _*).count() === shAfter)
   }
 
   test("C27 store compaction: fewer files, pair set and probe untouched") {
@@ -277,22 +289,19 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
       Similarity.appendToNearDupIndex(spark, idx,
         docs.filter(col("doc_id") >= lo && col("doc_id") < hi))
     }
-    def files(table: String) = IndexMeta.countUnder(spark,
-      Similarity.nearDupTablePath(spark, idx, table), ".parquet")
+    def files(table: String) = filesUnder(Similarity.nearDupTablePaths(spark, idx, table))
     def pairs = Similarity.nearDupIndexPairs(spark, idx).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     val (fragShingles, pairsBefore) = (files("shingles"), pairs)
     assert(fragShingles > 1, "appends should have fragmented the shingles table")
     Similarity.compactNearDupIndex(spark, idx)
     // one target-size file per table at test scale; contents identical;
-    // only the live generations remain
-    Seq("shingles", "bands", "pairs").foreach { t =>
-      assert(files(t) === 1, s"$t not compacted")
-      val gens = java.nio.file.Files.list(java.nio.file.Paths.get(idx))
-        .iterator().asScala.map(_.getFileName.toString)
-        .filter(_.startsWith(s"$t.g")).toSeq
-      assert(gens.size === 1, s"superseded $t generations not swept: $gens")
-    }
+    // only the one live segment remains
+    Seq("shingles", "bands", "pairs").foreach(t => assert(files(t) === 1, s"$t not compacted"))
+    val segs = java.nio.file.Files.list(java.nio.file.Paths.get(idx))
+      .iterator().asScala.map(_.getFileName.toString)
+      .filter(_.startsWith("seg_")).toSeq
+    assert(segs.size === 1, s"superseded segments not swept: $segs")
     assert(pairs === pairsBefore)
     // the compacted store still accepts and scores arrivals
     Similarity.appendToNearDupIndex(spark, idx,
@@ -350,7 +359,7 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     // parity: recompute every margin driver-side from the PERSISTED
     // weights, hashing tokens through Spark SQL itself (the same
     // pmod(hash, 4096) both fit and score use)
-    val m = spark.read.parquet(IndexMeta.requireLive(spark, modelDir, "model")).head()
+    val m = spark.read.parquet(s"${IndexMeta.liveGen(spark, modelDir, "model").get}/model").head()
     val w = m.getSeq[Double](0); val b = m.getDouble(1); val med = m.getDouble(2)
     assert(w.length === 4096)
     val buckets = holdout
@@ -640,14 +649,12 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
       Similarity.appendToIvfIndex(spark, idx,
         e.filter(col("vec_id") % 4 === i).select(col("vec_id"), col("embedding")))
     }
-    val fragmented = graft.ops.IndexMeta.countUnder(spark,
-      Similarity.liveVectorsPath(spark, idx), ".parquet")
+    val fragmented = filesUnder(Similarity.liveVectorsPaths(spark, idx))
     // a generous threshold does not trigger
     assert(!Similarity.compactIvfIndexIfFragmented(spark, idx, maxFiles = fragmented + 1))
     // a tight one compacts, and the follow-up probe still serves
     assert(Similarity.compactIvfIndexIfFragmented(spark, idx, maxFiles = 1))
-    val after = graft.ops.IndexMeta.countUnder(spark,
-      Similarity.liveVectorsPath(spark, idx), ".parquet")
+    val after = filesUnder(Similarity.liveVectorsPaths(spark, idx))
     assert(after < fragmented, s"compaction did not shrink files: $fragmented -> $after")
     // idempotent at the new file count (unless still over the bound)
     assert(!Similarity.compactIvfIndexIfFragmented(spark, idx, maxFiles = after))
@@ -983,9 +990,8 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     served.filter(p => exactSims.contains(p._1)).foreach { case (id, s) =>
       assert(s === exactSims(id), s"served sim for $id diverges from exact")
     }
-    // an APPEND (same generation dir, new files) must flip the sidecar
-    // stale — a generation-name-only key would silently serve codes
-    // missing the appended vectors
+    // an APPEND (one new segment) must flip the sidecar stale — codes
+    // missing the appended vectors must never serve
     import spark.implicits._
     val e = Relational.table(spark, dir, "embeddings")
     // plant an exact copy of the query vector under a fresh id: its
@@ -998,8 +1004,9 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     }
     assert(ex.getMessage.contains("STALE"))
     // repair after an APPEND is the Θ(batch) DELTA path (round-8): the
-    // books FREEZE (same generation — no refit) and the new files'
-    // codes land as a second codes generation
+    // books FREEZE (same generation — no refit) and the new segment's
+    // codes — its one row, nothing else — land as a second codes
+    // generation
     val metaBefore = Similarity.livePqMeta(spark, indexDir).get
     Similarity.addPqToIndex(spark, indexDir)
     val metaAfter = Similarity.livePqMeta(spark, indexDir).get
@@ -1008,6 +1015,11 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     assert(metaAfter.codesGens.size === metaBefore.codesGens.size + 1,
       s"append repair did not add exactly one codes delta generation: " +
         s"${metaBefore.codesGens} -> ${metaAfter.codesGens}")
+    val segs = Similarity.ivfHeader(spark, indexDir, "the spec").segments
+    assert(metaBefore.segments.size === 1 && metaAfter.segments === segs && segs.size === 2,
+      s"the repaired sidecar does not cover the live segments: ${metaAfter.segments} vs $segs")
+    assert(spark.read.parquet(s"$indexDir/${metaAfter.codesGens.last}").count() === 1,
+      "the delta encoded more than the appended segment")
     // delta-parity oracle: because the books did not move, the live
     // codes (base + delta) must equal a full re-encode of every live
     // vector against the SAME frozen books, row for row
@@ -1040,7 +1052,19 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("C3 persistent IVF index: partition-pruned probes, byte-identical to the per-query fit") {
-    val indexDir = java.nio.file.Files.createTempDirectory("graft_ivf_spec").toString
+    // every dir this test makes (its index, a corpus copy, the wrapper's
+    // cache dirs) lives under one index root it deletes at the end
+    val root = java.nio.file.Files.createTempDirectory("graft_ivf_spec_root")
+    spark.conf.set("graft.index.root", root.toString)
+    try persistentIvfSpec(root)
+    finally {
+      spark.conf.unset("graft.index.root")
+      IndexMeta.delete(spark, root.toString)
+    }
+  }
+
+  private def persistentIvfSpec(root: java.nio.file.Path): Unit = {
+    val indexDir = java.nio.file.Files.createTempDirectory(root, "graft_ivf_spec").toString
     Similarity.buildIvfIndex(spark, dir, indexDir)
     val indexed = Similarity.annIvfIndexed(spark, dir, indexDir)
     // same quantizer (same data, fixed seed) → the indexed query must
@@ -1060,11 +1084,10 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     // moves across a second query).
     // The wrapper keys its dir by data-dir AND corpus fingerprint —
     // discover the cache dirs by prefix rather than re-deriving the
-    // fingerprint (the index root may also hold dirs of other layouts)
+    // fingerprint
     import scala.jdk.CollectionConverters._
     val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    def liveIvfGens() = java.nio.file.Files
-      .list(java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")))
+    def liveIvfGens() = java.nio.file.Files.list(root)
       .iterator().asScala
       .filter(_.getFileName.toString.startsWith(s"graft_ivf_index_${key}_"))
       .map(p => p.toString -> IndexMeta.liveGen(spark, p.toString, "ivf").map(_.getName))
@@ -1078,7 +1101,7 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     // index. Exercised on a WRITABLE copy of the corpus (testdata is
     // read-only): same path, touched embeddings mtime → new fingerprint
     // → a second index dir appears instead of the stale one being reused
-    val corpusCopy = java.nio.file.Files.createTempDirectory("graft_fp_corpus")
+    val corpusCopy = java.nio.file.Files.createTempDirectory(root, "graft_fp_corpus")
     val srcDir = java.nio.file.Paths.get(dir, "embeddings.parquet")
     val dstDir = corpusCopy.resolve("embeddings.parquet")
     java.nio.file.Files.createDirectories(dstDir)
@@ -1086,8 +1109,7 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
       .filter(java.nio.file.Files.isRegularFile(_))
       .foreach(f => java.nio.file.Files.copy(f, dstDir.resolve(f.getFileName.toString)))
     val copyKey = corpusCopy.toString.replaceAll("[^A-Za-z0-9._-]", "_")
-    def indexDirsForCopy = java.nio.file.Files
-      .list(java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")))
+    def indexDirsForCopy = java.nio.file.Files.list(root)
       .iterator().asScala
       .filter(_.getFileName.toString.startsWith(s"graft_ivf_index_${copyKey}_")).toSeq
     Similarity.queries("c3_ann_indexed")(spark, corpusCopy.toString).collect()
@@ -1135,7 +1157,7 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     // 1. every appended vector was filed in its TRUE nearest cell —
     //    argmin squared-L2 recomputed independently, driver-side
     val cents = centroidsOf(indexDir)
-    val appended = spark.read.parquet(Similarity.liveVectorsPath(spark, indexDir))
+    val appended = Similarity.storedVectors(spark, indexDir)
       .filter(col("vec_id") % 20 === 7 || col("vec_id") === 999999L)
       .select(col("vec_id"), col("embedding"), col("cell"))
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray, r.getInt(2)))
@@ -1148,16 +1170,24 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     }
     // 2. appended signatures match a fresh graft_srp_sign of the same bytes
     graft.functions.GraftFunctions.register(spark)
-    val sigMismatch = spark.read.parquet(Similarity.liveVectorsPath(spark, indexDir))
+    val sigMismatch = Similarity.storedVectors(spark, indexDir)
       .filter(col("vec_id") % 20 === 7)
       .withColumn("fresh", expr("graft_srp_sign(embedding, 42L, 4)"))
       .filter(col("sigs") =!= col("fresh")).count()
     assert(sigMismatch === 0, s"$sigMismatch appended rows carry stale signatures")
     // 3. the probe finds the planted copy of the query vector at the top:
     //    append landed it in exactly the cell the query probes first
-    val top = Similarity.annIvfIndexed(spark, dir, indexDir).collect()
+    val probe = Similarity.annIvfIndexed(spark, dir, indexDir)
+    val top = probe.collect()
     assert(top.head.getLong(0) === 999999L && top.head.getDouble(1) === 1.0,
       s"planted appended neighbor not retrieved first: ${top.take(3).toSeq}")
+    // the two-segment probe scans each segment, and each segment's
+    // probe scan keeps the single-segment plan's `cell` partition filter
+    // (the adaptive plan prints each scan more than once)
+    val pruned = "FileScan parquet[^\n]*".r.findAllIn(probe.queryExecution.executedPlan.toString)
+      .filter("PartitionFilters: \\[[^\\]]*cell".r.findFirstIn(_).isDefined).toSeq.distinct
+    assert(Similarity.liveVectorsPaths(spark, indexDir).size === 2 && pruned.size === 2,
+      s"expected one cell-pruned scan per segment:\n${pruned.mkString("\n")}")
     // registry wrapper smoke: fresh build+append per call, rows come back
     assert(Similarity.queries("c3_ann_index_append")(spark, dir).collect().length === 10)
   }
@@ -1173,12 +1203,10 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
       e.filter(col("vec_id") % 40 === 7).select(col("vec_id"), col("embedding")))
     Similarity.appendToIvfIndex(spark, indexDir,
       e.filter(col("vec_id") % 40 === 27).select(col("vec_id"), col("embedding")))
-    def filesByCell = Files.walk(Paths.get(Similarity.liveVectorsPath(spark, indexDir).stripPrefix("file:"))).iterator().asScala
-      .filter(p => Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet"))
-      .toSeq.groupBy(_.getParent.getFileName.toString)
+    def filesByCell = vectorFilesByCell(indexDir)
     assert(filesByCell.values.exists(_.size >= 2),
       "appends should have left at least one cell with multiple files")
-    def snapshot = spark.read.parquet(Similarity.liveVectorsPath(spark, indexDir))
+    def snapshot = Similarity.storedVectors(spark, indexDir)
       .select(col("vec_id"), col("embedding"), col("sigs"), col("cell").cast("int"))
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1), r.getSeq[Long](2), r.getInt(3)))
@@ -1194,13 +1222,13 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     val after = filesByCell
     assert(after.nonEmpty && after.values.forall(_.size === 1),
       s"cells with >1 file after compact: ${after.filter(_._2.size > 1).keys}")
-    // commit hygiene: exactly the live generation remains — superseded
-    // generations are GC'd after the new one commits
-    val gens = Files.list(Paths.get(indexDir)).iterator().asScala
+    // commit hygiene: exactly the live segment remains — superseded
+    // segments are GC'd after the new one commits
+    val segs = Files.list(Paths.get(indexDir)).iterator().asScala
       .map(_.getFileName.toString)
-      .filter(n => n.startsWith("vectors.")).toSeq
-    assert(gens.size == 1 && gens.head.matches("vectors\\.g\\d{5}"),
-      s"expected one live generation dir, found: $gens")
+      .filter(n => n.startsWith("seg_")).toSeq
+    assert(segs.size == 1 && segs.head.matches("seg_ivf\\.g\\d{5}"),
+      s"expected one live segment dir, found: $segs")
     // the registry wrapper equals the append wrapper byte-for-byte: same
     // slice, same seed — compaction may only change the file layout
     val viaCompact = Similarity.queries("c3_ann_index_compact")(spark, dir)
@@ -1216,25 +1244,21 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     val indexDir = Files.createTempDirectory("graft_ivf_split_spec").toString
     val e = Relational.table(spark, dir, "embeddings")
     Similarity.buildIvfIndexFrom(spark, e, indexDir)
-    val rowsBefore = spark.read.parquet(Similarity.liveVectorsPath(spark, indexDir)).count()
+    val rowsBefore = Similarity.storedVectors(spark, indexDir).count()
     def probe = Similarity.annIvfIndexed(spark, dir, indexDir)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val before = probe
     // a 4 KB target forces ceil(cellBytes/target) > 1 on every real
     // cell — the salted multi-file path the 128 MB default never takes
     Similarity.compactIvfIndex(spark, indexDir, targetFileBytes = 4096L)
-    val byCell = Files.walk(Paths.get(Similarity.liveVectorsPath(spark, indexDir).stripPrefix("file:"))).iterator().asScala
-      .filter(p => Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet"))
-      .toSeq.groupBy(_.getParent.getFileName.toString)
+    val byCell = vectorFilesByCell(indexDir)
     assert(byCell.values.exists(_.size > 1),
       s"no cell split at a 4KB target: ${byCell.view.mapValues(_.size).toMap}")
-    assert(spark.read.parquet(Similarity.liveVectorsPath(spark, indexDir)).count() === rowsBefore)
+    assert(Similarity.storedVectors(spark, indexDir).count() === rowsBefore)
     assert(probe === before)
     // and a re-compact at the default target coalesces back to one each
     Similarity.compactIvfIndex(spark, indexDir)
-    val coalesced = Files.walk(Paths.get(Similarity.liveVectorsPath(spark, indexDir).stripPrefix("file:"))).iterator().asScala
-      .filter(p => Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet"))
-      .toSeq.groupBy(_.getParent.getFileName.toString)
+    val coalesced = vectorFilesByCell(indexDir)
     assert(coalesced.values.forall(_.size === 1))
     assert(probe === before)
   }
@@ -1263,7 +1287,7 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     assert(p.contains("BroadcastHashJoin") && p.contains("LeftAnti"),
       s"tombstone exclusion not a broadcast anti-join:\n$p")
     // ...but the row is still physically in the layout
-    assert(spark.read.parquet(Similarity.liveVectorsPath(spark, indexDir))
+    assert(Similarity.storedVectors(spark, indexDir)
       .filter(col("vec_id") === victim).count() === 1)
     // 2. deletes are idempotent: re-deleting changes nothing
     Similarity.deleteFromIvfIndex(spark, indexDir, Seq(victim).toDF("vec_id"))
@@ -1271,7 +1295,7 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     // 3. compaction makes it physical and clears the tombstone table;
     //    the probe is unchanged by the rewrite
     Similarity.compactIvfIndex(spark, indexDir)
-    assert(spark.read.parquet(Similarity.liveVectorsPath(spark, indexDir))
+    assert(Similarity.storedVectors(spark, indexDir)
       .filter(col("vec_id") === victim).count() === 0)
     assert(!Files.exists(Paths.get(indexDir, "tombstones")))
     assert(probe === after)
@@ -1289,9 +1313,9 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     Similarity.appendToIvfIndex(spark, indexDir, reinsert, batchId = Some("reins-1"))
     assert(probe.head._1 === after.head._1, "re-inserted vector serves again")
     // 5. batchId idempotence: replaying the committed batch is a no-op
-    val rowsNow = spark.read.parquet(Similarity.liveVectorsPath(spark, indexDir)).count()
+    val rowsNow = Similarity.storedVectors(spark, indexDir).count()
     Similarity.appendToIvfIndex(spark, indexDir, reinsert, batchId = Some("reins-1"))
-    assert(spark.read.parquet(Similarity.liveVectorsPath(spark, indexDir)).count() === rowsNow,
+    assert(Similarity.storedVectors(spark, indexDir).count() === rowsNow,
       "replayed batch duplicated rows")
     // 6. a deleted QUERY vector fails with a clear contract error, not
     //    an empty-iterator crash
@@ -1322,13 +1346,13 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     Similarity.buildIvfIndexFrom(spark, e.select(col("vec_id"), col("embedding")), indexDir)
     Similarity.deleteFromIvfIndex(spark, indexDir, e.select(col("vec_id")))
     Similarity.compactIvfIndex(spark, indexDir)
-    val back = spark.read.parquet(Similarity.liveVectorsPath(spark, indexDir))
+    val back = Similarity.storedVectors(spark, indexDir)
     assert(back.count() === 0)
     assert(back.columns.toSeq === Seq("vec_id", "embedding", "sigs", "cell"))
     // and the empty index accepts a fresh append (tombstones cleared)
     Similarity.appendToIvfIndex(spark, indexDir,
       e.limit(5).select(col("vec_id"), col("embedding")))
-    assert(spark.read.parquet(Similarity.liveVectorsPath(spark, indexDir)).count() === 5)
+    assert(Similarity.storedVectors(spark, indexDir).count() === 5)
   }
 
   test("C3 index: readers ignore an uncommitted generation (crash-safe commit)") {
@@ -1336,18 +1360,22 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     val indexDir = Files.createTempDirectory("graft_ivf_crash_spec").toString
     val e = Relational.table(spark, dir, "embeddings")
     Similarity.buildIvfIndexFrom(spark, e.select(col("vec_id"), col("embedding")), indexDir)
-    val live = Similarity.liveVectorsPath(spark, indexDir)
-    assert(live.endsWith("vectors.g00000"))
+    val live = Similarity.liveVectorsPaths(spark, indexDir)
+    assert(live.map(_.stripPrefix(s"$indexDir/")) === Seq("seg_ivf.g00000/vectors"))
     // simulate a compaction that died before commit: a NEWER generation
-    // dir exists but has no _SUCCESS — resolution must stay on g00000
-    Files.createDirectories(Paths.get(indexDir, "vectors.g00001"))
-    assert(Similarity.liveVectorsPath(spark, indexDir) === live,
+    // and its segment exist, but the generation has no _SUCCESS —
+    // resolution must stay on g00000
+    Files.createDirectories(Paths.get(indexDir, "ivf.g00001"))
+    Files.createDirectories(Paths.get(indexDir, "seg_ivf.g00001", "vectors"))
+    assert(Similarity.liveVectorsPaths(spark, indexDir) === live,
       "an uncommitted generation must not become live")
     // the next compaction writes PAST the orphan (never into it — a
     // concurrent writer could still be filling it) and sweeps it
     Similarity.compactIvfIndex(spark, indexDir)
-    assert(Similarity.liveVectorsPath(spark, indexDir).endsWith("vectors.g00002"))
-    assert(!Files.exists(Paths.get(indexDir, "vectors.g00001")))
+    assert(Similarity.liveVectorsPaths(spark, indexDir).map(_.stripPrefix(s"$indexDir/")) ===
+      Seq("seg_ivf.g00002/vectors"))
+    assert(!Files.exists(Paths.get(indexDir, "ivf.g00001")) &&
+      !Files.exists(Paths.get(indexDir, "seg_ivf.g00001")))
   }
 
   test("C3 index append: ids already live in the layout are rejected loudly") {
@@ -1363,57 +1391,36 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("C3 index: the ids sidecar mirrors the layout and bounds the guard's file opens") {
-    import scala.jdk.CollectionConverters._
     val indexDir = java.nio.file.Files.createTempDirectory("graft_ivf_ids_spec").toString
     val e = Relational.table(spark, dir, "embeddings")
     Similarity.buildIvfIndexFrom(spark,
       e.filter(col("vec_id") < 300).select(col("vec_id"), col("embedding")), indexDir)
-    def sidecarIds() = {
-      val g = graft.ops.IndexMeta.liveGen(spark, indexDir, "ids").get.toString
-      spark.read.parquet(g).collect().map(_.getLong(0)).toSet
-    }
-    def layoutIds() =
-      spark.read.parquet(Similarity.liveVectorsPath(spark, indexDir))
-        .select("vec_id").collect().map(_.getLong(0)).toSet
-    // 1. sidecar == layout after build, and after each append it grows
-    //    by exactly ONE file (the O(#appends) guard-cost claim)
+    def idsPaths() = Similarity.ivfHeader(spark, indexDir, "the spec").segments
+      .map(sg => s"$indexDir/$sg/ids")
+    def sidecarIds() = spark.read.parquet(idsPaths(): _*).collect().map(_.getLong(0)).toSet
+    def layoutIds() = Similarity.storedVectors(spark, indexDir)
+      .select("vec_id").collect().map(_.getLong(0)).toSet
+    // 1. sidecar == layout after build, and each append adds exactly
+    //    ONE sidecar file, in its own segment (the O(#appends)
+    //    guard-cost claim)
     assert(sidecarIds() === layoutIds())
-    val g = graft.ops.IndexMeta.liveGen(spark, indexDir, "ids").get.toString
-    def sidecarFiles() = java.nio.file.Files.list(java.nio.file.Paths.get(
-      g.stripPrefix("file:"))).iterator.asScala
-      .count(_.getFileName.toString.endsWith(".parquet"))
-    val filesAfterBuild = sidecarFiles()
+    val filesAfterBuild = filesUnder(idsPaths())
     (0 until 3).foreach { i =>
       Similarity.appendToIvfIndex(spark, indexDir,
         e.filter(col("vec_id") >= 300 + i * 10 && col("vec_id") < 310 + i * 10)
           .select(col("vec_id"), col("embedding")))
     }
     assert(sidecarIds() === layoutIds())
-    assert(sidecarFiles() === filesAfterBuild + 3,
+    assert(idsPaths().size === 4 && filesUnder(idsPaths()) === filesAfterBuild + 3,
       "each append must add exactly one sidecar file")
-    // 2. delete + compact: the sidecar rewrites to the LIVE set in a
-    //    fresh generation with few files
+    // 2. delete + compact: the sidecar rewrites to the LIVE set in one
+    //    fresh segment with few files
     import spark.implicits._
     Similarity.deleteFromIvfIndex(spark, indexDir, Seq(305L, 315L).toDF("vec_id"))
     Similarity.compactIvfIndex(spark, indexDir)
+    assert(idsPaths().size === 1)
     assert(sidecarIds() === layoutIds())
     assert(!sidecarIds().contains(305L) && !sidecarIds().contains(315L))
-    // 3. crashed-append repair: simulate an append that committed its
-    //    sidecar write but died before the layout write — the bare
-    //    retry fails LOUDLY (sidecar superset, never silent dup), and
-    //    rebuildIdsSidecar restores the guard from the layout itself
-    val gNow = graft.ops.IndexMeta.liveGen(spark, indexDir, "ids").get.toString
-    val orphan = e.filter(col("vec_id") === 400).select(col("vec_id"))
-    orphan.coalesce(1).write.mode("append").parquet(gNow)
-    val retry = e.filter(col("vec_id") === 400).select(col("vec_id"), col("embedding"))
-    val ex = intercept[IllegalArgumentException] {
-      Similarity.appendToIvfIndex(spark, indexDir, retry)
-    }
-    assert(ex.getMessage.contains("rebuildIdsSidecar"))
-    Similarity.rebuildIdsSidecar(spark, indexDir)
-    Similarity.appendToIvfIndex(spark, indexDir, retry)
-    assert(sidecarIds() === layoutIds())
-    assert(sidecarIds().contains(400L))
   }
 
   test("C3b append: an empty centroids table fails loudly before the ids sidecar is touched") {
@@ -1427,9 +1434,10 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     val codebook = s"$indexDir/${Similarity.ivfHeader(spark, indexDir, "the spec").codebook}"
     IndexMeta.delete(spark, codebook)
     IndexMeta.writeSmallFile(spark, codebook, Array.emptyByteArray)
-    val g = IndexMeta.liveGen(spark, indexDir, "ids").get.toString
-    def sidecar() = (IndexMeta.countUnder(spark, g, ".parquet"),
-      spark.read.parquet(g).collect().map(_.getLong(0)).toSet)
+    def sidecar() = {
+      val g = Similarity.ivfHeader(spark, indexDir, "the spec").segments.map(sg => s"$indexDir/$sg/ids")
+      (filesUnder(g), spark.read.parquet(g: _*).collect().map(_.getLong(0)).toSet)
+    }
     val before = sidecar()
     val batch = e.filter(col("vec_id") >= 300 && col("vec_id") < 310)
       .select(col("vec_id"), col("embedding"))
@@ -1990,7 +1998,7 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     assert(scalarsOf(statsDir) == scalarsOf(fullDir))
   }
 
-  test("C41b stats commit is one atomic generation; legacy layouts read and migrate") {
+  test("C41b stats commit is one atomic generation; legacy layouts are refused") {
     val docs = Relational.table(spark, dir, "documents")
     val statsDir = Similarity.freshScratch(spark, "graft_bm25_atomspec_")
     Pipeline.fitBm25Stats(docs, statsDir)
@@ -2000,7 +2008,7 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     val gens = IndexMeta.list(spark, statsDir).map(_.getPath.getName)
     assert(gens.count(_.startsWith("stats.g")) == 1, s"layout: $gens")
     assert(!gens.exists(n => n.startsWith("terms.g") || n.startsWith("scalars.g")))
-    val g = IndexMeta.requireLive(spark, statsDir, "stats")
+    val g = IndexMeta.liveGen(spark, statsDir, "stats").get.toString
     assert(IndexMeta.exists(spark, s"$g/terms") && IndexMeta.exists(spark, s"$g/scalars"))
     // an UNCOMMITTED generation (both tables written, marker missing —
     // the crash window) is invisible to readers: the old snapshot stays live
@@ -2012,29 +2020,24 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     assert(Pipeline.bm25StatsPaths(spark, statsDir)._1 == s"$g/terms",
       "a generation without the root marker must not resolve")
     IndexMeta.delete(spark, g1)
-    // legacy flat layout (pre-generation): readable, and the next
-    // append migrates it to a unified generation and GCs the flat dirs
-    val legacyDir = Similarity.freshScratch(spark, "graft_bm25_legacyspec_")
-    val half = docs.filter(col("doc_id") % 10 =!= 7)
-    val tmp = Similarity.freshScratch(spark, "graft_bm25_legacysrc_")
-    Pipeline.fitBm25Stats(half, tmp)
-    val (tp, sp) = Pipeline.bm25StatsPaths(spark, tmp)
-    spark.read.parquet(tp).write.parquet(s"$legacyDir/terms")
-    spark.read.parquet(sp).write.parquet(s"$legacyDir/scalars")
-    val legacyScore = Pipeline.bm25ScoreWith(spark, docs, legacyDir, Pipeline.bm25Query)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val genScore = Pipeline.bm25ScoreWith(spark, docs, tmp, Pipeline.bm25Query)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(legacyScore == genScore, "flat legacy layout must score identically")
-    Pipeline.appendBm25Stats(spark, legacyDir, docs.filter(col("doc_id") % 10 === 7))
-    assert(!IndexMeta.exists(spark, s"$legacyDir/terms"),
-      "append must migrate the flat layout and GC it")
-    assert(IndexMeta.liveGen(spark, legacyDir, "stats").isDefined)
-    val migrated = Pipeline.bm25ScoreWith(spark, docs, legacyDir, Pipeline.bm25Query)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val full = Pipeline.queries("c41_bm25")(spark, dir).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(migrated == full, "migrated legacy stats must equal the whole-corpus fit")
+    // the layouts before the one generation — flat `terms`/`scalars`
+    // dirs, and split `terms.gN`/`scalars.gN` generations — are refused
+    // with the refit message, by the scorer and by an append alike
+    val (tp, sp) = Pipeline.bm25StatsPaths(spark, statsDir)
+    val flat = Similarity.freshScratch(spark, "graft_bm25_legacyspec_")
+    spark.read.parquet(tp).write.parquet(s"$flat/terms")
+    spark.read.parquet(sp).write.parquet(s"$flat/scalars")
+    val split = Similarity.freshScratch(spark, "graft_bm25_splitspec_")
+    spark.read.parquet(tp).write.parquet(s"$split/${IndexMeta.genName("terms", 0)}")
+    spark.read.parquet(sp).write.parquet(s"$split/${IndexMeta.genName("scalars", 0)}")
+    Seq(flat, split).foreach { d =>
+      Seq(() => Pipeline.bm25ScoreWith(spark, docs, d, Pipeline.bm25Query).collect(),
+          () => Pipeline.appendBm25Stats(spark, d, docs.limit(3))).foreach { op =>
+        val e = intercept[RuntimeException](op())
+        assert(e.getMessage.contains("no committed stats generation") &&
+          e.getMessage.contains("fitBm25Stats"), e.getMessage)
+      }
+    }
   }
 
   test("C43 hybrid RRF: exact fusion of independently recomputed legs") {
@@ -2337,7 +2340,7 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     Pipeline.fitLexIndex(docs.filter(col("doc_id") % 10 =!= 7), idx)
     val batch = docs.filter(col("doc_id") % 10 === 7)
     Pipeline.appendLexIndex(spark, idx, batch, Some("b1"))
-    val gen = IndexMeta.requireLive(spark, idx, "lex")
+    val gen = IndexMeta.liveGen(spark, idx, "lex").get.toString
     // the replay record rides the generation ITSELF (atomic with the
     // commit — no marker-file crash window): the live generation's
     // header carries the batch id
@@ -2347,7 +2350,7 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
         .exists(_.getPath.getName.startsWith("_appended_")),
       "append still writes a marker file outside the generation")
     Pipeline.appendLexIndex(spark, idx, batch, Some("b1")) // replay
-    assert(IndexMeta.requireLive(spark, idx, "lex") == gen,
+    assert(IndexMeta.liveGen(spark, idx, "lex").get.toString == gen,
       "batchId replay committed a new generation")
     val e = intercept[IllegalArgumentException] {
       Pipeline.appendLexIndex(spark, idx, batch, Some("b2"))
@@ -2361,7 +2364,7 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     val docs = Relational.table(spark, dir, "documents")
     val idx = Similarity.freshScratch(spark, "graft_c43_hdr_crash_")
     Pipeline.fitLexIndex(docs, idx)
-    val gen = IndexMeta.requireLive(spark, idx, "lex")
+    val gen = IndexMeta.liveGen(spark, idx, "lex").get.toString
     val h = Pipeline.lexHeader(spark, gen, "the spec")
     val queryDocs = docs.filter(col("doc_id") % 17 === 0).select(col("doc_id"), col("text"))
     def scores() = Pipeline.sparseScoreIndexed(spark, idx, queryDocs)
@@ -2370,21 +2373,21 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     val (next, _) = IndexMeta.nextGen(spark, idx, "lex")
     IndexMeta.writeSmallFile(spark, s"$next/header.json",
       h.copy(nDocs = h.nDocs * 2, segments = Seq("seg_missing")).toJson.toString.getBytes("UTF-8"))
-    assert(IndexMeta.requireLive(spark, idx, "lex") == gen,
+    assert(IndexMeta.liveGen(spark, idx, "lex").get.toString == gen,
       "an uncommitted header resolved as the live generation")
-    assert(Pipeline.lexHeader(spark, IndexMeta.requireLive(spark, idx, "lex"), "the spec") == h)
+    assert(Pipeline.lexHeader(spark, IndexMeta.liveGen(spark, idx, "lex").get.toString, "the spec") == h)
     assert(scores() == before, "an uncommitted header changed the served scores")
     // every other family resolves its header by the same rule: an
     // uncommitted next generation whose header names nothing valid
     // changes neither the live header nor what the family serves
     families.filter(_.name != "lex").foreach { f =>
-      val live = IndexMeta.requireLive(spark, f.root, f.gen)
+      val live = IndexMeta.liveGen(spark, f.root, f.gen).get
       val header = IndexMeta.header(spark, f.root, f.gen, "the spec").toString
       val served = f.contents()
       val (orphan, _) = IndexMeta.nextGen(spark, f.root, f.gen)
       IndexMeta.writeSmallFile(spark, s"$orphan/header.json", "{}".getBytes("UTF-8"))
       try {
-        assert(IndexMeta.requireLive(spark, f.root, f.gen) == live,
+        assert(IndexMeta.liveGen(spark, f.root, f.gen).get == live,
           s"${f.name}: an uncommitted header resolved as the live generation")
         assert(IndexMeta.header(spark, f.root, f.gen, "the spec").toString == header)
         assert(f.contents() == served, s"${f.name}: an uncommitted header changed what it serves")
@@ -2415,10 +2418,10 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
 
   test("Index header: replaying an applied batch id is a no-op for every family with appends") {
     families.flatMap(f => f.replay.map(f -> _)).foreach { case (f, replay) =>
-      val gen = IndexMeta.requireLive(spark, f.root, f.gen)
+      val gen = IndexMeta.liveGen(spark, f.root, f.gen).get
       val before = f.contents()
       replay()
-      assert(IndexMeta.requireLive(spark, f.root, f.gen) === gen,
+      assert(IndexMeta.liveGen(spark, f.root, f.gen).get === gen,
         s"${f.name}: the replay committed a new generation")
       assert(f.contents() === before, s"${f.name}: the replay changed the served contents")
     }
@@ -2429,7 +2432,7 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     // committed table generations and no header
     val oldLayouts = Seq(
       ("ivf", "vectors", (d: String) => Similarity.ivfCodebook(spark, d), "buildIvfIndexFrom"),
-      ("store", "shingles", (d: String) => Similarity.nearDupTablePath(spark, d, "pairs"),
+      ("store", "shingles", (d: String) => Similarity.nearDupTablePaths(spark, d, "pairs"),
         "buildNearDupIndex"),
       ("state", "meta", (d: String) => Training.liveSlices(spark, d), "buildPretrainState"))
     oldLayouts.foreach { case (name, table, read, rebuild) =>
@@ -2495,6 +2498,91 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     assert(!IndexMeta.exists(spark, s"$idx/coarse_$lineage.f32"), "the orphan coarse codebook survived")
   }
 
+  test("Index header: a header of the layout before segments is refused with the rebuild message") {
+    // the unsegmented headers: IVF and the store named table generations
+    // that appends wrote into, the pretrain state had no seen-hash or
+    // eval-gram dirs
+    val unsegmented = Seq(
+      ("ivf", """{"vectors":"vectors.g00000","ids":"ids.g00000","codebook":"codebook_ivf.g00000.f32",""" +
+        """"dim":4,"mean_sq_dist":1.0,"n_build":1,"lineage":"ivf.g00000","applied":[]}""",
+        (d: String) => Similarity.ivfCodebook(spark, d), "buildIvfIndexFrom"),
+      ("store", """{"shingles":"shingles.g00000","bands":"bands.g00000","pairs":"pairs.g00000","applied":[]}""",
+        (d: String) => Similarity.nearDupTablePaths(spark, d, "pairs"), "buildNearDupIndex"),
+      ("state", """{"max_doc_id":5,"slices":[],"applied":[]}""",
+        (d: String) => Training.liveSlices(spark, d), "buildPretrainState"))
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    unsegmented.foreach { case (name, header, read, rebuild) =>
+      val d = Similarity.freshScratch(spark, s"graft_unsegmented_${name}_")
+      IndexMeta.commitGen(spark, d, name)(_ =>
+        mapper.readTree(header).asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode])
+      val e = intercept[RuntimeException](read(d))
+      assert(e.getMessage.contains("older layout") && e.getMessage.contains(rebuild),
+        s"$name: ${e.getMessage}")
+    }
+  }
+
+  test("Index header: an uncommitted append segment is invisible, swept by the next append, and its batch re-runs") {
+    // the last crash point of an append: its segment and the header
+    // naming it are written, the commit marker is not
+    def name(p: String) = new org.apache.hadoop.fs.Path(p).getName
+    def plantCrash(root: String, family: String)(writeSegment: String => Unit): (String, String) = {
+      val (g, _) = IndexMeta.nextGen(spark, root, family)
+      val seg = s"$root/seg_${name(g)}"
+      writeSegment(seg)
+      val h = IndexMeta.header(spark, root, family, "the spec")
+      IndexMeta.putStrings(h, "segments", IndexMeta.strings(h, "segments") :+ name(seg))
+      IndexMeta.putStrings(h, "applied", IndexMeta.strings(h, "applied") :+ "b1")
+      IndexMeta.writeSmallFile(spark, s"$g/header.json", h.toString.getBytes("UTF-8"))
+      (g, seg)
+    }
+    def fixture(f: String) = families.find(_.name == f).get.root // built from the same split
+
+    // IVF: the crashed segment holds the whole batch again
+    val vecs = Relational.table(spark, dir, "embeddings").select(col("vec_id"), col("embedding"))
+    val ivf = Similarity.freshScratch(spark, "graft_ivf_crashed_append_")
+    Similarity.buildIvfIndexFrom(spark, vecs.filter(col("vec_id") % 20 =!= 7), ivf)
+    val batch = vecs.filter(col("vec_id") % 20 === 7)
+    def ivfIds(d: String) = Similarity.storedVectors(spark, d).select(col("vec_id"))
+      .collect().map(_.getLong(0)).toSeq.sorted
+    val idsBefore = ivfIds(ivf)
+    val (ivfGen, ivfSeg) = plantCrash(ivf, "ivf") { seg =>
+      batch.select(col("vec_id")).write.parquet(s"$seg/ids")
+      batch.withColumn("sigs", array(lit(0L))).withColumn("cell", lit(0))
+        .write.partitionBy("cell").parquet(s"$seg/vectors")
+    }
+    assert(ivfIds(ivf) === idsBefore, "the uncommitted IVF segment is visible")
+    Similarity.appendToIvfIndex(spark, ivf, batch, Some("b1"))
+    assert(ivfIds(ivf) === ivfIds(fixture("ivf")), "the re-run IVF batch is missing or duplicated")
+    assert(!IndexMeta.exists(spark, ivfSeg) && !IndexMeta.exists(spark, ivfGen),
+      "the next IVF append left the crashed one on disk")
+
+    // near-dup store: the crashed segment holds the batch's shingles
+    // and a second copy of every pair
+    val docs = Relational.table(spark, dir, "documents")
+    val store = Similarity.freshScratch(spark, "graft_store_crashed_append_")
+    Similarity.buildNearDupIndex(spark, docs.filter(col("doc_id") % 20 =!= 7), store)
+    val arrivals = docs.filter(col("doc_id") % 20 === 7)
+    def pairs(d: String) = Similarity.nearDupIndexPairs(spark, d).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    def shingleIds() = spark.read.parquet(Similarity.nearDupTablePaths(spark, store, "shingles"): _*)
+      .select(col("doc_id")).collect().map(_.getLong(0)).toSeq.sorted
+    val (pairsBefore, shBefore) = (pairs(store), shingleIds())
+    val (storeGen, storeSeg) = plantCrash(store, "store") { seg =>
+      Similarity.hashedShingles(spark, arrivals).write.parquet(s"$seg/shingles")
+      spark.read.parquet(Similarity.nearDupTablePaths(spark, store, "bands"): _*)
+        .write.parquet(s"$seg/bands")
+      Similarity.nearDupIndexPairs(spark, store).write.parquet(s"$seg/pairs")
+    }
+    assert(pairs(store) === pairsBefore && shingleIds() === shBefore,
+      "the uncommitted store segment is visible")
+    Similarity.appendToNearDupIndex(spark, store, arrivals, Some("b1"))
+    val after = pairs(store)
+    assert(after.distinct === after && after === pairs(fixture("store")),
+      "the re-run store batch is missing or duplicated pairs")
+    assert(!IndexMeta.exists(spark, storeSeg) && !IndexMeta.exists(spark, storeGen),
+      "the next store append left the crashed one on disk")
+  }
+
   test("C43c header: a parquet-trio generation is refused with the refit message") {
     // the layout before the header: one-row scalars, a segment manifest
     // and an applied table as parquet, committed by `_SUCCESS`
@@ -2502,14 +2590,14 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     val docs = Relational.table(spark, dir, "documents").select(col("doc_id"), col("text"))
     val idx = Similarity.freshScratch(spark, "graft_c43_hdr_trio_")
     Pipeline.fitLexIndex(docs.filter(col("doc_id") % 10 =!= 7), idx)
-    val h = Pipeline.lexHeader(spark, IndexMeta.requireLive(spark, idx, "lex"), "the spec")
+    val h = Pipeline.lexHeader(spark, IndexMeta.liveGen(spark, idx, "lex").get.toString, "the spec")
     val (old, _) = IndexMeta.nextGen(spark, idx, "lex")
     Seq((h.sTotal, h.nDocs, h.postingCap.toLong, h.lineage))
       .toDF("s_total", "n_docs", "posting_cap", "lineage").write.parquet(s"$old/scalars")
     h.segments.toDF("seg").write.parquet(s"$old/manifest")
     Seq("b0").toDF("batch").write.parquet(s"$old/applied")
     IndexMeta.createMarker(spark, s"$old/_SUCCESS")
-    assert(IndexMeta.requireLive(spark, idx, "lex").endsWith(
+    assert(IndexMeta.liveGen(spark, idx, "lex").get.toString.endsWith(
       new org.apache.hadoop.fs.Path(old).getName), "the trio generation is not the live one")
     val refusals = Seq(
       "search" -> (() => Pipeline.sparseScoreIndexed(spark, idx, docs.limit(4)).collect()),
@@ -2654,14 +2742,14 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
       .select(col("doc_id"), col("text"))
     val idx = Similarity.freshScratch(spark, "graft_c43_empty_")
     Pipeline.fitLexIndex(docs, idx)
-    val gen0 = IndexMeta.requireLive(spark, idx, "lex")
+    val gen0 = IndexMeta.liveGen(spark, idx, "lex").get.toString
     Pipeline.appendLexIndex(spark, idx, docs.limit(0), Some("empty1"))
-    assert(IndexMeta.requireLive(spark, idx, "lex") == gen0,
+    assert(IndexMeta.liveGen(spark, idx, "lex").get.toString == gen0,
       "an empty batch committed a new generation")
     assert(Pipeline.lexSegmentCount(spark, idx) == 1,
       "an empty batch wrote a segment")
     Pipeline.appendLexIndex(spark, idx, docs.limit(0), Some("empty1")) // replay no-op
-    assert(IndexMeta.requireLive(spark, idx, "lex") == gen0)
+    assert(IndexMeta.liveGen(spark, idx, "lex").get.toString == gen0)
   }
 
   test("C43 crash orphan: an uncommitted segment is invisible to readers and swept by compaction") {
@@ -2673,7 +2761,7 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     val docs = Relational.table(spark, dir, "documents")
     val idx = Similarity.freshScratch(spark, "graft_c43_orph_")
     Pipeline.fitLexIndex(docs, idx)
-    val gen0 = IndexMeta.requireLive(spark, idx, "lex")
+    val gen0 = IndexMeta.liveGen(spark, idx, "lex").get.toString
     val before = lexTables(idx)
     // simulate the crashed append's leftovers
     spark.range(1).selectExpr("'zzorphan' as tok", "99L as dfq")
@@ -2686,7 +2774,7 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     assert(lexTables(idx) == before,
       "an unreferenced segment leaked into the reader's view")
     Pipeline.compactLexIndex(spark, idx) // no tombstones, one live segment
-    assert(IndexMeta.requireLive(spark, idx, "lex") == gen0,
+    assert(IndexMeta.liveGen(spark, idx, "lex").get.toString == gen0,
       "orphan sweep committed a new generation")
     assert(!IndexMeta.exists(spark, s"$idx/seg_crashed"),
       "compaction's no-op path left the crash orphan on disk")
@@ -2754,16 +2842,17 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     val docs = Relational.table(spark, dir, "documents")
     val idx = Similarity.freshScratch(spark, "graft_c43_oov_")
     Pipeline.fitLexIndex(docs, idx)
+    val segs = Pipeline.lexHeader(spark, IndexMeta.liveGen(spark, idx, "lex").get.toString,
+      "the spec").segments
+    // the OOV fraction the score path logs, from the score path's own fold
+    def oov(batch: org.apache.spark.sql.DataFrame) = Pipeline.lexQueryTerms(spark, idx, segs, batch)._3
     val known = docs.select(col("doc_id"), col("text")).limit(4)
-    assert(Pipeline.lexOovFraction(spark, idx, known) == 0.0,
-      "corpus-drawn query batch must have zero OOV terms")
+    assert(oov(known) == 0.0, "corpus-drawn query batch must have zero OOV terms")
     import spark.implicits._
     val alien = Seq((990001L, "zzqxv1 zzqxv2 zzqxv3")).toDF("doc_id", "text")
-    assert(Pipeline.lexOovFraction(spark, idx, alien) == 1.0,
-      "fully-unseen query batch must read OOV fraction 1.0")
+    assert(oov(alien) == 1.0, "fully-unseen query batch must read OOV fraction 1.0")
     val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
-    assert(Pipeline.lexOovFraction(spark, idx, empty) == 0.0,
-      "an empty batch has no terms to be OOV")
+    assert(oov(empty) == 0.0, "an empty batch has no terms to be OOV")
   }
 
   test("C42 dense-leg recall: overlap@5 vs brute force is monotone in nprobe (non-twin queries)") {

@@ -524,10 +524,10 @@ class TrainingSpec extends AnyFunSuite with SparkTestSession {
     val slice = docs.filter(col("doc_id") > t1)
     Training.ingestPretrainSlice(spark, st, slice, "s1")
     val before = keptIds(st)
-    val stateBefore = IndexMeta.requireLive(spark, st, "state")
+    val stateBefore = IndexMeta.liveGen(spark, st, "state").get
     Training.ingestPretrainSlice(spark, st, slice, "s1") // replay
     assert(keptIds(st) == before, "slice replay changed the shard contents")
-    assert(IndexMeta.requireLive(spark, st, "state") == stateBefore,
+    assert(IndexMeta.liveGen(spark, st, "state").get == stateBefore,
       "slice replay advanced the id watermark")
     // a slice at-or-below the watermark is rejected loudly, not
     // silently double-curated
@@ -535,6 +535,33 @@ class TrainingSpec extends AnyFunSuite with SparkTestSession {
       Training.ingestPretrainSlice(spark, st, slice, "s1_again")
     }
     assert(e.getMessage.contains("watermark"), e.getMessage)
+  }
+
+  test("C33b: a slice replayed after a crash between its seen-hash write and its commit is kept") {
+    // the crashed attempt wrote the slice's text hashes and died before
+    // the state commit: its replay must not read them as already seen
+    // and drop every doc of the slice
+    val dir = s"${new java.io.File(sf).getParent}/sf0.001" // the small sibling of `sf`
+    val docs = Relational.table(spark, dir, "documents")
+    val t1 = docs.agg(max(col("doc_id"))).head().getLong(0) * 90 / 100
+    val slice = docs.filter(col("doc_id") > t1)
+    def ingested(crash: String => Unit) = {
+      val st = Similarity.freshScratch(spark, "graft_c33b_seen_crash_")
+      Training.buildPretrainState(spark, docs.filter(col("doc_id") <= t1), st)
+      crash(st)
+      Training.ingestPretrainSlice(spark, st, slice, "s1")
+      (Training.liveSlices(spark, st), shardCensus(st))
+    }
+    val clean = ingested(_ => ())
+    // the slice's hashes where a crashed attempt leaves them: appended to
+    // the seen-hash table in place, and in the slice's own delta dir
+    val replayed = ingested { st =>
+      val th = slice.select(xxhash64(col("text")).as("th")).distinct()
+      th.write.mode("append").parquet(s"$st/seen_th")
+      th.write.parquet(s"$st/seen_th/slice_s1")
+    }
+    assert(clean._1.size == 2, s"the clean ingest kept no doc of the slice: ${clean._1}")
+    assert(replayed == clean, s"the replayed slice's shards differ from a clean ingest's: $replayed vs $clean")
   }
 
   test("C33b: an empty slice before the state exists is a no-op, not refused") {
@@ -660,9 +687,9 @@ class TrainingSpec extends AnyFunSuite with SparkTestSession {
     Training.tombstonePretrainDocs(spark, st, sliceDocs.toSeq.toDF("doc_id"))
     assert(!IndexMeta.exists(spark, s"$st/shards/tombstones"),
       "takedown of non-live ids created a tombstone table")
-    val g = IndexMeta.requireLive(spark, st, "state")
+    val g = IndexMeta.liveGen(spark, st, "state").get
     Training.compactPretrainShards(spark, st)
-    assert(IndexMeta.requireLive(spark, st, "state") == g,
+    assert(IndexMeta.liveGen(spark, st, "state").get == g,
       "a no-op compaction committed a new state generation")
   }
 

@@ -274,8 +274,8 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
       assert(pairs2 === pairs, "in-stream compaction changed the pair set")
     } finally spark.conf.unset("graft.stream.compactMaxFiles")
     def census(idx: String) = Seq("shingles", "bands", "pairs").map(t =>
-      graft.ops.IndexMeta.countUnder(spark,
-        Similarity.nearDupTablePath(spark, idx, t), ".parquet")).max
+      Similarity.nearDupTablePaths(spark, idx, t)
+        .map(graft.ops.IndexMeta.countUnder(spark, _, ".parquet")).sum).max
     assert(census(idx2) < census(idx),
       s"cadence did not bound the census: ${census(idx2)} vs ${census(idx)}")
   }
@@ -297,11 +297,11 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     // two batches per stream: both streams replay as bids 0 and 1
     val slices = 2
     def docs = Relational.table(spark, dir, "documents")
-    def ids(path: String, c: String) = idsOf(spark.read.parquet(path), c)
+    def ids(paths: Seq[String], c: String) = idsOf(spark.read.parquet(paths: _*), c)
     def idsOf(df: org.apache.spark.sql.DataFrame, c: String) =
       df.select(c).collect().map(_.getLong(0)).toSet
-    def shingleIds(idx: String) = ids(Similarity.nearDupTablePath(spark, idx, "shingles"), "doc_id")
-    def liveIds(idx: String) = ids(Similarity.liveVectorsPath(spark, idx), "vec_id")
+    def shingleIds(idx: String) = ids(Similarity.nearDupTablePaths(spark, idx, "shingles"), "doc_id")
+    def liveIds(idx: String) = idsOf(Similarity.storedVectors(spark, idx), "vec_id")
     def vecs = Relational.table(spark, dir, "embeddings").select("vec_id", "embedding")
     lazy val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
     lazy val copied = docs.orderBy("doc_id").head().getString(1)
@@ -425,7 +425,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     try Similarity.ragIngestStreamOn(spark, idx, arrivals, "graft_c42c_census")
     finally spark.conf.unset("graft.stream.compactMaxFiles")
     assert(census() <= maxFiles, s"the stream ended at ${census()} files, over the limit $maxFiles")
-    val live = spark.read.parquet(Similarity.liveVectorsPath(spark, idx))
+    val live = Similarity.storedVectors(spark, idx)
       .filter($"vec_id" >= 5000001L * 4096).count()
     assert(live == chunks, s"$live of $chunks arrival chunks are live")
   }
