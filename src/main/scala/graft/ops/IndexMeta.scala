@@ -3,7 +3,7 @@ package graft.ops
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /**
  * Index-layout metadata through the Hadoop `FileSystem` API, and the
@@ -38,26 +38,22 @@ import org.apache.spark.sql.SparkSession
  *
  * Data that a header names lives beside the generation dirs and is
  * immutable once named: lex, IVF and near-dup segments, IVF codebooks,
- * PQ codes/books, pretrain shard and seen-hash slices, and the BPE,
- * BM25 and classifier tables inside their own generation dirs. An
- * append writes a fresh segment that only the header it commits
- * names, so the header commit is its only commit point: a crash
- * before it leaves an orphan segment, invisible and overwritten or
- * swept by the family's next commit. Each family deletes what its
- * live header no longer names after the commit. Nothing is written
- * into a live dir; the tombstone tables (lex, IVF, pretrain shards)
- * are the one exception — a delete appends ids to them in place.
+ * PQ codes/books, pretrain shard and seen-hash slices, tombstone
+ * deltas, and the BPE, BM25 and classifier tables inside their own
+ * generation dirs. An append writes a fresh segment, and a delete a
+ * fresh `tomb_<gen>` delta ([[commitTombstones]]), that only the
+ * header it commits names, so that commit is its one commit point: a
+ * crash before it leaves an orphan, invisible and overwritten or swept
+ * by the family's next commit. A compaction or rebuild names no delta.
+ * Each family deletes what its live header no longer names after the
+ * commit; nothing is written into a live dir. [[faultHook]] crashes a
+ * mutation at each commit point in specs.
  */
 private[graft] object IndexMeta {
 
   def fsFor(spark: SparkSession, p: String): (FileSystem, Path) = {
     val path = new Path(p)
     (path.getFileSystem(spark.sparkContext.hadoopConfiguration), path)
-  }
-
-  def exists(spark: SparkSession, p: String): Boolean = {
-    val (fs, path) = fsFor(spark, p)
-    fs.exists(path)
   }
 
   /** Recursive delete, tolerant of concurrent deleters (two processes
@@ -105,37 +101,49 @@ private[graft] object IndexMeta {
     if (!fs.exists(path)) Seq.empty else fs.listStatus(path).toSeq
   }
 
-  /** Total bytes of files with `suffix` under `p`, recursively —
-    * the `Files.walk` sizing replacement. */
-  def bytesUnder(spark: SparkSession, p: String, suffix: String): Long = {
+  /** The files with `suffix` under `p`, recursively. */
+  private def filesUnder(spark: SparkSession, p: String, suffix: String): Seq[FileStatus] = {
     val (fs, path) = fsFor(spark, p)
-    var total = 0L
     val it = fs.listFiles(path, true)
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.getPath.getName.endsWith(suffix)) total += f.getLen
-    }
-    total
+    Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      .filter(_.getPath.getName.endsWith(suffix)).toSeq
   }
+
+  /** Total bytes of files with `suffix` under `p`, recursively. */
+  def bytesUnder(spark: SparkSession, p: String, suffix: String): Long =
+    filesUnder(spark, p, suffix).map(_.getLen).sum
+
+  /** Count of files with `suffix` under `p`, recursively. */
+  def countUnder(spark: SparkSession, p: String, suffix: String): Long =
+    filesUnder(spark, p, suffix).size.toLong
 
   /** Delete every entry of `dir` whose name starts with one of
     * `prefixes` and is not in `keep` — the GC of what a committed
     * header no longer names (superseded data and crash orphans; a
     * single-writer maintenance step, run after the commit). */
   def deleteUnnamed(spark: SparkSession, dir: String, prefixes: Seq[String],
-                    keep: Set[String]): Unit =
-    list(spark, dir).foreach { st =>
-      val n = st.getPath.getName
-      if (prefixes.exists(n.startsWith) && !keep(n)) delete(spark, st.getPath.toString)
+                    keep: Set[String]): Unit = {
+    val victims = list(spark, dir).map(_.getPath).filter { p =>
+      prefixes.exists(p.getName.startsWith) && !keep(p.getName)
     }
+    deleteFaulting(spark, victims.map(_.toString), "unnamed")
+  }
 
-  /** Count of files with `suffix` under `p`, recursively. */
-  def countUnder(spark: SparkSession, p: String, suffix: String): Long = {
-    val (fs, path) = fsFor(spark, p)
-    var n = 0L
-    val it = fs.listFiles(path, true)
-    while (it.hasNext) if (it.next().getPath.getName.endsWith(suffix)) n += 1
-    n
+  /** Test-only crash injection, called with each [[faultPoints]] name
+    * as a mutation passes it: `body` (the generation's data written),
+    * `header`, `success` (`_SUCCESS` written), `gc` (midway through
+    * deleting superseded generations), `unnamed` (midway through
+    * [[deleteUnnamed]]). Only specs set it, to throw at one point. */
+  @volatile private[graft] var faultHook: String => Unit = _ => ()
+
+  private[graft] val faultPoints = Seq("body", "header", "success", "gc", "unnamed")
+
+  /** Delete `paths`, passing the fault point `point` halfway through. */
+  private def deleteFaulting(spark: SparkSession, paths: Seq[String], point: String): Unit = {
+    val (first, rest) = paths.splitAt(paths.size / 2)
+    first.foreach(delete(spark, _))
+    faultHook(point)
+    rest.foreach(delete(spark, _))
   }
 
   // ------------------------------------------ table generations
@@ -200,10 +208,41 @@ private[graft] object IndexMeta {
                (body: String => ObjectNode): ObjectNode = {
     val (g, old) = nextGen(spark, dir, name)
     val h = body(g)
+    faultHook("body")
     writeSmallFile(spark, s"$g/$HeaderFile", json.writeValueAsBytes(h))
+    faultHook("header")
     createMarker(spark, s"$g/$Committed")
-    old.foreach(delete(spark, _))
+    faultHook("success")
+    deleteFaulting(spark, old, "gc")
     h
+  }
+
+  // ------------------------------------------ tombstone deltas
+
+  /** The union of the tombstone deltas `named` under `dir` (one id
+    * column, distinct across deltas), or None — a reader's anti-join. */
+  def tombstones(spark: SparkSession, dir: String, named: Seq[String]): Option[DataFrame] =
+    if (named.isEmpty) None
+    else Some(Relational.cachedSchemaParquet(spark, named.map(t => s"$dir/$t")))
+
+  /** A delete of `ids` (one id column) from a family whose header names
+    * the deltas `named` under `dir`: the ids no delta holds yet land in
+    * one new delta. `commit` runs the family's commit and calls the
+    * writer it is handed, inside its body, with the new generation's
+    * path; the writer writes `tomb_<gen>` under `dir` and returns the
+    * name the header adds. Re-deletes (takedown retries) do not grow the
+    * deltas, and a delete with no novel id commits nothing. */
+  def commitTombstones(spark: SparkSession, dir: String, named: Seq[String], ids: DataFrame)
+                      (commit: (String => String) => Unit): Unit = {
+    val asked = ids.distinct()
+    val novel = tombstones(spark, dir, named)
+      .fold(asked)(t => asked.join(t, asked.columns.toSeq, "left_anti"))
+      .localCheckpoint() // tiny; one eval for the guard AND the write
+    if (!novel.isEmpty) commit { g =>
+      val delta = s"tomb_${new Path(g).getName}"
+      Relational.writeParquet(novel.coalesce(1), s"$dir/$delta")
+      delta
+    }
   }
 
   /** The header of the live `<name>` generation under `dir` — one
@@ -258,25 +297,32 @@ private[graft] object IndexMeta {
     h
   }
 
+  /** The derived-index cache key: a hash of every file's (name, length,
+    * mtime) under `sourceDir` and of the family's `layout`. */
+  private[graft] def fingerprint(spark: SparkSession, sourceDir: String, layout: Seq[String]): String =
+    (list(spark, sourceDir).filter(_.isFile)
+      .map(f => s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}")
+      .sorted ++ layout).mkString("|").hashCode.toHexString
+
   /** Fingerprint-keyed derived-index cache under `graft.index.root`
     * (default java.io.tmpdir): the index is a pure function of the
     * source files, so same (name, length, mtime) set ⇒ same index and
     * repeated wrapper calls (bench run1/run2, sweeps) rebuild nothing.
-    * A cached dir is READY when `readHeader` — the family's header
-    * reader — accepts it: it has a live header (the last thing a build
-    * commits) of the layout this code writes. A half-built or crashed
-    * dir, a layout from before the header protocol, or a header of any
-    * other layout is never served and gets rebuilt. Concurrent builders
-    * each write their own appId-suffixed dir; readers take any ready
-    * one; every dir of a stale fingerprint of the same prefix, ready or
-    * not, is GC'd after a successful build. Shared by the IVF, RAG-chunk,
-    * and lexical index wrappers. */
-  def ensureDerived(spark: SparkSession, sourceDir: String, prefix: String)
+    * `layout` — the header fields the family's reader needs — is part
+    * of the fingerprint, so a layout change is a stale fingerprint whose
+    * dirs the GC below reclaims. A cached dir is READY when `readHeader` —
+    * the family's header reader — accepts it: it has a live header (the
+    * last thing a build commits) of the layout this code writes. A
+    * half-built or crashed dir, a layout from before the header
+    * protocol, or a header of any other layout is never served and gets
+    * rebuilt. Concurrent builders each write their own appId-suffixed
+    * dir; readers take any ready one; every dir of a stale fingerprint
+    * of the same prefix, ready or not, is GC'd after a successful
+    * build. Shared by the IVF, RAG-chunk, and lexical index wrappers. */
+  def ensureDerived(spark: SparkSession, sourceDir: String, prefix: String, layout: Seq[String])
                    (readHeader: String => Any)(build: String => Unit): String = {
     def ready(p: String) = scala.util.Try(readHeader(p)).isSuccess
-    val files = list(spark, sourceDir).filter(_.isFile)
-    val fp = files.map(f => s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}")
-      .sorted.mkString("|").hashCode.toHexString
+    val fp = fingerprint(spark, sourceDir, layout)
     val tmpRoot = spark.conf.getOption("graft.index.root")
       .getOrElse(System.getProperty("java.io.tmpdir"))
     // a cache dir is named `<prefix><hex fp>_<app id>`, the app id with

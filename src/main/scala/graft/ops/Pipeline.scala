@@ -639,8 +639,8 @@ object Pipeline {
   /** C43c fit — build the lexical retrieval index: one `lex.gN`
     * generation (single root marker, the [[commitBm25Stats]] atomicity
     * doctrine) holding the JSON [[LexHeader]] — s_total, n_docs, the
-    * build's posting cap, the lineage, and the list of the live
-    * IMMUTABLE segments. Each `seg_*` dir holds
+    * build's posting cap, and the lists of the live IMMUTABLE segments
+    * and tombstone deltas. Each `seg_*` dir holds
     *   - `terms/`    (tok, dfq) — the segment's own per-term df DELTA
     *     (Lucene's per-segment dictionary); readers assemble global
     *     df by summing across segments AFTER a batch-bounded
@@ -710,14 +710,9 @@ object Pipeline {
     val postings = truncatePostings(
       tf.join(terms, "tok")
         .withColumn("score_micro", expr(bm25RationalExpr)), cap)
-    // lineage = the name of the generation THIS FIT commits; appends
-    // and compactions carry it forward unchanged. All maintenance
-    // side-state (tombstones, the applied batch ids) is keyed by it or
-    // rides its header, so a refit RETIRES the old index's side-state
-    // atomically with the generation commit — no crash window where
-    // stale tombstones hide (and compaction then physically deletes)
-    // re-indexed docs, or stale batch ids turn legitimate appends into
-    // no-ops.
+    // side-state (tombstone deltas, applied batch ids) rides the header
+    // and a fit's names none, so a refit retires it with its commit:
+    // stale deletes never hide re-indexed docs.
     // the scalars ride every row of the pinned terms (a non-empty
     // corpus has at least one term), so the header reads them there
     // instead of re-running the corpus aggregate
@@ -728,8 +723,7 @@ object Pipeline {
       val sc = terms.select(col("s_total"), col("n_docs")).head(1).headOption
       LexHeader(
         sTotal = sc.fold(0L)(_.getAs[Long](0)), nDocs = sc.fold(0L)(_.getAs[Long](1)),
-        postingCap = cap, lineage = new org.apache.hadoop.fs.Path(genDir).getName,
-        segments = Seq(seg), applied = Seq.empty)
+        postingCap = cap, segments = Seq(seg), tombstones = Nil, applied = Nil)
     }
   }
 
@@ -799,10 +793,9 @@ object Pipeline {
     *     property, baked into the stored postings, so it rides the
     *     generation: [[appendLexIndex]] re-truncates at this cap, never
     *     at whatever the session conf happens to say;
-    *   - `lineage` — the name of the generation the fit that started
-    *     this index life committed; appends and compactions carry it
-    *     forward, and side-state paths (tombstones) embed it;
     *   - `segments` — the live immutable segments, sorted;
+    *   - `tombstones` — the live `tomb_*` delete deltas (doc ids), one
+    *     per delete since the last fit or compaction;
     *   - `applied` — the batch ids appended in this index life (fit
     *     starts it empty, append extends it, compaction carries it
     *     verbatim). Riding the generation, it is atomic with the
@@ -811,34 +804,36 @@ object Pipeline {
     *     append since the last fit: KB-scale even for years of
     *     streaming micro-batches. */
   private[graft] final case class LexHeader(sTotal: Long, nDocs: Long, postingCap: Int,
-      lineage: String, segments: Seq[String], applied: Seq[String]) {
+      segments: Seq[String], tombstones: Seq[String], applied: Seq[String]) {
     def toJson: com.fasterxml.jackson.databind.node.ObjectNode = {
       val o = IndexMeta.newHeader()
       o.put("s_total", sTotal).put("n_docs", nDocs).put("posting_cap", postingCap)
-        .put("lineage", lineage)
       IndexMeta.putStrings(o, "segments", segments)
+      IndexMeta.putStrings(o, "tombstones", tombstones)
       IndexMeta.putStrings(o, "applied", applied)
     }
   }
 
   private val lexRefit = "refit with fitLexIndex first"
+  private val lexNeeds = Seq("tombstones")
 
   private def parseLexHeader(o: com.fasterxml.jackson.databind.node.ObjectNode): LexHeader = {
     def field(f: String) = IndexMeta.field(o, f)
     LexHeader(field("s_total").asLong, field("n_docs").asLong, field("posting_cap").asInt,
-      field("lineage").asText, IndexMeta.strings(o, "segments").sorted,
+      IndexMeta.strings(o, "segments").sorted, IndexMeta.strings(o, "tombstones"),
       IndexMeta.strings(o, "applied"))
   }
 
   /** Commit the next `lex.gN` through [[IndexMeta.commitGen]]: `body`
-    * writes the generation's new segment (if any) and returns its
-    * header. A reader resolves only committed generations, so it never
-    * sees a header whose segments are not all written, nor a segment
-    * no header describes. Superseded GENERATIONS are GC'd after the
-    * commit — segments are shared across generations and only
-    * compaction deletes them. */
+    * writes the generation's new segment or delta (if any) and returns
+    * its header. A reader resolves only committed generations, so it
+    * never sees a header whose segments are not all written, nor a
+    * segment no header describes. Superseded generations, and what the
+    * new header no longer names, are GC'd after the commit
+    * ([[gcLexIndex]]). */
   private def commitLexGen(spark: SparkSession, lexDir: String)(body: String => LexHeader): Unit =
-    IndexMeta.commitGen(spark, lexDir, "lex")(g => body(g).toJson)
+    gcLexIndex(spark, lexDir,
+      parseLexHeader(IndexMeta.commitGen(spark, lexDir, "lex")(g => body(g).toJson)))
 
   /** The header of the committed generation `g` — the one reader of
     * every lex scalar, the segment list and the replay record: one
@@ -848,11 +843,11 @@ object Pipeline {
     * loudly; the derived-index cache rebuilds such an index. `what`
     * names the caller in the refusal. */
   private[graft] def lexHeader(spark: SparkSession, g: String, what: String): LexHeader =
-    parseLexHeader(IndexMeta.headerAt(spark, g, what, lexRefit))
+    parseLexHeader(IndexMeta.headerAt(spark, g, what, lexRefit, lexNeeds))
 
   /** The header of an index's live generation. */
   private def liveLexHeader(spark: SparkSession, lexDir: String, what: String): LexHeader =
-    parseLexHeader(IndexMeta.header(spark, lexDir, "lex", what, lexRefit))
+    parseLexHeader(IndexMeta.header(spark, lexDir, "lex", what, lexRefit, lexNeeds))
 
   /** Union read of one table across the given segments — callers
     * read the header ONCE per op and reuse its segment list. */
@@ -956,8 +951,7 @@ object Pipeline {
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
       .withColumn("dl", size(col("toks"))))
     val doclens = lexSegTable(spark, lexDir, segs, "doclens")
-    val tombIds = lexTombstones(spark, lexDir, h.lineage)
-      .map(_.select(col("doc_id")))
+    val tombIds = IndexMeta.tombstones(spark, lexDir, h.tombstones)
       .getOrElse(spark.range(0).select(col("id").as("doc_id")))
     // id guard + additive scalars delta in ONE job per append
     // (round-15 fold): both read the pinned batch, so a cross join of
@@ -1061,18 +1055,9 @@ object Pipeline {
       d.select(col("doc_id"), col("dl")))
   }
 
-  /** The live lineage's tombstone table, if any deletes are pending.
-    * Lineage-keyed: a tombstone file left behind by a superseded
-    * index life (crash between a refit's commit and its GC) resolves
-    * to a DIFFERENT path and is structurally invisible here. */
-  private def lexTombstones(spark: SparkSession, lexDir: String,
-                            lineage: String): Option[DataFrame] = {
-    val t = s"$lexDir/tombstones_$lineage"
-    if (IndexMeta.exists(spark, t)) Some(Relational.cachedSchemaParquet(spark, t)) else None
-  }
-
-  /** C43e — lexical TAKEDOWN: tombstone doc ids as a side table
-    * (O(deletes) — one narrow parquet append, the
+  /** C43e — lexical TAKEDOWN: the novel doc ids land in one tombstone
+    * delta that the next `lex.gN` header names
+    * ([[IndexMeta.commitTombstones]] — O(deletes), the
     * [[Similarity.deleteFromIvfIndex]] LSM discipline; never a layout
     * rewrite). Every sparse-leg read anti-joins the broadcast
     * tombstones, so a deleted document is invisible to the NEXT query
@@ -1085,21 +1070,10 @@ object Pipeline {
     * is at most the tombstone window, and compaction cadence bounds
     * the window exactly as the IVF family's does. */
   def deleteLexDocs(spark: SparkSession, lexDir: String, ids: DataFrame): Unit = {
-    val lineage = liveLexHeader(spark, lexDir, "deletes").lineage
-    // append only ids NOT already tombstoned (re-deletes are routine —
-    // takedown automation retries — and must not grow the table), and
-    // never create the table for a delete that matched nothing: an
-    // empty tombstone file would flip every sparse read onto the
-    // anti-join path and compaction off its cheap gc-only path, for
-    // zero deletes. O(deletes) work either way.
-    val t = s"$lexDir/tombstones_$lineage"
-    val novel = (lexTombstones(spark, lexDir, lineage) match {
-      case Some(existing) => ids.select(col("doc_id")).distinct()
-        .join(existing.select(col("doc_id")), Seq("doc_id"), "left_anti")
-      case None => ids.select(col("doc_id")).distinct()
-    }).localCheckpoint() // tiny; one eval for the guard AND the write
-    if (!novel.isEmpty)
-      novel.coalesce(1).write.mode("append").parquet(t)
+    val h = liveLexHeader(spark, lexDir, "deletes")
+    IndexMeta.commitTombstones(spark, lexDir, h.tombstones, ids.select(col("doc_id"))) { write =>
+      commitLexGen(spark, lexDir)(g => h.copy(tombstones = h.tombstones :+ write(g)))
+    }
   }
 
   /** C43e compaction — make lexical deletes physical and the
@@ -1117,26 +1091,23 @@ object Pipeline {
     * cap (spec-pinned, term-for-term). Above the cap, two documented
     * staleness classes survive until a full refit: df of (term, doc)
     * pairs the BUILD truncated away never decrements, and capped-out
-    * postings cannot re-enter a list deletion shortened. Tombstones
-    * clear only AFTER the new generation commits — a crash between
-    * commit and clear replays the tombstones against a layout that no
-    * longer contains them: a no-op (idempotent, the c27 crash
-    * doctrine). */
+    * postings cannot re-enter a list deletion shortened. The new
+    * header names no tombstone delta, so the deletes it applied retire
+    * with its commit; the old deltas are swept after it. */
   def compactLexIndex(spark: SparkSession, lexDir: String): Unit = {
     val h = liveLexHeader(spark, lexDir, "compaction")
-    val lineage = h.lineage
-    val tombOpt = lexTombstones(spark, lexDir, lineage)
+    val tombOpt = IndexMeta.tombstones(spark, lexDir, h.tombstones)
     // a fold happens only when there is a pending delete or a segment
-    // pileup — but crash ORPHANS (segments written by an append that
-    // never committed, side-state of a retired lineage) are swept
+    // pileup — but crash ORPHANS (segments or deltas written by a
+    // mutation that never committed, deltas a commit retired) are swept
     // unconditionally: nothing else ever lists them, so without this
     // the no-op path would let them accumulate forever
     val segs = h.segments
     if (tombOpt.isEmpty && segs.size <= 1) {
-      gcLexIndex(spark, lexDir); return
+      gcLexIndex(spark, lexDir, h); return
     }
     val cap = h.postingCap
-    val tombIds = broadcast(tombOpt.map(_.select(col("doc_id")).distinct())
+    val tombIds = broadcast(tombOpt
       .getOrElse(spark.range(0).select(col("id").as("doc_id"))))
     // the three multi-consumer intermediates here are INDEX-sized (the
     // full posting set is the largest frame this store ever pins), so
@@ -1180,24 +1151,18 @@ object Pipeline {
     // the replay record survives the fold verbatim: a compaction
     // changes what is stored, never what was ingested
     commitLexGen(spark, lexDir) { genDir =>
-      h.copy(sTotal = s2, nDocs = n2,
+      h.copy(sTotal = s2, nDocs = n2, tombstones = Nil,
         segments = Seq(writeLexSegment(spark, lexDir, genDir, merged, postings, keptLens)))
     }
-    IndexMeta.delete(spark, s"$lexDir/tombstones_$lineage")
-    gcLexIndex(spark, lexDir)
   }
 
-  /** Reclaim everything the LIVE generation does not reference:
-    * `seg_*` dirs off the header (superseded inputs, crash orphans) and
-    * tombstone tables of retired lineages. Purely a disk-space concern — readers resolve the
-    * header's segments and the live lineage, so unreferenced files are
-    * structurally invisible. Single-writer maintenance, like the IVF
-    * compaction's file GC. */
-  private def gcLexIndex(spark: SparkSession, lexDir: String): Unit = {
-    val h = liveLexHeader(spark, lexDir, "the segment GC")
-    IndexMeta.deleteUnnamed(spark, lexDir, Seq("seg_", "tombstones_"),
-      h.segments.toSet + s"tombstones_${h.lineage}")
-  }
+  /** Reclaim everything the live header `h` does not reference: `seg_*`
+    * and `tomb_*` dirs off the header (superseded inputs, retired
+    * deltas, crash orphans). Purely a disk-space concern — readers
+    * resolve the header's lists, so unreferenced files are structurally
+    * invisible. Single-writer maintenance, like the IVF file GC. */
+  private def gcLexIndex(spark: SparkSession, lexDir: String, h: LexHeader): Unit =
+    IndexMeta.deleteUnnamed(spark, lexDir, Seq("seg_", "tomb_"), (h.segments ++ h.tombstones).toSet)
 
   def hybridScoreIndexed(spark: SparkSession, lexDir: String, annDir: String,
                          queryDocs: DataFrame, queryVecs: DataFrame): DataFrame = {
@@ -1264,9 +1229,8 @@ object Pipeline {
     val segs = h.segments
     val stored = lexSegTable(spark, lexDir, segs, "postings")
     val (sTotal, nDocs) = (h.sTotal, h.nDocs)
-    val postings = lexTombstones(spark, lexDir, h.lineage) match {
-      case Some(t) => stored.join(broadcast(t.select(col("doc_id"))),
-        Seq("doc_id"), "left_anti")
+    val postings = IndexMeta.tombstones(spark, lexDir, h.tombstones) match {
+      case Some(t) => stored.join(broadcast(t), Seq("doc_id"), "left_anti")
       case None => stored
     }
     val wq = Window.partitionBy(col("query_id"))
@@ -1315,24 +1279,9 @@ object Pipeline {
     // rebuild per cap value, not silently reuse an index built at the
     // old cap (round-13 advice — freshScratch test dirs masked this)
     val lexDir = IndexMeta.ensureDerived(spark, s"$dir/documents.parquet",
-      s"graft_lex_index_${key}_cap${postingCap(spark)}_")(
+      s"graft_lex_index_${key}_cap${postingCap(spark)}_", lexNeeds)(
       liveLexHeader(spark, _, "the index cache"))(
       fitLexIndex(Relational.table(spark, dir, "documents"), _))
-    // legacy-cache GC: dirs named before the cap joined the prefix
-    // (`graft_lex_index_<key>_<fp>_<app>`) can never be served again
-    // (the ready check requires the current layout, and every current
-    // name carries `cap<N>_`), and ensureDerived's own stale-GC only
-    // matches the NEW prefix — without this they sit in the index
-    // root forever, a full index's worth of parquet per old cache.
-    // `cap` cannot collide with a fingerprint: fps are hex, 'p' is not.
-    val root = spark.conf.getOption("graft.index.root")
-      .getOrElse(System.getProperty("java.io.tmpdir"))
-    IndexMeta.list(spark, root).foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith(s"graft_lex_index_${key}_") &&
-          !n.stripPrefix(s"graft_lex_index_${key}_").matches("cap\\d+_.*"))
-        IndexMeta.delete(spark, st.getPath.toString)
-    }
     val (queryDocs, queryVecs) = batchQueryFrames(spark, dir)
     hybridScoreIndexed(spark, lexDir, Similarity.ensureIndex(spark, dir),
       queryDocs, queryVecs)

@@ -103,9 +103,10 @@ object Relational {
 
   /** Signature of a dir's DIRECT children (name/mtime/len). One level
     * is sufficient for every layout this repo reads through the memo:
-    * the only appends (the tombstone tables) are flat and add a direct
-    * child, and every partitioned layout (IVF segments, PQ codes, the
-    * c25b shard/part tree) is written whole into a fresh dir. A future
+    * no index dir is appended to, and every partitioned layout (IVF
+    * segments, PQ codes, the c25b shard/part tree) is written whole
+    * into a fresh dir (overwriting a crashed attempt's replaces the
+    * direct children too). A future
     * append into an existing grandchild of a memoized path would need
     * a recursive signature; do not add one without that write pattern
     * existing. */

@@ -1479,20 +1479,6 @@ object Similarity {
       .limit(10)
   }
 
-  /** C3g2 — filtered probe of the PERSISTED IVF index. Post-filtering
-    * with a selectivity-widened probe set: with filter selectivity s a
-    * probed cell yields only ~s of its rows as candidates, so the probe
-    * takes ceil(nprobe / s) nearest cells (capped at all cells) to keep
-    * the expected candidate count at the unfiltered level — the
-    * standard pre/post-filter tradeoff (cf. FAISS IDSelector notes,
-    * Milvus/Qdrant filtered-search docs; public practice). The cap is
-    * the honest degenerate case: a very selective filter widens to
-    * every cell, which IS exact brute search over the filtered subset —
-    * the right plan there, since the semi-join runs before the cosine
-    * projection and only passing rows pay the distance. Selectivity
-    * comes from one metadata-side aggregate (no embedding scan). The cell
-    * scan stays partition-pruned for any non-degenerate s; approximate
-    * → rows-only, recall vs [[simTopKFiltered]] pinned in TierCSpec. */
   /** Filter selectivity for probe widening: |filtered| / |total| from
     * one aggregate pass over the metadata table (both counts together),
     * clamped to [1e-9, 1]. */
@@ -1528,18 +1514,48 @@ object Similarity {
       (i, d)
     }.sortBy(_._2).take(n).map(_._1)
 
-  def annIvfFiltered(spark: SparkSession, dir: String, indexDir: String): DataFrame = {
-    GraftFunctions.register(spark)
+  /** C3g2 — filtered probe of the PERSISTED IVF index. Post-filtering
+    * with a selectivity-widened probe set: with filter selectivity s a
+    * probed cell yields only ~s of its rows as candidates, so the probe
+    * takes ceil(nprobe / s) nearest cells (capped at all cells) to keep
+    * the expected candidate count at the unfiltered level — the
+    * standard pre/post-filter tradeoff (cf. FAISS IDSelector notes,
+    * Milvus/Qdrant filtered-search docs; public practice). The cap is
+    * the honest degenerate case: a very selective filter widens to
+    * every cell, which IS exact brute search over the filtered subset —
+    * the right plan there, since the semi-join runs before the cosine
+    * projection and only passing rows pay the distance. Selectivity
+    * comes from one metadata-side aggregate (no embedding scan). The cell
+    * scan stays partition-pruned for any non-degenerate s; approximate
+    * → rows-only, recall vs [[simTopKFiltered]] pinned in TierCSpec. */
+  def annIvfFiltered(spark: SparkSession, dir: String, indexDir: String): DataFrame =
+    probeIndexed(spark, indexDir, Some(englishFilter(spark, dir)))
+
+  /** The filtered probes' `lang = 'en'` ids and their selectivity. */
+  private def englishFilter(spark: SparkSession, dir: String): (DataFrame, Double) = {
     val docs = Relational.table(spark, dir, "documents")
-    val allowed = docs.filter(col("lang") === "en").select(col("doc_id").as("vec_id"))
-    val sel = filterSelectivity(docs, col("lang") === "en")
+    (docs.filter(col("lang") === "en").select(col("doc_id").as("vec_id")),
+      filterSelectivity(docs, col("lang") === "en"))
+  }
+
+  /** The probe width of a single-query probe: nprobe, widened to
+    * ceil(nprobe / s) cells (capped at all cells) under a filter of
+    * selectivity s. */
+  private def probeWidth(spark: SparkSession, cb: IvfCodebook, sel: Option[Double]): Int =
+    sel.fold(nprobe(spark))(s => math.min(cb.k.toLong, math.ceil(nprobe(spark) / s).toLong).toInt)
+
+  /** The vec_id=0 top-10 over a persisted index, optionally filtered to
+    * `allowed` ids of selectivity `sel` ([[annIvfIndexed]],
+    * [[annIvfFiltered]]). */
+  private def probeIndexed(spark: SparkSession, indexDir: String,
+      filtered: Option[(DataFrame, Double)]): DataFrame = {
+    GraftFunctions.register(spark)
     val vectors = liveIndexVectors(spark, indexDir)
     val cb = ivfCodebook(spark, indexDir)
-    val widened = math.min(cb.k.toLong, math.ceil(nprobe(spark) / sel).toLong).toInt
-    val probeCells = probeCellsOf(cb, queryVector(indexDir, vectors), widened)
+    val probeCells = probeCellsOf(cb, queryVector(indexDir, vectors), probeWidth(spark, cb, filtered.map(_._2)))
     val q = vectors.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
-    vectors.filter(col("vec_id") =!= 0 && col("cell").isin(probeCells.toSeq: _*))
-      .join(allowed, Seq("vec_id"), "left_semi")
+    val cands = vectors.filter(col("vec_id") =!= 0 && col("cell").isin(probeCells.toSeq: _*))
+    filtered.fold(cands) { case (allowed, _) => cands.join(allowed, Seq("vec_id"), "left_semi") }
       .crossJoin(broadcast(q))
       .select(col("vec_id"), round(cosineExpr("embedding", "qv"), 4).as("sim"))
       .orderBy(col("sim").desc, col("vec_id").asc)
@@ -1954,25 +1970,19 @@ object Similarity {
     * rows that can actually be returned, at 8 bytes per screened
     * candidate. Exact re-rank unchanged. Approximate → rows-only;
     * recall vs [[simTopKFiltered]] pinned in TierCSpec. */
-  def annIvfPqFiltered(spark: SparkSession, dir: String, indexDir: String): DataFrame = {
-    val docs = Relational.table(spark, dir, "documents")
-    val allowed = docs.filter(col("lang") === "en").select(col("doc_id").as("vec_id"))
-    val sel = filterSelectivity(docs, col("lang") === "en")
-    pqIndexedCore(spark, indexDir, Some((allowed, sel)))
-  }
+  def annIvfPqFiltered(spark: SparkSession, dir: String, indexDir: String): DataFrame =
+    pqIndexedCore(spark, indexDir, Some(englishFilter(spark, dir)))
 
-  def annIvfPqFilteredQuery(spark: SparkSession, dir: String): DataFrame = {
-    val idx = ensureIndex(spark, dir)
-    if (!pqSidecarFresh(spark, idx)) addPqToIndex(spark, idx)
-    annIvfPqFiltered(spark, dir, idx)
-  }
+  def annIvfPqFilteredQuery(spark: SparkSession, dir: String): DataFrame =
+    annIvfPqFiltered(spark, dir, ensurePqIndex(spark, dir))
 
   private def pqIndexedCore(spark: SparkSession, indexDir: String,
       filtered: Option[(DataFrame, Double)]): DataFrame = {
     GraftFunctions.register(spark)
     val m = livePqMeta(spark, indexDir).getOrElse(sys.error(
       s"no committed PQ sidecar under $indexDir — run addPqToIndex first"))
-    val live = ivfHeader(spark, indexDir, "the PQ probe").segments
+    val h = ivfHeader(spark, indexDir, "the PQ probe")
+    val live = h.segments
     require(m.segments == live,
       s"PQ sidecar is STALE: codes cover segments [${m.segments.mkString(", ")}] but the " +
         s"live index has [${live.mkString(", ")}] (an append or compaction changed it). " +
@@ -1981,23 +1991,17 @@ object Similarity {
         "delta encode of the new segments; full re-derive only after a " +
         "compaction or rebuild), then probe again.")
     val books = readPqBooks(spark, indexDir, m.booksGen)
-    val vectors = liveIndexVectors(spark, indexDir)
+    val vectors = liveIndexVectors(spark, indexDir, h)
     val cb = ivfCodebook(spark, indexDir)
     val qVec = queryVector(indexDir, vectors)
-    val nCells = filtered match {
-      case Some((_, sel)) => math.min(cb.k.toLong, math.ceil(nprobe(spark) / sel).toLong).toInt
-      case None => nprobe(spark)
-    }
-    val probeCells = probeCellsOf(cb, qVec, nCells)
+    val probeCells = probeCellsOf(cb, qVec, probeWidth(spark, cb, filtered.map(_._2)))
     // base + delta codes generations, unioned — each scan keeps its own
     // cell partition pruning, and [[compactIvfIndex]]-triggered full
     // re-derives fold them back to one
     val codes0 = unionScans(spark, m.codesGens.map(g => s"$indexDir/$g"))
       .select(col("vec_id"), col("pq"), col("cell"))
-    val tomb = s"$indexDir/tombstones"
-    val codes1 = if (IndexMeta.exists(spark, tomb))
-      codes0.join(broadcast(Relational.cachedSchemaParquet(spark, tomb)), Seq("vec_id"), "left_anti")
-    else codes0
+    val codes1 = IndexMeta.tombstones(spark, indexDir, h.tombstones)
+      .fold(codes0)(t => codes0.join(broadcast(t), Seq("vec_id"), "left_anti"))
     // allowed-id semi-join BEFORE ADC scoring (see annIvfPqFiltered)
     val codes = filtered match {
       case Some((allowed, _)) => codes1.join(allowed, Seq("vec_id"), "left_semi")
@@ -2008,13 +2012,16 @@ object Similarity {
       books, qVec, probeCells)
   }
 
-  /** Registry wrapper: [[ensureIndex]] the shared per-dir index, derive
-    * or delta-repair the PQ sidecar if absent or stale, probe from the
-    * persisted codes. */
-  def annIvfPqIndexedQuery(spark: SparkSession, dir: String): DataFrame = {
+  /** Registry wrapper: probe from the persisted codes of [[ensurePqIndex]]. */
+  def annIvfPqIndexedQuery(spark: SparkSession, dir: String): DataFrame =
+    annIvfPqIndexed(spark, dir, ensurePqIndex(spark, dir))
+
+  /** [[ensureIndex]] the shared per-dir index, and derive or
+    * delta-repair its PQ sidecar if absent or stale. */
+  private def ensurePqIndex(spark: SparkSession, dir: String): String = {
     val idx = ensureIndex(spark, dir)
     if (!pqSidecarFresh(spark, idx)) addPqToIndex(spark, idx)
-    annIvfPqIndexed(spark, dir, idx)
+    idx
   }
 
   /** C3b2 — PERSISTENT IVF index: build once, query many. Every IVF
@@ -2071,8 +2078,10 @@ object Similarity {
     // the `ivf.gN` header committed below makes live. A REBUILD over an
     // existing index writes the next segment and GCs the old ones after
     // that commit, so a crash mid-rebuild leaves the previous index —
-    // layout, ids and codebook together — live.
-    commitIvf(spark, indexDir) { seg =>
+    // layout, ids, codebook and deletes together — live. The header
+    // names no tombstone delta: the replaced corpus's deletes retire.
+    commitIvf(spark, indexDir) { g =>
+      val seg = segOf(indexDir, g)
       assigned
         .withColumn("sigs", expr(s"graft_srp_sign(embedding, 42L, $sigWords)"))
         .select(col("vec_id"), col("embedding"), col("sigs"), col("cell"))
@@ -2115,7 +2124,7 @@ object Similarity {
       // a build that crashed before its header landed left them behind
       // under the same name, and they are cleared first so the re-run
       // can write them
-      val lineage = baseName(seg).stripPrefix("seg_")
+      val lineage = baseName(g)
       Seq("codebook", "coarse").foreach(b => IndexMeta.delete(spark, s"$indexDir/${b}_$lineage.f32"))
       IndexMeta.writeSmallFile(spark, s"$indexDir/codebook_$lineage.f32", floatBytes(cb.flat))
       cb.coarse.foreach(co =>
@@ -2123,11 +2132,8 @@ object Similarity {
       IvfHeader(segments = Seq(baseName(seg)),
         codebook = s"codebook_$lineage.f32", coarse = cb.coarse.map(_ => s"coarse_$lineage.f32"),
         dim = cb.dim, meanSqDist = base.getDouble(0), nBuild = base.getLong(1),
-        lineage = lineage, applied = Seq.empty)
+        tombstones = Nil, applied = Nil)
     }
-    // stale tombstones name ids of the REPLACED corpus — they must not
-    // suppress rows of the rebuilt one
-    IndexMeta.delete(spark, s"$indexDir/tombstones")
   }
 
   // ------------------------------------------------- index header
@@ -2142,17 +2148,19 @@ object Similarity {
     *     that build;
     *   - `meanSqDist`, `nBuild` — the quantizer baseline of
     *     [[quantizerDrift]];
-    *   - `lineage` — the build's generation name;
+    *   - `tombstones` — the live `tomb_*` delete deltas (vec ids), one
+    *     per delete since the last build or compaction;
     *   - `applied` — batch ids appended since the build. */
   private[graft] final case class IvfHeader(segments: Seq[String], codebook: String,
       coarse: Option[String], dim: Int, meanSqDist: Double, nBuild: Long,
-      lineage: String, applied: Seq[String]) {
+      tombstones: Seq[String], applied: Seq[String]) {
     def toJson: com.fasterxml.jackson.databind.node.ObjectNode = {
       val o = IndexMeta.newHeader()
         .put("codebook", codebook).put("dim", dim).put("mean_sq_dist", meanSqDist)
-        .put("n_build", nBuild).put("lineage", lineage)
+        .put("n_build", nBuild)
       coarse.foreach(c => o.put("coarse", c))
       IndexMeta.putStrings(o, "segments", segments)
+      IndexMeta.putStrings(o, "tombstones", tombstones)
       IndexMeta.putStrings(o, "applied", applied)
     }
   }
@@ -2161,25 +2169,27 @@ object Similarity {
     def field(f: String) = IndexMeta.field(o, f)
     IvfHeader(IndexMeta.strings(o, "segments"), field("codebook").asText,
       Option(o.get("coarse")).map(_.asText), field("dim").asInt,
-      field("mean_sq_dist").asDouble, field("n_build").asLong, field("lineage").asText,
-      IndexMeta.strings(o, "applied"))
+      field("mean_sq_dist").asDouble, field("n_build").asLong,
+      IndexMeta.strings(o, "tombstones"), IndexMeta.strings(o, "applied"))
   }
+
+  private val ivfNeeds = Seq("segments", "tombstones")
 
   private[graft] def ivfHeader(spark: SparkSession, indexDir: String, what: String): IvfHeader =
     parseIvfHeader(IndexMeta.header(spark, indexDir, "ivf", what,
-      "rebuild the index with buildIvfIndexFrom", needs = Seq("segments")))
+      "rebuild the index with buildIvfIndexFrom", ivfNeeds))
 
-  /** Commit the index's next generation: `body` writes the new segment
-    * (if any) into the dir it is given and returns the header. Then
-    * every segment and codebook the header does not name is deleted —
-    * superseded ones and orphans of crashed appends (single-writer
-    * contract). */
+  /** Commit the index's next generation: `body` gets its path, writes
+    * its segment ([[segOf]]) or delta, if any, and returns the header;
+    * then what the header does not name is deleted (single writer). */
   private def commitIvf(spark: SparkSession, indexDir: String)(body: String => IvfHeader): Unit = {
-    val h = parseIvfHeader(IndexMeta.commitGen(spark, indexDir, "ivf")(g =>
-      body(s"$indexDir/seg_${baseName(g)}").toJson))
-    IndexMeta.deleteUnnamed(spark, indexDir, Seq("seg_ivf.g", "codebook_", "coarse_"),
-      h.segments.toSet + h.codebook ++ h.coarse)
+    val h = parseIvfHeader(IndexMeta.commitGen(spark, indexDir, "ivf")(g => body(g).toJson))
+    IndexMeta.deleteUnnamed(spark, indexDir, Seq("seg_ivf.g", "codebook_", "coarse_", "tomb_"),
+      (h.segments ++ h.tombstones).toSet + h.codebook ++ h.coarse)
   }
+
+  /** The segment dir generation `g` of an index writes. */
+  private def segOf(indexDir: String, g: String): String = s"$indexDir/seg_${baseName(g)}"
 
   /** A k × dim centroid matrix, flattened row-major, plus the k1 × dim
     * coarse matrix of a two-level index. */
@@ -2293,22 +2303,19 @@ object Similarity {
     } else false
   }
 
-  /** The index's LIVE vector set: the cell-partitioned layout minus any
-    * tombstoned ids. Deletes ([[deleteFromIvfIndex]]) are O(deletes)
-    * appends to a side table, never a layout rewrite — the LSM
-    * discipline again — and every index reader goes through this
-    * anti-join so a delete is visible to the next probe immediately.
-    * The tombstone table broadcasts: its size is bounded by compaction
-    * cadence ([[compactIvfIndex]] applies tombstones physically and
-    * clears them), so a fleet that compacts on schedule never
-    * accumulates more than one window of deletes here. No tombstones
-    * dir → the reader is the bare layout scan, anti-join-free. */
-  private def liveIndexVectors(spark: SparkSession, indexDir: String): DataFrame = {
-    val v = storedVectors(spark, indexDir)
-    val t = s"$indexDir/tombstones"
-    if (IndexMeta.exists(spark, t))
-      v.join(broadcast(Relational.cachedSchemaParquet(spark, t)), Seq("vec_id"), "left_anti")
-    else v
+  /** The index's LIVE vector set: the cell-partitioned layout minus the
+    * tombstoned ids ([[deleteFromIvfIndex]] — never a layout rewrite,
+    * the LSM discipline), so a delete is visible to the next probe. The
+    * deltas broadcast: compaction cadence bounds them ([[compactIvfIndex]]
+    * applies them and names none). No delta → the bare layout scan. */
+  private[graft] def liveIndexVectors(spark: SparkSession, indexDir: String): DataFrame =
+    liveIndexVectors(spark, indexDir, ivfHeader(spark, indexDir, "this reader"))
+
+  /** [[liveIndexVectors]] under the header `h` the caller holds. */
+  private def liveIndexVectors(spark: SparkSession, indexDir: String, h: IvfHeader): DataFrame = {
+    val v = unionScans(spark, h.segments.map(s => s"$indexDir/$s/vectors"))
+    IndexMeta.tombstones(spark, indexDir, h.tombstones)
+      .fold(v)(t => v.join(broadcast(t), Seq("vec_id"), "left_anti"))
   }
 
   /** The vectors layout of every segment the live header names — what
@@ -2334,16 +2341,17 @@ object Similarity {
   private def parquetFiles(spark: SparkSession, paths: Seq[String]): Long =
     paths.map(IndexMeta.countUnder(spark, _, ".parquet")).sum
 
-  /** Delete vectors from the index by id: append the ids to the
-    * tombstone table — O(deletes) work, no touch of the vectors layout.
-    * Probes exclude tombstoned ids from the next read onward
-    * (idempotent: re-deleting an id, or an id already compacted away,
-    * is a no-op in the anti-join). [[compactIvfIndex]] makes deletes
-    * physical and resets the table. The opt-out / takedown /
-    * decontamination path of a production retrieval corpus. */
-  def deleteFromIvfIndex(spark: SparkSession, indexDir: String, ids: DataFrame): Unit =
-    ids.select(col("vec_id")).coalesce(1)
-      .write.mode("append").parquet(s"$indexDir/tombstones")
+  /** Delete vectors from the index by id: one tombstone delta
+    * ([[IndexMeta.commitTombstones]]) — O(deletes), no touch of the
+    * vectors layout; probes exclude the ids from the next read on.
+    * [[compactIvfIndex]] makes deletes physical. The opt-out / takedown
+    * / decontamination path of a production retrieval corpus. */
+  def deleteFromIvfIndex(spark: SparkSession, indexDir: String, ids: DataFrame): Unit = {
+    val h = ivfHeader(spark, indexDir, "deletes")
+    IndexMeta.commitTombstones(spark, indexDir, h.tombstones, ids.select(col("vec_id"))) { write =>
+      commitIvf(spark, indexDir)(g => h.copy(tombstones = h.tombstones :+ write(g)))
+    }
+  }
 
   /** Single-query ANN over a PERSISTENT index — [[annIvf]]'s semantics
     * (same quantizer seed → byte-identical results, asserted in the
@@ -2351,18 +2359,8 @@ object Similarity {
     * cells driver-side (O(k·d)), and scan ONLY those cells' partitions.
     * The returned plan carries the `cell IN` predicate as a partition
     * filter — nprobe directory reads, zero data-file touches elsewhere. */
-  def annIvfIndexed(spark: SparkSession, dir: String, indexDir: String): DataFrame = {
-    GraftFunctions.register(spark)
-    val vectors = liveIndexVectors(spark, indexDir)
-    val probeCells = probeCellsOf(ivfCodebook(spark, indexDir),
-      queryVector(indexDir, vectors), nprobe(spark))
-    val q = vectors.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
-    vectors.filter(col("vec_id") =!= 0 && col("cell").isin(probeCells.toSeq: _*))
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"), round(cosineExpr("embedding", "qv"), 4).as("sim"))
-      .orderBy(col("sim").desc, col("vec_id").asc)
-      .limit(10)
-  }
+  def annIvfIndexed(spark: SparkSession, dir: String, indexDir: String): DataFrame =
+    probeIndexed(spark, indexDir, None)
 
   /** The registry wrapper: index location via [[ensureIndex]] (rebuild
     * only when absent — the build-once contract the spec exercises;
@@ -2679,7 +2677,7 @@ object Similarity {
                              chunkVecs: => DataFrame): String = {
     val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
     IndexMeta.ensureDerived(spark, s"$dir/documents.parquet",
-      s"graft_rag_index_${key}_")(ivfCodebook(spark, _))(
+      s"graft_rag_index_${key}_", ivfNeeds)(ivfCodebook(spark, _))(
       buildIvfIndexFrom(spark, chunkVecs, _))
   }
 
@@ -2710,9 +2708,9 @@ object Similarity {
     * next compaction. Neither is acceptable silently (the c14 loud-throw
     * doctrine), and resolving it at read time means per-probe MVCC the
     * exchange-free read paths shouldn't pay — so the append checks its
-    * batch against the tombstone table (broadcast anti-join, O(batch))
+    * batch against the tombstone deltas (broadcast anti-join, O(batch))
     * and rejects overlaps with the fix in the message: compact first
-    * (deletes become physical, table resets), then re-insert.
+    * (deletes become physical, no delta stays named), then re-insert.
     *
     * Retry contract: the segment becomes live only with the `ivf.gN`
     * header committed after it, which records `batchId` (caller-unique
@@ -2728,10 +2726,9 @@ object Similarity {
     if (batchId.exists(h.applied.contains)) return
     // the codebook first: an unreadable one refuses before any write
     val cb = ivfCodebook(spark, indexDir)
-    val tomb = s"$indexDir/tombstones"
-    if (IndexMeta.exists(spark, tomb)) {
+    IndexMeta.tombstones(spark, indexDir, h.tombstones).foreach { tomb =>
       val clash = newVectors.select(col("vec_id"))
-        .join(broadcast(Relational.cachedSchemaParquet(spark, tomb)), Seq("vec_id"), "left_semi")
+        .join(broadcast(tomb), Seq("vec_id"), "left_semi")
         .limit(5).collect().map(_.getLong(0))
       require(clash.isEmpty,
         s"batch re-inserts tombstoned ids ${clash.mkString(", ")} — the old rows " +
@@ -2768,7 +2765,8 @@ object Similarity {
       return
     }
     GraftFunctions.register(spark)
-    commitIvf(spark, indexDir) { seg =>
+    commitIvf(spark, indexDir) { g =>
+      val seg = segOf(indexDir, g)
       newVectors.select(col("vec_id")).coalesce(1).write.mode("overwrite").parquet(s"$seg/ids")
       newVectors
         // indexCellsCol, NOT a bare flat argmin: on a constant-population
@@ -2828,9 +2826,8 @@ object Similarity {
     val h = ivfHeader(spark, indexDir, "compaction")
     val vecDirs = h.segments.map(s => s"$indexDir/$s/vectors")
     // live set only: the rewrite is where tombstoned rows become
-    // physically absent; the table clears AFTER the commit (idempotent —
-    // a crash in between leaves tombstones whose ids no longer match)
-    val v = liveIndexVectors(spark, indexDir)
+    // physically absent, and the header it commits names no delta
+    val v = liveIndexVectors(spark, indexDir, h)
     val totalBytes = vecDirs.map(IndexMeta.bytesUnder(spark, _, ".parquet")).sum
     val counts = v.groupBy(col("cell").cast("int").as("cell")).count()
       .collect().map(r => (r.getInt(0), r.getLong(1)))
@@ -2842,7 +2839,8 @@ object Similarity {
     val filesPerCell = counts.map { case (c, n) =>
       (c, math.max(1L, math.ceil(n * bytesPerRow / targetFileBytes).toLong))
     }
-    commitIvf(spark, indexDir) { seg =>
+    commitIvf(spark, indexDir) { g =>
+      val seg = segOf(indexDir, g)
       if (counts.isEmpty) {
         // a fully-tombstoned index compacts to ONE empty schema-bearing
         // file, written non-partitioned (there are no cells left to
@@ -2866,9 +2864,8 @@ object Similarity {
       // still exist — `v` reads from them
       Scale.sizeForWrite(v.select(col("vec_id")))
         .write.mode("overwrite").parquet(s"$seg/ids")
-      h.copy(segments = Seq(baseName(seg)))
+      h.copy(segments = Seq(baseName(seg)), tombstones = Nil)
     }
-    IndexMeta.delete(spark, s"$indexDir/tombstones") // now physical; table resets
   }
 
   /** Compaction CADENCE policy (round-7 verdict item 5): compact when
@@ -3393,7 +3390,7 @@ object Similarity {
   private[ops] def ensureIndex(spark: SparkSession, dir: String): String = {
     val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
     IndexMeta.ensureDerived(spark, s"$dir/embeddings.parquet",
-      s"graft_ivf_index_${key}_")(ivfCodebook(spark, _))(
+      s"graft_ivf_index_${key}_", ivfNeeds)(ivfCodebook(spark, _))(
       buildIvfIndex(spark, dir, _))
   }
 

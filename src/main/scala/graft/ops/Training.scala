@@ -915,15 +915,17 @@ object Training {
     * watermark (max doc_id ingested so far), the live shard-slice dir
     * names under `shards/`, the live seen-text-hash and eval-gram dirs
     * under `seen_th/` and `evalgrams/` (the build's, then one delta
-    * per ingested slice), and the tags of the slices ingested since
-    * the build. */
+    * per ingested slice), the takedown deltas under `shards/`, and the
+    * tags of the slices ingested since the build. */
   private final case class StateHeader(maxDocId: Long, slices: Seq[String],
-      seenTh: Seq[String], evalGrams: Seq[String], applied: Seq[String]) {
+      seenTh: Seq[String], evalGrams: Seq[String], tombstones: Seq[String],
+      applied: Seq[String]) {
     def toJson: com.fasterxml.jackson.databind.node.ObjectNode = {
       val o = IndexMeta.newHeader().put("max_doc_id", maxDocId)
       IndexMeta.putStrings(o, "slices", slices)
       IndexMeta.putStrings(o, "seen_th", seenTh)
       IndexMeta.putStrings(o, "evalgrams", evalGrams)
+      IndexMeta.putStrings(o, "tombstones", tombstones)
       IndexMeta.putStrings(o, "applied", applied)
     }
   }
@@ -931,16 +933,29 @@ object Training {
   private def parseState(o: com.fasterxml.jackson.databind.node.ObjectNode): StateHeader =
     StateHeader(IndexMeta.field(o, "max_doc_id").asLong, IndexMeta.strings(o, "slices"),
       IndexMeta.strings(o, "seen_th"), IndexMeta.strings(o, "evalgrams"),
-      IndexMeta.strings(o, "applied"))
+      IndexMeta.strings(o, "tombstones"), IndexMeta.strings(o, "applied"))
 
   private val stateRebuild = "build the state with buildPretrainState first"
-  private val stateLayout = Seq("seen_th", "evalgrams")
+  private val stateLayout = Seq("seen_th", "evalgrams", "tombstones")
 
   private def stateHeader(spark: SparkSession, stateDir: String, what: String): StateHeader =
     parseState(IndexMeta.header(spark, stateDir, "state", what, stateRebuild, stateLayout))
 
-  private def commitState(spark: SparkSession, stateDir: String, h: StateHeader): Unit =
-    IndexMeta.commitGen(spark, stateDir, "state")(_ => h.toJson)
+  /** Commit the state's next generation: `body` gets its path and
+    * returns the header; then [[gcState]] runs. */
+  private def commitState(spark: SparkSession, stateDir: String)(body: String => StateHeader): Unit =
+    gcState(spark, stateDir,
+      parseState(IndexMeta.commitGen(spark, stateDir, "state")(g => body(g).toJson)))
+
+  /** Delete every dir under the state's stores that `st` does not name:
+    * superseded slices and deltas, and orphans of crashed mutations
+    * (single-writer maintenance). */
+  private def gcState(spark: SparkSession, stateDir: String, st: StateHeader): Unit = {
+    IndexMeta.deleteUnnamed(spark, s"$stateDir/shards", Seq("slice_", "tomb_"),
+      (st.slices ++ st.tombstones).toSet)
+    IndexMeta.deleteUnnamed(spark, s"$stateDir/seen_th", Seq("slice_"), st.seenTh.toSet)
+    IndexMeta.deleteUnnamed(spark, s"$stateDir/evalgrams", Seq("slice_"), st.evalGrams.toSet)
+  }
 
   /** The union of a state store's live dirs (`seen_th` or `evalgrams`). */
   private def stateStore(spark: SparkSession, stateDir: String, store: String,
@@ -953,13 +968,6 @@ object Training {
     * the disk, so an uncommitted slice dir is structurally invisible. */
   private[ops] def liveSlices(spark: SparkSession, stateDir: String): Seq[String] =
     stateHeader(spark, stateDir, "this reader").slices.sorted
-
-  /** The state's takedown tombstones, if any exist. */
-  private def pretrainTombstones(spark: SparkSession,
-      stateDir: String): Option[DataFrame] = {
-    val t = s"$stateDir/shards/tombstones"
-    if (IndexMeta.exists(spark, t)) Some(Relational.cachedSchemaParquet(spark, t)) else None
-  }
 
   /** Build the persisted pipeline state on the initial corpus:
     * seen-text-hash store, near-dup signature store over the unique-
@@ -1018,8 +1026,8 @@ object Training {
       .localCheckpoint()
     fitBpe(spark, kept, s"$stateDir/bpe", bpeMerges(spark), bpeMaxWords(spark))
     val slice = writeSliceShards(spark, stateDir, kept, "00000_build")
-    commitState(spark, stateDir, StateHeader(
-      d.agg(max(col("doc_id"))).head().getLong(0), slice.toSeq, Seq(build), Seq(build), Seq.empty))
+    commitState(spark, stateDir)(_ => StateHeader(
+      d.agg(max(col("doc_id"))).head().getLong(0), slice.toSeq, Seq(build), Seq(build), Nil, Nil))
   }
 
   /** Flow one arrival slice through the persisted state: probe the
@@ -1090,8 +1098,8 @@ object Training {
       f"oov_frac=${bpeOovFraction(spark, s"$stateDir/bpe", d, Some(toksCol))}%.4f")
     val name = writeSliceShards(spark, stateDir, kept, tag, Some(toksCol))
     Relational.writeParquet(newTh.select(col("th")).distinct(), s"$stateDir/seen_th/$delta")
-    commitState(spark, stateDir, StateHeader(mm.getLong(1), st.slices ++ name,
-      st.seenTh :+ delta, evalGrams, st.applied :+ tag))
+    commitState(spark, stateDir)(_ => st.copy(maxDocId = mm.getLong(1), slices = st.slices ++ name,
+      seenTh = st.seenTh :+ delta, evalGrams = evalGrams, applied = st.applied :+ tag))
   }
 
   /** Per-shard census of every LIVE shard slice — doc counts, kept
@@ -1104,13 +1112,13 @@ object Training {
     * has run (the c43e visibility contract on the shard tree). The
     * registry answer. */
   def readPretrainShards(spark: SparkSession, stateDir: String): DataFrame = {
-    val names = liveSlices(spark, stateDir)
+    val st = stateHeader(spark, stateDir, "this reader")
+    val names = st.slices.sorted
     require(names.nonEmpty, s"no shard slices under $stateDir")
     val all = names.map(n => Relational.cachedSchemaParquet(spark, s"$stateDir/shards/$n"))
       .reduce(_.unionByName(_))
-    val live = pretrainTombstones(spark, stateDir) match {
-      case Some(t) => all.join(broadcast(t.select(col("doc_id")).distinct()),
-        Seq("doc_id"), "left_anti")
+    val live = IndexMeta.tombstones(spark, s"$stateDir/shards", st.tombstones) match {
+      case Some(t) => all.join(broadcast(t), Seq("doc_id"), "left_anti")
       case None => all
     }
     live
@@ -1125,13 +1133,15 @@ object Training {
 
   /** C33d — pretrain-state TAKEDOWN, tombstone half (the
     * [[Pipeline.deleteLexDocs]] discipline on the shipped training
-    * data): record doc ids O(deletes), no slice rewrite — every
-    * census/read anti-joins the broadcast tombstones, so the doc is
-    * invisible to the next reader immediately; [[
-    * compactPretrainShards]] later removes the BYTES (the compliance
-    * surface — shard files carry raw text). Dedup-and-skip-empty: a
-    * no-match takedown creates no table and repeated deletes cannot
-    * grow it. Deliberately NOT touched: the curation stores. seen_th
+    * data): the doc ids land in one tombstone delta that the next
+    * state header names ([[IndexMeta.commitTombstones]] — O(deletes),
+    * no slice rewrite); every census/read anti-joins the broadcast
+    * tombstones, so the doc is invisible to the next reader
+    * immediately; [[compactPretrainShards]] later removes the BYTES
+    * (the compliance surface — shard files carry raw text). Only ids
+    * actually SHIPPED are recorded, so a takedown of never-kept or
+    * already-removed ids commits nothing. Deliberately NOT touched:
+    * the curation stores. seen_th
     * keeps the doc's text hash, so an identical re-crawl of taken-down
     * content stays OUT of future slices (banned content remains
     * banned — the compliance-correct default, and the opposite of the
@@ -1141,26 +1151,17 @@ object Training {
     * (hashes of banned text suppress its near-duplicates — desired). */
   def tombstonePretrainDocs(spark: SparkSession, stateDir: String,
       ids: DataFrame): Unit = {
-    val names = liveSlices(spark, stateDir) // loud not-a-state guard
-    val t = s"$stateDir/shards/tombstones"
-    // record only ids that are (a) not already tombstoned and (b)
-    // actually SHIPPED — a takedown of never-kept or already-removed
-    // ids must stay a no-op (no table, no anti-join on every later
-    // read, and the next compaction keeps its cheap gc-only path).
-    // The shipped probe is a semi-join against the live tree's narrow
+    val st = stateHeader(spark, stateDir, "takedowns") // loud not-a-state guard
+    // the shipped probe is a semi-join against the live tree's narrow
     // doc_id projection: one map-only column scan, the same price the
     // census already pays
-    val shipped = names.map(n =>
+    val shipped = st.slices.map(n =>
         Relational.cachedSchemaParquet(spark, s"$stateDir/shards/$n").select(col("doc_id")))
       .reduce(_.unionByName(_))
-    val novel = (pretrainTombstones(spark, stateDir) match {
-      case Some(existing) => ids.select(col("doc_id")).distinct()
-        .join(existing.select(col("doc_id")), Seq("doc_id"), "left_anti")
-      case None => ids.select(col("doc_id")).distinct()
-    }).join(shipped, Seq("doc_id"), "left_semi")
-      .localCheckpoint() // tiny; one eval for the guard AND the write
-    if (!novel.isEmpty)
-      novel.coalesce(1).write.mode("append").parquet(t)
+    IndexMeta.commitTombstones(spark, s"$stateDir/shards", st.tombstones,
+      ids.select(col("doc_id")).join(shipped, Seq("doc_id"), "left_semi")) { write =>
+      commitState(spark, stateDir)(g => st.copy(tombstones = st.tombstones :+ write(g)))
+    }
   }
 
   /** C33d — takedown compaction: make tombstones physical. Affected
@@ -1169,25 +1170,21 @@ object Training {
     * loop) are rewritten WITHOUT the tombstoned rows to NEW dir names
     * and the next state header swaps them in atomically; untouched
     * slices ride through verbatim (Θ(affected slices), not
-    * state-bounded). The tombstone table clears and orphan/superseded
-    * slice dirs GC only AFTER the new header commits — a crash
-    * anywhere leaves either the old header (rewrites orphaned, swept
-    * later) or the new one (delete already durable). The no-op
+    * state-bounded). The new header names no tombstone delta, and
+    * orphan/superseded slice dirs and deltas GC only AFTER it commits —
+    * a crash anywhere leaves either the old header (rewrites orphaned,
+    * swept later) or the new one (delete already durable). The no-op
     * path (no tombstones) still sweeps orphan dirs (shard, seen-hash
-    * and eval-gram slices), the lex compaction doctrine. Slice-local pos values keep their original
-    * gaps — pos orders a slice, it does not number it. */
+    * and eval-gram slices, deltas), the lex compaction doctrine.
+    * Slice-local pos values keep their original gaps — pos orders a
+    * slice, it does not number it. */
   def compactPretrainShards(spark: SparkSession, stateDir: String): Unit = {
     val root = s"$stateDir/shards"
     val st = stateHeader(spark, stateDir, "compaction")
     val names = st.slices.sorted
-    def gcOrphans(live: Set[String]): Unit = {
-      IndexMeta.deleteUnnamed(spark, root, Seq("slice_"), live)
-      IndexMeta.deleteUnnamed(spark, s"$stateDir/seen_th", Seq("slice_"), st.seenTh.toSet)
-      IndexMeta.deleteUnnamed(spark, s"$stateDir/evalgrams", Seq("slice_"), st.evalGrams.toSet)
-    }
-    val tombOpt = pretrainTombstones(spark, stateDir)
-    if (tombOpt.isEmpty) { gcOrphans(names.toSet); return }
-    val tombIds = broadcast(tombOpt.get.select(col("doc_id")).distinct())
+    val tombOpt = IndexMeta.tombstones(spark, root, st.tombstones)
+    if (tombOpt.isEmpty) { gcState(spark, stateDir, st); return }
+    val tombIds = broadcast(tombOpt.get)
     val affected = names.map(n =>
         Relational.cachedSchemaParquet(spark, s"$root/$n").select(col("doc_id"))
           .withColumn("s", lit(n)))
@@ -1223,9 +1220,7 @@ object Training {
     require(renamed.nonEmpty,
       s"takedown removed every live slice under $stateDir — an empty " +
         "state has no census; rebuild instead of compacting to nothing")
-    commitState(spark, stateDir, st.copy(slices = renamed))
-    IndexMeta.delete(spark, s"$root/tombstones")
-    gcOrphans(renamed.toSet)
+    commitState(spark, stateDir)(_ => st.copy(slices = renamed, tombstones = Nil))
   }
 
   /** C33d registry wrapper — the takedown path on the capstone state:

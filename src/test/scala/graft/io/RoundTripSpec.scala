@@ -23,13 +23,19 @@ import graft.SparkTestSession
  */
 class RoundTripSpec extends AnyFunSuite with SparkTestSession {
 
-  private def roundtrip(rows: Seq[Any], schema: String): Seq[Seq[Any]] = {
-    val dir = Files.createTempDirectory("graft-rt").toFile
-    dir.deleteOnExit()
-    val path = dir.getAbsolutePath + "/rt.orc"
-    OrcIO.writeRows(spark, path, rows, schema)
-    OrcIO.frameVecs(OrcIO.readOrc(spark, path))
+  /** `body` on a fresh temp dir, deleted with all it holds afterwards. */
+  private def inTempDir[T](prefix: String)(body: String => T): T = {
+    val dir = Files.createTempDirectory(prefix)
+    try body(dir.toString)
+    finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
   }
+
+  private def roundtrip(rows: Seq[Any], schema: String): Seq[Seq[Any]] =
+    inTempDir("graft-rt") { dir =>
+      val path = dir + "/rt.orc"
+      OrcIO.writeRows(spark, path, rows, schema)
+      OrcIO.frameVecs(OrcIO.readOrc(spark, path))
+    }
 
   private def sorted(vecs: Seq[Seq[Any]]): Seq[Seq[Any]] =
     vecs.sortBy(_.map(v => if (v == null) "" else v.toString).mkString("|"))
@@ -117,14 +123,14 @@ class RoundTripSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("A9 orcaCompat collect reproduces the reference's read-side asymmetries") {
-    val dir = Files.createTempDirectory("graft-compat").toFile
-    dir.deleteOnExit()
-    val path = dir.getAbsolutePath + "/c.orc"
-    OrcIO.writeRows(spark, path,
-      Seq(Map("b" -> true, "f" -> 1.5f, "s" -> Map("x" -> 1), "m" -> Map[String, String](),
-        "d" -> LocalDate.of(2017, 1, 2), "t" -> Instant.ofEpochMilli(1000))),
-      "struct<b:boolean,f:float,s:struct<x:int,y:string>,m:map<string,string>,d:date,t:timestamp>")
-    val m = OrcIO.orcaCompatMaps(OrcIO.readOrc(spark, path)).head
+    val m = inTempDir("graft-compat") { dir =>
+      val path = dir + "/c.orc"
+      OrcIO.writeRows(spark, path,
+        Seq(Map("b" -> true, "f" -> 1.5f, "s" -> Map("x" -> 1), "m" -> Map[String, String](),
+          "d" -> LocalDate.of(2017, 1, 2), "t" -> Instant.ofEpochMilli(1000))),
+        "struct<b:boolean,f:float,s:struct<x:int,y:string>,m:map<string,string>,d:date,t:timestamp>")
+      OrcIO.orcaCompatMaps(OrcIO.readOrc(spark, path)).head
+    }
     assert(m("b") == 1L)                       // booleans come back 0/1
     assert(m("f") == 1.5)                      // floats widen to Double
     assert(m("s") == Map("x" -> 1))            // struct omits NULL fields

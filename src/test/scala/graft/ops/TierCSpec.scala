@@ -18,11 +18,14 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     * sf0.001 — build, one append under batch id `b1`, compaction — and
     * built once per suite, on first use. Each row: the family, its root
     * dir and generation name, its own metadata reader, a fingerprint of
-    * its served contents, and (for families with batch-id appends) the
-    * replay of `b1`. Tests that use it only read it or restore what
-    * they change. */
+    * its served contents, (for families with batch-id appends) the
+    * replay of `b1`, and one more mutation whose commits pass every
+    * [[IndexMeta.faultPoints]] point — run on a copy of the root after
+    * `prepare`. Each function takes the root it works on. Tests that
+    * use the fixture only read it or restore what they change. */
   private final case class Family(name: String, root: String, gen: String,
-      read: () => Any, contents: () => Any, replay: Option[() => Unit])
+      read: String => Any, contents: String => Any, replay: Option[String => Unit],
+      prepare: String => Unit, mutate: String => Unit)
 
   private lazy val families: Seq[Family] = {
     val docs = Relational.table(spark, dir, "documents")
@@ -61,24 +64,73 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
       .parquet(s"$state/shards/${Training.liveSlices(spark, state).head}").select(col("doc_id")).limit(1))
     Training.compactPretrainShards(spark, state)
 
+    // the extra mutations: a delete (lex, IVF, state), a delta repair
+    // after one more append (PQ), an append of copies under new ids
+    // (store)
+    val none = (_: String) => ()
+    val moved = (df: org.apache.spark.sql.DataFrame, id: String) =>
+      df.withColumn(id, col(id) + 1000000L)
     Seq(
-      Family("lex", lex, "lex", () => Pipeline.lexSegmentCount(spark, lex),
-        () => Pipeline.sparseScoreIndexed(spark, lex, lexBatch.select(col("doc_id"), col("text")))
+      Family("lex", lex, "lex", Pipeline.lexSegmentCount(spark, _),
+        Pipeline.sparseScoreIndexed(spark, _, lexBatch.select(col("doc_id"), col("text")))
           .collect().toSet,
-        Some(() => Pipeline.appendLexIndex(spark, lex, lexBatch, Some("b1")))),
-      Family("ivf", ivf, "ivf", () => Similarity.ivfCodebook(spark, ivf),
-        () => Similarity.storedVectors(spark, ivf).count(),
-        Some(() => Similarity.appendToIvfIndex(spark, ivf, ivfBatch, Some("b1")))),
-      Family("pq", ivf, "pq", () => Similarity.livePqMeta(spark, ivf).get,
-        () => Similarity.livePqMeta(spark, ivf).get, None),
-      Family("store", store, "store", () => Similarity.nearDupTablePaths(spark, store, "pairs"),
-        () => Seq("shingles", "bands", "pairs")
-          .map(t => count(Similarity.nearDupTablePaths(spark, store, t))),
-        Some(() => Similarity.appendToNearDupIndex(spark, store, storeBatch, Some("b1")))),
-      Family("state", state, "state", () => Training.liveSlices(spark, state),
-        () => Training.readPretrainShards(spark, state).collect().toSet,
-        Some(() => Training.ingestPretrainSlice(spark, state, slice, "b1"))))
+        Some(Pipeline.appendLexIndex(spark, _, lexBatch, Some("b1"))), none,
+        Pipeline.deleteLexDocs(spark, _, docs.filter(col("doc_id") % 10 === 3).select(col("doc_id")))),
+      Family("ivf", ivf, "ivf", Similarity.ivfCodebook(spark, _),
+        Similarity.liveIndexVectors(spark, _).select(col("vec_id")).collect().map(_.getLong(0)).sorted.toSeq,
+        Some(Similarity.appendToIvfIndex(spark, _, ivfBatch, Some("b1"))), none,
+        Similarity.deleteFromIvfIndex(spark, _, vecs.filter(col("vec_id") % 10 === 3).select(col("vec_id")))),
+      Family("pq", ivf, "pq", Similarity.livePqMeta(spark, _).get,
+        Similarity.pqCodesTable(spark, _).collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq, None,
+        Similarity.appendToIvfIndex(spark, _, moved(ivfBatch, "vec_id"), Some("b2")),
+        Similarity.addPqToIndex(spark, _)),
+      Family("store", store, "store", Similarity.nearDupTablePaths(spark, _, "pairs"),
+        d => Seq("shingles", "bands", "pairs")
+          .map(t => count(Similarity.nearDupTablePaths(spark, d, t))),
+        Some(Similarity.appendToNearDupIndex(spark, _, storeBatch, Some("b1"))), none,
+        Similarity.appendToNearDupIndex(spark, _, moved(storeBatch, "doc_id"), Some("b2"))),
+      Family("state", state, "state", Training.liveSlices(spark, _),
+        Training.readPretrainShards(spark, _).collect().toSet,
+        Some(Training.ingestPretrainSlice(spark, _, slice, "b1")), none,
+        Training.tombstonePretrainDocs(spark, _, docs.filter(col("doc_id") % 10 === 3).select(col("doc_id")))))
   }
+
+  /** A copy of the tree at `from` in a fresh scratch dir. */
+  private def copyTree(from: String, prefix: String): String = {
+    val to = Similarity.freshScratch(spark, prefix)
+    copyInto(java.nio.file.Paths.get(from.stripPrefix("file:")), java.nio.file.Paths.get(to.stripPrefix("file:")))
+    to
+  }
+
+  /** Copy every file under `from` to the same relative path under `to`. */
+  private def copyInto(from: java.nio.file.Path, to: java.nio.file.Path): Unit = {
+    import scala.jdk.CollectionConverters._
+    java.nio.file.Files.walk(from).iterator().asScala.foreach { p =>
+      val q = to.resolve(from.relativize(p).toString)
+      if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(q)
+      else java.nio.file.Files.copy(p, q, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    }
+  }
+
+  /** Run `op` on the index at `idx` and then put back every tombstone
+    * entry (`tomb*`) it held before: the crash state of a mutation that
+    * committed its header but died before the deletes it retired were
+    * cleared. */
+  private def withDeletesLeftBehind(idx: String)(op: => Unit): Unit = {
+    val root = java.nio.file.Paths.get(idx.stripPrefix("file:"))
+    val aside = java.nio.file.Files.createTempDirectory("graft_tombs_aside")
+    val tombs = IndexMeta.list(spark, idx).map(_.getPath.getName).filter(_.startsWith("tomb"))
+    assert(tombs.nonEmpty, s"precondition: no tombstones under $idx")
+    tombs.foreach(t => copyInto(root.resolve(t), aside.resolve(t)))
+    op
+    tombs.foreach(t => copyInto(aside.resolve(t), root.resolve(t)))
+    IndexMeta.delete(spark, aside.toString)
+  }
+
+  /** Whether a local path exists. */
+  private def onDisk(p: String): Boolean =
+    java.nio.file.Files.exists(java.nio.file.Paths.get(p.stripPrefix("file:")))
 
   /** Parquet files under `paths` (a table's live segments). */
   private def filesUnder(paths: Seq[String]): Long =
@@ -1289,15 +1341,19 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     // ...but the row is still physically in the layout
     assert(Similarity.storedVectors(spark, indexDir)
       .filter(col("vec_id") === victim).count() === 1)
-    // 2. deletes are idempotent: re-deleting changes nothing
+    // 2. deletes are idempotent: re-deleting changes nothing and
+    //    commits no generation
+    val gen = IndexMeta.liveGen(spark, indexDir, "ivf").get
     Similarity.deleteFromIvfIndex(spark, indexDir, Seq(victim).toDF("vec_id"))
     assert(probe === after)
-    // 3. compaction makes it physical and clears the tombstone table;
-    //    the probe is unchanged by the rewrite
+    assert(IndexMeta.liveGen(spark, indexDir, "ivf").get === gen, "a re-delete committed a generation")
+    // 3. compaction makes it physical and its header names no tombstone
+    //    delta (the old one is swept); the probe is unchanged by the rewrite
     Similarity.compactIvfIndex(spark, indexDir)
     assert(Similarity.storedVectors(spark, indexDir)
       .filter(col("vec_id") === victim).count() === 0)
-    assert(!Files.exists(Paths.get(indexDir, "tombstones")))
+    assert(Similarity.ivfHeader(spark, indexDir, "the spec").tombstones.isEmpty &&
+      !IndexMeta.list(spark, indexDir).exists(_.getPath.getName.startsWith("tomb")))
     assert(probe === after)
     // 4. re-inserting a tombstoned id throws LOUDLY (old row still
     //    physical → serving both or losing the new one are the silent
@@ -1335,6 +1391,41 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     assert(served.size === 10)
     assert(served.take(7) === viaAppend.drop(3))
     assert(viaAppend.take(3).forall { case (id, _) => !served.exists(_._1 == id) })
+  }
+
+  test("C3 index: a rebuild that crashed before the old deletes were cleared serves every rebuilt row") {
+    val vecs = Relational.table(spark, dir, "embeddings").select(col("vec_id"), col("embedding"))
+    val idx = Similarity.freshScratch(spark, "graft_ivf_rebuild_crash_")
+    Similarity.buildIvfIndexFrom(spark, vecs, idx)
+    val victims = vecs.filter(col("vec_id") % 25 === 3)
+    Similarity.deleteFromIvfIndex(spark, idx, victims.select(col("vec_id")))
+    // the rebuild's header commits; the deletes of the replaced corpus
+    // are still on disk
+    withDeletesLeftBehind(idx)(Similarity.buildIvfIndexFrom(spark, vecs, idx))
+    // every victim's own vector, probed under another id, finds it
+    val shift = 10000000L
+    val hits = Similarity.annIvfBatch(spark, idx,
+        victims.select((col("vec_id") + shift).as("vec_id"), col("embedding")))
+      .collect().map(r => (r.getLong(0) - shift, r.getLong(1))).toSet
+    val ids = victims.select(col("vec_id")).collect().map(_.getLong(0))
+    assert(ids.nonEmpty && ids.forall(id => hits((id, id))),
+      s"the rebuilt index hides rows deleted before the rebuild: ${ids.filterNot(id => hits((id, id))).take(5).mkString(", ")}")
+  }
+
+  test("C3 index: a compaction that crashed before its deletes were cleared accepts a valid re-insert") {
+    val vecs = Relational.table(spark, dir, "embeddings").select(col("vec_id"), col("embedding"))
+    val idx = Similarity.freshScratch(spark, "graft_ivf_compact_crash_")
+    Similarity.buildIvfIndexFrom(spark, vecs, idx)
+    val victims = vecs.filter(col("vec_id") % 25 === 3)
+    Similarity.deleteFromIvfIndex(spark, idx, victims.select(col("vec_id")))
+    // the compaction's header commits; the deletes it made physical are
+    // still on disk
+    withDeletesLeftBehind(idx)(Similarity.compactIvfIndex(spark, idx))
+    // the ids are compacted away, so putting them back is valid
+    Similarity.appendToIvfIndex(spark, idx, victims, Some("reinsert"))
+    def ids(df: org.apache.spark.sql.DataFrame) = df.select(col("vec_id")).collect().map(_.getLong(0)).sorted.toSeq
+    assert(ids(Similarity.liveIndexVectors(spark, idx)) === ids(vecs),
+      "the re-inserted ids are not served exactly once")
   }
 
   test("C3 index: compacting a fully-tombstoned index leaves a valid empty layout") {
@@ -1978,7 +2069,7 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     Pipeline.appendBm25Stats(spark, statsDir, docs.filter(col("doc_id") % 10 === 7))
     val g1 = Pipeline.bm25StatsPaths(spark, statsDir)._1
     assert(g0 != g1, "append must commit a NEW stats generation")
-    assert(!IndexMeta.exists(spark, g0),
+    assert(!onDisk(g0),
       "the superseded stats generation must be deleted after commit")
     // merged (dfq, idf_micro) per term == a whole-corpus refit, term for
     // term — not just the one query's scores
@@ -2009,7 +2100,7 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     assert(gens.count(_.startsWith("stats.g")) == 1, s"layout: $gens")
     assert(!gens.exists(n => n.startsWith("terms.g") || n.startsWith("scalars.g")))
     val g = IndexMeta.liveGen(spark, statsDir, "stats").get.toString
-    assert(IndexMeta.exists(spark, s"$g/terms") && IndexMeta.exists(spark, s"$g/scalars"))
+    assert(onDisk(s"$g/terms") && onDisk(s"$g/scalars"))
     // an UNCOMMITTED generation (both tables written, marker missing —
     // the crash window) is invisible to readers: the old snapshot stays live
     val (g1, _) = IndexMeta.nextGen(spark, statsDir, "stats")
@@ -2383,14 +2474,14 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     families.filter(_.name != "lex").foreach { f =>
       val live = IndexMeta.liveGen(spark, f.root, f.gen).get
       val header = IndexMeta.header(spark, f.root, f.gen, "the spec").toString
-      val served = f.contents()
+      val served = f.contents(f.root)
       val (orphan, _) = IndexMeta.nextGen(spark, f.root, f.gen)
       IndexMeta.writeSmallFile(spark, s"$orphan/header.json", "{}".getBytes("UTF-8"))
       try {
         assert(IndexMeta.liveGen(spark, f.root, f.gen).get == live,
           s"${f.name}: an uncommitted header resolved as the live generation")
         assert(IndexMeta.header(spark, f.root, f.gen, "the spec").toString == header)
-        assert(f.contents() == served, s"${f.name}: an uncommitted header changed what it serves")
+        assert(f.contents(f.root) == served, s"${f.name}: an uncommitted header changed what it serves")
       } finally IndexMeta.delete(spark, orphan)
     }
   }
@@ -2399,8 +2490,8 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
 
   test("Index header: every family's metadata read runs zero Spark jobs") {
     families.foreach { f =>
-      f.read() // warm: first-touch class loading is not a job either way
-      val (_, jobs) = graft.tools.JobCounter.jobsDuring(spark)(f.read())
+      f.read(f.root) // warm: first-touch class loading is not a job either way
+      val (_, jobs) = graft.tools.JobCounter.jobsDuring(spark)(f.read(f.root))
       assert(jobs === 0, s"${f.name}: the metadata read ran $jobs Spark jobs")
     }
   }
@@ -2419,11 +2510,37 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
   test("Index header: replaying an applied batch id is a no-op for every family with appends") {
     families.flatMap(f => f.replay.map(f -> _)).foreach { case (f, replay) =>
       val gen = IndexMeta.liveGen(spark, f.root, f.gen).get
-      val before = f.contents()
-      replay()
+      val before = f.contents(f.root)
+      replay(f.root)
       assert(IndexMeta.liveGen(spark, f.root, f.gen).get === gen,
         s"${f.name}: the replay committed a new generation")
-      assert(f.contents() === before, s"${f.name}: the replay changed the served contents")
+      assert(f.contents(f.root) === before, s"${f.name}: the replay changed the served contents")
+    }
+  }
+
+  test("Index commit: a crash at every commit point of every family converges on a same-key replay") {
+    // each case copies the family's fixture, runs its mutation with
+    // the fault hook throwing at the first pass of one commit point,
+    // then replays the mutation (same ids, same batch id) with no
+    // fault: what the family serves must equal the one-shot run's
+    final class Crash(point: String) extends RuntimeException(s"injected crash at $point")
+    families.foreach { f =>
+      def fresh() = {
+        val d = copyTree(f.root, s"graft_fault_${f.name}_")
+        f.prepare(d)
+        d
+      }
+      val oneShot = { val d = fresh(); f.mutate(d); try f.contents(d) finally IndexMeta.delete(spark, d) }
+      IndexMeta.faultPoints.foreach { point =>
+        val d = fresh()
+        var fired = false
+        IndexMeta.faultHook = p => if (p == point && !fired) { fired = true; throw new Crash(point) }
+        try intercept[Crash](f.mutate(d))
+        finally IndexMeta.faultHook = _ => ()
+        f.mutate(d)
+        try assert(f.contents(d) == oneShot, s"${f.name}: the replay after a crash at `$point` diverged")
+        finally IndexMeta.delete(spark, d)
+      }
     }
   }
 
@@ -2452,7 +2569,7 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     val src = java.nio.file.Files.createTempDirectory("graft_cache_src")
     java.nio.file.Files.write(src.resolve("part-0.parquet"), Array[Byte](1, 2, 3))
     var builds = 0
-    def ensure() = IndexMeta.ensureDerived(spark, src.toString, "graft_spec_cache_")(
+    def ensure() = IndexMeta.ensureDerived(spark, src.toString, "graft_spec_cache_", Seq("current"))(
       p => require(IndexMeta.field(IndexMeta.header(spark, p, "t", "the spec"), "current").asBoolean))(
       p => {
         builds += 1
@@ -2464,11 +2581,17 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
       val first = name(ensure()) // commits a header its reader refuses
       // before the rebuild, plant the dirs its GC must sort: of a stale
       // fingerprint (one ready, one not — a crash or a refused layout),
-      // an unready one of this fingerprint (maybe a concurrent build),
-      // and one of another corpus whose key starts with this prefix
+      // of the same files under another layout's fingerprint (a build
+      // of another version of the library), an unready one of this
+      // fingerprint (maybe a concurrent build), and one of another
+      // corpus whose key starts with this prefix
       val fp = first.stripPrefix("graft_spec_cache_").takeWhile(_ != '_')
+      assert(fp === IndexMeta.fingerprint(spark, src.toString, Seq("current")))
       val staleReady = s"$root/graft_spec_cache_0_local-1"
       IndexMeta.commitGen(spark, staleReady, "t")(_ => IndexMeta.newHeader().put("current", true))
+      val otherLayout =
+        s"$root/graft_spec_cache_${IndexMeta.fingerprint(spark, src.toString, Seq("older"))}_local-5"
+      IndexMeta.commitGen(spark, otherLayout, "t")(_ => IndexMeta.newHeader().put("current", false))
       val planted = Seq("0_local-2", s"${fp}_local-3", s"2_${fp}_local-4")
         .map(n => s"$root/graft_spec_cache_$n")
       planted.foreach(d => IndexMeta.writeSmallFile(spark, s"$d/part-0", Array[Byte](1)))
@@ -2491,11 +2614,11 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
       IndexMeta.writeSmallFile(spark, s"$idx/${b}_$lineage.f32", Array.fill[Byte](8)(7)))
     Similarity.buildIvfIndexFrom(spark, vecs.filter(col("vec_id") % 20 =!= 7), idx)
     val h = Similarity.ivfHeader(spark, idx, "the spec")
-    assert(h.lineage === lineage && h.codebook === s"codebook_$lineage.f32" && h.coarse.isEmpty)
+    assert(h.codebook === s"codebook_$lineage.f32" && h.coarse.isEmpty)
     val ivf = families.find(_.name == "ivf").get.root // built from the same vectors
     assert(Similarity.ivfCodebook(spark, idx).flat.sameElements(Similarity.ivfCodebook(spark, ivf).flat),
       "the rebuilt codebook differs from a clean build's")
-    assert(!IndexMeta.exists(spark, s"$idx/coarse_$lineage.f32"), "the orphan coarse codebook survived")
+    assert(!onDisk(s"$idx/coarse_$lineage.f32"), "the orphan coarse codebook survived")
   }
 
   test("Index header: a header of the layout before segments is refused with the rebuild message") {
@@ -2509,6 +2632,14 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
       ("store", """{"shingles":"shingles.g00000","bands":"bands.g00000","pairs":"pairs.g00000","applied":[]}""",
         (d: String) => Similarity.nearDupTablePaths(spark, d, "pairs"), "buildNearDupIndex"),
       ("state", """{"max_doc_id":5,"slices":[],"applied":[]}""",
+        (d: String) => Training.liveSlices(spark, d), "buildPretrainState"),
+      // and the headers from before the tombstone deltas
+      ("lex", """{"s_total":1,"n_docs":1,"posting_cap":5,"segments":[],"applied":[]}""",
+        (d: String) => Pipeline.lexSegmentCount(spark, d), "fitLexIndex"),
+      ("ivf", """{"segments":["seg_ivf.g00000"],"codebook":"codebook_ivf.g00000.f32",""" +
+        """"dim":4,"mean_sq_dist":1.0,"n_build":1,"applied":[]}""",
+        (d: String) => Similarity.ivfCodebook(spark, d), "buildIvfIndexFrom"),
+      ("state", """{"max_doc_id":5,"slices":[],"seen_th":[],"evalgrams":[],"applied":[]}""",
         (d: String) => Training.liveSlices(spark, d), "buildPretrainState"))
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     unsegmented.foreach { case (name, header, read, rebuild) =>
@@ -2553,7 +2684,7 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     assert(ivfIds(ivf) === idsBefore, "the uncommitted IVF segment is visible")
     Similarity.appendToIvfIndex(spark, ivf, batch, Some("b1"))
     assert(ivfIds(ivf) === ivfIds(fixture("ivf")), "the re-run IVF batch is missing or duplicated")
-    assert(!IndexMeta.exists(spark, ivfSeg) && !IndexMeta.exists(spark, ivfGen),
+    assert(!onDisk(ivfSeg) && !onDisk(ivfGen),
       "the next IVF append left the crashed one on disk")
 
     // near-dup store: the crashed segment holds the batch's shingles
@@ -2579,7 +2710,7 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     val after = pairs(store)
     assert(after.distinct === after && after === pairs(fixture("store")),
       "the re-run store batch is missing or duplicated pairs")
-    assert(!IndexMeta.exists(spark, storeSeg) && !IndexMeta.exists(spark, storeGen),
+    assert(!onDisk(storeSeg) && !onDisk(storeGen),
       "the next store append left the crashed one on disk")
   }
 
@@ -2592,7 +2723,7 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     Pipeline.fitLexIndex(docs.filter(col("doc_id") % 10 =!= 7), idx)
     val h = Pipeline.lexHeader(spark, IndexMeta.liveGen(spark, idx, "lex").get.toString, "the spec")
     val (old, _) = IndexMeta.nextGen(spark, idx, "lex")
-    Seq((h.sTotal, h.nDocs, h.postingCap.toLong, h.lineage))
+    Seq((h.sTotal, h.nDocs, h.postingCap.toLong, IndexMeta.genName("lex", 0)))
       .toDF("s_total", "n_docs", "posting_cap", "lineage").write.parquet(s"$old/scalars")
     h.segments.toDF("seg").write.parquet(s"$old/manifest")
     Seq("b0").toDF("batch").write.parquet(s"$old/applied")
@@ -2655,8 +2786,8 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
       assert(e.getMessage.contains("re-inserts"), e.getMessage)
       Pipeline.compactLexIndex(spark, a)
       assert(!IndexMeta.list(spark, a)
-          .exists(_.getPath.getName.startsWith("tombstones_")),
-        "compaction left the tombstone table behind")
+          .exists(_.getPath.getName.startsWith("tomb_")),
+        "compaction left a tombstone delta behind")
       val b = Similarity.freshScratch(spark, "graft_c43e_cmp_b_")
       Pipeline.fitLexIndex(docs.filter(col("doc_id") % 10 =!= 7), b)
       assert(lexTables(a) == lexTables(b),
@@ -2776,17 +2907,16 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     Pipeline.compactLexIndex(spark, idx) // no tombstones, one live segment
     assert(IndexMeta.liveGen(spark, idx, "lex").get.toString == gen0,
       "orphan sweep committed a new generation")
-    assert(!IndexMeta.exists(spark, s"$idx/seg_crashed"),
+    assert(!onDisk(s"$idx/seg_crashed"),
       "compaction's no-op path left the crash orphan on disk")
     assert(lexTables(idx) == before, "the sweep changed the live tables")
   }
 
   test("C43 lineage: a refit retires old tombstones and batch markers ATOMICALLY with its commit") {
-    // the crash-window test: simulate a refit that died right after
-    // fitLexIndex committed (before any GC ran) by calling the bare
-    // fit — the old lineage's tombstones and append markers are still
-    // ON DISK, yet every reader and maintenance op must ignore them,
-    // because side-state is keyed by the lineage id the commit rotated
+    // the crash-window test: a refit that died right after its commit,
+    // before its GC ran — the old index life's tombstone delta is still
+    // ON DISK, yet every reader and maintenance op must ignore it,
+    // because the fit's header names no delta and no applied batch id
     import spark.implicits._
     val docs = Relational.table(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
@@ -2803,11 +2933,11 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
       spark.range(1).select(lit(vid).as("doc_id"))) // pending tombstone
     Pipeline.appendLexIndex(spark, idx, docs.filter(col("doc_id") % 10 === 7),
       Some("b1")) // consumed batch marker
-    Pipeline.fitLexIndex(docs, idx) // the "crashed refit": commit only, no GC
+    withDeletesLeftBehind(idx)(Pipeline.fitLexIndex(docs, idx)) // the "crashed refit"
     def staleTomb() = IndexMeta.list(spark, idx)
-      .exists(_.getPath.getName.startsWith("tombstones_"))
+      .exists(_.getPath.getName.startsWith("tomb_"))
     assert(staleTomb(),
-      "precondition: the old lineage's tombstone file must still be on disk")
+      "precondition: the old index life's tombstone delta must still be on disk")
     // 1. the stale tombstone does not hide the re-indexed doc: a
     // probe with the victim's own (unique) text must retrieve vid
     val hits = Pipeline.sparseScoreIndexed(spark, idx,
@@ -2821,13 +2951,13 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     // runs — with the stale tombstone still on disk when it does
     val alien2 = (0 until 20).map(i => (950000L + i, s"zzlin$i zzlin${i % 5}"))
       .toDF("doc_id", "text")
-    Pipeline.appendLexIndex(spark, idx, alien2, Some("lin2"))
+    withDeletesLeftBehind(idx)(Pipeline.appendLexIndex(spark, idx, alien2, Some("lin2")))
     assert(Pipeline.lexSegmentCount(spark, idx) == 2 && staleTomb(),
       "precondition: fold must run on >1 segments with the stale tombstone present")
     Pipeline.compactLexIndex(spark, idx)
     val (_, _, _, dls) = Pipeline.lexLiveTables(spark, idx)
     assert(dls.filter(col("doc_id") === vid).count() == 1,
-      "compaction applied a retired lineage's tombstone — data loss")
+      "compaction applied a retired index life's tombstone — data loss")
     // 3. replaying the old batchId against the new life APPENDS (the
     // refit reset ingest history) — the loud live-id clash proves the
     // marker did not silently no-op it

@@ -468,6 +468,10 @@ class TrainingSpec extends AnyFunSuite with SparkTestSession {
   /** The kept-doc id set of a c33b state — union of every LIVE shard
     * slice's doc_ids, resolved through [[Training.liveSlices]] (the
     * SAME rule readers use — the spec must not re-implement it). */
+  /** Whether a local path exists. */
+  private def onDisk(p: String): Boolean =
+    java.nio.file.Files.exists(java.nio.file.Paths.get(p.stripPrefix("file:")))
+
   private def keptIds(st: String): Set[Long] =
     Training.liveSlices(spark, st).map(n => spark.read.parquet(s"$st/shards/$n"))
       .reduce(_.unionByName(_))
@@ -621,6 +625,12 @@ class TrainingSpec extends AnyFunSuite with SparkTestSession {
     Training.readPretrainShards(spark, st)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))).toSet
 
+  /** The takedown deltas of a state: those its live header names, and
+    * every `tomb_*` dir on disk. */
+  private def tombDeltas(st: String): (Seq[String], Seq[String]) =
+    (IndexMeta.strings(IndexMeta.header(spark, st, "state", "the spec"), "tombstones"),
+      IndexMeta.list(spark, s"$st/shards").map(_.getPath.getName).filter(_.startsWith("tomb_")))
+
   test("C33d: tombstone visible immediately; compaction removes the bytes; census invariant") {
     val dir = "/root/testdata/sf0.001"
     val docs = Relational.table(spark, dir, "documents")
@@ -641,21 +651,21 @@ class TrainingSpec extends AnyFunSuite with SparkTestSession {
     assert(keptIds(st).intersect(victims) == victims,
       "precondition: victim bytes must still be in the live files pre-compaction")
     Training.compactPretrainShards(spark, st)
-    // 2. physical removal: no live file carries a victim row, the
-    //    tombstone table is gone, and the census is unchanged
+    // 2. physical removal: no live file carries a victim row, no
+    //    tombstone delta is named or left on disk, and the census is
+    //    unchanged
     assert(keptIds(st).intersect(victims).isEmpty,
       "compaction left tombstoned rows in the live shard files")
-    assert(!IndexMeta.exists(spark, s"$st/shards/tombstones"),
-      "compaction left the tombstone table behind")
+    assert(tombDeltas(st) == ((Nil, Nil)), "compaction left a tombstone delta behind")
     assert(shardCensus(st) == pre,
       "compaction changed what the census reader sees")
     // 3. re-delete of already-removed ids: the shipped-probe drops
-    //    them all, so NO tombstone table is re-created (the census
+    //    them all, so NO tombstone delta is committed (the census
     //    would otherwise pay a pointless anti-join forever and the
     //    next compaction would leave its cheap gc-only path)
     Training.tombstonePretrainDocs(spark, st, victims.toSeq.toDF("doc_id"))
-    assert(!IndexMeta.exists(spark, s"$st/shards/tombstones"),
-      "re-delete of physically-removed ids re-created the tombstone table")
+    assert(tombDeltas(st) == ((Nil, Nil)),
+      "re-delete of physically-removed ids committed a tombstone delta")
     assert(shardCensus(st) == pre, "re-delete changed the census")
   }
 
@@ -682,11 +692,10 @@ class TrainingSpec extends AnyFunSuite with SparkTestSession {
       "whole-slice takedown left rows behind")
     assert(shardCensus(st).nonEmpty, "census must stay readable after the drop")
     // ids now physically gone (or never shipped at all): a re-delete
-    // creates no table, and the next compaction is gc-only — the
+    // commits no delta, and the next compaction is gc-only — the
     // state generation does not move
     Training.tombstonePretrainDocs(spark, st, sliceDocs.toSeq.toDF("doc_id"))
-    assert(!IndexMeta.exists(spark, s"$st/shards/tombstones"),
-      "takedown of non-live ids created a tombstone table")
+    assert(tombDeltas(st) == ((Nil, Nil)), "takedown of non-live ids committed a tombstone delta")
     val g = IndexMeta.liveGen(spark, st, "state").get
     Training.compactPretrainShards(spark, st)
     assert(IndexMeta.liveGen(spark, st, "state").get == g,
@@ -732,7 +741,7 @@ class TrainingSpec extends AnyFunSuite with SparkTestSession {
     assert(shardCensus(st) == before,
       "an unreferenced slice dir leaked into the census")
     Training.compactPretrainShards(spark, st) // no tombstones: gc-only path
-    assert(!IndexMeta.exists(spark, s"$st/shards/slice_crashed"),
+    assert(!onDisk(s"$st/shards/slice_crashed"),
       "compaction's no-op path left the crash orphan on disk")
     assert(shardCensus(st) == before, "the sweep changed the census")
   }
