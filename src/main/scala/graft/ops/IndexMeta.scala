@@ -1,7 +1,12 @@
 package graft.ops
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import scala.reflect.ClassTag
+
+import com.fasterxml.jackson.annotation.JsonInclude
+import com.fasterxml.jackson.databind.{DeserializationFeature, JsonMappingException, ObjectMapper,
+  PropertyNamingStrategies}
 import com.fasterxml.jackson.databind.node.ObjectNode
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -31,7 +36,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  *   - a batch id lands in `applied` atomically with its data: there is
  *     no marker file and no window between "the batch is in" and "the
  *     batch is recorded".
- * [[header]] reads the live header on the driver with no Spark job.
+ * Each family with a header is declared once as an [[IndexFamily]],
+ * whose `header` reads the live header on the driver with no Spark job.
  * A layout with no header (written before this protocol) is refused
  * with a rebuild message naming the caller; the derived-index cache
  * ([[ensureDerived]]) treats it as not ready and rebuilds.
@@ -46,8 +52,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * crash before it leaves an orphan, invisible and overwritten or swept
  * by the family's next commit. A compaction or rebuild names no delta.
  * Each family deletes what its live header no longer names after the
- * commit; nothing is written into a live dir. [[faultHook]] crashes a
- * mutation at each commit point in specs.
+ * commit ([[IndexFamily.commit]]); nothing is written into a live dir.
+ * [[faultHook]] crashes a mutation at each commit point in specs.
  */
 private[graft] object IndexMeta {
 
@@ -121,7 +127,7 @@ private[graft] object IndexMeta {
     * `prefixes` and is not in `keep` — the GC of what a committed
     * header no longer names (superseded data and crash orphans; a
     * single-writer maintenance step, run after the commit). */
-  def deleteUnnamed(spark: SparkSession, dir: String, prefixes: Seq[String],
+  private[ops] def deleteUnnamed(spark: SparkSession, dir: String, prefixes: Seq[String],
                     keep: Set[String]): Unit = {
     val victims = list(spark, dir).map(_.getPath).filter { p =>
       prefixes.exists(p.getName.startsWith) && !keep(p.getName)
@@ -195,21 +201,36 @@ private[graft] object IndexMeta {
   // ------------------------------------------ generation headers
 
   private val HeaderFile = "header.json"
+
+  /** The one header codec: a case class to and from its JSON, with
+    * snake_case field names. An absent `Option` is omitted and reads as
+    * None, an absent `Seq` reads as empty, an absent number is refused,
+    * and an unknown field is ignored (a family's `needs` judge whether
+    * a header is of its current layout). An absent string reads as
+    * null, which [[decode]] refuses by name. */
+  private val snakeCase = new PropertyNamingStrategies.SnakeCaseStrategy()
   private lazy val json = new ObjectMapper()
+    .registerModule(DefaultScalaModule)
+    .setPropertyNamingStrategy(snakeCase)
+    .setDefaultPropertyInclusion(JsonInclude.Include.NON_ABSENT)
+    .enable(DeserializationFeature.FAIL_ON_NULL_FOR_PRIMITIVES)
+    .disable(DeserializationFeature.FAIL_ON_UNKNOWN_PROPERTIES)
 
   def newHeader(): ObjectNode = json.createObjectNode()
+
+  /** A header's bytes as [[commitGen]] writes them. */
+  private[graft] def encode(h: Any): Array[Byte] = json.writeValueAsBytes(h)
 
   /** Commit the next `<name>.gN` generation under `dir`. `body` gets
     * the new generation's path, writes whatever data the generation
     * needs (inside it or beside it) and returns the header; the header
     * lands, then `_SUCCESS`, then every superseded `<name>.g*` is
     * deleted. Returns the committed header. */
-  def commitGen(spark: SparkSession, dir: String, name: String)
-               (body: String => ObjectNode): ObjectNode = {
+  def commitGen[H](spark: SparkSession, dir: String, name: String)(body: String => H): H = {
     val (g, old) = nextGen(spark, dir, name)
     val h = body(g)
     faultHook("body")
-    writeSmallFile(spark, s"$g/$HeaderFile", json.writeValueAsBytes(h))
+    writeSmallFile(spark, s"$g/$HeaderFile", encode(h))
     faultHook("header")
     createMarker(spark, s"$g/$Committed")
     faultHook("success")
@@ -245,55 +266,33 @@ private[graft] object IndexMeta {
     }
   }
 
-  /** The header of the live `<name>` generation under `dir` — one
-    * small-file read on the driver, no Spark job. No committed
-    * generation, or one without a header (a layout from before this
-    * protocol), is refused naming `what` (the caller) and `rebuild`
-    * (how to get a current layout). A header without one of the
-    * `needs` fields is of an older layout of the family and is refused
-    * the same way. */
-  def header(spark: SparkSession, dir: String, name: String, what: String,
-             rebuild: String = "rebuild the index", needs: Seq[String] = Nil): ObjectNode =
-    headerOpt(spark, dir, name, what, rebuild, needs)
-      .getOrElse(noCommittedGen(dir, name, what, rebuild))
-
-  /** [[header]] for a family that may not exist yet: None when `dir`
-    * has no committed `<name>` generation (a header-less one is still
-    * refused). */
-  def headerOpt(spark: SparkSession, dir: String, name: String, what: String,
-                rebuild: String, needs: Seq[String] = Nil): Option[ObjectNode] =
-    liveGen(spark, dir, name).map(g => headerAt(spark, g.toString, what, rebuild, needs))
-
-  /** The refusal of [[header]] when `dir` has no committed `<name>`. */
+  /** The refusal of a header read when `dir` has no committed `<name>`. */
   def noCommittedGen(dir: String, name: String, what: String, rebuild: String): Nothing =
     sys.error(s"no committed $name generation under $dir — $what cannot use it: not " +
       s"an index of this kind or a build that crashed before its commit; $rebuild")
 
-  /** The header of generation `g` (see [[header]]). */
-  def headerAt(spark: SparkSession, g: String, what: String, rebuild: String,
-               needs: Seq[String] = Nil): ObjectNode = {
-    val h = readSmallFile(spark, s"$g/$HeaderFile") match {
-      case Some(bytes) => json.readTree(bytes).asInstanceOf[ObjectNode]
+  /** The header of generation `g` as `cls` — one small-file read on the
+    * driver, no Spark job. A generation without a header (a layout from
+    * before this protocol) is refused naming `what` (the caller) and
+    * `rebuild` (how to get a current layout); so is a header without
+    * one of the `needs` fields (an older layout of the family), and one
+    * without a field `cls` cannot default, by that field's name. */
+  private[ops] def decode[H <: Product](spark: SparkSession, g: String, cls: Class[H],
+      what: String, rebuild: String, needs: Seq[String]): H = {
+    val tree = readSmallFile(spark, s"$g/$HeaderFile") match {
+      case Some(bytes) => json.readTree(bytes)
       case None => sys.error(
         s"generation $g predates the header layout — $what cannot use it; $rebuild")
     }
-    needs.find(f => !h.has(f)).foreach(f => sys.error(
+    needs.find(f => !tree.has(f)).foreach(f => sys.error(
       s"generation $g has a header of an older layout (no `$f` field) — $what cannot use it; $rebuild"))
-    h
-  }
-
-  /** Field `f` of a header, refused by name when absent. */
-  def field(h: ObjectNode, f: String): JsonNode =
-    Option(h.get(f)).getOrElse(sys.error(s"index generation header has no `$f` field"))
-
-  /** String-array field `f` of a header (empty when absent). */
-  def strings(h: ObjectNode, f: String): Seq[String] =
-    Option(h.get(f)).toSeq.flatMap(a => (0 until a.size).map(a.get(_).asText))
-
-  /** Set string-array field `f` of a header; returns the header. */
-  def putStrings(h: ObjectNode, f: String, xs: Iterable[String]): ObjectNode = {
-    val a = h.putArray(f)
-    xs.foreach(x => a.add(x))
+    def noField(f: String): Nothing = sys.error(
+      s"generation $g has a header with no `$f` field — $what cannot use it; $rebuild")
+    val h = try json.treeToValue(tree, cls) catch {
+      case e: JsonMappingException if e.getPath.size == 1 => noField(e.getPath.get(0).getFieldName)
+    }
+    h.productElementNames.zip(h.productIterator).collectFirst { case (f, null) => f }
+      .foreach(f => noField(snakeCase.translate(f)))
     h
   }
 
@@ -308,21 +307,21 @@ private[graft] object IndexMeta {
     * (default java.io.tmpdir): the index is a pure function of the
     * source files, so same (name, length, mtime) set ⇒ same index and
     * repeated wrapper calls (bench run1/run2, sweeps) rebuild nothing.
-    * `layout` — the header fields the family's reader needs — is part
-    * of the fingerprint, so a layout change is a stale fingerprint whose
-    * dirs the GC below reclaims. A cached dir is READY when `readHeader` —
-    * the family's header reader — accepts it: it has a live header (the
-    * last thing a build commits) of the layout this code writes. A
+    * The family's `needs` — the header fields of its current layout —
+    * are part of the fingerprint, so a layout change is a stale
+    * fingerprint whose dirs the GC below reclaims. A cached dir is READY
+    * when the family's header reader accepts it: it has a live header
+    * (the last thing a build commits) of the layout this code writes. A
     * half-built or crashed dir, a layout from before the header
     * protocol, or a header of any other layout is never served and gets
     * rebuilt. Concurrent builders each write their own appId-suffixed
     * dir; readers take any ready one; every dir of a stale fingerprint
     * of the same prefix, ready or not, is GC'd after a successful
     * build. Shared by the IVF, RAG-chunk, and lexical index wrappers. */
-  def ensureDerived(spark: SparkSession, sourceDir: String, prefix: String, layout: Seq[String])
-                   (readHeader: String => Any)(build: String => Unit): String = {
-    def ready(p: String) = scala.util.Try(readHeader(p)).isSuccess
-    val fp = fingerprint(spark, sourceDir, layout)
+  def ensureDerived(spark: SparkSession, sourceDir: String, prefix: String,
+                    family: IndexFamily[_])(build: String => Unit): String = {
+    def ready(p: String) = scala.util.Try(family.header(spark, p, "the index cache")).isSuccess
+    val fp = fingerprint(spark, sourceDir, family.needs)
     val tmpRoot = spark.conf.getOption("graft.index.root")
       .getOrElse(System.getProperty("java.io.tmpdir"))
     // a cache dir is named `<prefix><hex fp>_<app id>`, the app id with
@@ -346,4 +345,52 @@ private[graft] object IndexMeta {
       mine
     }
   }
+}
+
+/** One index family's declaration, and the only code that encodes,
+  * decodes, commits or GCs its header `H` (a case class, through the
+  * one codec of [[IndexMeta]]): the generation `name`, the `rebuild`
+  * message of every refusal, the `needs` fields that mark the current
+  * header layout (also the layout part of the family's
+  * [[IndexMeta.ensureDerived]] fingerprint), and the `gc` rule — per
+  * subdir of the family root, the name prefixes the family owns and the
+  * names a header keeps. */
+private[graft] final class IndexFamily[H <: Product](val name: String, val rebuild: String,
+    val needs: Seq[String], gc: Seq[IndexFamily.Gc[H]])(implicit cls: ClassTag[H]) {
+
+  /** The live header under `dir`, refused naming `what` (the caller)
+    * when there is none or it is of another layout. */
+  def header(spark: SparkSession, dir: String, what: String): H =
+    headerOpt(spark, dir, what).getOrElse(IndexMeta.noCommittedGen(dir, name, what, rebuild))
+
+  /** [[header]] for a family that may not exist yet: None when `dir`
+    * has no committed generation (a header-less one is still refused). */
+  def headerOpt(spark: SparkSession, dir: String, what: String): Option[H] =
+    IndexMeta.liveGen(spark, dir, name).map(g => headerAt(spark, g.toString, what))
+
+  /** The header of generation dir `g`, committed or not. */
+  def headerAt(spark: SparkSession, g: String, what: String): H =
+    IndexMeta.decode(spark, g, cls.runtimeClass.asInstanceOf[Class[H]], what, rebuild, needs)
+
+  /** Commit the family's next generation under `dir` through
+    * [[IndexMeta.commitGen]] (`body` gets the generation's path, writes
+    * its data and returns the header), then [[collect]]. */
+  def commit(spark: SparkSession, dir: String)(body: String => H): H = {
+    val h = IndexMeta.commitGen(spark, dir, name)(body)
+    collect(spark, dir, h)
+    h
+  }
+
+  /** Delete every entry under `dir` of the family's prefixes that `h`
+    * does not name: superseded data, retired deltas and orphans of
+    * crashed mutations (single-writer maintenance, run after a commit). */
+  def collect(spark: SparkSession, dir: String, h: H): Unit = gc.foreach { r =>
+    IndexMeta.deleteUnnamed(spark, if (r.subdir.isEmpty) dir else s"$dir/${r.subdir}",
+      r.prefixes, r.keep(h).toSet)
+  }
+}
+
+private[graft] object IndexFamily {
+  /** The GC rule of one subdir (`""`: the family root). */
+  final case class Gc[H](subdir: String, prefixes: Seq[String], keep: H => Iterable[String])
 }

@@ -917,45 +917,18 @@ object Training {
     * under `seen_th/` and `evalgrams/` (the build's, then one delta
     * per ingested slice), the takedown deltas under `shards/`, and the
     * tags of the slices ingested since the build. */
-  private final case class StateHeader(maxDocId: Long, slices: Seq[String],
-      seenTh: Seq[String], evalGrams: Seq[String], tombstones: Seq[String],
-      applied: Seq[String]) {
-    def toJson: com.fasterxml.jackson.databind.node.ObjectNode = {
-      val o = IndexMeta.newHeader().put("max_doc_id", maxDocId)
-      IndexMeta.putStrings(o, "slices", slices)
-      IndexMeta.putStrings(o, "seen_th", seenTh)
-      IndexMeta.putStrings(o, "evalgrams", evalGrams)
-      IndexMeta.putStrings(o, "tombstones", tombstones)
-      IndexMeta.putStrings(o, "applied", applied)
-    }
-  }
+  private[ops] final case class StateHeader(maxDocId: Long, slices: Seq[String],
+      seenTh: Seq[String], evalgrams: Seq[String], tombstones: Seq[String],
+      applied: Seq[String])
 
-  private def parseState(o: com.fasterxml.jackson.databind.node.ObjectNode): StateHeader =
-    StateHeader(IndexMeta.field(o, "max_doc_id").asLong, IndexMeta.strings(o, "slices"),
-      IndexMeta.strings(o, "seen_th"), IndexMeta.strings(o, "evalgrams"),
-      IndexMeta.strings(o, "tombstones"), IndexMeta.strings(o, "applied"))
-
-  private val stateRebuild = "build the state with buildPretrainState first"
-  private val stateLayout = Seq("seen_th", "evalgrams", "tombstones")
-
-  private def stateHeader(spark: SparkSession, stateDir: String, what: String): StateHeader =
-    parseState(IndexMeta.header(spark, stateDir, "state", what, stateRebuild, stateLayout))
-
-  /** Commit the state's next generation: `body` gets its path and
-    * returns the header; then [[gcState]] runs. */
-  private def commitState(spark: SparkSession, stateDir: String)(body: String => StateHeader): Unit =
-    gcState(spark, stateDir,
-      parseState(IndexMeta.commitGen(spark, stateDir, "state")(g => body(g).toJson)))
-
-  /** Delete every dir under the state's stores that `st` does not name:
-    * superseded slices and deltas, and orphans of crashed mutations
-    * (single-writer maintenance). */
-  private def gcState(spark: SparkSession, stateDir: String, st: StateHeader): Unit = {
-    IndexMeta.deleteUnnamed(spark, s"$stateDir/shards", Seq("slice_", "tomb_"),
-      (st.slices ++ st.tombstones).toSet)
-    IndexMeta.deleteUnnamed(spark, s"$stateDir/seen_th", Seq("slice_"), st.seenTh.toSet)
-    IndexMeta.deleteUnnamed(spark, s"$stateDir/evalgrams", Seq("slice_"), st.evalGrams.toSet)
-  }
+  /** The pretrain state family: after each commit, every slice and
+    * delta under its stores that the header does not name is deleted —
+    * superseded slices and deltas, and orphans of crashed mutations. */
+  private[ops] val stateFamily = new IndexFamily[StateHeader]("state",
+    "build the state with buildPretrainState first", Seq("seen_th", "evalgrams", "tombstones"),
+    Seq(IndexFamily.Gc("shards", Seq("slice_", "tomb_"), st => st.slices ++ st.tombstones),
+      IndexFamily.Gc("seen_th", Seq("slice_"), _.seenTh),
+      IndexFamily.Gc("evalgrams", Seq("slice_"), _.evalgrams)))
 
   /** The union of a state store's live dirs (`seen_th` or `evalgrams`). */
   private def stateStore(spark: SparkSession, stateDir: String, store: String,
@@ -967,7 +940,7 @@ object Training {
     * it). Readers resolve slices through the header, never by listing
     * the disk, so an uncommitted slice dir is structurally invisible. */
   private[ops] def liveSlices(spark: SparkSession, stateDir: String): Seq[String] =
-    stateHeader(spark, stateDir, "this reader").slices.sorted
+    stateFamily.header(spark, stateDir, "this reader").slices.sorted
 
   /** Build the persisted pipeline state on the initial corpus:
     * seen-text-hash store, near-dup signature store over the unique-
@@ -1026,7 +999,7 @@ object Training {
       .localCheckpoint()
     fitBpe(spark, kept, s"$stateDir/bpe", bpeMerges(spark), bpeMaxWords(spark))
     val slice = writeSliceShards(spark, stateDir, kept, "00000_build")
-    commitState(spark, stateDir)(_ => StateHeader(
+    stateFamily.commit(spark, stateDir)(_ => StateHeader(
       d.agg(max(col("doc_id"))).head().getLong(0), slice.toSeq, Seq(build), Seq(build), Nil, Nil))
   }
 
@@ -1042,17 +1015,14 @@ object Training {
   def ingestPretrainSlice(spark: SparkSession, stateDir: String,
                           slice: DataFrame, sliceId: String): Unit = {
     val tag = sliceId.replaceAll("[^A-Za-z0-9._-]", "_")
-    val live = IndexMeta.headerOpt(spark, stateDir, "state", "slice ingest", stateRebuild,
-      stateLayout)
-      .map(parseState)
+    val live = stateFamily.headerOpt(spark, stateDir, "slice ingest")
     if (live.exists(_.applied.contains(tag))) return
     val d = Scale.pin(slice.select(col("doc_id"), col("text"), col("lang"),
       col("source"), col("n_chars")))
     val mm = d.agg(min(col("doc_id")), max(col("doc_id"))).head()
     if (mm.isNullAt(0)) return
     // a non-empty slice needs the state: refuse with the contract error
-    val st = live.getOrElse(
-      IndexMeta.noCommittedGen(stateDir, "state", "slice ingest", stateRebuild))
+    val st = live.getOrElse(stateFamily.header(spark, stateDir, "slice ingest"))
     val prevMax = st.maxDocId
     require(mm.getLong(0) > prevMax,
       s"arrival slice carries doc_id ${mm.getLong(0)} ≤ the state's id " +
@@ -1083,7 +1053,7 @@ object Training {
     val delta = s"slice_$tag"
     Relational.writeParquet(Curation.gramHashes(spark, d.filter(col("doc_id") % 20 === 0))
       .select(col("gram_h")).distinct(), s"$stateDir/evalgrams/$delta")
-    val evalGrams = st.evalGrams :+ delta
+    val evalGrams = st.evalgrams :+ delta
     val kept = monotonePool(d.filter(col("doc_id") % 20 =!= 0), keepers, losers,
       stateStore(spark, stateDir, "evalgrams", evalGrams),
       Relational.cachedSchemaParquet(spark, s"$stateDir/rates"))
@@ -1098,8 +1068,9 @@ object Training {
       f"oov_frac=${bpeOovFraction(spark, s"$stateDir/bpe", d, Some(toksCol))}%.4f")
     val name = writeSliceShards(spark, stateDir, kept, tag, Some(toksCol))
     Relational.writeParquet(newTh.select(col("th")).distinct(), s"$stateDir/seen_th/$delta")
-    commitState(spark, stateDir)(_ => st.copy(maxDocId = mm.getLong(1), slices = st.slices ++ name,
-      seenTh = st.seenTh :+ delta, evalGrams = evalGrams, applied = st.applied :+ tag))
+    stateFamily.commit(spark, stateDir)(_ => st.copy(maxDocId = mm.getLong(1),
+      slices = st.slices ++ name, seenTh = st.seenTh :+ delta, evalgrams = evalGrams,
+      applied = st.applied :+ tag))
   }
 
   /** Per-shard census of every LIVE shard slice — doc counts, kept
@@ -1112,7 +1083,7 @@ object Training {
     * has run (the c43e visibility contract on the shard tree). The
     * registry answer. */
   def readPretrainShards(spark: SparkSession, stateDir: String): DataFrame = {
-    val st = stateHeader(spark, stateDir, "this reader")
+    val st = stateFamily.header(spark, stateDir, "this reader")
     val names = st.slices.sorted
     require(names.nonEmpty, s"no shard slices under $stateDir")
     val all = names.map(n => Relational.cachedSchemaParquet(spark, s"$stateDir/shards/$n"))
@@ -1151,7 +1122,7 @@ object Training {
     * (hashes of banned text suppress its near-duplicates — desired). */
   def tombstonePretrainDocs(spark: SparkSession, stateDir: String,
       ids: DataFrame): Unit = {
-    val st = stateHeader(spark, stateDir, "takedowns") // loud not-a-state guard
+    val st = stateFamily.header(spark, stateDir, "takedowns") // loud not-a-state guard
     // the shipped probe is a semi-join against the live tree's narrow
     // doc_id projection: one map-only column scan, the same price the
     // census already pays
@@ -1160,7 +1131,7 @@ object Training {
       .reduce(_.unionByName(_))
     IndexMeta.commitTombstones(spark, s"$stateDir/shards", st.tombstones,
       ids.select(col("doc_id")).join(shipped, Seq("doc_id"), "left_semi")) { write =>
-      commitState(spark, stateDir)(g => st.copy(tombstones = st.tombstones :+ write(g)))
+      stateFamily.commit(spark, stateDir)(g => st.copy(tombstones = st.tombstones :+ write(g)))
     }
   }
 
@@ -1180,10 +1151,10 @@ object Training {
     * slice, it does not number it. */
   def compactPretrainShards(spark: SparkSession, stateDir: String): Unit = {
     val root = s"$stateDir/shards"
-    val st = stateHeader(spark, stateDir, "compaction")
+    val st = stateFamily.header(spark, stateDir, "compaction")
     val names = st.slices.sorted
     val tombOpt = IndexMeta.tombstones(spark, root, st.tombstones)
-    if (tombOpt.isEmpty) { gcState(spark, stateDir, st); return }
+    if (tombOpt.isEmpty) { stateFamily.collect(spark, stateDir, st); return }
     val tombIds = broadcast(tombOpt.get)
     val affected = names.map(n =>
         Relational.cachedSchemaParquet(spark, s"$root/$n").select(col("doc_id"))
@@ -1220,7 +1191,7 @@ object Training {
     require(renamed.nonEmpty,
       s"takedown removed every live slice under $stateDir — an empty " +
         "state has no census; rebuild instead of compacting to nothing")
-    commitState(spark, stateDir)(_ => st.copy(slices = renamed, tombstones = Nil))
+    stateFamily.commit(spark, stateDir)(_ => st.copy(slices = renamed, tombstones = Nil))
   }
 
   /** C33d registry wrapper — the takedown path on the capstone state:

@@ -13,7 +13,7 @@ import graft.typedef.TypeDef._
 class OrcIOSpec extends AnyFunSuite with SparkTestSession {
 
   private def tmpDir(): String = {
-    val d = Files.createTempDirectory("graft-orc").toFile
+    val d = tempDir("graft-orc").toFile
     d.deleteOnExit()
     d.getAbsolutePath + "/out.orc"
   }

@@ -25,7 +25,7 @@ class RoundTripSpec extends AnyFunSuite with SparkTestSession {
 
   /** `body` on a fresh temp dir, deleted with all it holds afterwards. */
   private def inTempDir[T](prefix: String)(body: String => T): T = {
-    val dir = Files.createTempDirectory(prefix)
+    val dir = tempDir(prefix)
     try body(dir.toString)
     finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
   }

@@ -27,7 +27,7 @@ class BpeSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("fit reproduces the hand-computed merge sequence") {
-    val modelDir = java.nio.file.Files.createTempDirectory("graft_bpe_spec").toString
+    val modelDir = tempDir("graft_bpe_spec").toString
     Training.fitBpe(spark, craftedDocs(spark), modelDir, numMerges = 4, maxWords = 100)
     val merges = spark.read.parquet(s"${IndexMeta.liveGen(spark, modelDir, "bpe").get}/merges")
       .orderBy("rank").collect().map(r => (r.getString(1), r.getString(2))).toSeq
@@ -55,7 +55,7 @@ class BpeSpec extends AnyFunSuite with SparkTestSession {
     // reconstruction against the raw text per doc
     val docs = Relational.table(spark, dir, "documents")
       .filter(col("doc_id") % 20 === 7)
-    val modelDir2 = java.nio.file.Files.createTempDirectory("graft_bpe_spec2").toString
+    val modelDir2 = tempDir("graft_bpe_spec2").toString
     Training.fitBpe(spark,
       Relational.table(spark, dir, "documents").filter(col("doc_id") % 20 =!= 7),
       modelDir2, 200, 65536)
@@ -112,7 +112,7 @@ class BpeSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("c32b vocab export: generation protocol, slot-0 space, alphabet+merges, dedup") {
-    val modelDir = java.nio.file.Files.createTempDirectory("graft_bpe_vocab").toString
+    val modelDir = tempDir("graft_bpe_vocab").toString
     Training.fitBpe(spark, craftedDocs(spark), modelDir, numMerges = 4, maxWords = 100)
     val live = s"${IndexMeta.liveGen(spark, modelDir, "bpe").get}/vocab"
     assert(live.contains("bpe.g"), s"vocab not under the generation protocol: $live")
@@ -130,7 +130,7 @@ class BpeSpec extends AnyFunSuite with SparkTestSession {
 
   test("c32b ids roundtrip: decode(encodeIds(text)) == text incl. space runs; OOV is loud") {
     import spark.implicits._
-    val modelDir = java.nio.file.Files.createTempDirectory("graft_bpe_rt").toString
+    val modelDir = tempDir("graft_bpe_rt").toString
     Training.fitBpe(spark, craftedDocs(spark), modelDir, numMerges = 4, maxWords = 100)
     // space handling is the decode trap: empty words from split must
     // round-trip runs of spaces, leading and trailing included
@@ -165,7 +165,7 @@ class BpeSpec extends AnyFunSuite with SparkTestSession {
     // so the expected fractions are exact token arithmetic (the
     // encode Column emits word tokens only — spaces are the id
     // layer's concern — so denominators count word tokens)
-    val modelDir = java.nio.file.Files.createTempDirectory("graft_bpe_drift").toString
+    val modelDir = tempDir("graft_bpe_drift").toString
     Training.fitBpe(spark, craftedDocs(spark), modelDir, numMerges = 4, maxWords = 100)
     import spark.implicits._
     def frac(texts: String*) = Training.bpeOovFraction(spark, modelDir,

@@ -30,7 +30,7 @@ class CurationSpec extends AnyFunSuite with SparkTestSession {
       (30L, (1 to 30).map(i => s"aaa$i").mkString(" ")),
       (40L, (1 to 30).map(i => s"bbb$i").mkString(" "))
     ).toDF("doc_id", "text")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_keepbest").toString
+    val tmp = tempDir("graft_keepbest").toString
     docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     val out = Curation.dedupClusterKeepBest(spark, tmp).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2), r.getLong(3),
@@ -191,7 +191,7 @@ class CurationSpec extends AnyFunSuite with SparkTestSession {
 
   test("clusterPairs: reliable checkpoint knob pins iterations to the checkpoint dir") {
     import spark.implicits._
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    val ckpt = tempDir("graft_ckpt").toString
     spark.conf.set("graft.checkpoint.dir", ckpt)
     try {
       val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("da", "db")
@@ -513,7 +513,7 @@ class CurationSpec extends AnyFunSuite with SparkTestSession {
     // the counts are REAL BPE counts: refit the identical model
     // (deterministic — same split, same params) and recompute a sample
     // through the codec directly
-    val modelDir = java.nio.file.Files.createTempDirectory("graft_c15b_spec").toString
+    val modelDir = tempDir("graft_c15b_spec").toString
     Training.fitBpe(spark,
       Relational.table(spark, sf, "documents")
         .filter(org.apache.spark.sql.functions.col("doc_id") % 20 =!= 7),

@@ -403,7 +403,7 @@ class PlanSpec extends AnyFunSuite with SparkTestSession {
     // the merge table ships inside the expression (plan literal), so
     // tokenizing an arrival batch is Project over Scan — no join on a
     // vocab table, no exchange of any kind
-    val modelDir = java.nio.file.Files.createTempDirectory("graft_bpe_plan").toString
+    val modelDir = tempDir("graft_bpe_plan").toString
     Training.fitBpe(spark,
       Relational.table(spark, dir, "documents").filter(org.apache.spark.sql.functions.col("doc_id") % 20 =!= 7),
       modelDir, 50, 65536)
@@ -556,7 +556,7 @@ class PlanSpec extends AnyFunSuite with SparkTestSession {
 
   test("C27: the store probe broadcasts arrival keys — corpus bands never shuffle") {
     import org.apache.spark.sql.functions.col
-    val idx = java.nio.file.Files.createTempDirectory("graft_c27_plan_").toString
+    val idx = tempDir("graft_c27_plan_").toString
     val docs = Relational.table(spark, dir, "documents")
     Similarity.buildNearDupIndex(spark, docs.filter(col("doc_id") % 20 =!= 7), idx)
     val arr = Similarity.hashedShingles(spark, docs.filter(col("doc_id") % 20 === 7))
@@ -573,7 +573,7 @@ class PlanSpec extends AnyFunSuite with SparkTestSession {
 
   test("C43c: score-time plan reads the lex + IVF indexes, never a documents scan") {
     import org.apache.spark.sql.functions.col
-    val lexDir = java.nio.file.Files.createTempDirectory("graft_c43c_plan_").toString
+    val lexDir = tempDir("graft_c43c_plan_").toString
     val docs = Relational.table(spark, dir, "documents")
     Pipeline.fitLexIndex(docs, lexDir)
     // the arrival batch arrives as an IN-MEMORY frame (what a service
@@ -596,7 +596,7 @@ class PlanSpec extends AnyFunSuite with SparkTestSession {
 
   test("C43d: the append merge plans read the pinned batch + stored index, never the old corpus") {
     import org.apache.spark.sql.functions.{col, size, split}
-    val lexDir = java.nio.file.Files.createTempDirectory("graft_c43d_plan_").toString
+    val lexDir = tempDir("graft_c43d_plan_").toString
     val docs = Relational.table(spark, dir, "documents")
     Pipeline.fitLexIndex(docs.filter(col("doc_id") % 10 =!= 7), lexDir)
     val g = IndexMeta.liveGen(spark, lexDir, "lex").get.toString
@@ -608,7 +608,7 @@ class PlanSpec extends AnyFunSuite with SparkTestSession {
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
       .withColumn("dl", size(col("toks"))))
     val (terms, postings, doclens) =
-      Pipeline.mergedLexFrames(spark, lexDir, Pipeline.lexHeader(spark, g, "the spec").segments,
+      Pipeline.mergedLexFrames(spark, lexDir, Pipeline.lexFamily.headerAt(spark, g, "the spec").segments,
         d, 1L, 1L, 1000)
     Seq("terms" -> terms, "postings" -> postings, "doclens" -> doclens).foreach {
       case (name, f) =>
@@ -620,7 +620,7 @@ class PlanSpec extends AnyFunSuite with SparkTestSession {
 
   test("C43e: the tombstone-aware sparse read anti-joins broadcast tombstones, no corpus scan") {
     import org.apache.spark.sql.functions.col
-    val lexDir = java.nio.file.Files.createTempDirectory("graft_c43e_plan_").toString
+    val lexDir = tempDir("graft_c43e_plan_").toString
     val docs = Relational.table(spark, dir, "documents")
     Pipeline.fitLexIndex(docs, lexDir)
     Pipeline.deleteLexDocs(spark, lexDir,
@@ -729,7 +729,7 @@ class PlanSpec extends AnyFunSuite with SparkTestSession {
     // single-file testdata arrives 1-partitioned and must still
     // repartition UP so signature work scales with cores.
     val cores = spark.sparkContext.defaultParallelism
-    val many = java.nio.file.Files.createTempDirectory("graft_manypart_").toString
+    val many = tempDir("graft_manypart_").toString
     Relational.table(spark, dir, "documents")
       .repartition(cores * 2).write.parquet(s"$many/documents.parquet")
 

@@ -28,7 +28,7 @@ class SchemaMemoSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("a rewrite at the same path re-infers — the memo never serves a stale schema") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_memo_spec_").toString
+    val tmp = tempDir("graft_memo_spec_").toString
     val path = s"$tmp/t.parquet"
     spark.range(3).select(col("id").as("a")).write.parquet(path)
     val first = Relational.cachedSchemaParquet(spark, path)
@@ -43,7 +43,7 @@ class SchemaMemoSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("a missing path still fails like a plain read, and does not poison the memo") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_memo_spec_miss_").toString
+    val tmp = tempDir("graft_memo_spec_miss_").toString
     val path = s"$tmp/never_written.parquet"
     intercept[Exception] { Relational.cachedSchemaParquet(spark, path).count() }
     // now write it — the earlier failure must not have cached anything
@@ -59,7 +59,7 @@ class SchemaMemoSpec extends AnyFunSuite with SparkTestSession {
     * still reads correctly; a surviving hot entry stays job-free at
     * construction. */
   test("LRU eviction: evicted paths re-infer correctly, hot paths stay memoized") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_memo_spec_lru_").toString
+    val tmp = tempDir("graft_memo_spec_lru_").toString
     val paths = (1 to 3).map { i =>
       val p = s"$tmp/t$i.parquet"
       spark.range(2).select(col("id").as(s"c$i")).write.parquet(p)
@@ -91,7 +91,7 @@ class SchemaMemoSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("a union over memoized members runs no job; rewriting one member re-infers it") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_memo_spec_union_").toString
+    val tmp = tempDir("graft_memo_spec_union_").toString
     val paths = (0 until 4).map(i => s"$tmp/seg_$i")
     paths.zipWithIndex.foreach { case (p, i) =>
       Relational.writeParquet(spark.range(i * 10, i * 10 + 3).select(col("id").as("k"),
@@ -117,7 +117,7 @@ class SchemaMemoSpec extends AnyFunSuite with SparkTestSession {
     val nd = Similarity.freshScratch(spark, "graft_memo_spec_nd_")
     Similarity.buildNearDupIndex(spark, docs.filter(col("doc_id") % 10 =!= 7), nd)
     Similarity.appendToNearDupIndex(spark, nd, docs.filter(col("doc_id") % 10 === 7), Some("b1"))
-    val header = Pipeline.lexHeader(spark, IndexMeta.liveGen(spark, lex, "lex").get.toString, "the spec")
+    val header = Pipeline.lexFamily.header(spark, lex, "the spec")
     assert(header.segments.size === 2)
     val tables = header.segments.flatMap(s =>
         Seq("terms", "postings", "doclens").map(t => s"$lex/$s/$t")) ++

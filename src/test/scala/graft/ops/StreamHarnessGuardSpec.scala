@@ -16,9 +16,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * `graft.Graft`, the one holder of the required confs, for mains and
   * specs alike. A generation's `_SUCCESS` — the commit of every index
   * family — is created only by [[IndexMeta.commitGen]]: the one string
-  * literal naming it lives in `IndexMeta.scala`. And no operator
-  * appends into an existing dir: every index mutation writes a fresh
-  * dir that only the header it commits names. */
+  * literal naming it lives in `IndexMeta.scala`. No operator appends
+  * into an existing dir: every index mutation writes a fresh dir that
+  * only the header it commits names. Each family's header is encoded,
+  * decoded and GC'd only by its [[IndexFamily]] declaration: the one
+  * call of [[IndexMeta.deleteUnnamed]] is in `IndexFamily.collect`,
+  * and no hand-written header codec is left. */
 class StreamHarnessGuardSpec extends AnyFunSuite {
 
   private val main = Seq("src/main/scala")
@@ -37,7 +40,9 @@ class StreamHarnessGuardSpec extends AnyFunSuite {
     ("the [stream-census] emit", "\"\\[stream-census\\]".r, Some("StreamHarness.scala"), main),
     ("the session builder", """SparkSession\.builder\(\)""".r, Some("Graft.scala"), mainAndTest),
     ("a generation's _SUCCESS", "_SUCCESS\"".r, Some("IndexMeta.scala"), main),
-    ("an append write", """mode\("append"\)""".r, None, ops))
+    ("an append write", """mode\("append"\)""".r, None, ops),
+    ("a call of deleteUnnamed", """(?<!def )deleteUnnamed\(""".r, Some("IndexMeta.scala"), main),
+    ("a hand-written header codec", """putStrings\(|def toJson|def parse\w*Header""".r, None, ops))
 
   private def sources(roots: Seq[String]): Seq[Path] = roots.flatMap { r =>
     val root = Paths.get(r)

@@ -17,13 +17,13 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     * [[IndexMeta.commitGen]], each taken through its whole life on
     * sf0.001 — build, one append under batch id `b1`, compaction — and
     * built once per suite, on first use. Each row: the family, its root
-    * dir and generation name, its own metadata reader, a fingerprint of
+    * dir and [[IndexFamily]], its own metadata reader, a fingerprint of
     * its served contents, (for families with batch-id appends) the
     * replay of `b1`, and one more mutation whose commits pass every
     * [[IndexMeta.faultPoints]] point — run on a copy of the root after
     * `prepare`. Each function takes the root it works on. Tests that
     * use the fixture only read it or restore what they change. */
-  private final case class Family(name: String, root: String, gen: String,
+  private final case class Family(name: String, root: String, family: IndexFamily[_ <: Product],
       read: String => Any, contents: String => Any, replay: Option[String => Unit],
       prepare: String => Unit, mutate: String => Unit)
 
@@ -71,26 +71,26 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     val moved = (df: org.apache.spark.sql.DataFrame, id: String) =>
       df.withColumn(id, col(id) + 1000000L)
     Seq(
-      Family("lex", lex, "lex", Pipeline.lexSegmentCount(spark, _),
+      Family("lex", lex, Pipeline.lexFamily, Pipeline.lexSegmentCount(spark, _),
         Pipeline.sparseScoreIndexed(spark, _, lexBatch.select(col("doc_id"), col("text")))
           .collect().toSet,
         Some(Pipeline.appendLexIndex(spark, _, lexBatch, Some("b1"))), none,
         Pipeline.deleteLexDocs(spark, _, docs.filter(col("doc_id") % 10 === 3).select(col("doc_id")))),
-      Family("ivf", ivf, "ivf", Similarity.ivfCodebook(spark, _),
+      Family("ivf", ivf, Similarity.ivfFamily, Similarity.ivfCodebook(spark, _),
         Similarity.liveIndexVectors(spark, _).select(col("vec_id")).collect().map(_.getLong(0)).sorted.toSeq,
         Some(Similarity.appendToIvfIndex(spark, _, ivfBatch, Some("b1"))), none,
         Similarity.deleteFromIvfIndex(spark, _, vecs.filter(col("vec_id") % 10 === 3).select(col("vec_id")))),
-      Family("pq", ivf, "pq", Similarity.livePqMeta(spark, _).get,
+      Family("pq", ivf, Similarity.pqFamily, Similarity.pqFamily.header(spark, _, "the spec"),
         Similarity.pqCodesTable(spark, _).collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq, None,
         Similarity.appendToIvfIndex(spark, _, moved(ivfBatch, "vec_id"), Some("b2")),
         Similarity.addPqToIndex(spark, _)),
-      Family("store", store, "store", Similarity.nearDupTablePaths(spark, _, "pairs"),
+      Family("store", store, Similarity.storeFamily, Similarity.nearDupTablePaths(spark, _, "pairs"),
         d => Seq("shingles", "bands", "pairs")
           .map(t => count(Similarity.nearDupTablePaths(spark, d, t))),
         Some(Similarity.appendToNearDupIndex(spark, _, storeBatch, Some("b1"))), none,
         Similarity.appendToNearDupIndex(spark, _, moved(storeBatch, "doc_id"), Some("b2"))),
-      Family("state", state, "state", Training.liveSlices(spark, _),
+      Family("state", state, Training.stateFamily, Training.liveSlices(spark, _),
         Training.readPretrainShards(spark, _).collect().toSet,
         Some(Training.ingestPretrainSlice(spark, _, slice, "b1")), none,
         Training.tombstonePretrainDocs(spark, _, docs.filter(col("doc_id") % 10 === 3).select(col("doc_id")))))
@@ -119,7 +119,7 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     * cleared. */
   private def withDeletesLeftBehind(idx: String)(op: => Unit): Unit = {
     val root = java.nio.file.Paths.get(idx.stripPrefix("file:"))
-    val aside = java.nio.file.Files.createTempDirectory("graft_tombs_aside")
+    val aside = tempDir("graft_tombs_aside")
     val tombs = IndexMeta.list(spark, idx).map(_.getPath.getName).filter(_.startsWith("tomb"))
     assert(tombs.nonEmpty, s"precondition: no tombstones under $idx")
     tombs.foreach(t => copyInto(root.resolve(t), aside.resolve(t)))
@@ -296,7 +296,7 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("C27 re-appending indexed ids is rejected loudly") {
-    val idx = java.nio.file.Files.createTempDirectory("graft_c27_guard_").toString
+    val idx = tempDir("graft_c27_guard_").toString
     val docs = Relational.table(spark, dir, "documents")
     Similarity.buildNearDupIndex(spark, docs.filter(col("doc_id") < 100), idx)
     val e = intercept[IllegalArgumentException] {
@@ -306,7 +306,7 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("C27 batchId makes a completed append replay a no-op") {
-    val idx = java.nio.file.Files.createTempDirectory("graft_c27_batch_").toString
+    val idx = tempDir("graft_c27_batch_").toString
     val docs = Relational.table(spark, dir, "documents")
     Similarity.buildNearDupIndex(spark, docs.filter(col("doc_id") < 200), idx)
     def filesOf(t: String) = filesUnder(Similarity.nearDupTablePaths(spark, idx, t))
@@ -333,7 +333,7 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
 
   test("C27 store compaction: fewer files, pair set and probe untouched") {
     import scala.jdk.CollectionConverters._
-    val idx = java.nio.file.Files.createTempDirectory("graft_c27_compact_").toString
+    val idx = tempDir("graft_c27_compact_").toString
     val docs = Relational.table(spark, dir, "documents")
     Similarity.buildNearDupIndex(spark, docs.filter(col("doc_id") < 300), idx)
     // several small appends fragment each table
@@ -397,7 +397,7 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
 
   test("C29b persisted classifier: fit-once weights, map-only scoring, score parity") {
     val sf01 = "/root/testdata/sf0.01"
-    val modelDir = java.nio.file.Files.createTempDirectory("graft_c29b_spec").toString
+    val modelDir = tempDir("graft_c29b_spec").toString
     val docs = Relational.table(spark, sf01, "documents")
     Pipeline.fitQualityClassifier(spark, docs.filter(col("doc_id") % 20 =!= 7), modelDir)
     val holdout = docs.filter(col("doc_id") % 20 === 7)
@@ -542,11 +542,11 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
       .select(col("vec_id"), col("embedding"))
       .unionByName(Similarity.plantedNoisy(corpus, off).select(col("vec_id"), col("embedding")))
       .localCheckpoint()
-    val flatIdx = java.nio.file.Files.createTempDirectory("graft_inc_flat").toString
+    val flatIdx = tempDir("graft_inc_flat").toString
     Similarity.buildIvfIndexFrom(spark, corpus, flatIdx)
     val flat = Similarity.dedupSemanticIncremental(spark, flatIdx, arrivals)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val popIdx = java.nio.file.Files.createTempDirectory("graft_inc_pop").toString
+    val popIdx = tempDir("graft_inc_pop").toString
     spark.conf.set("graft.semdedup.cellPop", "100")
     try {
       Similarity.buildIvfIndexFrom(spark, corpus, popIdx)
@@ -582,11 +582,11 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
       .select(col("vec_id"), col("embedding"))
       .unionByName(Similarity.plantedNoisy(corpus, off).select(col("vec_id"), col("embedding")))
       .localCheckpoint()
-    val flatIdx = java.nio.file.Files.createTempDirectory("graft_cp_flat").toString
+    val flatIdx = tempDir("graft_cp_flat").toString
     Similarity.buildIvfIndexFrom(spark, corpus, flatIdx)
     val flat = Similarity.dedupSemanticIncremental(spark, flatIdx, arrivals)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val popIdx = java.nio.file.Files.createTempDirectory("graft_cp_pop").toString
+    val popIdx = tempDir("graft_cp_pop").toString
     spark.conf.set("graft.semdedup.cellPop", "100")
     try {
       Similarity.buildIvfIndexFrom(spark, corpus, popIdx)
@@ -654,7 +654,7 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
       (900000L + i, q.map(_.toFloat)) }
     val twins = modes.zipWithIndex.map { case ((_, t), i) =>
       (910000L + i, t.map(_.toFloat)) }
-    val baseMean = Similarity.ivfHeader(spark, idx, "the spec").meanSqDist
+    val baseMean = Similarity.ivfFamily.header(spark, idx, "the spec").meanSqDist
     val shift = math.sqrt(60.0 * baseMean / cents.head._2.length)
     val bulk = (0 until 100).map { j =>
       (920000L + j, cents(j % cents.length)._2.map(x => (x + shift).toFloat))
@@ -693,7 +693,7 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("compaction cadence: file-count trigger compacts once, then holds") {
-    val idx = java.nio.file.Files.createTempDirectory("graft_cadence_spec").toString
+    val idx = tempDir("graft_cadence_spec").toString
     val e = Relational.table(spark, dir, "embeddings")
     Similarity.buildIvfIndexFrom(spark,
       e.filter(col("vec_id") % 4 === 0).select(col("vec_id"), col("embedding")), idx)
@@ -715,7 +715,7 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
 
   test("probe dispatch: broadcast and shuffle_hash probe plans agree") {
     // near-dup store: same arrivals, both plans, hash-identical pairs
-    val idx = java.nio.file.Files.createTempDirectory("graft_dispatch_spec").toString
+    val idx = tempDir("graft_dispatch_spec").toString
     val docs = Relational.table(spark, dir, "documents")
     Similarity.buildNearDupIndex(spark, docs.filter(col("doc_id") % 20 =!= 7), idx)
     val arr = Similarity.hashedShingles(spark,
@@ -776,7 +776,7 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     // batch's own survivors. The drop list must be IDENTICAL — in
     // particular no survivor may self-drop against its own appended
     // row (the a.vec_id =!= c.vec_id exclusion)
-    val idx = java.nio.file.Files.createTempDirectory("graft_sem_replay").toString
+    val idx = tempDir("graft_sem_replay").toString
     val e = Relational.table(spark, dir, "embeddings")
     val corpus = e.filter(col("vec_id") % 20 =!= 7)
     Similarity.buildIvfIndexFrom(spark,
@@ -804,7 +804,7 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     // drop the higher-id member of a same-batch twin pair, keep the
     // lower, and REPLAY identically (the survivor is then in the index,
     // so a missing self-screen would flip verdicts between runs).
-    val idx = java.nio.file.Files.createTempDirectory("graft_sem_selfscreen").toString
+    val idx = tempDir("graft_sem_selfscreen").toString
     val e = Relational.table(spark, dir, "embeddings")
     val corpus = e.filter(col("vec_id") % 20 =!= 7)
     Similarity.buildIvfIndexFrom(spark,
@@ -974,7 +974,7 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     // rows all argmin-assign to one cell (deterministic first-min), so
     // the √-quota must crush the blob's 80% population share while
     // hash-ranked in-cell choice keeps the pick deterministic.
-    val planted = java.nio.file.Files.createTempDirectory("graft_c30_spec").toString
+    val planted = tempDir("graft_c30_spec").toString
     val e = spark.read.parquet(s"$dir/embeddings.parquet")
     val blobVec = e.filter(col("vec_id") === 0).select("embedding")
     val blob = spark.range(1000, 1400).toDF("vec_id")
@@ -1018,7 +1018,7 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("C3 PQ sidecar: persisted codes serve the probe; staleness refuses; re-derive repairs") {
-    val indexDir = java.nio.file.Files.createTempDirectory("graft_pq_sidecar_spec").toString
+    val indexDir = tempDir("graft_pq_sidecar_spec").toString
     Similarity.buildIvfIndex(spark, dir, indexDir)
     Similarity.addPqToIndex(spark, indexDir)
     val probe = Similarity.annIvfPqIndexed(spark, dir, indexDir)
@@ -1059,15 +1059,15 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     // books FREEZE (same generation — no refit) and the new segment's
     // codes — its one row, nothing else — land as a second codes
     // generation
-    val metaBefore = Similarity.livePqMeta(spark, indexDir).get
+    val metaBefore = Similarity.pqFamily.header(spark, indexDir, "the spec")
     Similarity.addPqToIndex(spark, indexDir)
-    val metaAfter = Similarity.livePqMeta(spark, indexDir).get
+    val metaAfter = Similarity.pqFamily.header(spark, indexDir, "the spec")
     assert(metaAfter.booksGen === metaBefore.booksGen,
       "append repair refit the books — the delta path must freeze them")
     assert(metaAfter.codesGens.size === metaBefore.codesGens.size + 1,
       s"append repair did not add exactly one codes delta generation: " +
         s"${metaBefore.codesGens} -> ${metaAfter.codesGens}")
-    val segs = Similarity.ivfHeader(spark, indexDir, "the spec").segments
+    val segs = Similarity.ivfFamily.header(spark, indexDir, "the spec").segments
     assert(metaBefore.segments.size === 1 && metaAfter.segments === segs && segs.size === 2,
       s"the repaired sidecar does not cover the live segments: ${metaAfter.segments} vs $segs")
     assert(spark.read.parquet(s"$indexDir/${metaAfter.codesGens.last}").count() === 1,
@@ -1093,7 +1093,7 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     assert(!Similarity.pqSidecarFresh(spark, indexDir),
       "sidecar claims fresh across a layout rewrite")
     Similarity.addPqToIndex(spark, indexDir)
-    val metaCompact = Similarity.livePqMeta(spark, indexDir).get
+    val metaCompact = Similarity.pqFamily.header(spark, indexDir, "the spec")
     assert(metaCompact.booksGen !== metaAfter.booksGen,
       "compaction repair did not refit the books")
     assert(metaCompact.codesGens.size === 1,
@@ -1106,7 +1106,7 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
   test("C3 persistent IVF index: partition-pruned probes, byte-identical to the per-query fit") {
     // every dir this test makes (its index, a corpus copy, the wrapper's
     // cache dirs) lives under one index root it deletes at the end
-    val root = java.nio.file.Files.createTempDirectory("graft_ivf_spec_root")
+    val root = tempDir("graft_ivf_spec_root")
     spark.conf.set("graft.index.root", root.toString)
     try persistentIvfSpec(root)
     finally {
@@ -1194,7 +1194,7 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
 
   test("C3 index append: argmin-L2 assignment, signature parity, planted neighbor found") {
     import scala.jdk.CollectionConverters._
-    val indexDir = java.nio.file.Files.createTempDirectory("graft_ivf_append_spec").toString
+    val indexDir = tempDir("graft_ivf_append_spec").toString
     val e = Relational.table(spark, dir, "embeddings")
     // build on a 95% slice, hold out ids ≡ 7 (mod 20), plus plant an
     // exact copy of vec 0's embedding under a fresh id in the appendix
@@ -1247,7 +1247,7 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
   test("C3 index compact: one file per cell, contents and probe byte-identical") {
     import scala.jdk.CollectionConverters._
     import java.nio.file.{Files, Paths}
-    val indexDir = Files.createTempDirectory("graft_ivf_compact_spec").toString
+    val indexDir = tempDir("graft_ivf_compact_spec").toString
     val e = Relational.table(spark, dir, "embeddings")
     Similarity.buildIvfIndexFrom(spark, e.filter(col("vec_id") % 20 =!= 7), indexDir)
     // two separate append batches pile extra files into the touched cells
@@ -1293,7 +1293,7 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
   test("C3 index compact: hot cells split to the file-size target, contents intact") {
     import scala.jdk.CollectionConverters._
     import java.nio.file.{Files, Paths}
-    val indexDir = Files.createTempDirectory("graft_ivf_split_spec").toString
+    val indexDir = tempDir("graft_ivf_split_spec").toString
     val e = Relational.table(spark, dir, "embeddings")
     Similarity.buildIvfIndexFrom(spark, e, indexDir)
     val rowsBefore = Similarity.storedVectors(spark, indexDir).count()
@@ -1318,7 +1318,7 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
   test("C3 index delete: tombstone-first visibility, physical at compaction") {
     import scala.jdk.CollectionConverters._
     import java.nio.file.{Files, Paths}
-    val indexDir = Files.createTempDirectory("graft_ivf_delete_spec").toString
+    val indexDir = tempDir("graft_ivf_delete_spec").toString
     val e = Relational.table(spark, dir, "embeddings")
     Similarity.buildIvfIndexFrom(spark, e, indexDir)
     def probe = Similarity.annIvfIndexed(spark, dir, indexDir)
@@ -1352,7 +1352,7 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     Similarity.compactIvfIndex(spark, indexDir)
     assert(Similarity.storedVectors(spark, indexDir)
       .filter(col("vec_id") === victim).count() === 0)
-    assert(Similarity.ivfHeader(spark, indexDir, "the spec").tombstones.isEmpty &&
+    assert(Similarity.ivfFamily.header(spark, indexDir, "the spec").tombstones.isEmpty &&
       !IndexMeta.list(spark, indexDir).exists(_.getPath.getName.startsWith("tomb")))
     assert(probe === after)
     // 4. re-inserting a tombstoned id throws LOUDLY (old row still
@@ -1432,7 +1432,7 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     // round-6 advice: the old path wrote an empty partitionBy layout
     // (only _SUCCESS), and the next read died on schema inference
     import spark.implicits._
-    val indexDir = java.nio.file.Files.createTempDirectory("graft_ivf_empty_spec").toString
+    val indexDir = tempDir("graft_ivf_empty_spec").toString
     val e = Relational.table(spark, dir, "embeddings").limit(50)
     Similarity.buildIvfIndexFrom(spark, e.select(col("vec_id"), col("embedding")), indexDir)
     Similarity.deleteFromIvfIndex(spark, indexDir, e.select(col("vec_id")))
@@ -1448,7 +1448,7 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
 
   test("C3 index: readers ignore an uncommitted generation (crash-safe commit)") {
     import java.nio.file.{Files, Paths}
-    val indexDir = Files.createTempDirectory("graft_ivf_crash_spec").toString
+    val indexDir = tempDir("graft_ivf_crash_spec").toString
     val e = Relational.table(spark, dir, "embeddings")
     Similarity.buildIvfIndexFrom(spark, e.select(col("vec_id"), col("embedding")), indexDir)
     val live = Similarity.liveVectorsPaths(spark, indexDir)
@@ -1470,7 +1470,7 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("C3 index append: ids already live in the layout are rejected loudly") {
-    val indexDir = java.nio.file.Files.createTempDirectory("graft_ivf_dup_spec").toString
+    val indexDir = tempDir("graft_ivf_dup_spec").toString
     val e = Relational.table(spark, dir, "embeddings")
     Similarity.buildIvfIndexFrom(spark,
       e.filter(col("vec_id") < 100).select(col("vec_id"), col("embedding")), indexDir)
@@ -1482,11 +1482,11 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("C3 index: the ids sidecar mirrors the layout and bounds the guard's file opens") {
-    val indexDir = java.nio.file.Files.createTempDirectory("graft_ivf_ids_spec").toString
+    val indexDir = tempDir("graft_ivf_ids_spec").toString
     val e = Relational.table(spark, dir, "embeddings")
     Similarity.buildIvfIndexFrom(spark,
       e.filter(col("vec_id") < 300).select(col("vec_id"), col("embedding")), indexDir)
-    def idsPaths() = Similarity.ivfHeader(spark, indexDir, "the spec").segments
+    def idsPaths() = Similarity.ivfFamily.header(spark, indexDir, "the spec").segments
       .map(sg => s"$indexDir/$sg/ids")
     def sidecarIds() = spark.read.parquet(idsPaths(): _*).collect().map(_.getLong(0)).toSet
     def layoutIds() = Similarity.storedVectors(spark, indexDir)
@@ -1518,15 +1518,15 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     // a codebook with no centroids cannot place a vector: the append
     // must refuse before its first write instead of growing the
     // sidecar and then failing
-    val indexDir = java.nio.file.Files.createTempDirectory("graft_ivf_nocents_spec").toString
+    val indexDir = tempDir("graft_ivf_nocents_spec").toString
     val e = Relational.table(spark, dir, "embeddings")
     Similarity.buildIvfIndexFrom(spark,
       e.filter(col("vec_id") < 300).select(col("vec_id"), col("embedding")), indexDir)
-    val codebook = s"$indexDir/${Similarity.ivfHeader(spark, indexDir, "the spec").codebook}"
+    val codebook = s"$indexDir/${Similarity.ivfFamily.header(spark, indexDir, "the spec").codebook}"
     IndexMeta.delete(spark, codebook)
     IndexMeta.writeSmallFile(spark, codebook, Array.emptyByteArray)
     def sidecar() = {
-      val g = Similarity.ivfHeader(spark, indexDir, "the spec").segments.map(sg => s"$indexDir/$sg/ids")
+      val g = Similarity.ivfFamily.header(spark, indexDir, "the spec").segments.map(sg => s"$indexDir/$sg/ids")
       (filesUnder(g), spark.read.parquet(g: _*).collect().map(_.getLong(0)).toSet)
     }
     val before = sidecar()
@@ -2435,7 +2435,7 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     // the replay record rides the generation ITSELF (atomic with the
     // commit — no marker-file crash window): the live generation's
     // header carries the batch id
-    assert(Pipeline.lexHeader(spark, gen, "the spec").applied == Seq("b1"),
+    assert(Pipeline.lexFamily.headerAt(spark, gen, "the spec").applied == Seq("b1"),
       "applied-batch record missing from the committed generation")
     assert(!IndexMeta.list(spark, idx)
         .exists(_.getPath.getName.startsWith("_appended_")),
@@ -2456,31 +2456,31 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     val idx = Similarity.freshScratch(spark, "graft_c43_hdr_crash_")
     Pipeline.fitLexIndex(docs, idx)
     val gen = IndexMeta.liveGen(spark, idx, "lex").get.toString
-    val h = Pipeline.lexHeader(spark, gen, "the spec")
+    val h = Pipeline.lexFamily.headerAt(spark, gen, "the spec")
     val queryDocs = docs.filter(col("doc_id") % 17 === 0).select(col("doc_id"), col("text"))
     def scores() = Pipeline.sparseScoreIndexed(spark, idx, queryDocs)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq.sorted
     val before = scores()
     val (next, _) = IndexMeta.nextGen(spark, idx, "lex")
     IndexMeta.writeSmallFile(spark, s"$next/header.json",
-      h.copy(nDocs = h.nDocs * 2, segments = Seq("seg_missing")).toJson.toString.getBytes("UTF-8"))
+      IndexMeta.encode(h.copy(nDocs = h.nDocs * 2, segments = Seq("seg_missing"))))
     assert(IndexMeta.liveGen(spark, idx, "lex").get.toString == gen,
       "an uncommitted header resolved as the live generation")
-    assert(Pipeline.lexHeader(spark, IndexMeta.liveGen(spark, idx, "lex").get.toString, "the spec") == h)
+    assert(Pipeline.lexFamily.header(spark, idx, "the spec") == h)
     assert(scores() == before, "an uncommitted header changed the served scores")
     // every other family resolves its header by the same rule: an
     // uncommitted next generation whose header names nothing valid
     // changes neither the live header nor what the family serves
     families.filter(_.name != "lex").foreach { f =>
-      val live = IndexMeta.liveGen(spark, f.root, f.gen).get
-      val header = IndexMeta.header(spark, f.root, f.gen, "the spec").toString
+      val live = IndexMeta.liveGen(spark, f.root, f.family.name).get
+      val header = f.family.header(spark, f.root, "the spec")
       val served = f.contents(f.root)
-      val (orphan, _) = IndexMeta.nextGen(spark, f.root, f.gen)
+      val (orphan, _) = IndexMeta.nextGen(spark, f.root, f.family.name)
       IndexMeta.writeSmallFile(spark, s"$orphan/header.json", "{}".getBytes("UTF-8"))
       try {
-        assert(IndexMeta.liveGen(spark, f.root, f.gen).get == live,
+        assert(IndexMeta.liveGen(spark, f.root, f.family.name).get == live,
           s"${f.name}: an uncommitted header resolved as the live generation")
-        assert(IndexMeta.header(spark, f.root, f.gen, "the spec").toString == header)
+        assert(f.family.header(spark, f.root, "the spec") == header)
         assert(f.contents(f.root) == served, s"${f.name}: an uncommitted header changed what it serves")
       } finally IndexMeta.delete(spark, orphan)
     }
@@ -2509,10 +2509,10 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
 
   test("Index header: replaying an applied batch id is a no-op for every family with appends") {
     families.flatMap(f => f.replay.map(f -> _)).foreach { case (f, replay) =>
-      val gen = IndexMeta.liveGen(spark, f.root, f.gen).get
+      val gen = IndexMeta.liveGen(spark, f.root, f.family.name).get
       val before = f.contents(f.root)
       replay(f.root)
-      assert(IndexMeta.liveGen(spark, f.root, f.gen).get === gen,
+      assert(IndexMeta.liveGen(spark, f.root, f.family.name).get === gen,
         s"${f.name}: the replay committed a new generation")
       assert(f.contents(f.root) === before, s"${f.name}: the replay changed the served contents")
     }
@@ -2553,7 +2553,7 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
         "buildNearDupIndex"),
       ("state", "meta", (d: String) => Training.liveSlices(spark, d), "buildPretrainState"))
     oldLayouts.foreach { case (name, table, read, rebuild) =>
-      val d = java.nio.file.Files.createTempDirectory(s"graft_old_$name").toString
+      val d = tempDir(s"graft_old_$name").toString
       IndexMeta.createMarker(spark, s"$d/${IndexMeta.genName(table, 0)}/_SUCCESS")
       val e = intercept[RuntimeException](read(d))
       assert(e.getMessage.contains(s"no committed $name generation") &&
@@ -2565,16 +2565,18 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     // a cache dir of the same corpus fingerprint can hold a header of
     // another layout (an older or newer build of the library): the
     // cache must rebuild it rather than hand it to a reader that fails
-    val root = java.nio.file.Files.createTempDirectory("graft_cache_root").toString
-    val src = java.nio.file.Files.createTempDirectory("graft_cache_src")
+    val root = tempDir("graft_cache_root").toString
+    val src = tempDir("graft_cache_src")
     java.nio.file.Files.write(src.resolve("part-0.parquet"), Array[Byte](1, 2, 3))
     var builds = 0
-    def ensure() = IndexMeta.ensureDerived(spark, src.toString, "graft_spec_cache_", Seq("current"))(
-      p => require(IndexMeta.field(IndexMeta.header(spark, p, "t", "the spec"), "current").asBoolean))(
-      p => {
-        builds += 1
-        IndexMeta.commitGen(spark, p, "t")(_ => IndexMeta.newHeader().put("current", builds > 1))
-      })
+    // the family's layout is a header with a `current` field; the first
+    // build commits one of another layout, which its reader refuses
+    val cache = new IndexFamily[TierCSpec.CacheHeader]("t", "rebuild the cache", Seq("current"), Nil)
+    def older(p: String) = IndexMeta.commitGen(spark, p, "t")(_ => IndexMeta.newHeader().put("older", true))
+    def ensure() = IndexMeta.ensureDerived(spark, src.toString, "graft_spec_cache_", cache) { p =>
+      builds += 1
+      if (builds == 1) older(p) else cache.commit(spark, p)(_ => TierCSpec.CacheHeader(current = true))
+    }
     def name(p: String) = new org.apache.hadoop.fs.Path(p).getName
     spark.conf.set("graft.index.root", root)
     try {
@@ -2588,10 +2590,10 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
       val fp = first.stripPrefix("graft_spec_cache_").takeWhile(_ != '_')
       assert(fp === IndexMeta.fingerprint(spark, src.toString, Seq("current")))
       val staleReady = s"$root/graft_spec_cache_0_local-1"
-      IndexMeta.commitGen(spark, staleReady, "t")(_ => IndexMeta.newHeader().put("current", true))
+      cache.commit(spark, staleReady)(_ => TierCSpec.CacheHeader(current = true))
       val otherLayout =
         s"$root/graft_spec_cache_${IndexMeta.fingerprint(spark, src.toString, Seq("older"))}_local-5"
-      IndexMeta.commitGen(spark, otherLayout, "t")(_ => IndexMeta.newHeader().put("current", false))
+      older(otherLayout)
       val planted = Seq("0_local-2", s"${fp}_local-3", s"2_${fp}_local-4")
         .map(n => s"$root/graft_spec_cache_$n")
       planted.foreach(d => IndexMeta.writeSmallFile(spark, s"$d/part-0", Array[Byte](1)))
@@ -2613,12 +2615,63 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     Seq("codebook", "coarse").foreach(b =>
       IndexMeta.writeSmallFile(spark, s"$idx/${b}_$lineage.f32", Array.fill[Byte](8)(7)))
     Similarity.buildIvfIndexFrom(spark, vecs.filter(col("vec_id") % 20 =!= 7), idx)
-    val h = Similarity.ivfHeader(spark, idx, "the spec")
+    val h = Similarity.ivfFamily.header(spark, idx, "the spec")
     assert(h.codebook === s"codebook_$lineage.f32" && h.coarse.isEmpty)
     val ivf = families.find(_.name == "ivf").get.root // built from the same vectors
     assert(Similarity.ivfCodebook(spark, idx).flat.sameElements(Similarity.ivfCodebook(spark, ivf).flat),
       "the rebuilt codebook differs from a clean build's")
     assert(!onDisk(s"$idx/coarse_$lineage.f32"), "the orphan coarse codebook survived")
+  }
+
+  test("Index header: every family's codec reads the headers the hand-written codecs wrote") {
+    // each literal is a header as the per-family JSON codecs before
+    // IndexFamily wrote it (their field order included); `None` marks a
+    // header the family reads, `Some(field)` one it refuses by that name
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    def commit(d: String, gen: String, header: String): Unit =
+      IndexMeta.commitGen(spark, d, gen)(_ => mapper.readTree(header))
+    val ivfHeader = """{"codebook":"codebook_ivf.g00000.f32","dim":64,"mean_sq_dist":0.4375,""" +
+      """"n_build":1615,"coarse":"coarse_ivf.g00000.f32","segments":["seg_ivf.g00000","seg_ivf.g00002"],""" +
+      """"tombstones":["tomb_ivf.g00003"],"applied":["b1"]}"""
+    val cases: Seq[(IndexFamily[_ <: Product], String, Option[String])] = Seq(
+      (Pipeline.lexFamily, """{"s_total":123456789012,"n_docs":1700,"posting_cap":1000,""" +
+        """"segments":["seg_lex.g00000","seg_lex.g00001"],"tombstones":["tomb_lex.g00002"],"applied":["b1"]}""", None),
+      (Similarity.ivfFamily, ivfHeader, None),
+      (Similarity.ivfFamily, """{"codebook":"codebook_ivf.g00000.f32","dim":64,"mean_sq_dist":0.5,""" +
+        """"n_build":10,"segments":["seg_ivf.g00000"],"tombstones":[],"applied":[]}""", None),
+      (Similarity.pqFamily, """{"books_gen":"books.g00001","codes_gens":["codes.g00001","codes.g00004"],""" +
+        """"segments":["seg_ivf.g00000","seg_ivf.g00002"]}""", None),
+      (Similarity.storeFamily, """{"segments":["seg_store.g00000","seg_store.g00001"],"applied":["b1"]}""", None),
+      (Training.stateFamily, """{"max_doc_id":1699,"slices":["slice_00000_build","slice_b1"],""" +
+        """"seen_th":["slice_00000_build","slice_b1"],"evalgrams":["slice_00000_build","slice_b1"],""" +
+        """"tombstones":["tomb_state.g00002"],"applied":["b1"]}""", None),
+      (Similarity.ivfFamily, """{"dim":64,"mean_sq_dist":0.5,"n_build":10,"segments":[],"tombstones":[],""" +
+        """"applied":[]}""", Some("codebook")),
+      (Similarity.ivfFamily, """{"codebook":"codebook_ivf.g00000.f32","mean_sq_dist":0.5,"n_build":10,""" +
+        """"segments":[],"tombstones":[],"applied":[]}""", Some("dim")),
+      (Similarity.pqFamily, """{"codes_gens":["codes.g00001"],"segments":[]}""", Some("books_gen")))
+    cases.foreach { case (family, header, refused) =>
+      val d = Similarity.freshScratch(spark, s"graft_codec_${family.name}_")
+      commit(d, family.name, header)
+      refused match {
+        case None =>
+          val h = family.header(spark, d, "the spec")
+          assert(mapper.readTree(IndexMeta.encode(h)) == mapper.readTree(header),
+            s"${family.name}: $h re-encodes as ${new String(IndexMeta.encode(h), "UTF-8")}, not as $header")
+        case Some(field) =>
+          val e = intercept[RuntimeException](family.header(spark, d, "the spec"))
+          assert(e.getMessage.contains(s"no `$field` field") && e.getMessage.contains(family.rebuild),
+            s"${family.name} without $field: ${e.getMessage}")
+      }
+    }
+    // a PQ header from before segments (it named a vectors generation
+    // and its file census) reads as covering nothing: stale
+    val d = Similarity.freshScratch(spark, "graft_codec_pq_presegments_")
+    commit(d, "ivf", ivfHeader)
+    commit(d, "pq", """{"vec_gen":"vectors.g00000","books_gen":"books.g00001",""" +
+      """"codes_gens":["codes.g00001"],"vec_files":["part-0.parquet"]}""")
+    assert(Similarity.pqFamily.header(spark, d, "the spec") == PqMeta(Nil, Seq("codes.g00001"), "books.g00001"))
+    assert(!Similarity.pqSidecarFresh(spark, d), "a pre-segments PQ header reads as fresh")
   }
 
   test("Index header: a header of the layout before segments is refused with the rebuild message") {
@@ -2660,9 +2713,12 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
       val (g, _) = IndexMeta.nextGen(spark, root, family)
       val seg = s"$root/seg_${name(g)}"
       writeSegment(seg)
-      val h = IndexMeta.header(spark, root, family, "the spec")
-      IndexMeta.putStrings(h, "segments", IndexMeta.strings(h, "segments") :+ name(seg))
-      IndexMeta.putStrings(h, "applied", IndexMeta.strings(h, "applied") :+ "b1")
+      val live = IndexMeta.liveGen(spark, root, family).get
+      val h = new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(IndexMeta.readSmallFile(spark, s"$live/header.json").get)
+        .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+      h.withArray("segments").add(name(seg))
+      h.withArray("applied").add("b1")
       IndexMeta.writeSmallFile(spark, s"$g/header.json", h.toString.getBytes("UTF-8"))
       (g, seg)
     }
@@ -2721,7 +2777,7 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     val docs = Relational.table(spark, dir, "documents").select(col("doc_id"), col("text"))
     val idx = Similarity.freshScratch(spark, "graft_c43_hdr_trio_")
     Pipeline.fitLexIndex(docs.filter(col("doc_id") % 10 =!= 7), idx)
-    val h = Pipeline.lexHeader(spark, IndexMeta.liveGen(spark, idx, "lex").get.toString, "the spec")
+    val h = Pipeline.lexFamily.header(spark, idx, "the spec")
     val (old, _) = IndexMeta.nextGen(spark, idx, "lex")
     Seq((h.sTotal, h.nDocs, h.postingCap.toLong, IndexMeta.genName("lex", 0)))
       .toDF("s_total", "n_docs", "posting_cap", "lineage").write.parquet(s"$old/scalars")
@@ -2972,8 +3028,7 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     val docs = Relational.table(spark, dir, "documents")
     val idx = Similarity.freshScratch(spark, "graft_c43_oov_")
     Pipeline.fitLexIndex(docs, idx)
-    val segs = Pipeline.lexHeader(spark, IndexMeta.liveGen(spark, idx, "lex").get.toString,
-      "the spec").segments
+    val segs = Pipeline.lexFamily.header(spark, idx, "the spec").segments
     // the OOV fraction the score path logs, from the score path's own fold
     def oov(batch: org.apache.spark.sql.DataFrame) = Pipeline.lexQueryTerms(spark, idx, segs, batch)._3
     val known = docs.select(col("doc_id"), col("text")).limit(4)
@@ -3018,7 +3073,7 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
     val docs = Relational.table(spark, dir, "documents")
     val a = Similarity.freshScratch(spark, "graft_c43c_ck_a_")
     Pipeline.fitLexIndex(docs, a)
-    val ck = java.nio.file.Files.createTempDirectory("graft_ckpt_").toString
+    val ck = tempDir("graft_ckpt_").toString
     spark.conf.set("graft.checkpoint.dir", ck)
     try {
       val b = Similarity.freshScratch(spark, "graft_c43c_ck_b_")
@@ -3048,4 +3103,9 @@ class TierCSpec extends AnyFunSuite with SparkTestSession {
         s"query $q rank gap: ${rows.map(_._3).sorted.mkString(",")}")
     }
   }
+}
+
+object TierCSpec {
+  /** The header of the spec's cache family: `current` marks its layout. */
+  final case class CacheHeader(current: Boolean)
 }

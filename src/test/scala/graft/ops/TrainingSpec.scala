@@ -313,7 +313,7 @@ class TrainingSpec extends AnyFunSuite with SparkTestSession {
 
   test("writeShards: one file per (shard, part), docs physically in pos order, plan parity") {
     import scala.jdk.CollectionConverters._
-    val out = java.nio.file.Files.createTempDirectory("graft_shards_spec").toString
+    val out = tempDir("graft_shards_spec").toString
     Training.writeShards(spark, sf, out)
     // one data file per (shard, part) directory — a training loader
     // streams each file start-to-end
@@ -628,7 +628,7 @@ class TrainingSpec extends AnyFunSuite with SparkTestSession {
   /** The takedown deltas of a state: those its live header names, and
     * every `tomb_*` dir on disk. */
   private def tombDeltas(st: String): (Seq[String], Seq[String]) =
-    (IndexMeta.strings(IndexMeta.header(spark, st, "state", "the spec"), "tombstones"),
+    (Training.stateFamily.header(spark, st, "the spec").tombstones,
       IndexMeta.list(spark, s"$st/shards").map(_.getPath.getName).filter(_.startsWith("tomb_")))
 
   test("C33d: tombstone visible immediately; compaction removes the bytes; census invariant") {

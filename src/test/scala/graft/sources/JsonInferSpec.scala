@@ -9,7 +9,7 @@ import graft.SparkTestSession
 class JsonInferSpec extends AnyFunSuite with SparkTestSession {
 
   test("value-dependent narrowing + merge widening over JSON lines") {
-    val dir = Files.createTempDirectory("graft-json").toFile
+    val dir = tempDir("graft-json").toFile
     dir.deleteOnExit()
     val f = new java.io.File(dir, "data.json")
     Files.writeString(f.toPath,

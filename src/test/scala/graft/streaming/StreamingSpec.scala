@@ -245,7 +245,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     // catchable because batch 1's append entered the store before
     // batch 4's probe ran
     import spark.implicits._
-    val idx = java.nio.file.Files.createTempDirectory("graft_c22d_planted").toString
+    val idx = tempDir("graft_c22d_planted").toString
     val corpus = Relational.table(spark, dir, "documents")
       .filter(org.apache.spark.sql.functions.col("doc_id") % 20 =!= 7)
     Similarity.buildNearDupIndex(spark, corpus, idx)
@@ -265,7 +265,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     // graft.stream.compactMaxFiles=1 compacts after every batch —
     // output pairs identical, and the store ends with a bounded file
     // census instead of the append pile
-    val idx2 = java.nio.file.Files.createTempDirectory("graft_c22d_cadence").toString
+    val idx2 = tempDir("graft_c22d_cadence").toString
     Similarity.buildNearDupIndex(spark, corpus, idx2)
     spark.conf.set("graft.stream.compactMaxFiles", "1")
     try {
@@ -438,7 +438,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     import graft.ops.Similarity
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    val out = java.nio.file.Files.createTempDirectory("graft_drops_sink").toString + "/out"
+    val out = tempDir("graft_drops_sink").toString + "/out"
     val d0 = Seq((1L, 10L, 0.995), (2L, 20L, 0.991))
       .toDF("arrival_id", "kept_by", "cos")
     Similarity.writeDropsBatch(d0, 0L, out)

@@ -15,7 +15,7 @@ class KeyProfileSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("KeyProfile records every layer and the plan, and records a failed construction") {
-    val okDir = Files.createTempDirectory("graft_key_profile_")
+    val okDir = tempDir("graft_key_profile_")
     val Seq(ok) = profile("/root/testdata/sf0.001", okDir)
     Seq("dir", "key", "rep", "construct_s", "plan_s", "exec_s", "construct_jobs",
         "exec_jobs", "construct_sites").foreach { f =>
@@ -26,7 +26,7 @@ class KeyProfileSpec extends AnyFunSuite with SparkTestSession {
     assert(execJobs > 0, ok)
     assert(Files.readString(okDir.resolve("b3_agg_group.txt")).contains("Physical Plan"))
 
-    val failDir = Files.createTempDirectory("graft_key_profile_fail_")
+    val failDir = tempDir("graft_key_profile_fail_")
     val missing = failDir.resolve("no_such_dir").toString
     val Seq(failed) = profile(missing, failDir)
     assert(failed.contains(s""""dir":"$missing"""") && failed.contains(""""error":"""), failed)
